@@ -207,8 +207,11 @@ def k_hop_distances(
     broadcast into the edge join — the (huge) edge relation is then
     never shuffled, mirroring pagerank's broadcast rank vector; a
     frontier that outgrows the cap falls back to a shuffle join for
-    that superstep. The frontier is checkpointed before the size
-    probe, so the ``count()`` is a metadata read, not a recompute.
+    that superstep. With ``checkpoint_every=1`` (the default) the
+    frontier is checkpointed before the size probe, so the ``count()``
+    reads materialized rows; with a larger interval, hops between
+    checkpoints recompute the unpinned frontier plan for the count and
+    again for the union.
     """
     if k < 0:
         raise ValueError("k must be >= 0")
@@ -444,7 +447,14 @@ def min_label_propagation(
     ~|V| rows per task; past the cap each round falls back to the
     co-partitioned hash join (Pregel-at-scale shape). Labels are
     checkpointed every ``checkpoint_every`` rounds to truncate
-    lineage. → (node, lab) after ``rounds``."""
+    lineage. → (node, lab) after ``rounds``.
+
+    Edge contract: ``edges`` is expected symmetrized (every dst also
+    appears as a src), as pagerank's are. The broadcast decision counts
+    the src nodes once, before round 1; a dst-only node would join the
+    label table after round 1 and could push a broadcast label table
+    past ``max_broadcast_nodes``. Checking would cost one more count
+    job."""
     edges = _materialize_edges(edges)
     lab = (
         edges.select(F.col("src").alias("node"))

@@ -195,9 +195,8 @@ def _bpe_cte(k: int, min_count: int = 2) -> str:
 
 _BPE_K = 8
 
-_BPE_CACHE: dict[tuple[str, str], tuple] = {}
 
-
+@session_memo
 def _bpe_trained(spark: SparkSession, sf_dir: str):
     """(merges_df, segmented_words) for the documents corpus, cached
     per (session, sf) — bpe_merge_table and bpe_subtoken_counts share
@@ -205,13 +204,8 @@ def _bpe_trained(spark: SparkSession, sf_dir: str):
     table once and apply it everywhere."""
     from redshells_spark.text.bpe import learn_bpe_merges, word_freq_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_CACHE:
-        while len(_BPE_CACHE) >= _TOKEN_CACHE_MAX:
-            _BPE_CACHE.pop(next(iter(_BPE_CACHE)))
-        wf = word_freq_table(_t(spark, sf_dir, "documents"))
-        _BPE_CACHE[key] = learn_bpe_merges(wf, _BPE_K)
-    return _BPE_CACHE[key]
+    wf = word_freq_table(_t(spark, sf_dir, "documents"))
+    return learn_bpe_merges(wf, _BPE_K)
 
 
 @q(
@@ -570,20 +564,24 @@ def _spearman_by_group(spark, sf_dir):
     correlation_stats boundary class (functions/exact.py:corr_e4_sql).
     All windows partition by the group key, so each group ranks
     independently (the global-Spearman variant would need a single
-    total order; per-group is the shape that scales)."""
+    total order; per-group is the shape that scales). rank() is int32,
+    so it is widened to int64 BEFORE the doubling, as the oracle's
+    BIGINT rank() is: doubled in int32 it wrapped once a group passed
+    2^30 rows. The co-moment products (x*y < 9n^2) are int64 before
+    their decimal sums, which bounds a group to ~1e9 rows."""
     li = _t(spark, sf_dir, "lineitem")
     wq = Window.partitionBy("l_returnflag").orderBy(F.col("l_quantity").asc())
     wp = Window.partitionBy("l_returnflag").orderBy(F.col("l_extendedprice").asc())
     x = (
-        2 * F.rank().over(wq)
+        2 * F.rank().over(wq).cast("long")
         + F.count(F.lit(1)).over(Window.partitionBy("l_returnflag", "l_quantity"))
         - 1
-    ).cast("long")
+    )
     y = (
-        2 * F.rank().over(wp)
+        2 * F.rank().over(wp).cast("long")
         + F.count(F.lit(1)).over(Window.partitionBy("l_returnflag", "l_extendedprice"))
         - 1
-    ).cast("long")
+    )
     ranked = li.select("l_returnflag", x.alias("x"), y.alias("y"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — Σy² > int64
     m = ranked.groupBy("l_returnflag").agg(

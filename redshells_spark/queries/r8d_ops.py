@@ -223,9 +223,7 @@ _RECS_SQL = """recs AS (
          WHERE rn <= 5)"""
 
 
-_TOP5_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _top5_parts(spark, sf_dir):
     """Deterministic per-customer top-5 parts by exact revenue units
     (tie: partkey asc) — the shared rec-list relation for the recsys
@@ -233,11 +231,6 @@ def _top5_parts(spark, sf_dir):
     (session, sf): intra_list_diversity consumes it TWICE (the rec-pair
     self-join) and catalog_coverage_topk once more — without the cache
     each reference re-runs the fact join + groupBy + window."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TOP5_CACHE:
-        return _TOP5_CACHE[key]
-    while len(_TOP5_CACHE) >= 4:
-        _TOP5_CACHE.pop(next(iter(_TOP5_CACHE))).unpersist()
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_extendedprice", "l_discount"
     )
@@ -260,12 +253,11 @@ def _top5_parts(spark, sf_dir):
     wc = Window.partitionBy("custkey").orderBy(
         F.col("rev_u").desc(), F.col("partkey").asc()
     )
-    _TOP5_CACHE[key] = (
+    return (
         rev.withColumn("rn", F.row_number().over(wc))
         .filter(F.col("rn") <= 5)
         .cache()
     )
-    return _TOP5_CACHE[key]
 
 
 @q(

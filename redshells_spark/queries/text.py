@@ -527,9 +527,6 @@ def _pagerank_oracle_sql(iterations: int = 3) -> str:
        SELECT node, r AS rank FROM {prev}"""
 
 
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized customer–supplier purchase graph, cached per
     (session, sf): pagerank and the bounded BFS consume the identical
@@ -542,6 +539,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _copurchase_edges_weighted(spark, sf_dir).select("src", "dst")
 
 
+@session_memo
 def _copurchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, cnt): the cached relation itself — symmetrized edges
     WITH the per-pair purchase count, so the whole graph tier (pagerank,
@@ -551,51 +549,39 @@ def _copurchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy yields distinct directed (c→s) pairs and the mirror's
     prefixes are disjoint from them, so the union is distinct by
     construction — bit-identical edge set to symmetrize_edges(e0)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_CACHE:
-        while len(_EDGE_CACHE) >= _TOKEN_CACHE_MAX:
-            _EDGE_CACHE.pop(next(iter(_EDGE_CACHE))).unpersist()
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        e0 = (
-            li.join(o, li["l_orderkey"] == o["o_orderkey"])
-            .groupBy(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    e0 = (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .groupBy(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
         )
-        sym = e0.unionByName(
-            e0.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                F.col("cnt"),
-            )
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+    sym = e0.unionByName(
+        e0.select(
+            F.col("dst").alias("src"),
+            F.col("src").alias("dst"),
+            F.col("cnt"),
         )
-        _EDGE_CACHE[key] = sym.cache()
-    return _EDGE_CACHE[key]
+    )
+    return sym.cache()
 
 
-_EDGE_DEG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _copurchase_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, deg): outgoing-arc count per node of the symmetrized
     co-purchase graph — the degree relation rich_club_coefficient and
     graph_modularity both derive; cached per (session, sf) so the
     groupBy over the ~1M-arc cached edge list runs once instead of
     once per lazy reference (assortativity-style queries read it 3x)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_DEG_CACHE:
-        while len(_EDGE_DEG_CACHE) >= _TOKEN_CACHE_MAX:
-            _EDGE_DEG_CACHE.pop(next(iter(_EDGE_DEG_CACHE))).unpersist()
-        _EDGE_DEG_CACHE[key] = (
-            _copurchase_edges(spark, sf_dir)
-            .groupBy("src")
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-            .cache()
-        )
-    return _EDGE_DEG_CACHE[key]
+    return (
+        _copurchase_edges(spark, sf_dir)
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+        .cache()
+    )
 
 
 @q("pagerank_copurchase", _pagerank_oracle_sql(3))

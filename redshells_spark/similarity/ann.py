@@ -20,20 +20,19 @@ generation, stage 2 the exact cosine rerank.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from redshells_spark.functions.vector import cosine_similarity, dot_product
 from redshells_spark.operators.topk import per_group_topk
 
-# (num_planes, dim, seed) -> np.ndarray, tiny (planes × dim) matrices
-_PLANE_CACHE: dict[tuple[int, int, int], np.ndarray] = {}
 
-
+@functools.lru_cache
 def hyperplane_matrix(num_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     """Deterministic pseudo-random hyperplanes as a (planes, dim)
     float64 matrix — pure numpy (splitmix64 bit-mix over the flat
@@ -41,28 +40,18 @@ def hyperplane_matrix(num_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     plane values can be exported as literals into an ANSI-SQL oracle
     (DuckDB recomputes identical signatures). Components are
     ``(mix % 1000)/500 - 1`` — uniform in [-1, 1) at 0.002 resolution,
-    centered so planes are unbiased. A few KiB; cached per key."""
-    key = (num_planes, dim, seed)
-    if key not in _PLANE_CACHE:
-        idx = np.arange(num_planes * dim, dtype=np.uint64)
-        x = idx + np.uint64((seed * 0x9E3779B97F4A7C15) % (1 << 64))
-        with np.errstate(over="ignore"):
-            z = (x + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-            z ^= z >> np.uint64(30)
-            z *= np.uint64(0xBF58476D1CE4E5B9)
-            z ^= z >> np.uint64(27)
-            z *= np.uint64(0x94D049BB133111EB)
-            z ^= z >> np.uint64(31)
-        vals = (z % np.uint64(1000)).astype(np.float64) / 500.0 - 1.0
-        _PLANE_CACHE[key] = vals.reshape(num_planes, dim)
-    return _PLANE_CACHE[key]
-
-
-def _hyperplane_matrix(
-    spark: SparkSession, num_planes: int, dim: int, seed: int
-) -> np.ndarray:
-    # Spark arg kept for call-site compatibility; derivation is pure.
-    return hyperplane_matrix(num_planes, dim, seed)
+    centered so planes are unbiased. A few KiB; cached per arguments."""
+    idx = np.arange(num_planes * dim, dtype=np.uint64)
+    x = idx + np.uint64((seed * 0x9E3779B97F4A7C15) % (1 << 64))
+    with np.errstate(over="ignore"):
+        z = (x + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
+        z ^= z >> np.uint64(30)
+        z *= np.uint64(0xBF58476D1CE4E5B9)
+        z ^= z >> np.uint64(27)
+        z *= np.uint64(0x94D049BB133111EB)
+        z ^= z >> np.uint64(31)
+    vals = (z % np.uint64(1000)).astype(np.float64) / 500.0 - 1.0
+    return vals.reshape(num_planes, dim)
 
 
 def brute_force_topk(
@@ -118,7 +107,7 @@ def lsh_hyperplane_signatures(
         dim = len(
             embeddings.select(embedding_column).filter(F.col(embedding_column).isNotNull()).first()[0]
         )
-    planes = _hyperplane_matrix(spark, num_planes, dim, seed)
+    planes = hyperplane_matrix(num_planes, dim, seed)
     bc = spark.sparkContext.broadcast(planes)
     idtype = embeddings.schema[id_column].dataType.simpleString()
     shifts = np.arange(num_planes, dtype=np.int64)
@@ -247,7 +236,7 @@ def _lsh_topk_broadcast(
     from redshells_spark.similarity.allpairs import _collect_bounded
 
     spark = corpus.sparkSession
-    planes = _hyperplane_matrix(spark, num_planes, dim, seed)
+    planes = hyperplane_matrix(num_planes, dim, seed)
     rows = _collect_bounded(
         queries.select(query_id, embedding_column), max_broadcast_rows,
         "lsh_topk (pass broadcast_queries=False for unbounded query sets)",
@@ -350,7 +339,7 @@ def _signatures_with_payload(
     """(id, sig, payload=embedding) in one Arrow pass — the embedding
     rides along so downstream scoring never joins back to the source."""
     spark = df.sparkSession
-    planes = _hyperplane_matrix(spark, num_planes, dim, seed)
+    planes = hyperplane_matrix(num_planes, dim, seed)
     bc = spark.sparkContext.broadcast(planes)
     idtype = df.schema[id_column].dataType.simpleString()
     etype = df.schema[embedding_column].dataType.simpleString()
