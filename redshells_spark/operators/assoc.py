@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.schema import require_columns
 
 
@@ -64,14 +65,11 @@ def association_rules_pairs(
     # A pathological basket assembles its whole item array in one row
     # before the size filter; inputs with unbounded basket cardinality
     # should pre-bound with a windowless count before calling this.
-    baskets = (
+    baskets, n_baskets = pin_count(
         df.filter(F.col(item_col).isNotNull())
         .groupBy(F.col(basket_col).alias("__b"))
         .agg(F.array_sort(F.collect_set(F.col(item_col))).alias("__arr"))
-        .localCheckpoint(eager=True)
     )
-
-    n_baskets = baskets.count()
     if n_baskets == 0:
         raise ValueError("association_rules_pairs: empty input")
 

@@ -16,15 +16,21 @@ Scale shape:
 - the edge list is the only large relation; degrees are computed once
   and joined in (at 1000 executors this is the same edges-shuffle
   every distributed PageRank does — Pregel included);
-- lineage is cut with ``localCheckpoint`` every ``checkpoint_every``
-  iterations, the same guard the connected-components loop needed:
-  without it the plan doubles per iteration and the optimizer chokes
-  long before the data does;
-- callers that need determinism across engines pass ``round_digits``:
-  double summation is order-dependent (~1e-17 noise per step), and
-  rounding each iterate to 10-12 decimals makes the fixpoint
-  bit-reproducible — this is what lets the DuckDB oracle unroll the
-  same iterations as CTEs and hash-MATCH (queries.py:pagerank_suppliers).
+- |V|-row vectors (ranks, labels, frontiers, walk counts) of at most
+  ``MAX_BROADCAST_ROWS`` rows are broadcast into the edge joins, so the
+  edge relation itself is never shuffled; larger ones fall back to a
+  shuffle join. Each vector's size is observed while it is pinned
+  (:func:`~redshells_spark.operators.observe.pin_count`), never by a
+  separate ``count()`` job;
+- lineage is cut with ``localCheckpoint`` on a fixed cadence, the same
+  guard the connected-components loop needed: without it the plan
+  doubles per iteration and the optimizer chokes long before the data
+  does;
+- every PageRank iterate is rounded to 10 decimals: double summation is
+  order-dependent (~1e-17 noise per step), and the rounding makes the
+  fixpoint bit-reproducible — this is what lets the DuckDB oracle
+  unroll the same iterations as CTEs and hash-MATCH
+  (``pagerank_copurchase``).
 
 Dangling nodes: callers should symmetrize the edge list (or otherwise
 guarantee every node has out-degree ≥ 1); with dangling nodes the
@@ -34,21 +40,32 @@ nowhere in the oracle, so the operator asserts instead of guessing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from redshells_spark.operators.observe import pin_count
 
-def _materialize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+# largest |V|-row vector broadcast into an edge join
+MAX_BROADCAST_ROWS = 1_000_000
+
+
+def _bcast(df: DataFrame, n_rows: int) -> DataFrame:
+    """Broadcast hint for an ``n_rows``-row relation that fits the cap."""
+    return F.broadcast(df) if n_rows <= MAX_BROADCAST_ROWS else df
+
+
+def _materialize_edges(edges: DataFrame, *extra: Column) -> DataFrame:
     """Bound the per-superstep cost of re-reading the edge relation:
     a DERIVED edge plan (joins/dedups — the usual caller shape) is
     eagerly localCheckpoint-ed so each superstep re-reads materialized
     rows, but an ALREADY-CACHED relation (the shared per-session edge
     caches) is left alone — its supersteps hit the InMemoryTableScan
     directly, and a second eager materialization is pure duplicate
-    work (~0.3-0.5s per query on the sf0.1 co-purchase graph)."""
+    work (~0.3-0.5s per query on the sf0.1 co-purchase graph).
+    ``extra`` columns (e.g. a weight cast) ride along in the projection."""
     from pyspark.storagelevel import StorageLevel
 
-    proj = edges.select(F.col(src), F.col(dst))
+    proj = edges.select("src", "dst", *extra)
     if edges.storageLevel != StorageLevel.NONE:
         return proj
     return proj.localCheckpoint(eager=True)
@@ -65,13 +82,11 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    round_digits: int | None = 10,
-    checkpoint_every: int = 5,
     assume_no_dangling: bool = False,
-    max_broadcast_nodes: int = 1_000_000,
 ) -> DataFrame:
     """→ (node, rank) after ``iterations`` synchronous power steps from
-    the uniform vector. ``edges`` must be (src, dst) with every node
+    the uniform vector, each iterate rounded to 10 decimals and pinned
+    every 5 steps. ``edges`` must be (src, dst) with every node
     having out-degree ≥ 1 (see :func:`symmetrize_edges`; callers that
     just symmetrized can pass ``assume_no_dangling=True`` to skip the
     verification pass)."""
@@ -81,10 +96,8 @@ def pagerank(
     # inside the broadcast rank vector, so the (huge) edge relation is
     # consumed as-is — no join materialization, no shuffle of edges
     edges = _materialize_edges(edges)
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        .localCheckpoint(eager=True)
+    deg, n = pin_count(
+        edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
     )
     nodes = deg.select(F.col("src").alias("node"))  # out-degree ≥ 1 ⇒ nodes ≡ deg keys
     if not assume_no_dangling:
@@ -102,7 +115,6 @@ def pagerank(
                 "symmetrize_edges() or add self-loops first"
             )
 
-    n = deg.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     base = (1.0 - damping) / n
@@ -112,7 +124,7 @@ def pagerank(
     # across all iterations (the only shuffle left is the per-dst
     # partial-sum aggregate); above the cap fall back to the
     # materialized edges⋈degree shuffle join, the Pregel-at-scale shape
-    broadcast_ranks = n <= max_broadcast_nodes
+    broadcast_ranks = n <= MAX_BROADCAST_ROWS
     if not broadcast_ranks:
         wedges = edges.join(deg, on="src").localCheckpoint(eager=True)
 
@@ -120,24 +132,19 @@ def pagerank(
     for it in range(iterations):
         rank_src = ranks.withColumnRenamed("node", "src")
         if broadcast_ranks:
-            contrib = (
-                edges.join(F.broadcast(rank_src.join(deg, on="src")), on="src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            )
+            joined = edges.join(F.broadcast(rank_src.join(deg, on="src")), on="src")
         else:
-            contrib = (
-                wedges.join(rank_src, on="src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            )
-        new_rank = F.lit(base) + F.lit(damping) * F.col("contrib")
-        if round_digits is not None:
-            new_rank = F.round(new_rank, round_digits)
+            joined = wedges.join(rank_src, on="src")
+        contrib = joined.groupBy("dst").agg(
+            F.sum(F.col("rank") / F.col("deg")).alias("contrib")
+        )
         # no dangling nodes ⇒ every node receives at least one
         # contribution, so the inner-join result covers all nodes
-        ranks = contrib.select(F.col("dst").alias("node"), new_rank.alias("rank"))
-        if (it + 1) % checkpoint_every == 0:
+        ranks = contrib.select(
+            F.col("dst").alias("node"),
+            F.round(F.lit(base) + F.lit(damping) * F.col("contrib"), 10).alias("rank"),
+        )
+        if (it + 1) % 5 == 0:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
@@ -174,179 +181,114 @@ def count_triangles_per_node(edges: DataFrame) -> DataFrame:
     )
 
 
-def k_hop_distances(
-    edges: DataFrame,
-    sources: DataFrame,
-    k: int,
-    node_col: str = "node",
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_every: int = 1,
-    max_broadcast_frontier: int = 1_000_000,
-) -> DataFrame:
-    """Min-hop BFS distance from any source node, bounded at ``k`` hops.
+def k_hop_distances(edges: DataFrame, sources: DataFrame, k: int) -> DataFrame:
+    """Min-hop BFS distance from any ``sources.node``, bounded at ``k``
+    hops over (src, dst) ``edges``.
 
     Relational Pregel shape: per hop, join the previous frontier with
-    the edge list and min-fold into the running distance table — the
+    the edge list and fold it into the running distance table — the
     same synchronous-superstep pattern as :func:`pagerank`, with
-    ``localCheckpoint`` per superstep (``checkpoint_every``) cutting
-    the lineage. Both ``dist`` and ``frontier`` are consumed TWICE by
-    the next superstep (frontier by the edge join and the union; dist
-    by the anti join and the union), so without materialization each
-    hop re-executes the whole prefix — plan size and work grow
-    exponentially in k (measured: k=3 on the sf0.1 co-event graph went
-    23.8 s → ~4 s when the checkpoint interval dropped from 4 to 1).
+    ``localCheckpoint`` of both ``frontier`` and ``dist`` every hop
+    cutting the lineage. Both are consumed TWICE by the next superstep
+    (frontier by the edge join and the union; dist by the anti join and
+    the union), so without materialization each hop re-executes the
+    whole prefix — plan size and work grow exponentially in k
+    (measured: k=3 on the sf0.1 co-event graph went 23.8 s → ~4 s when
+    the checkpoint interval dropped from 4 to 1).
 
     → (node, dist) for every node within k hops of a source
     (sources themselves at dist 0). Unreached nodes are absent —
     callers wanting ∞ rows should left-join against their node list.
 
     At 100 TB: the frontier (only rows that improved) is what joins
-    the edges, so supersteps shrink as the BFS saturates. While the
-    frontier stays under ``max_broadcast_frontier`` rows it is
-    broadcast into the edge join — the (huge) edge relation is then
-    never shuffled, mirroring pagerank's broadcast rank vector; a
-    frontier that outgrows the cap falls back to a shuffle join for
-    that superstep. With ``checkpoint_every=1`` (the default) the
-    frontier is checkpointed before the size probe, so the ``count()``
-    reads materialized rows; with a larger interval, hops between
-    checkpoints recompute the unpinned frontier plan for the count and
-    again for the union.
+    the edges, so supersteps shrink as the BFS saturates. Both sizes
+    are observed by their pins; while the frontier (resp. dist) fits
+    ``MAX_BROADCAST_ROWS`` it is broadcast into the edge (resp. anti)
+    join — the (huge) edge relation is then never shuffled, mirroring
+    pagerank's broadcast rank vector.
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    if k > 0:
-        # The edge relation is consumed once per superstep; when it is
-        # itself a derived plan (joins/dedup — the usual case), every
-        # hop would re-execute that pipeline. Materialize it ONCE —
-        # same fix as pagerank's edge⋈degree checkpoint (measured on
-        # the sf0.1 co-purchase graph: 22 s → 4 s for k=3).
-        edges = _materialize_edges(edges, src, dst)
-    dist = sources.select(F.col(node_col).alias("node")).distinct().withColumn(
-        "dist", F.lit(0).cast("long")
-    )
-    if k > 0:
-        dist = dist.localCheckpoint(eager=True)
-    frontier = dist
-    # frontier and dist sizes are tracked ARITHMETICALLY (frontier is
-    # disjoint from dist by the anti join, so |dist| grows by exactly
-    # |frontier|): one count per hop on the just-checkpointed frontier
-    # replaces the round-8 pair of count jobs per hop
-    n_frontier = n_dist = frontier.count() if k > 0 else 0
+    dist = sources.select("node").distinct().withColumn("dist", F.lit(0).cast("long"))
+    if k == 0:
+        return dist
+    # The edge relation is consumed once per superstep; when it is
+    # itself a derived plan (joins/dedup — the usual case), every hop
+    # would re-execute that pipeline. Materialize it ONCE (measured on
+    # the sf0.1 co-purchase graph: 22 s → 4 s for k=3).
+    edges = _materialize_edges(edges)
+    dist, n_dist = pin_count(dist)
+    frontier, n_frontier = dist, n_dist
     for hop in range(1, k + 1):
-        fr = frontier
-        if n_frontier <= max_broadcast_frontier:
-            fr = F.broadcast(fr)
+        fr = _bcast(frontier, n_frontier)
         reached = (
-            fr.join(edges, fr["node"] == edges[src])
-            .select(F.col(dst).alias("node"))
+            fr.join(edges, fr["node"] == edges["src"])
+            .select(F.col("dst").alias("node"))
             .distinct()
             .withColumn("dist", F.lit(hop).cast("long"))
         )
         # new frontier = nodes not already reached at a smaller distance
-        d = F.broadcast(dist) if n_dist <= max_broadcast_frontier else dist
-        frontier = reached.join(d, "node", "left_anti")
-        if hop % checkpoint_every == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-        n_frontier = frontier.count()
-        n_dist += n_frontier
+        frontier, n_frontier = pin_count(
+            reached.join(_bcast(dist, n_dist), "node", "left_anti")
+        )
         # frontier is DISJOINT from dist (the anti join) and carries a
         # strictly larger hop value, so the old groupBy-min combine was
         # a no-op shuffle of the whole dist relation — a plain union is
         # the identical result with zero exchanges (§2.4)
-        dist = dist.unionByName(frontier)
-        if hop % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
+        dist, n_dist = pin_count(dist.unionByName(frontier))
     return dist
 
 
-def bounded_shortest_paths(
-    edges: DataFrame,
-    sources: DataFrame,
-    k: int,
-    node_col: str = "node",
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    max_broadcast_frontier: int = 1_000_000,
-) -> DataFrame:
+def bounded_shortest_paths(edges: DataFrame, sources: DataFrame, k: int) -> DataFrame:
     """Bellman-Ford bounded at ``k`` relaxation rounds: min-cost path
-    distance from any source using ≤ k edges. Integer weights keep
-    every distance exact (the oracle replays the identical
-    relaxations); floats would accumulate engine-ordered summation
-    noise along paths.
+    distance from any ``sources.node`` using ≤ k of the (src, dst, w)
+    ``edges``. Integer weights keep every distance exact (the oracle
+    replays the identical relaxations); floats would accumulate
+    engine-ordered summation noise along paths.
 
     Same superstep shape as :func:`k_hop_distances`: only nodes whose
     distance IMPROVED last round propagate (delta-stepping's
     observation — after k rounds this equals full k-round relaxation,
     because an unchanged node re-relaxes to the same candidates), the
     frontier broadcasts while small, the edge relation is checkpointed
-    once, and dist/frontier checkpoint per round.
+    once, and dist/frontier checkpoint (and are sized) per round.
 
     → (node, dist) for nodes reachable within k edges; sources at 0.
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    if k > 0:
-        from pyspark.storagelevel import StorageLevel
-
-        proj = edges.select(
-            F.col(src), F.col(dst), F.col(weight).cast("long").alias("__w")
-        )
-        # cached inputs skip the duplicate materialization (see
-        # _materialize_edges); the weight cast is per-superstep codegen
-        edges = (
-            proj
-            if edges.storageLevel != StorageLevel.NONE
-            else proj.localCheckpoint(eager=True)
-        )
-    dist = (
-        sources.select(F.col(node_col).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-    )
-    if k > 0:
-        dist = dist.localCheckpoint(eager=True)
-    frontier = dist
-    # sizes tracked with ONE count per round (on the just-checkpointed
-    # frontier; |dist| ≤ |dist| + |frontier| — only the ≤-threshold
-    # decision needs it), replacing the round-8 two-count pair
-    n_frontier = n_dist = frontier.count() if k > 0 else 0
+    dist = sources.select("node").distinct().withColumn("dist", F.lit(0).cast("long"))
+    if k == 0:
+        return dist
+    # the weight cast rides in the (pinned or cached) edge projection
+    edges = _materialize_edges(edges, F.col("w").cast("long").alias("w"))
+    dist, n_dist = pin_count(dist)
+    frontier, n_frontier = dist, n_dist
     for _ in range(k):
-        fr = frontier
-        if n_frontier <= max_broadcast_frontier:
-            fr = F.broadcast(fr)
+        fr = _bcast(frontier, n_frontier)
         cand = (
-            fr.join(edges, fr["node"] == edges[src])
-            .select(
-                F.col(dst).alias("node"), (F.col("dist") + F.col("__w")).alias("dist")
-            )
+            fr.join(edges, fr["node"] == edges["src"])
+            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        d = F.broadcast(dist) if n_dist <= max_broadcast_frontier else dist
         # improved = candidate strictly better than current (or new node)
-        frontier = (
-            cand.join(d.withColumnRenamed("dist", "__old"), on="node", how="left")
+        frontier, n_frontier = pin_count(
+            cand.join(
+                _bcast(dist, n_dist).withColumnRenamed("dist", "__old"), on="node", how="left"
+            )
             .filter(F.col("__old").isNull() | (F.col("dist") < F.col("__old")))
             .select("node", "dist")
-            .localCheckpoint(eager=True)
         )
-        n_frontier = frontier.count()
-        n_dist += n_frontier  # upper bound: improved-only rows re-enter
         # every frontier node carries a STRICTLY better distance than
         # dist (the filter above), so the min-combine reduces to "take
         # the frontier row where one exists": an anti join (map-side
         # under the broadcast) + union replaces the round-8 full
         # groupBy-min shuffle of the dist relation (§2.4)
         keep = dist.join(
-            F.broadcast(frontier.select("node"))
-            if n_frontier <= max_broadcast_frontier
-            else frontier.select("node"),
-            on="node",
-            how="left_anti",
+            _bcast(frontier.select("node"), n_frontier), on="node", how="left_anti"
         )
-        dist = keep.unionByName(frontier).localCheckpoint(eager=True)
+        dist, n_dist = pin_count(keep.unionByName(frontier))
     return dist
 
 
@@ -425,12 +367,7 @@ def partition_modularity(
     return per.unionByName(total_row).orderBy("community")
 
 
-def min_label_propagation(
-    edges: DataFrame,
-    rounds: int = 3,
-    checkpoint_every: int = 2,
-    max_broadcast_nodes: int = 1_000_000,
-) -> DataFrame:
+def min_label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Deterministic label propagation: every node starts labeled with
     its own id and each synchronous round takes the MIN label over
     itself and its in-neighbors. With min() as the combiner the fix
@@ -440,21 +377,20 @@ def min_label_propagation(
     across engines, min is).
 
     Scale shape: the label vector is |V| rows — tiny next to |E|.
-    While it fits ``max_broadcast_nodes`` it is BROADCAST into the
+    While it fits ``MAX_BROADCAST_ROWS`` it is BROADCAST into the
     edge join (pagerank's rank-vector pattern), so the edge relation
     is never shuffled and each round is one map-side join + one
     min-combine groupBy whose map-side partials shrink the shuffle to
     ~|V| rows per task; past the cap each round falls back to the
     co-partitioned hash join (Pregel-at-scale shape). Labels are
-    checkpointed every ``checkpoint_every`` rounds to truncate
-    lineage. → (node, lab) after ``rounds``.
+    checkpointed every 2 rounds to truncate lineage. → (node, lab)
+    after ``rounds``.
 
     Edge contract: ``edges`` is expected symmetrized (every dst also
-    appears as a src), as pagerank's are. The broadcast decision counts
+    appears as a src), as pagerank's are. The broadcast decision sizes
     the src nodes once, before round 1; a dst-only node would join the
     label table after round 1 and could push a broadcast label table
-    past ``max_broadcast_nodes``. Checking would cost one more count
-    job."""
+    past ``MAX_BROADCAST_ROWS``."""
     edges = _materialize_edges(edges)
     lab = (
         edges.select(F.col("src").alias("node"))
@@ -462,15 +398,12 @@ def min_label_propagation(
         .withColumn("lab", F.col("node"))
     )
     if rounds > 0:
-        # |V| is round-invariant: one pinned init + one count decides
-        # the broadcast strategy for every round (and the pin keeps the
-        # twice-consumed round-1 label table from re-running the dedup)
-        lab = lab.localCheckpoint(eager=True)
-        broadcast_labels = lab.count() <= max_broadcast_nodes
+        # |V| is round-invariant: one pinned init decides the broadcast
+        # strategy for every round (and the pin keeps the twice-consumed
+        # round-1 label table from re-running the dedup)
+        lab, n_nodes = pin_count(lab)
     for it in range(rounds):
-        lsrc = lab.withColumnRenamed("node", "src")
-        if broadcast_labels:
-            lsrc = F.broadcast(lsrc)
+        lsrc = _bcast(lab.withColumnRenamed("node", "src"), n_nodes)
         msgs = edges.join(lsrc, on="src").select(
             F.col("dst").alias("node"), "lab"
         )
@@ -479,23 +412,19 @@ def min_label_propagation(
             .groupBy("node")
             .agg(F.min("lab").alias("lab"))
         )
-        if (it + 1) % checkpoint_every == 0:
+        if (it + 1) % 2 == 0:
             lab = lab.localCheckpoint(eager=True)
     return lab
 
 
-def katz_walk_counts(
-    edges: DataFrame,
-    weights: tuple = (16, 4, 1),
-    max_broadcast_nodes: int = 1_000_000,
-) -> DataFrame:
+def katz_walk_counts(edges: DataFrame) -> DataFrame:
     """Truncated Katz centrality with attenuation beta = 1/4 kept as
     EXACT integer walk counts: w_k(i) = number of length-k walks ending
     at i, and katz_x64 = 16*w1 + 4*w2 + w3 = 4^3 * sum(beta^k w_k) —
     the integer-scaled 3-term Katz score (Katz 1953). No double ever
     appears; walk counts are plain groupBy sums chained through two
     hash joins (A^T applied twice to the degree vector). The walk
-    vectors are |V| rows — while under ``max_broadcast_nodes`` they
+    vectors are |V| rows — while under ``MAX_BROADCAST_ROWS`` they
     broadcast into the edge joins (pagerank's rank-vector pattern), so
     the edge relation is never shuffled; integer sums are
     order-insensitive, so the join strategy cannot change the values.
@@ -503,37 +432,32 @@ def katz_walk_counts(
     → (node, w1, w2, w3, katz_x64). int64 holds to ~1e5 average degree
     (w3 <= E * dmax^2); beyond that widen to decimal(38,0)."""
     edges = _materialize_edges(edges)
-    w1 = edges.groupBy(F.col("dst").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("w1")
+    # the pin's size decides the broadcast strategy for both walk joins;
+    # w1 is consumed three times (w2 join + final joins)
+    w1, n_nodes = pin_count(
+        edges.groupBy(F.col("dst").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("w1")
+        )
     )
-    # one count decides the broadcast strategy for both walk joins and
-    # pins w1, which is consumed three times (w2 join + final joins)
-    w1 = w1.localCheckpoint(eager=True)
-    bcast = w1.count() <= max_broadcast_nodes
-    b = F.broadcast if bcast else (lambda d: d)
     w2 = (
-        edges.join(b(w1.withColumnRenamed("node", "src")), on="src")
+        edges.join(_bcast(w1.withColumnRenamed("node", "src"), n_nodes), on="src")
         .groupBy(F.col("dst").alias("node"))
         .agg(F.sum("w1").cast("long").alias("w2"))
     )
     w3 = (
-        edges.join(b(w2.withColumnRenamed("node", "src")), on="src")
+        edges.join(_bcast(w2.withColumnRenamed("node", "src"), n_nodes), on="src")
         .groupBy(F.col("dst").alias("node"))
         .agg(F.sum("w2").cast("long").alias("w3"))
     )
     return (
-        w1.join(b(w2), on="node")
-        .join(b(w3), on="node")
+        w1.join(_bcast(w2, n_nodes), on="node")
+        .join(_bcast(w3, n_nodes), on="node")
         .select(
             "node",
             "w1",
             "w2",
             "w3",
-            (
-                F.lit(int(weights[0])) * F.col("w1")
-                + F.lit(int(weights[1])) * F.col("w2")
-                + F.lit(int(weights[2])) * F.col("w3")
-            )
+            (F.lit(16) * F.col("w1") + F.lit(4) * F.col("w2") + F.col("w3"))
             .cast("long")
             .alias("katz_x64"),
         )

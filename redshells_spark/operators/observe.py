@@ -1,4 +1,5 @@
-"""Single-pass write-with-audit via Spark's Observation API.
+"""Single-pass metrics via Spark's Observation API: write-with-audit
+and pin-with-count.
 
 ``df.observe`` attaches aggregate expressions to a plan so they are
 computed AS A SIDE EFFECT of whatever action consumes it — here a
@@ -12,6 +13,11 @@ Only aggregates that tolerate partial/merged evaluation are valid
 observation expressions (sum/count/min/max — no distinct, no sort);
 that is exactly the map-side-combine family, so the audit adds no
 shuffle either.
+
+The same trick sizes a pinned relation: :func:`pin_count` observes the
+row count during the ``localCheckpoint`` job itself, so an iterative
+operator learns |frontier| (and picks broadcast or shuffle) without a
+separate ``count()`` — which costs two more jobs under AQE.
 """
 
 from __future__ import annotations
@@ -49,3 +55,11 @@ def write_parquet_with_audit(
     if got.get("n_rows") == 0:
         raise ValueError(f"write_parquet_with_audit: wrote 0 rows to {path}")
     return got
+
+
+def pin_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df.localCheckpoint(eager=True)`` plus its exact row count,
+    observed by the checkpoint's own jobs — no extra job."""
+    obs = Observation()
+    pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return pinned, obs.get["n"]

@@ -61,9 +61,11 @@ def ranking_metrics_at_k(
 
     ``recs`` must hold ranks 1..k per user (dense, unique);
     ``truth`` is the (user, item) relevance set (deduped here).
+    ``k`` is at most 42: average precision is scaled by lcm(1..k), and
+    k·lcm(1..k) leaves int64 at k = 43.
     """
-    if k < 1:
-        raise ValueError("ranking_metrics_at_k: k must be >= 1")
+    if not 1 <= k <= 42:
+        raise ValueError("ranking_metrics_at_k: k must be in 1..42")
     disc = discount_nanos(k)
     lcm = _lcm_upto(k)
     idcg_prefix = [sum(disc[:i]) for i in range(1, k + 1)]  # IDCG for n_rel=i
@@ -91,12 +93,13 @@ def ranking_metrics_at_k(
     w = Window.partitionBy("u").orderBy("rk")
     disc_arr = F.array(*[F.lit(d) for d in disc])
     idcg_arr = F.array(*[F.lit(x) for x in idcg_prefix])
-    ap_num = (F.row_number().over(w) * lcm / F.col("rk")).cast("long")  # exact: lcm%rk==0
-    scored = hits.select(
+    scored = hits.withColumn("__rn", F.row_number().over(w)).select(
         "u",
         "rk",
         F.element_at(disc_arr, F.col("rk").cast("int")).alias("dcg_n"),
-        ap_num.alias("ap_n"),
+        # int64 before the multiply (k·lcm leaves int32 from k=19) and an
+        # integer div — exact because lcm % rk == 0
+        F.expr(f"CAST(__rn AS BIGINT) * {lcm} div rk").alias("ap_n"),
     )
     per_user = scored.groupBy("u").agg(
         F.count(F.lit(1)).alias("n_hits"),

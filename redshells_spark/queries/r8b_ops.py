@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.queries._shared import *  # noqa: F401,F403
 from redshells_spark.queries.r7c_ops import _EDGES_SQL  # noqa: E402
 
@@ -260,23 +261,18 @@ def _k_core_rounds_table(spark, edges, k: int, rounds: int):
     n_edges = 0
     for r in range(1, rounds + 1):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-        alive = (
-            deg.filter(F.col("d") >= k)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
-        )
         # bounded driver scalars: the ≤ `rounds`-row readout itself
-        n_nodes = alive.count()
+        alive, n_nodes = pin_count(
+            deg.filter(F.col("d") >= k).select(F.col("src").alias("node"))
+        )
         if prev_nodes is not None and n_nodes == prev_nodes:
             rows.extend((j, n_nodes, n_edges) for j in range(r, rounds + 1))
             break
-        cur = (
+        cur, n_edges = pin_count(
             cur.join(alive.withColumnRenamed("node", "src"), "src")
             .join(alive.withColumnRenamed("node", "dst"), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
-        n_edges = cur.count()
         rows.append((r, n_nodes, n_edges))
         prev_nodes = n_nodes
     return spark.createDataFrame(

@@ -186,7 +186,6 @@ def _textrank_keywords(spark, sf_dir):
         edges,
         iterations=3,
         damping=0.85,
-        round_digits=10,
         assume_no_dangling=True,  # symmetrized: every node has out-degree
     )
     wr = Window.orderBy(F.col("rank").desc(), F.col("node").asc())

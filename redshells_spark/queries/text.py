@@ -597,7 +597,6 @@ def _pagerank_copurchase(spark, sf_dir):
         _copurchase_edges(spark, sf_dir),
         iterations=3,
         damping=0.85,
-        round_digits=10,
         assume_no_dangling=True,  # symmetrize guarantees out-degree ≥ 1
     )
 

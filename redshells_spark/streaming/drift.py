@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redshells_spark.operators.drift import ks_from_value_counts, ks_value_counts
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.streaming.ingest import _read_or_empty
 
 _STATE_SCHEMA = "v long, c1 long, c2 long"
@@ -47,17 +48,16 @@ class DriftIngest:
             batch_df, self.value_column, self.flag_column, self.scale
         )
         prev = _read_or_empty(spark, self._p(), _STATE_SCHEMA)
-        merged = (
+        merged, n_rows = pin_count(  # cut lineage before overwrite
             prev.unionByName(batch_counts)
             .groupBy("v")
             .agg(
                 F.sum("c1").cast("long").alias("c1"),
                 F.sum("c2").cast("long").alias("c2"),
             )
-            .localCheckpoint(eager=True)  # cut lineage before overwrite
         )
         merged.write.mode("overwrite").parquet(self._p())
-        self.stats.append({"batch_id": batch_id, "state_rows": merged.count()})
+        self.stats.append({"batch_id": batch_id, "state_rows": n_rows})
 
     def ks_from_state(self, spark: SparkSession) -> DataFrame:
         """The KS row from maintained state — identical to the batch

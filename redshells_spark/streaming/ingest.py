@@ -44,6 +44,7 @@ from redshells_spark.dedup.minhash import (
     minhash_dedup_against_index,
     minhash_signatures_wide,
 )
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.streaming.dedup import fingerprint_column
 from redshells_spark.text.tokenize import tokenize_on_space
 
@@ -195,10 +196,12 @@ class CorpusIngest:
             max_bucket_size=self.max_bucket_size,
         )
         drop_vs_corpus = near.select(F.col("new_doc_id").alias("doc_id")).distinct()
-        accepted = docs.join(
-            F.broadcast(drop_vs_corpus.withColumnRenamed("doc_id", self.id_column)),
-            on=self.id_column, how="left_anti",
-        ).localCheckpoint(eager=True)
+        accepted, n_accepted = pin_count(
+            docs.join(
+                F.broadcast(drop_vs_corpus.withColumnRenamed("doc_id", self.id_column)),
+                on=self.id_column, how="left_anti",
+            )
+        )
 
         # 5. append survivors to corpus + state sinks (state dirs are
         # hash-bucketed so step 6 can compact them incrementally)
@@ -231,7 +234,7 @@ class CorpusIngest:
             {
                 "batch_id": batch_id,
                 "n_in": n_in,
-                "n_accepted": accepted.count(),
+                "n_accepted": n_accepted,
                 "files_compacted": compacted,
             }
         )

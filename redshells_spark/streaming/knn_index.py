@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.similarity.knn_graph import (
     graph_search_topk,
     knn_graph_insert,
@@ -95,12 +96,10 @@ class KnnGraphIngest:
         graph = graph.select("src", "dst", "score", "rank").localCheckpoint(
             eager=True
         )
-        merged_v = merged_v.localCheckpoint(eager=True)
+        merged_v, n_vectors = pin_count(merged_v)
         graph.write.mode("overwrite").parquet(self._p("graph"))
         merged_v.write.mode("overwrite").parquet(self._p("vectors"))
-        self.stats.append(
-            {"batch_id": batch_id, "n_vectors": merged_v.count()}
-        )
+        self.stats.append({"batch_id": batch_id, "n_vectors": n_vectors})
 
     def search(
         self, spark: SparkSession, queries: DataFrame, k: int | None = None

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from redshells_spark.dedup.lines import block_units, split_units
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.streaming.ingest import (
     _append_bucketed,
     _compact_bucket,
@@ -89,7 +90,7 @@ class LineDedupIngest:
                 & (F.col("__first.pos") == F.col("pos")),
             )
         )
-        cleaned = (
+        cleaned, n_docs = pin_count(
             flagged.groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_units"),
@@ -106,7 +107,6 @@ class LineDedupIngest:
                     self.joiner, F.transform(F.col("__kept"), lambda s: s["unit"])
                 ).alias(self.text_column),
             )
-            .localCheckpoint(eager=True)
         )
         cleaned.write.mode("append").parquet(self._p("corpus"))
         # every distinct batch hash becomes state — once a unit has
@@ -127,7 +127,7 @@ class LineDedupIngest:
         self.stats.append(
             {
                 "batch_id": batch_id,
-                "n_docs": cleaned.count(),
+                "n_docs": n_docs,
                 "n_dropped_units": int(
                     cleaned.agg(F.sum("n_dropped")).collect()[0][0] or 0
                 ),

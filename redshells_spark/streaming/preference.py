@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redshells_spark.data.preference import preference_pairs
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.streaming.ingest import _read_or_empty
 
 
@@ -85,11 +86,11 @@ class PreferencePairIngest:
         spark = batch_df.sparkSession
         cols = [self.group_column, self.item_column, self.score_column]
         prev = _read_or_empty(spark, self._p(), self._schema(batch_df))
-        merged = self._prune(
-            prev.unionByName(self._prune(batch_df.select(*cols)))
-        ).localCheckpoint(eager=True)  # cut lineage before overwrite
+        merged, n_rows = pin_count(  # cut lineage before overwrite
+            self._prune(prev.unionByName(self._prune(batch_df.select(*cols))))
+        )
         merged.write.mode("overwrite").parquet(self._p())
-        self.stats.append({"batch_id": batch_id, "state_rows": merged.count()})
+        self.stats.append({"batch_id": batch_id, "state_rows": n_rows})
 
     def pairs_from_state(self, spark: SparkSession) -> DataFrame:
         """Margin-gated (chosen, rejected) pairs from the maintained

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redshells_spark.operators.sequential import sprt_monitor
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.streaming.ingest import _read_or_empty
 
 _STATE_SCHEMA = "period long, n_trials long, n_success long"
@@ -61,17 +62,16 @@ class SprtIngest:
             )
         )
         prev = _read_or_empty(spark, self._p(), _STATE_SCHEMA)
-        merged = (
+        merged, n_periods = pin_count(  # cut lineage before overwrite
             prev.unionByName(batch_counts)
             .groupBy("period")
             .agg(
                 F.sum("n_trials").cast("long").alias("n_trials"),
                 F.sum("n_success").cast("long").alias("n_success"),
             )
-            .localCheckpoint(eager=True)  # cut lineage before overwrite
         )
         merged.write.mode("overwrite").parquet(self._p())
-        self.stats.append({"batch_id": batch_id, "n_periods": merged.count()})
+        self.stats.append({"batch_id": batch_id, "n_periods": n_periods})
 
     def monitor_from_state(
         self,

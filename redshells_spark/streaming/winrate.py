@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redshells_spark.data.preference import pair_win_counts, win_rate_from_counts
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.streaming.ingest import _read_or_empty
 
 _STATE_SCHEMA = "model_a string, model_b string, games long, wins_a long"
@@ -51,19 +52,16 @@ class WinRateIngest:
             batch_df, self.winner_column, self.loser_column
         )
         prev = _read_or_empty(spark, self._p(), _STATE_SCHEMA)
-        merged = (
+        merged, n_pairs = pin_count(  # cut lineage before overwrite
             prev.unionByName(batch_counts)
             .groupBy("model_a", "model_b")
             .agg(
                 F.sum("games").cast("long").alias("games"),
                 F.sum("wins_a").cast("long").alias("wins_a"),
             )
-            .localCheckpoint(eager=True)  # cut lineage before overwrite
         )
         merged.write.mode("overwrite").parquet(self._p())
-        self.stats.append(
-            {"batch_id": batch_id, "n_pairs": merged.count()}
-        )
+        self.stats.append({"batch_id": batch_id, "n_pairs": n_pairs})
 
     def matrix_from_state(self, spark: SparkSession, z: float = 1.96) -> DataFrame:
         """Wilson-bounded leaderboard matrix from the maintained

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from redshells_spark.operators.observe import pin_count
 from redshells_spark.schema import require_columns
 
 BOS = "␟<s>"  # sentinel that cannot collide with a whitespace token
@@ -166,24 +167,21 @@ class KneserNeyLM:
 def train_kn_bigram_lm(docs: DataFrame, text_column: str = "text") -> KneserNeyLM:
     """One explode + three groupBys over the corpus, all map-combined;
     every table is vocabulary-bounded (≪ corpus at 100 TB). The bigram
-    count table is materialized once — ctx, cont, and the (eager)
-    type count all derive from it, and without the pin each consumer
-    re-ran the corpus explode."""
+    count table is materialized once — ctx and cont derive from it,
+    the pin itself observes the type count, and without the pin each
+    consumer re-ran the corpus explode."""
     require_columns(docs, [text_column])
     toks = _tokens(F.col(text_column))
     grams = docs.select(F.explode(_bigrams(toks)).alias("g")).select(
         "g.prev", "g.word"
     )
-    bc = (
-        grams.groupBy("prev", "word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)  # bigram-type-bounded
+    bc, n_types = pin_count(  # bigram-type-bounded
+        grams.groupBy("prev", "word").agg(F.count(F.lit(1)).alias("n"))
     )
     ctx = bc.groupBy("prev").agg(
         F.sum("n").alias("c_prev"), F.count(F.lit(1)).alias("n1p_fwd")
     )
     cont = bc.groupBy("word").agg(F.count(F.lit(1)).alias("n1p_bwd"))
-    n_types = bc.count()
     return KneserNeyLM(bc, ctx, cont, n_types)
 
 

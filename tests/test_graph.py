@@ -1,4 +1,5 @@
-"""pagerank: hand-checked tiny graph, mass conservation, dangling guard."""
+"""pagerank: hand-checked tiny graph, mass conservation, dangling guard;
+superstep operators: broadcast and shuffle paths agree."""
 
 from __future__ import annotations
 
@@ -20,7 +21,7 @@ def test_two_node_cycle_is_uniform(spark):
 
 def test_star_center_dominates_and_mass_conserved(spark):
     e = symmetrize_edges(_edges(spark, [("hub", x) for x in ("a", "b", "c", "d")]))
-    pr = pagerank(e, iterations=10, checkpoint_every=3)
+    pr = pagerank(e, iterations=10)  # pinned at iterations 5 and 10
     ranks = {r["node"]: r["rank"] for r in pr.collect()}
     assert ranks["hub"] > max(v for k, v in ranks.items() if k != "hub")
     # no dangling nodes -> total rank mass stays 1
@@ -86,12 +87,7 @@ def test_bounded_shortest_paths_zero_rounds(spark):
     assert got == {"a": 0}
 
 
-def test_superstep_broadcast_and_shuffle_paths_agree(spark):
-    # round-9 internals change: frontier/label vectors broadcast while
-    # small, sizes tracked arithmetically, min-combine replaced by
-    # disjoint union (BFS) / anti+union (Bellman-Ford). Forcing the
-    # broadcast cap to 0 exercises the shuffle fallback — both paths
-    # must produce identical results.
+def _superstep_results(spark):
     import random
 
     from redshells_spark.operators.graph import (
@@ -99,7 +95,6 @@ def test_superstep_broadcast_and_shuffle_paths_agree(spark):
         k_hop_distances,
         katz_walk_counts,
         min_label_propagation,
-        symmetrize_edges,
     )
 
     rng = random.Random(9)
@@ -107,36 +102,34 @@ def test_superstep_broadcast_and_shuffle_paths_agree(spark):
     raw = [(a, b) for a, b in raw if a != b]
     e = symmetrize_edges(spark.createDataFrame(raw, "src bigint, dst bigint"))
     s = spark.createDataFrame([(0,), (1,)], "node bigint")
-
-    k_b = {r["node"]: r["dist"] for r in k_hop_distances(e, s, k=3).collect()}
-    k_s = {
-        r["node"]: r["dist"]
-        for r in k_hop_distances(e, s, k=3, max_broadcast_frontier=0).collect()
-    }
-    assert k_b == k_s and k_b[0] == 0
-
     we = spark.createDataFrame(
         [(a, b, (a * 7 + b) % 5 + 1) for a, b in raw], "src bigint, dst bigint, w long"
     )
-    w_b = {r["node"]: r["dist"] for r in bounded_shortest_paths(we, s, k=3).collect()}
-    w_s = {
-        r["node"]: r["dist"]
-        for r in bounded_shortest_paths(
-            we, s, k=3, max_broadcast_frontier=0
-        ).collect()
+    return {
+        "k_hop": {r["node"]: r["dist"] for r in k_hop_distances(e, s, k=3).collect()},
+        "wsp": {
+            r["node"]: r["dist"] for r in bounded_shortest_paths(we, s, k=3).collect()
+        },
+        "lpa": {r["node"]: r["lab"] for r in min_label_propagation(e, rounds=2).collect()},
+        "katz": {r["node"]: r["katz_x64"] for r in katz_walk_counts(e).collect()},
+        "pagerank": {
+            r["node"]: r["rank"]
+            for r in pagerank(e, iterations=6, assume_no_dangling=True).collect()
+        },
     }
-    assert w_b == w_s and w_b[0] == 0
 
-    l_b = {r["node"]: r["lab"] for r in min_label_propagation(e, rounds=2).collect()}
-    l_s = {
-        r["node"]: r["lab"]
-        for r in min_label_propagation(e, rounds=2, max_broadcast_nodes=0).collect()
-    }
-    assert l_b == l_s
 
-    kz_b = {r["node"]: r["katz_x64"] for r in katz_walk_counts(e).collect()}
-    kz_s = {
-        r["node"]: r["katz_x64"]
-        for r in katz_walk_counts(e, max_broadcast_nodes=0).collect()
-    }
-    assert kz_b == kz_s
+def test_superstep_broadcast_and_shuffle_paths_agree(spark, monkeypatch):
+    # frontier/label/walk/rank vectors broadcast while small, sizes
+    # observed by the pins, min-combine replaced by disjoint union
+    # (BFS) / anti+union (Bellman-Ford). Forcing the broadcast cap to 0
+    # exercises the shuffle fallback — both paths must produce
+    # identical results.
+    from redshells_spark.operators import graph
+
+    bcast = _superstep_results(spark)
+    monkeypatch.setattr(graph, "MAX_BROADCAST_ROWS", 0)
+    shuffled = _superstep_results(spark)
+    assert bcast == shuffled
+    assert bcast["k_hop"][0] == 0 and bcast["wsp"][0] == 0
+    assert len(bcast["pagerank"]) == len(bcast["lpa"]) > 0

@@ -83,3 +83,12 @@ def test_summary_models_transform_after_observe(spark):
         train, ["x"], ["c"], label_column="label", max_iter=2
     )
     assert m.transform(train).count() == 40  # would throw before the strip
+
+    # CrossValidator's fold models keep summaries strip_training_summary
+    # cannot reach; cross-validation must still run after an observe()
+    from redshells_spark.ml.classifiers import validate_classifier
+
+    res = validate_classifier(
+        train.withColumnRenamed("label", "y"), ["x"], "y", "LogisticRegression", cv=2
+    )
+    assert res["metric"] == "accuracy" and 0.0 <= res["avg"] <= 1.0

@@ -79,3 +79,37 @@ def test_k_guard(spark, fixture):
     recs, truth = fixture
     with pytest.raises(ValueError, match="k must"):
         ranking_metrics_at_k(recs, truth, k=0)
+
+
+def _map_at_k(ranked_items, relevant, k):
+    hits, ap = 0, 0.0
+    for rank, item in enumerate(ranked_items[:k], start=1):
+        if item in relevant:
+            hits += 1
+            ap += hits / rank
+    return ap / min(len(relevant), k)
+
+
+def test_map_exact_past_int32(spark):
+    # k=20: k·lcm(1..20) > 2^31, so row_number() * lcm must run in int64
+    k = 20
+    items = [f"i{r}" for r in range(1, k + 1)]
+    truth_sets = {1: set(items), 2: set(items[::3]) | {"absent"}}
+    recs = spark.createDataFrame(
+        [(u, it, r) for u in truth_sets for r, it in enumerate(items, start=1)],
+        "user long, item string, rank long",
+    )
+    truth = spark.createDataFrame(
+        [(u, it) for u, rel in truth_sets.items() for it in rel], "user long, item string"
+    )
+    got = {r["user"]: r for r in ranking_metrics_at_k(recs, truth, k=k).collect()}
+    assert got[1]["n_hits"] == k
+    for u, rel in truth_sets.items():
+        assert got[u]["map_at_k"] == round(_map_at_k(items, rel, k), 4)
+
+
+def test_k_past_int64_refused(spark, fixture):
+    recs, truth = fixture
+    ranking_metrics_at_k(recs, truth, k=42)  # k·lcm(1..42) still fits int64
+    with pytest.raises(ValueError, match="1..42"):
+        ranking_metrics_at_k(recs, truth, k=43)
