@@ -26,10 +26,6 @@ work use the banded variants (dedup/simhash.py's block-permutation
 buckets apply verbatim to these codes); radius-0 exact-code dedup
 reduces to an equi-join on (w0..wn) and needs no pairwise scan at all.
 
-Idempotency caveat mirrors CorpusIngest: ``foreachBatch`` may re-run a
-batch after failure; production points the sink at a transactional
-table format.
-
 Exact-parity property: quantization is deterministic and the blocking
 set is every SEEN lower-id code, so any id-ordered micro-batching of a
 corpus yields exactly the batch result — pinned in
@@ -42,17 +38,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from redshells_spark.similarity.binary import binary_quantize, hamming_distance
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first batch: state doesn't exist yet
-        return spark.createDataFrame([], schema)
+from redshells_spark.streaming.state import read_state
 
 
 @dataclass
@@ -91,7 +81,7 @@ class BinaryDedupIngest:
         # against every previously SEEN code (kept or not — rejected
         # codes still block, matching the batch rule); batch side
         # broadcasts (a micro-batch is small by construction)
-        index = _read_or_empty(
+        index = read_state(
             spark, idx_path, f"{self.id_column} long, words array<bigint>, kept boolean"
         )
         kb = F.broadcast(
@@ -110,27 +100,15 @@ class BinaryDedupIngest:
             self.id_column,
             "left",
         ).withColumn("kept", F.coalesce("kept", F.lit(False)))
-        n_acc = out.filter("kept").count()
-        out.write.mode("append").parquet(idx_path)
-        self.stats.append(
-            {
-                "batch_id": batch_id,
-                "n_in": batch_df.count(),
-                "n_accepted": n_acc,
-            }
-        )
+        # the counts ride along with the append: one execution per batch
+        obs = Observation()
+        out.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_in"),
+            F.coalesce(F.sum(F.col("kept").cast("long")), F.lit(0)).alias("n_accepted"),
+        ).write.mode("append").parquet(idx_path)
+        self.stats.append({"batch_id": batch_id, **obs.get})
 
-
-def run_binary_dedup_ingest(
-    stream: DataFrame, ingest: BinaryDedupIngest, query_name: str
-):
-    """Attach the processor to a streaming DataFrame → StreamingQuery."""
-    return (
-        stream.writeStream.foreachBatch(ingest.process_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", f"{ingest.base_path}/_checkpoint")
-        .start()
-    )
 
 
 def batch_binary_dedup(

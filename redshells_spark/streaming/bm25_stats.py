@@ -14,10 +14,6 @@ At scale the term-stats relation is vocabulary-bounded (≪ corpus);
 the fold is one map-combined groupBy per batch plus a union with
 state. Scoring a query against the maintained state reuses the same
 IDF/avgdl expressions as :func:`redshells_spark.text.bm25.bm25_topk`.
-
-Idempotency caveat mirrors CorpusIngest: ``foreachBatch`` may re-run
-a batch after failure; production points the state at a transactional
-table format.
 """
 
 from __future__ import annotations
@@ -27,7 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from redshells_spark.streaming.ingest import _read_or_empty
+from redshells_spark.streaming.state import fold_state
 from redshells_spark.text.bm25 import _tokens
 
 
@@ -39,9 +35,6 @@ class Bm25StatsIngest:
     id_column: str = "doc_id"
     text_column: str = "text"
     stats: list[dict] = field(default_factory=list)
-
-    def _p(self, name: str) -> str:
-        return f"{self.base_path}/{name}"
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -59,42 +52,28 @@ class Bm25StatsIngest:
             .agg(F.count(F.lit(1)).alias("df"))
         )
 
-        prev_t = _read_or_empty(spark, self._p("term_stats"), "term string, df long")
-        merged_t = (
-            prev_t.unionByName(batch_df_t)
+        fold_state(
+            spark,
+            f"{self.base_path}/term_stats",
+            "term string, df long",
+            lambda prev: prev.unionByName(batch_df_t)
             .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("df").cast("long").alias("df")),
         )
-        prev_tot = _read_or_empty(
-            spark, self._p("totals"), "n_docs long, dl_sum long"
-        )
-        merged_tot = (
-            prev_tot.unionByName(batch_tot)
-            .agg(
+        totals, _ = fold_state(
+            spark,
+            f"{self.base_path}/totals",
+            "n_docs long, dl_sum long",
+            lambda prev: prev.unionByName(batch_tot).agg(
                 F.sum("n_docs").cast("long").alias("n_docs"),
                 F.sum("dl_sum").cast("long").alias("dl_sum"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        merged_t.write.mode("overwrite").parquet(self._p("term_stats"))
-        merged_tot.write.mode("overwrite").parquet(self._p("totals"))
-        row = merged_tot.collect()[0]
+        row = totals.collect()[0]
         self.stats.append(
             {"batch_id": batch_id, "n_docs": row["n_docs"], "dl_sum": row["dl_sum"]}
         )
 
-
-def run_bm25_stats_ingest(
-    stream: DataFrame, ingest: Bm25StatsIngest, query_name: str
-):
-    """Attach the processor to a streaming DataFrame → StreamingQuery."""
-    return (
-        stream.writeStream.foreachBatch(ingest.process_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", f"{ingest.base_path}/_checkpoint")
-        .start()
-    )
 
 
 def corpus_index_stats(

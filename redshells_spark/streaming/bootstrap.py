@@ -13,10 +13,6 @@ into parquet state (the merge-not-rebuild shape of
 Parity contract (pinned in tests/test_streaming_bootstrap.py): after
 ANY micro-batching of the same rows, ``ci_from_state`` ==
 ``poisson_bootstrap_mean_ci`` on the full frame, bit for bit.
-
-Idempotency caveat mirrors the other ingests: ``foreachBatch`` may
-re-run a batch after failure; production points the state at a
-transactional table format.
 """
 
 from __future__ import annotations
@@ -27,7 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redshells_spark.ml.bootstrap import ci_from_sums, replica_sums, value_totals
-from redshells_spark.streaming.ingest import _read_or_empty
+from redshells_spark.streaming.state import fold_state, read_state
+
+_REPS_SCHEMA = "b long, wu long, ws long"
+_TOTALS_SCHEMA = "su long, n long"
 
 
 @dataclass
@@ -42,9 +41,6 @@ class BootstrapIngest:
     scale: int = 100
     stats: list[dict] = field(default_factory=list)
 
-    def _p(self, name: str) -> str:
-        return f"{self.base_path}/{name}"
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         reps = replica_sums(
@@ -56,50 +52,35 @@ class BootstrapIngest:
             self.scale,
         )
         tot = value_totals(batch_df, self.value_column, self.scale)
-        prev_r = _read_or_empty(
-            spark, self._p("replica_sums"), "b long, wu long, ws long"
-        )
-        merged_r = (
-            prev_r.unionByName(reps.select(F.col("b").cast("long"), "wu", "ws"))
+        fold_state(
+            spark,
+            f"{self.base_path}/replica_sums",
+            _REPS_SCHEMA,
+            lambda prev: prev.unionByName(
+                reps.select(F.col("b").cast("long"), "wu", "ws")
+            )
             .groupBy("b")
             .agg(
                 F.sum("wu").cast("long").alias("wu"),
                 F.sum("ws").cast("long").alias("ws"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        prev_t = _read_or_empty(spark, self._p("totals"), "su long, n long")
-        merged_t = (
-            prev_t.unionByName(tot)
-            .agg(
+        totals, _ = fold_state(
+            spark,
+            f"{self.base_path}/totals",
+            _TOTALS_SCHEMA,
+            lambda prev: prev.unionByName(tot).agg(
                 F.sum("su").cast("long").alias("su"),
                 F.sum("n").cast("long").alias("n"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        merged_r.write.mode("overwrite").parquet(self._p("replica_sums"))
-        merged_t.write.mode("overwrite").parquet(self._p("totals"))
-        row = merged_t.collect()[0]
+        row = totals.collect()[0]
         self.stats.append({"batch_id": batch_id, "n": row["n"]})
 
     def ci_from_state(self, spark: SparkSession, alpha: float = 0.05) -> DataFrame:
         """Derive (n_replicas, point_mean, ci_lo, ci_hi) from the
         maintained state — identical to the batch operator on the
         union of every ingested row."""
-        reps = _read_or_empty(
-            spark, self._p("replica_sums"), "b long, wu long, ws long"
-        )
-        tot = _read_or_empty(spark, self._p("totals"), "su long, n long")
+        reps = read_state(spark, f"{self.base_path}/replica_sums", _REPS_SCHEMA)
+        tot = read_state(spark, f"{self.base_path}/totals", _TOTALS_SCHEMA)
         return ci_from_sums(reps, tot, self.n_replicas, alpha, self.scale)
-
-
-def run_bootstrap_ingest(
-    stream: DataFrame, ingest: BootstrapIngest, query_name: str
-):
-    """Wire a streaming DataFrame into the processor (availableNow)."""
-    return (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(ingest.process_batch)
-        .trigger(availableNow=True)
-        .start()
-    )

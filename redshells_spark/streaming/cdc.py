@@ -42,7 +42,7 @@ class SnapshotMaintainer:
 
     def __init__(
         self,
-        state_dir: str,
+        base_path: str,
         key_cols: list[str],
         version_col: str,
         snapshot_cols: list[str],
@@ -50,7 +50,7 @@ class SnapshotMaintainer:
         delete_op: str = "D",
         tie_break: str | None = None,
     ) -> None:
-        self.state_dir = state_dir
+        self.base_path = base_path
         self.key_cols = key_cols
         self.version_col = version_col
         self.snapshot_cols = snapshot_cols
@@ -59,13 +59,13 @@ class SnapshotMaintainer:
         self.tie_break = tie_break
 
     def _pointer(self) -> str:
-        return os.path.join(self.state_dir, "CURRENT")
+        return os.path.join(self.base_path, "CURRENT")
 
     def current_snapshot_path(self) -> str | None:
         try:
             with open(self._pointer()) as fh:
                 name = fh.read().strip()
-            return os.path.join(self.state_dir, name) if name else None
+            return os.path.join(self.base_path, name) if name else None
         except OSError:
             return None
 
@@ -93,24 +93,10 @@ class SnapshotMaintainer:
         # directory the MERGE is still reading from
         cur = self.current_snapshot_path()
         nxt = "snap_b" if (cur and cur.endswith("snap_a")) else "snap_a"
-        out = os.path.join(self.state_dir, nxt)
+        out = os.path.join(self.base_path, nxt)
         snap.write.mode("overwrite").parquet(out)
         tmp = self._pointer() + ".tmp"
-        os.makedirs(self.state_dir, exist_ok=True)
+        os.makedirs(self.base_path, exist_ok=True)
         with open(tmp, "w") as fh:
             fh.write(nxt)
         os.replace(tmp, self._pointer())
-
-
-def run_snapshot_maintenance(
-    stream: DataFrame, maintainer: SnapshotMaintainer, query_name: str
-):
-    """Wire a change stream into the maintainer. Caller manages the
-    returned StreamingQuery (awaitTermination / stop)."""
-    return (
-        stream.writeStream.foreachBatch(maintainer.process_batch)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )

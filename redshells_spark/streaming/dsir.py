@@ -13,17 +13,13 @@ through any micro-batching yields exactly the batch scores — pinned
 in ``tests/test_streaming_dsir.py``. The per-batch work is one scan +
 one (doc, bucket) groupBy + broadcast joins against the 64-row stats
 table; state is the stats parquet alone and never grows.
-
-Idempotency caveat mirrors CorpusIngest: ``foreachBatch`` may re-run
-a batch after failure; production points the sink at a transactional
-table format.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from redshells_spark.data.dsir import dsir_bucket_stats, dsir_score_with_stats
@@ -88,18 +84,11 @@ class DsirScoreIngest:
                 "keep", F.col("log_weight") >= F.lit(float(self.keep_threshold))
             )
         )
-        out.write.mode("append").parquet(f"{self.base_path}/scored")
-        kept = out.filter("keep").count()
-        self.stats.append(
-            {"batch_id": batch_id, "n_docs": out.count(), "n_kept": kept}
-        )
-
-
-def run_dsir_ingest(stream: DataFrame, ingest: DsirScoreIngest, query_name: str):
-    """Attach the processor to a streaming DataFrame → StreamingQuery."""
-    return (
-        stream.writeStream.foreachBatch(ingest.process_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", f"{ingest.base_path}/_checkpoint")
-        .start()
-    )
+        # the counts ride along with the append: one execution per batch
+        obs = Observation()
+        out.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_docs"),
+            F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias("n_kept"),
+        ).write.mode("append").parquet(f"{self.base_path}/scored")
+        self.stats.append({"batch_id": batch_id, **obs.get})

@@ -10,10 +10,6 @@ over millions of generations never re-reads history, and
 ``stats_from_state`` equals the batch operator on the full pair set
 bit for bit (exact int64 sums; the precision column is one division
 at read time).
-
-Idempotency caveat mirrors the other ingests: ``foreachBatch`` may
-re-run a batch after failure; production points the state at a
-transactional table format.
 """
 
 from __future__ import annotations
@@ -23,7 +19,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from redshells_spark.streaming.ingest import _read_or_empty
+from redshells_spark.streaming.state import fold_state, read_state
 from redshells_spark.text.geneval import multi_order_overlap_stats
 
 _STATS_SCHEMA = "n long, clipped long, total long"
@@ -42,9 +38,6 @@ class BleuStatsIngest:
     max_n: int = 4
     stats: list[dict] = field(default_factory=list)
 
-    def _p(self, name: str) -> str:
-        return f"{self.base_path}/{name}"
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         orders = tuple(range(1, self.max_n + 1))
@@ -62,28 +55,27 @@ class BleuStatsIngest:
             .cast("long")
             .alias("ref_len"),
         )
-        prev_s = _read_or_empty(spark, self._p("order_stats"), _STATS_SCHEMA)
-        merged_s = (
-            prev_s.unionByName(batch_stats)
+        fold_state(
+            spark,
+            f"{self.base_path}/order_stats",
+            _STATS_SCHEMA,
+            lambda prev: prev.unionByName(batch_stats)
             .groupBy("n")
             .agg(
                 F.sum("clipped").cast("long").alias("clipped"),
                 F.sum("total").cast("long").alias("total"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        prev_l = _read_or_empty(spark, self._p("lens"), _LENS_SCHEMA)
-        merged_l = (
-            prev_l.unionByName(batch_lens)
-            .agg(
+        lens, _ = fold_state(
+            spark,
+            f"{self.base_path}/lens",
+            _LENS_SCHEMA,
+            lambda prev: prev.unionByName(batch_lens).agg(
                 F.sum("cand_len").cast("long").alias("cand_len"),
                 F.sum("ref_len").cast("long").alias("ref_len"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        merged_s.write.mode("overwrite").parquet(self._p("order_stats"))
-        merged_l.write.mode("overwrite").parquet(self._p("lens"))
-        lens_row = merged_l.collect()[0]
+        lens_row = lens.collect()[0]
         self.stats.append(
             {
                 "batch_id": batch_id,
@@ -96,8 +88,8 @@ class BleuStatsIngest:
         """(n, clipped, total, precision_n, cand_len, ref_len) from
         the maintained sums — identical to bleu_corpus_stats on the
         union of every ingested pair."""
-        s = _read_or_empty(spark, self._p("order_stats"), _STATS_SCHEMA)
-        lens = _read_or_empty(spark, self._p("lens"), _LENS_SCHEMA)
+        s = read_state(spark, f"{self.base_path}/order_stats", _STATS_SCHEMA)
+        lens = read_state(spark, f"{self.base_path}/lens", _LENS_SCHEMA)
         return s.crossJoin(F.broadcast(lens)).select(
             "n",
             "clipped",
@@ -108,13 +100,3 @@ class BleuStatsIngest:
             "cand_len",
             "ref_len",
         )
-
-
-def run_bleu_ingest(stream: DataFrame, ingest: BleuStatsIngest, query_name: str):
-    """Wire a streaming pair frame into the processor (availableNow)."""
-    return (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(ingest.process_batch)
-        .trigger(availableNow=True)
-        .start()
-    )

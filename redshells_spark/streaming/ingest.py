@@ -25,16 +25,16 @@ per-row Python. The vocabulary is fixed at ingest-setup time (stream
 shingles must hash into the same token-id space as the corpus index;
 re-fitting vocab mid-stream would silently shift every signature).
 
-Idempotency caveat (documented, not hidden): ``foreachBatch`` may
-re-run a batch after a failure; plain parquet appends would then
-double-write that batch's survivors. Production would point the sinks
-at a transactional table format; the dedup logic is unchanged.
+State reads and the stream wiring go through
+:mod:`redshells_spark.streaming.state`, which also states the
+idempotency caveat: a re-run batch double-writes its survivors.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,22 +46,8 @@ from redshells_spark.dedup.minhash import (
 )
 from redshells_spark.operators.observe import pin_count
 from redshells_spark.streaming.dedup import fingerprint_column
+from redshells_spark.streaming.state import _unwritten, read_state
 from redshells_spark.text.tokenize import tokenize_on_space
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first batch: state doesn't exist yet
-        return spark.createDataFrame([], schema)
-
-
-def _read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a (possibly hash-bucketed) state directory, normalized to
-    the declared schema columns — drops the ``__b`` partition column
-    bucketed appends add."""
-    cols = [c.strip().split()[0] for c in schema.split(",")]
-    return _read_or_empty(spark, path, schema).select(*cols)
 
 
 def _append_bucketed(
@@ -94,8 +80,10 @@ def _compact_bucket(spark: SparkSession, path: str, bucket) -> int:
     sub = f"{path.rstrip('/')}/{bucket}"
     try:
         cur = spark.read.parquet(sub)
-    except Exception:  # noqa: BLE001 — bucket not written yet
-        return 0
+    except AnalysisException:
+        if _unwritten(spark, sub):  # bucket not written yet
+            return 0
+        raise
     files = cur.inputFiles()
     if len(files) <= 1:
         return 0
@@ -149,7 +137,7 @@ class CorpusIngest:
         )
 
         # 2. exact dedup against accepted corpus
-        seen = _read_state(spark, self._p("fingerprints"), "fingerprint string")
+        seen = read_state(spark, self._p("fingerprints"), "fingerprint string")
         docs = docs.join(seen, on="fingerprint", how="left_anti")
 
         # one pass of signatures for steps 3+4 (and the final index append)
@@ -182,10 +170,10 @@ class CorpusIngest:
         wide = wide.join(F.broadcast(drop_in_batch), on="doc_id", how="left_anti")
 
         # 4. near dedup against the persisted corpus index
-        corpus_index = _read_state(
+        corpus_index = read_state(
             spark, self._p("index"), "doc_id long, band int, bucket string"
         )
-        corpus_wide = _read_state(
+        corpus_wide = read_state(
             spark, self._p("signatures"),
             "doc_id long, " + ", ".join(f"mh{j} long" for j in range(self.num_hashes)),
         )
@@ -238,14 +226,3 @@ class CorpusIngest:
                 "files_compacted": compacted,
             }
         )
-
-
-def run_corpus_ingest(stream: DataFrame, ingest: CorpusIngest, query_name: str):
-    """Wire a streaming DataFrame of documents into the ingest
-    processor → a started StreamingQuery (caller stops it)."""
-    return (
-        stream.writeStream.foreachBatch(ingest.process_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", ingest._p("_checkpoint"))
-        .start()
-    )

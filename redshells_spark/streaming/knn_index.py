@@ -15,10 +15,6 @@ rebuild by construction; quality is recall-gated in
 ``tests/test_streaming_knn_index.py``, and :meth:`KnnGraphIngest.refresh`
 runs the periodic NN-descent compaction that restores build quality —
 the same rhythm as the IVF/binary streaming indexes.
-
-Idempotency caveat mirrors the other ingests: ``foreachBatch`` may
-re-run a batch after failure; production points the state at a
-transactional table format.
 """
 
 from __future__ import annotations
@@ -27,13 +23,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from redshells_spark.operators.observe import pin_count
 from redshells_spark.similarity.knn_graph import (
     graph_search_topk,
     knn_graph_insert,
     knn_graph_nn_descent,
 )
-from redshells_spark.streaming.ingest import _read_or_empty
+from redshells_spark.streaming.state import fold_state, read_state
 
 _GRAPH_SCHEMA = "src long, dst long, score double, rank long"
 
@@ -52,23 +47,20 @@ class KnnGraphIngest:
     seed: int = 7
     stats: list[dict] = field(default_factory=list)
 
-    def _p(self, name: str) -> str:
-        return f"{self.base_path}/{name}"
+    @property
+    def _vectors_schema(self) -> str:
+        return f"{self.id_column} long, {self.embedding_column} array<float>"
 
     def _vectors(self, spark: SparkSession) -> DataFrame:
-        return _read_or_empty(
-            spark,
-            self._p("vectors"),
-            f"{self.id_column} long, {self.embedding_column} array<float>",
-        )
+        return read_state(spark, f"{self.base_path}/vectors", self._vectors_schema)
 
     def _graph(self, spark: SparkSession) -> DataFrame:
-        return _read_or_empty(spark, self._p("graph"), _GRAPH_SCHEMA)
+        return read_state(spark, f"{self.base_path}/graph", _GRAPH_SCHEMA)
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(self.id_column, self.embedding_column)
-        prev_v = self._vectors(spark)
+    def _fold_graph(self, graph: DataFrame, batch: DataFrame) -> DataFrame:
+        """The graph after inserting ``batch``: NN-descent bootstraps
+        an empty index, later batches are beam-search inserts."""
+        prev_v = self._vectors(batch.sparkSession)
         if prev_v.isEmpty():
             graph = knn_graph_nn_descent(
                 batch,
@@ -78,10 +70,9 @@ class KnnGraphIngest:
                 embedding_column=self.embedding_column,
                 seed=self.seed,
             )
-            merged_v = batch
         else:
             graph = knn_graph_insert(
-                self._graph(spark),
+                graph,
                 prev_v,
                 batch,
                 k=self.k,
@@ -91,14 +82,21 @@ class KnnGraphIngest:
                 embedding_column=self.embedding_column,
                 seed=self.seed + 6,
             )
-            merged_v = prev_v.unionByName(batch)
-        # pin before overwriting the paths the inputs were read from
-        graph = graph.select("src", "dst", "score", "rank").localCheckpoint(
-            eager=True
+        return graph.select("src", "dst", "score", "rank")
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        batch = batch_df.select(self.id_column, self.embedding_column)
+        # the graph fold reads the old vectors: it is pinned (and its
+        # path overwritten) before the vectors fold overwrites them
+        fold_state(
+            spark, f"{self.base_path}/graph", _GRAPH_SCHEMA,
+            lambda graph: self._fold_graph(graph, batch),
         )
-        merged_v, n_vectors = pin_count(merged_v)
-        graph.write.mode("overwrite").parquet(self._p("graph"))
-        merged_v.write.mode("overwrite").parquet(self._p("vectors"))
+        _, n_vectors = fold_state(
+            spark, f"{self.base_path}/vectors", self._vectors_schema,
+            lambda prev_v: prev_v.unionByName(batch),
+        )
         self.stats.append({"batch_id": batch_id, "n_vectors": n_vectors})
 
     def search(
@@ -129,16 +127,4 @@ class KnnGraphIngest:
             embedding_column=self.embedding_column,
             seed=self.seed,
         ).localCheckpoint(eager=True)
-        rebuilt.write.mode("overwrite").parquet(self._p("graph"))
-
-
-def run_knn_index_ingest(
-    stream: DataFrame, ingest: KnnGraphIngest, query_name: str
-):
-    """Wire a streaming DataFrame into the processor (availableNow)."""
-    return (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(ingest.process_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+        rebuilt.write.mode("overwrite").parquet(f"{self.base_path}/graph")

@@ -22,10 +22,6 @@ output — "keep the globally first occurrence of every unit" — pinned
 in ``tests/test_streaming_line_dedup.py``. (min_occurrences > 2 has no
 streaming translation without per-hash counts in state; the streaming
 processor implements the =2 semantics only.)
-
-Idempotency caveat mirrors CorpusIngest: ``foreachBatch`` may re-run a
-batch after failure; production points the sinks at a transactional
-table format.
 """
 
 from __future__ import annotations
@@ -37,11 +33,8 @@ from pyspark.sql import functions as F
 
 from redshells_spark.dedup.lines import block_units, split_units
 from redshells_spark.operators.observe import pin_count
-from redshells_spark.streaming.ingest import (
-    _append_bucketed,
-    _compact_bucket,
-    _read_state,
-)
+from redshells_spark.streaming.ingest import _append_bucketed, _compact_bucket
+from redshells_spark.streaming.state import read_state
 
 
 @dataclass
@@ -79,7 +72,7 @@ class LineDedupIngest:
         firsts = units.groupBy("__h").agg(
             F.min(F.struct("doc_id", "pos")).alias("__first")
         )
-        seen = _read_state(spark, self._p("unit_hashes"), "__h string")
+        seen = read_state(spark, self._p("unit_hashes"), "__h string")
         flagged = (
             units.join(firsts, "__h")
             .join(seen.withColumn("__seen", F.lit(True)), "__h", "left")
@@ -134,15 +127,3 @@ class LineDedupIngest:
                 "files_compacted": compacted,
             }
         )
-
-
-def run_line_dedup_ingest(
-    stream: DataFrame, ingest: LineDedupIngest, query_name: str
-):
-    """Attach the processor to a streaming DataFrame → StreamingQuery."""
-    return (
-        stream.writeStream.foreachBatch(ingest.process_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", f"{ingest.base_path}/_checkpoint")
-        .start()
-    )

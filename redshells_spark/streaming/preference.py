@@ -13,10 +13,6 @@ Parity contract (pinned in tests): after ANY micro-batching of the
 same scored rows, ``pairs_from_state`` == ``preference_pairs`` on the
 full frame, bit for bit — extreme-k merging is associative and the
 tie-breaks are total orders.
-
-Idempotency caveat mirrors the other ingests: ``foreachBatch`` may
-re-run a batch after failure; production points the state at a
-transactional table format.
 """
 
 from __future__ import annotations
@@ -27,8 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redshells_spark.data.preference import preference_pairs
-from redshells_spark.operators.observe import pin_count
-from redshells_spark.streaming.ingest import _read_or_empty
+from redshells_spark.streaming.state import fold_state, read_state
 
 
 @dataclass
@@ -46,9 +41,6 @@ class PreferencePairIngest:
     # micro-batch, so string group/item ids work without configuration
     state_schema: str | None = None
     stats: list[dict] = field(default_factory=list)
-
-    def _p(self) -> str:
-        return f"{self.base_path}/extremes"
 
     def _schema(self, batch_df: DataFrame | None = None) -> str:
         if self.state_schema is None and batch_df is not None:
@@ -83,13 +75,15 @@ class PreferencePairIngest:
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         cols = [self.group_column, self.item_column, self.score_column]
-        prev = _read_or_empty(spark, self._p(), self._schema(batch_df))
-        merged, n_rows = pin_count(  # cut lineage before overwrite
-            self._prune(prev.unionByName(self._prune(batch_df.select(*cols))))
+        _, n_rows = fold_state(
+            batch_df.sparkSession,
+            f"{self.base_path}/extremes",
+            self._schema(batch_df),
+            lambda prev: self._prune(
+                prev.unionByName(self._prune(batch_df.select(*cols)))
+            ),
         )
-        merged.write.mode("overwrite").parquet(self._p())
         self.stats.append({"batch_id": batch_id, "state_rows": n_rows})
 
     def pairs_from_state(self, spark: SparkSession) -> DataFrame:
@@ -97,7 +91,7 @@ class PreferencePairIngest:
         extremes — identical to the batch operator on the union of
         every ingested row (the extremes are sufficient statistics
         for the pair construction)."""
-        state = _read_or_empty(spark, self._p(), self._schema())
+        state = read_state(spark, f"{self.base_path}/extremes", self._schema())
         return preference_pairs(
             state,
             self.group_column,
@@ -106,15 +100,3 @@ class PreferencePairIngest:
             min_margin=self.min_margin,
             max_pairs_per_group=self.max_pairs_per_group,
         )
-
-
-def run_preference_ingest(
-    stream: DataFrame, ingest: PreferencePairIngest, query_name: str
-):
-    """Wire a streaming scored-response frame into the processor."""
-    return (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(ingest.process_batch)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -19,10 +19,6 @@ Per micro-batch (all distributed DataFrame ops, Arrow never involved):
 3. gaps-and-islands merge of leaked positions into maximal spans;
 4. cut the spans, rebuild the text, append to ``corpus/`` with
    (n_tokens, n_removed) audit columns.
-
-Idempotency caveat mirrors CorpusIngest: ``foreachBatch`` may re-run a
-batch after failure; production points the sink at a transactional
-table format.
 """
 
 from __future__ import annotations
@@ -120,15 +116,3 @@ class SpanFilterIngest:
                 "n_contaminated_docs": int(agg["n_contaminated"]),
             }
         )
-
-
-def run_span_filter_ingest(
-    stream: DataFrame, ingest: SpanFilterIngest, query_name: str
-):
-    """Attach the processor to a streaming DataFrame → StreamingQuery."""
-    return (
-        stream.writeStream.foreachBatch(ingest.process_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", f"{ingest.base_path}/_checkpoint")
-        .start()
-    )

@@ -14,10 +14,6 @@ log, bit for bit — counts are batching-blind and the derivation is
 shared code. This is exactly how a live experiment dashboard should
 work at 100 TB: the fact stream is touched once per batch, the monitor
 reads a periods-sized table.
-
-Idempotency caveat mirrors the other ingests: ``foreachBatch`` may
-re-run a batch after failure; production points the state at a
-transactional table format.
 """
 
 from __future__ import annotations
@@ -28,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redshells_spark.operators.sequential import sprt_monitor
-from redshells_spark.operators.observe import pin_count
-from redshells_spark.streaming.ingest import _read_or_empty
+from redshells_spark.streaming.state import fold_state, read_state
 
 _STATE_SCHEMA = "period long, n_trials long, n_success long"
 
@@ -47,11 +42,7 @@ class SprtIngest:
     success_expr: str
     stats: list[dict] = field(default_factory=list)
 
-    def _p(self) -> str:
-        return f"{self.base_path}/period_counts"
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         batch_counts = (
             batch_df.groupBy(F.expr(self.period_expr).cast("long").alias("period"))
             .agg(
@@ -61,16 +52,17 @@ class SprtIngest:
                 .alias("n_success"),
             )
         )
-        prev = _read_or_empty(spark, self._p(), _STATE_SCHEMA)
-        merged, n_periods = pin_count(  # cut lineage before overwrite
-            prev.unionByName(batch_counts)
+        _, n_periods = fold_state(
+            batch_df.sparkSession,
+            f"{self.base_path}/period_counts",
+            _STATE_SCHEMA,
+            lambda prev: prev.unionByName(batch_counts)
             .groupBy("period")
             .agg(
                 F.sum("n_trials").cast("long").alias("n_trials"),
                 F.sum("n_success").cast("long").alias("n_success"),
-            )
+            ),
         )
-        merged.write.mode("overwrite").parquet(self._p())
         self.stats.append({"batch_id": batch_id, "n_periods": n_periods})
 
     def monitor_from_state(
@@ -84,7 +76,7 @@ class SprtIngest:
         """SPRT decision replay from the maintained counts — identical
         to the batch operator on the union of every ingested event."""
         return sprt_monitor(
-            _read_or_empty(spark, self._p(), _STATE_SCHEMA),
+            read_state(spark, f"{self.base_path}/period_counts", _STATE_SCHEMA),
             "period",
             "n_trials",
             "n_success",
@@ -94,18 +86,6 @@ class SprtIngest:
             beta=beta,
         )
 
-
-def run_sprt_ingest(stream: DataFrame, ingest: SprtIngest, query_name: str):
-    """Wire a streaming event log into the processor (availableNow)."""
-    return (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(ingest.process_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", f"{ingest.base_path}/_checkpoint_{query_name}"
-        )
-        .start()
-    )
 
 
 def cusum_from_sprt_state(ingest: SprtIngest, spark: SparkSession, slack: int = 0):
@@ -118,7 +98,7 @@ def cusum_from_sprt_state(ingest: SprtIngest, spark: SparkSession, slack: int = 
 
     from redshells_spark.operators.changepoint import cusum_monitor
 
-    state = _read_or_empty(spark, ingest._p(), _STATE_SCHEMA)
+    state = read_state(spark, f"{ingest.base_path}/period_counts", _STATE_SCHEMA)
     return cusum_monitor(
         state.select("period", F.col("n_success").alias("v")),
         "period",
@@ -134,7 +114,7 @@ def trend_from_sprt_state(ingest: SprtIngest, spark: SparkSession):
 
     from redshells_spark.operators.drift import mann_kendall_trend
 
-    state = _read_or_empty(spark, ingest._p(), _STATE_SCHEMA)
+    state = read_state(spark, f"{ingest.base_path}/period_counts", _STATE_SCHEMA)
     return mann_kendall_trend(
         state.select("period", F.col("n_success").alias("v")), "period", "v"
     )
@@ -150,7 +130,7 @@ def page_hinkley_from_sprt_state(ingest: SprtIngest, spark: SparkSession):
 
     from redshells_spark.operators.changepoint import page_hinkley_monitor
 
-    state = _read_or_empty(spark, ingest._p(), _STATE_SCHEMA)
+    state = read_state(spark, f"{ingest.base_path}/period_counts", _STATE_SCHEMA)
     return page_hinkley_monitor(
         state.select("period", F.col("n_success").alias("v")), "period", "v"
     )

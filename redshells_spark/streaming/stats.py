@@ -15,10 +15,11 @@ fold the new documents into persistent **mergeable** summaries —
   obeys the standard MG undercount bound over the full stream, so
   `top_k_frequent`-style recounts can certify against it.
 
-State lives in parquet like `streaming/ingest.py` (restart-safe; same
-idempotency caveat re: foreachBatch retries). All per-batch work is
-DataFrame ops; the MG decrement math runs on the ≤ capacity-row summary
-driver-side — bounded by construction, not by data.
+Every summary is one parquet state directory under ``base_path``,
+folded with :func:`redshells_spark.streaming.state.fold_state`. All
+per-batch work is DataFrame ops; the MG decrement math runs on the
+≤ capacity-row summary driver-side — bounded by construction, not by
+data.
 """
 
 from __future__ import annotations
@@ -29,60 +30,50 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redshells_spark.operators.bloom import _h60_sql
+from redshells_spark.streaming.state import fold_state, read_state
 
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first batch: state doesn't exist yet
-        return spark.createDataFrame([], schema)
+_CMS_SCHEMA = "row int, bucket long, c long"
+_DIGEST_SCHEMA = "bucket long, n_rows long, xor_digest long, sum_digest long"
 
 
 @dataclass
 class StreamingStats:
-    """foreachBatch processor maintaining KMV + MG state under ``root``."""
+    """foreachBatch processor maintaining KMV + MG state under
+    ``base_path``."""
 
-    root: str
+    base_path: str
     group_column: str = "source"
     value_column: str = "text"
     token_column: str | None = None  # explode this array column for MG
     kmv_k: int = 256
     mg_capacity: int = 1024
 
-    def _p(self, name: str) -> str:
-        return f"{self.root}/{name}"
-
     # ---------------------------------------------------------- KMV
 
     def _merge_kmv(self, batch: DataFrame) -> None:
-        spark = batch.sparkSession
         g, v = self.group_column, self.value_column
-        schema = f"{g} string, __h long"
         new_hashes = batch.select(
             F.col(g).cast("string").alias(g),
             F.expr(_h60_sql(f"`{v}`")).alias("__h"),
         )
-        merged = (
-            _read_or_empty(spark, self._p("kmv"), schema)
-            .unionByName(new_hashes)
-            .dropDuplicates([g, "__h"])
-        )
         w = Window.partitionBy(g).orderBy(F.col("__h").asc())
-        kept = (
-            merged.withColumn("__rn", F.row_number().over(w))
+        # state: the k smallest distinct hashes per group
+        fold_state(
+            batch.sparkSession,
+            f"{self.base_path}/kmv",
+            f"{g} string, __h long",
+            lambda state: state.unionByName(new_hashes)
+            .dropDuplicates([g, "__h"])
+            .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= self.kmv_k)
-            .drop("__rn")
+            .drop("__rn"),
         )
-        # rewrite state: ≤ k rows per group. overwrite-then-read needs a
-        # staging write because the read path is also the write path
-        kept.write.mode("overwrite").parquet(self._p("kmv_next"))
-        spark.read.parquet(self._p("kmv_next")).write.mode("overwrite").parquet(self._p("kmv"))
 
     def kmv_estimates(self, spark: SparkSession) -> DataFrame:
         """(group, n_hashes, kmv_estimate) from the persisted sketch —
         identical formula to `operators/sketches.py:kmv_distinct`."""
         g = self.group_column
-        state = _read_or_empty(spark, self._p("kmv"), f"{g} string, __h long")
+        state = read_state(spark, f"{self.base_path}/kmv", f"{g} string, __h long")
         agg = state.groupBy(g).agg(
             F.count(F.lit(1)).alias("n_hashes"), F.max("__h").alias("__hk")
         )
@@ -109,7 +100,6 @@ class StreamingStats:
             .groupBy(g, "token")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        state = _read_or_empty(spark, self._p("mg"), schema)
         # merge per group driver-side: both sides are bounded —
         # state ≤ capacity rows/group, batch counts get pre-cut to the
         # top 2·capacity (anything below can't survive the decrement)
@@ -119,24 +109,26 @@ class StreamingStats:
             .filter(F.col("__rn") <= 2 * self.mg_capacity)
             .drop("__rn")
         )
-        by_group: dict[str, dict[str, int]] = {}
-        for r in state.collect():
-            by_group.setdefault(r[g], {})[r["token"]] = r["cnt"]
         adds: dict[str, dict[str, int]] = {}
         for r in batch_cut.collect():
             adds.setdefault(r[g], {})[r["token"]] = r["cnt"]
-        rows = []
-        for grp in set(by_group) | set(adds):
-            merged, _ = _mg_merge(dict(by_group.get(grp, {})), adds.get(grp, {}), self.mg_capacity)
-            rows += [(grp, t, int(c)) for t, c in merged.items()]
-        out = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
-        out.write.mode("overwrite").parquet(self._p("mg_next"))
-        spark.read.parquet(self._p("mg_next")).write.mode("overwrite").parquet(self._p("mg"))
+
+        def merge(state: DataFrame) -> DataFrame:
+            by_group: dict[str, dict[str, int]] = {}
+            for r in state.collect():
+                by_group.setdefault(r[g], {})[r["token"]] = r["cnt"]
+            rows = []
+            for grp in set(by_group) | set(adds):
+                merged, _ = _mg_merge(by_group.get(grp, {}), adds.get(grp, {}), self.mg_capacity)
+                rows += [(grp, t, int(c)) for t, c in merged.items()]
+            return spark.createDataFrame(rows, schema)
+
+        fold_state(spark, f"{self.base_path}/mg", schema, merge)
 
     def heavy_hitters(self, spark: SparkSession, k: int = 20) -> DataFrame:
         """(group, token, cnt_lower) — MG lower-bound counts from state."""
         g = self.group_column
-        state = _read_or_empty(spark, self._p("mg"), f"{g} string, token string, cnt long")
+        state = read_state(spark, f"{self.base_path}/mg", f"{g} string, token string, cnt long")
         w = Window.partitionBy(g).orderBy(F.col("cnt").desc(), F.col("token").asc())
         return (
             state.withColumn("__rn", F.row_number().over(w))
@@ -153,18 +145,6 @@ class StreamingStats:
         self._merge_mg(batch_df)
 
 
-def run_streaming_stats(stream: DataFrame, stats: StreamingStats, query_name: str):
-    """Attach to a readStream source; availableNow-style callers drive
-    it exactly like `streaming/ingest.py:run_corpus_ingest`."""
-    return (
-        stream.writeStream.foreachBatch(stats.process_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", f"{stats.root}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 @dataclass
 class StreamingCms:
     """foreachBatch processor maintaining a Count-Min frequency sketch
@@ -174,40 +154,27 @@ class StreamingCms:
     the sketch of everything ever seen (exact batch parity, tested),
     and state size is a constant depth × width cells forever."""
 
-    root: str
+    base_path: str
     key_column: str = "user_id"
     depth: int = 4
     width: int = 512
 
-    def _path(self) -> str:
-        return f"{self.root}/cms"
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from redshells_spark.operators.sketches import cms_build, cms_merge
 
-        spark = batch_df.sparkSession
         batch_sketch = cms_build(
             batch_df, self.key_column, depth=self.depth, width=self.width
         )
-        state = _read_or_empty(spark, self._path(), "row int, bucket long, c long")
-        merged = cms_merge(state, batch_sketch).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(self._path())
+        fold_state(
+            batch_df.sparkSession, f"{self.base_path}/cms", _CMS_SCHEMA,
+            lambda state: cms_merge(state, batch_sketch),
+        )
 
     def lookup(self, spark: SparkSession, keys: DataFrame) -> DataFrame:
         from redshells_spark.operators.sketches import cms_lookup
 
-        state = _read_or_empty(spark, self._path(), "row int, bucket long, c long")
+        state = read_state(spark, f"{self.base_path}/cms", _CMS_SCHEMA)
         return cms_lookup(state, keys, self.key_column, self.depth, self.width)
-
-
-def run_streaming_cms(stream: DataFrame, cms: StreamingCms, query_name: str):
-    return (
-        stream.writeStream.foreachBatch(cms.process_batch)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 @dataclass
@@ -220,43 +187,33 @@ class StreamingHll:
     (exact batch parity, tested), and state is ≤ m rows per group
     forever."""
 
-    root: str
+    base_path: str
     group_column: str = "event_type"
     key_column: str = "user_id"
     p: int = 8
 
-    def _path(self) -> str:
-        return f"{self.root}/hll"
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from redshells_spark.operators.sketches import hll_merge, hll_registers
 
-        spark = batch_df.sparkSession
         g = self.group_column
-        batch_regs = hll_registers(batch_df, [g], self.key_column, p=self.p)
-        state = _read_or_empty(spark, self._path(), f"{g} string, reg long, m_j long")
-        merged = hll_merge(
-            state.unionByName(batch_regs.withColumn(g, F.col(g).cast("string"))),
-            [g],
-        ).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(self._path())
+        batch_regs = hll_registers(
+            batch_df, [g], self.key_column, p=self.p
+        ).withColumn(g, F.col(g).cast("string"))
+        fold_state(
+            batch_df.sparkSession,
+            f"{self.base_path}/hll",
+            f"{g} string, reg long, m_j long",
+            lambda state: hll_merge(state.unionByName(batch_regs), [g]),
+        )
 
     def estimates(self, spark: SparkSession) -> DataFrame:
         from redshells_spark.operators.sketches import hll_estimate
 
         g = self.group_column
-        state = _read_or_empty(spark, self._path(), f"{g} string, reg long, m_j long")
+        state = read_state(
+            spark, f"{self.base_path}/hll", f"{g} string, reg long, m_j long"
+        )
         return hll_estimate(state, [g], p=self.p)
-
-
-def run_streaming_hll(stream: DataFrame, hll: StreamingHll, query_name: str):
-    return (
-        stream.writeStream.foreachBatch(hll.process_batch)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 @dataclass
@@ -268,57 +225,41 @@ class StreamingPsi:
     batch PSI over everything ever seen (parity, tested). State is
     ≤ max_bits rows per group forever."""
 
-    root: str
+    base_path: str
     value_column: str = "value"
     flag_column: str = "is_early"
     group_column: str = "event_type"
     scale: int = 100
     max_bits: int = 24
 
-    def _path(self) -> str:
-        return f"{self.root}/psi"
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from redshells_spark.operators.drift import psi_bucket_counts
 
-        spark = batch_df.sparkSession
         g = self.group_column
         batch_counts = psi_bucket_counts(
             batch_df, self.value_column, self.flag_column, [g],
             scale=self.scale, max_bits=self.max_bits,
         ).withColumn(g, F.col(g).cast("string"))
-        state = _read_or_empty(
-            spark, self._path(), f"{g} string, bucket long, c1 long, c2 long"
-        )
-        merged = (
-            state.unionByName(batch_counts)
+        fold_state(
+            batch_df.sparkSession,
+            f"{self.base_path}/psi",
+            f"{g} string, bucket long, c1 long, c2 long",
+            lambda state: state.unionByName(batch_counts)
             .groupBy(g, "bucket")
             .agg(
                 F.sum("c1").cast("long").alias("c1"),
                 F.sum("c2").cast("long").alias("c2"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        merged.write.mode("overwrite").parquet(self._path())
 
     def psi(self, spark: SparkSession) -> DataFrame:
         from redshells_spark.operators.drift import psi_from_bucket_counts
 
         g = self.group_column
-        state = _read_or_empty(
-            spark, self._path(), f"{g} string, bucket long, c1 long, c2 long"
+        state = read_state(
+            spark, f"{self.base_path}/psi", f"{g} string, bucket long, c1 long, c2 long"
         )
         return psi_from_bucket_counts(state, [g])
-
-
-def run_streaming_psi(stream: DataFrame, psi: StreamingPsi, query_name: str):
-    return (
-        stream.writeStream.foreachBatch(psi.process_batch)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 @dataclass
@@ -331,41 +272,33 @@ class StreamingDigest:
     (exact batch parity, tested), giving a streaming ingest a rolling
     snapshot-equality certificate at ≤ n_buckets rows forever."""
 
-    root: str
+    base_path: str
     content_columns: tuple = ("doc_id", "text")
     n_buckets: int = 32
 
-    def _path(self) -> str:
-        return f"{self.root}/digest"
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from redshells_spark.data.integrity import SUM_MOD, corpus_digest
+        from redshells_spark.data.integrity import corpus_digest
 
-        spark = batch_df.sparkSession
         batch = corpus_digest(
             batch_df, list(self.content_columns), self.n_buckets
         ).filter(F.col("bucket") >= 0)
-        state = _read_or_empty(
-            spark, self._path(), "bucket long, n_rows long, xor_digest long, sum_digest long"
-        )
-        merged = (
-            state.unionByName(batch)
+        fold_state(
+            batch_df.sparkSession,
+            f"{self.base_path}/digest",
+            _DIGEST_SCHEMA,
+            lambda state: state.unionByName(batch)
             .groupBy("bucket")
             .agg(
                 F.sum("n_rows").cast("long").alias("n_rows"),
                 F.expr("bit_xor(xor_digest)").cast("long").alias("xor_digest"),
                 F.sum("sum_digest").cast("long").alias("sum_digest"),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        merged.write.mode("overwrite").parquet(self._path())
 
     def digest(self, spark: SparkSession) -> DataFrame:
         """Per-bucket digest rows + the global fold (bucket = -1),
         matching :func:`corpus_digest`'s output shape."""
-        state = _read_or_empty(
-            spark, self._path(), "bucket long, n_rows long, xor_digest long, sum_digest long"
-        )
+        state = read_state(spark, f"{self.base_path}/digest", _DIGEST_SCHEMA)
         total = state.agg(
             F.lit(-1).cast("long").alias("bucket"),
             F.sum("n_rows").cast("long").alias("n_rows"),

@@ -67,7 +67,7 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
 
     batches = [[(i % 7,) for i in range(50)], [(i % 5,) for i in range(30)],
                [(3,)] * 20]
-    cms = StreamingCms(root=str(tmp_path / "state"), key_column="k",
+    cms = StreamingCms(base_path=str(tmp_path / "state"), key_column="k",
                        depth=3, width=64)
     for i, b in enumerate(batches):
         cms.process_batch(spark.createDataFrame(b, "k long"), i)

@@ -69,7 +69,7 @@ def test_hll_small_range_is_linear_counting(spark):
 def test_streaming_hll_batch_parity(spark, tmp_path):
     rows = [(f"t{i % 2}", i % 37) for i in range(300)]
     df = spark.createDataFrame(rows, "event_type string, user_id long")
-    h = StreamingHll(root=str(tmp_path / "hll"), group_column="event_type",
+    h = StreamingHll(base_path=str(tmp_path / "hll"), group_column="event_type",
                      key_column="user_id")
     h.process_batch(df.filter(F.col("user_id") % 3 == 0), 0)
     h.process_batch(df.filter(F.col("user_id") % 3 != 0), 1)
@@ -110,7 +110,7 @@ def test_psi_detects_shift(spark):
 def test_streaming_psi_batch_parity(spark, tmp_path):
     rows = [("a", float(1 + i % 50), i % 2) for i in range(400)]
     df = spark.createDataFrame(rows, "event_type string, value double, is_early long")
-    p = StreamingPsi(root=str(tmp_path / "psi"))
+    p = StreamingPsi(base_path=str(tmp_path / "psi"))
     h1 = df.filter((F.col("value") * 100).cast("long") % 2 == 0)
     h2 = df.filter((F.col("value") * 100).cast("long") % 2 != 0)
     p.process_batch(h1, 0)

@@ -62,7 +62,7 @@ def test_streaming_digest_batch_parity(spark, tmp_path):
 
     rows = [(i, f"text {i % 17}") for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    d = StreamingDigest(root=str(tmp_path / "dig"), content_columns=("doc_id", "text"), n_buckets=8)
+    d = StreamingDigest(base_path=str(tmp_path / "dig"), content_columns=("doc_id", "text"), n_buckets=8)
     d.process_batch(df.filter(F.col("doc_id") % 2 == 0), 0)
     d.process_batch(df.filter(F.col("doc_id") % 2 != 0), 1)
     want = sorted(map(tuple, corpus_digest(df, ["doc_id", "text"], 8).collect()))

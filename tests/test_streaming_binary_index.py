@@ -10,8 +10,8 @@ import pytest
 from redshells_spark.streaming.binary_index import (
     BinaryDedupIngest,
     batch_binary_dedup,
-    run_binary_dedup_ingest,
 )
+from redshells_spark.streaming.state import start_ingest
 
 # measured >=10s in the round-9 duration profile (pytest.ini tiering)
 pytestmark = pytest.mark.slow
@@ -56,7 +56,7 @@ def _run(spark, tmp_path, batches, radius=2):
     ingest = BinaryDedupIngest(
         base_path=str(tmp_path / "state"), dim=DIM, radius=radius
     )
-    q = run_binary_dedup_ingest(stream, ingest, f"bin_dedup_{tmp_path.name}")
+    q = start_ingest(stream, ingest, f"bin_dedup_{tmp_path.name}")
     try:
         q.processAllAvailable()
     finally:

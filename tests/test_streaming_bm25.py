@@ -6,8 +6,8 @@ from __future__ import annotations
 from redshells_spark.streaming.bm25_stats import (
     Bm25StatsIngest,
     corpus_index_stats,
-    run_bm25_stats_ingest,
 )
+from redshells_spark.streaming.state import start_ingest
 
 import pytest
 
@@ -36,7 +36,7 @@ def test_streamed_stats_match_batch_exactly(spark, tmp_path):
         .parquet(str(src / "*.parquet"))
     )
     ingest = Bm25StatsIngest(base_path=str(tmp_path / "state"))
-    q = run_bm25_stats_ingest(stream, ingest, "bm25_stats_test")
+    q = start_ingest(stream, ingest, "bm25_stats_test")
     try:
         q.processAllAvailable()
     finally:

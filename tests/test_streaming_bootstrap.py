@@ -3,7 +3,8 @@
 from __future__ import annotations
 
 from redshells_spark.ml.bootstrap import poisson_bootstrap_mean_ci
-from redshells_spark.streaming.bootstrap import BootstrapIngest, run_bootstrap_ingest
+from redshells_spark.streaming.bootstrap import BootstrapIngest
+from redshells_spark.streaming.state import start_ingest
 
 import pytest
 
@@ -28,7 +29,7 @@ def test_streamed_ci_matches_batch_exactly(spark, tmp_path):
         .parquet(str(src / "*.parquet"))
     )
     ingest = BootstrapIngest(base_path=str(tmp_path / "state"), n_replicas=64)
-    q = run_bootstrap_ingest(stream, ingest, "bootstrap_test")
+    q = start_ingest(stream, ingest, "bootstrap_test")
     try:
         q.processAllAvailable()
     finally:

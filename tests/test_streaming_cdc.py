@@ -11,7 +11,8 @@ import glob
 from pyspark.sql import functions as F
 
 from redshells_spark.operators.cdc import apply_changes
-from redshells_spark.streaming.cdc import SnapshotMaintainer, run_snapshot_maintenance
+from redshells_spark.streaming.cdc import SnapshotMaintainer
+from redshells_spark.streaming.state import start_ingest
 
 SCHEMA = "k long, name string, v double, version long, op string"
 
@@ -25,9 +26,9 @@ BATCHES = [
 SNAP_COLS = ["k", "name", "v"]
 
 
-def _maintainer(state_dir: str) -> SnapshotMaintainer:
+def _maintainer(base_path: str) -> SnapshotMaintainer:
     return SnapshotMaintainer(
-        state_dir=state_dir,
+        base_path=base_path,
         key_cols=["k"],
         version_col="version",
         snapshot_cols=SNAP_COLS,
@@ -54,7 +55,7 @@ def test_streaming_cdc_end_to_end(spark, tmp_path):
         .parquet(str(d / "*.parquet"))
     )
     m = _maintainer(str(tmp_path / "state"))
-    q = run_snapshot_maintenance(stream, m, "cdc_test")
+    q = start_ingest(stream, m, "cdc_test")
     try:
         q.processAllAvailable()
     finally:

@@ -10,8 +10,8 @@ from redshells_spark.data.dsir import dsir_log_weights
 from redshells_spark.streaming.dsir import (
     DsirScoreIngest,
     freeze_dsir_reference,
-    run_dsir_ingest,
 )
+from redshells_spark.streaming.state import start_ingest
 
 SCHEMA = "doc_id long, text string, is_t boolean"
 
@@ -48,7 +48,7 @@ def test_streaming_scores_match_batch(spark, tmp_path, frozen):
     ingest = DsirScoreIngest(
         base_path=str(tmp_path / "state"), stats_path=frozen, num_buckets=16
     )
-    q = run_dsir_ingest(stream, ingest, "dsir_test")
+    q = start_ingest(stream, ingest, "dsir_test")
     try:
         q.processAllAvailable()
     finally:
@@ -88,7 +88,7 @@ def test_docs_with_no_scorable_grams_land_in_scored(spark, tmp_path, frozen):
     ingest = DsirScoreIngest(
         base_path=str(tmp_path / "state"), stats_path=frozen, num_buckets=16
     )
-    q = run_dsir_ingest(stream, ingest, "dsir_empty_test")
+    q = start_ingest(stream, ingest, "dsir_empty_test")
     try:
         q.processAllAvailable()
     finally:

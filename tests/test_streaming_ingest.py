@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from redshells_spark.streaming.ingest import CorpusIngest, run_corpus_ingest
+from redshells_spark.streaming.ingest import CorpusIngest
+from redshells_spark.streaming.state import start_ingest
 
 BATCHES = [
     [
@@ -63,7 +64,7 @@ def test_corpus_ingest_end_to_end(spark, vocab, stream_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir / "*.parquet"))
     )
-    q = run_corpus_ingest(stream, ingest, "ingest_test")
+    q = start_ingest(stream, ingest, "ingest_test")
     try:
         q.processAllAvailable()
     finally:

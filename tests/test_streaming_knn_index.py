@@ -6,7 +6,8 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from redshells_spark.streaming.knn_index import KnnGraphIngest, run_knn_index_ingest
+from redshells_spark.streaming.knn_index import KnnGraphIngest
+from redshells_spark.streaming.state import start_ingest
 
 SF = "/root/testdata/sf0.001"
 
@@ -31,7 +32,7 @@ def test_streamed_index_recall(spark, tmp_path):
         .parquet(str(src / "*.parquet"))
     )
     ingest = KnnGraphIngest(base_path=str(tmp_path / "state"), k=10)
-    q = run_knn_index_ingest(stream, ingest, "knn_index_test")
+    q = start_ingest(stream, ingest, "knn_index_test")
     try:
         q.processAllAvailable()
     finally:

@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from redshells_spark.dedup.lines import cross_doc_unit_dedup, split_units
-from redshells_spark.streaming.line_dedup import LineDedupIngest, run_line_dedup_ingest
+from redshells_spark.streaming.line_dedup import LineDedupIngest
+from redshells_spark.streaming.state import start_ingest
 
 SCHEMA = "doc_id long, text string"
 
@@ -34,7 +35,7 @@ def _run_stream(spark, tmp_path, batches, **kwargs):
         .parquet(str(src / "*.parquet"))
     )
     ingest = LineDedupIngest(base_path=str(tmp_path / "state"), **kwargs)
-    q = run_line_dedup_ingest(stream, ingest, "line_dedup_test")
+    q = start_ingest(stream, ingest, "line_dedup_test")
     try:
         q.processAllAvailable()
     finally:

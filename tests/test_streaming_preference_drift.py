@@ -5,11 +5,9 @@ from __future__ import annotations
 
 from redshells_spark.data.preference import preference_pairs
 from redshells_spark.operators.drift import ks_two_sample
-from redshells_spark.streaming.drift import DriftIngest, run_drift_ingest
-from redshells_spark.streaming.preference import (
-    PreferencePairIngest,
-    run_preference_ingest,
-)
+from redshells_spark.streaming.drift import DriftIngest
+from redshells_spark.streaming.preference import PreferencePairIngest
+from redshells_spark.streaming.state import start_ingest
 
 P_SCHEMA = "grp long, item long, score long"
 P_ROWS = [
@@ -51,7 +49,7 @@ def test_streamed_pairs_match_batch_exactly(spark, tmp_path):
         min_margin=5000,
         max_pairs_per_group=2,
     )
-    q = run_preference_ingest(stream, ingest, "pref_test")
+    q = start_ingest(stream, ingest, "pref_test")
     try:
         q.processAllAvailable()
     finally:
@@ -76,7 +74,7 @@ def test_streamed_pairs_match_batch_exactly(spark, tmp_path):
 def test_streamed_ks_matches_batch_exactly(spark, tmp_path):
     stream = _write_batches(spark, tmp_path / "dsrc", D_BATCHES, D_SCHEMA)
     ingest = DriftIngest(base_path=str(tmp_path / "dstate"))
-    q = run_drift_ingest(stream, ingest, "drift_test")
+    q = start_ingest(stream, ingest, "drift_test")
     try:
         q.processAllAvailable()
     finally:
@@ -111,7 +109,7 @@ def test_streamed_pairs_string_ids(spark, tmp_path):
         min_margin=100,
         max_pairs_per_group=1,
     )
-    q = run_preference_ingest(stream, ingest, "pref_str_test")
+    q = start_ingest(stream, ingest, "pref_str_test")
     try:
         q.processAllAvailable()
     finally:
@@ -130,7 +128,7 @@ def test_streamed_pairs_string_ids(spark, tmp_path):
 
 def test_streamed_bleu_empty_first_batch(spark, tmp_path):
     """An empty micro-batch must fold as zeros, not write NULL lens."""
-    from redshells_spark.streaming.geneval import BleuStatsIngest, run_bleu_ingest
+    from redshells_spark.streaming.geneval import BleuStatsIngest
     from redshells_spark.text.geneval import bleu_corpus_stats
 
     schema = "id long, cand array<string>, ref array<string>"
@@ -138,7 +136,7 @@ def test_streamed_bleu_empty_first_batch(spark, tmp_path):
     # batch 0 is EMPTY (schema-only parquet), batch 1 holds the pair
     stream = _write_batches(spark, tmp_path / "ebsrc", [[], rows], schema)
     ingest = BleuStatsIngest(base_path=str(tmp_path / "ebstate"), max_n=2)
-    q = run_bleu_ingest(stream, ingest, "bleu_empty_test")
+    q = start_ingest(stream, ingest, "bleu_empty_test")
     try:
         q.processAllAvailable()
     finally:
@@ -155,7 +153,7 @@ def test_streamed_bleu_empty_first_batch(spark, tmp_path):
 
 
 def test_streamed_bleu_stats_match_batch_exactly(spark, tmp_path):
-    from redshells_spark.streaming.geneval import BleuStatsIngest, run_bleu_ingest
+    from redshells_spark.streaming.geneval import BleuStatsIngest
     from redshells_spark.text.geneval import bleu_corpus_stats
 
     vocab = ["a", "b", "c", "d", "e"]
@@ -169,7 +167,7 @@ def test_streamed_bleu_stats_match_batch_exactly(spark, tmp_path):
     src = tmp_path / "bsrc"
     stream = _write_batches(spark, src, batches, schema)
     ingest = BleuStatsIngest(base_path=str(tmp_path / "bstate"), max_n=3)
-    q = run_bleu_ingest(stream, ingest, "bleu_test")
+    q = start_ingest(stream, ingest, "bleu_test")
     try:
         q.processAllAvailable()
     finally:

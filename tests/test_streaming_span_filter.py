@@ -11,8 +11,8 @@ from redshells_spark.dedup.spans import decontaminate_spans
 from redshells_spark.streaming.span_filter import (
     SpanFilterIngest,
     build_benchmark_shingle_index,
-    run_span_filter_ingest,
 )
+from redshells_spark.streaming.state import start_ingest
 from redshells_spark.text.tokenize import tokenize_on_space
 
 SCHEMA = "doc_id long, text string"
@@ -45,7 +45,7 @@ def _run_stream(spark, tmp_path, k=4):
         .parquet(str(src / "*.parquet"))
     )
     ingest = SpanFilterIngest(base_path=str(base), shingle_len=k)
-    q = run_span_filter_ingest(stream, ingest, "span_filter_test")
+    q = start_ingest(stream, ingest, "span_filter_test")
     try:
         q.processAllAvailable()
     finally:

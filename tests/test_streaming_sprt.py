@@ -6,7 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from redshells_spark.operators.sequential import sprt_monitor
-from redshells_spark.streaming.sprt import SprtIngest, run_sprt_ingest
+from redshells_spark.streaming.sprt import SprtIngest
+from redshells_spark.streaming.state import start_ingest
 
 SCHEMA = "us long, event_type string"
 DAY = 86_400_000_000
@@ -49,7 +50,7 @@ def test_streamed_sprt_matches_batch_exactly(spark, tmp_path):
         trial_expr="event_type in ('view','purchase')",
         success_expr="event_type = 'purchase'",
     )
-    q = run_sprt_ingest(stream, ingest, "sprt_test")
+    q = start_ingest(stream, ingest, "sprt_test")
     try:
         q.processAllAvailable()
     finally:

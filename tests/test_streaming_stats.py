@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from redshells_spark.operators.sketches import kmv_distinct
-from redshells_spark.streaming.stats import StreamingStats, run_streaming_stats
+from redshells_spark.streaming.state import start_ingest
+from redshells_spark.streaming.stats import StreamingStats
 
 
 @pytest.fixture()
@@ -27,7 +28,7 @@ def doc_batches(spark, tmp_path):
 def test_streaming_kmv_matches_batch(spark, doc_batches, tmp_path):
     d, rows = doc_batches
     stats = StreamingStats(
-        root=str(tmp_path / "state"), group_column="source",
+        base_path=str(tmp_path / "state"), group_column="source",
         value_column="text", token_column="tokens", kmv_k=16, mg_capacity=8,
     )
     stream = (
@@ -35,7 +36,7 @@ def test_streaming_kmv_matches_batch(spark, doc_batches, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d / "*.parquet"))
     )
-    q = run_streaming_stats(stream, stats, "stats_test")
+    q = start_ingest(stream, stats, "stats_test")
     try:
         q.processAllAvailable()
     finally:
@@ -70,15 +71,15 @@ def test_streaming_kmv_matches_batch(spark, doc_batches, tmp_path):
 
 def test_streaming_stats_resume(spark, doc_batches, tmp_path):
     d, rows = doc_batches
-    root = str(tmp_path / "state2")
-    s1 = StreamingStats(root=root, group_column="source", value_column="text",
+    base = str(tmp_path / "state2")
+    s1 = StreamingStats(base_path=base, group_column="source", value_column="text",
                         token_column="tokens", kmv_k=16, mg_capacity=8)
     b0 = spark.createDataFrame(
         rows[:50], "doc_id long, source string, text string, tokens array<string>"
     )
     s1.process_batch(b0, 0)
     # fresh instance, same state dir — folds batch 1 on top of batch 0
-    s2 = StreamingStats(root=root, group_column="source", value_column="text",
+    s2 = StreamingStats(base_path=base, group_column="source", value_column="text",
                         token_column="tokens", kmv_k=16, mg_capacity=8)
     b1 = spark.createDataFrame(
         rows[50:100], "doc_id long, source string, text string, tokens array<string>"

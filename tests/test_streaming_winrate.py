@@ -4,7 +4,8 @@ any micro-batching of the match log."""
 from __future__ import annotations
 
 from redshells_spark.data.preference import win_rate_matrix
-from redshells_spark.streaming.winrate import WinRateIngest, run_winrate_ingest
+from redshells_spark.streaming.winrate import WinRateIngest
+from redshells_spark.streaming.state import start_ingest
 
 SCHEMA = "winner string, loser string"
 MODELS = ["m1", "m2", "m3", "m4"]
@@ -29,7 +30,7 @@ def test_streamed_matrix_matches_batch_exactly(spark, tmp_path):
         .parquet(str(src / "*.parquet"))
     )
     ingest = WinRateIngest(base_path=str(tmp_path / "state"))
-    q = run_winrate_ingest(stream, ingest, "winrate_test")
+    q = start_ingest(stream, ingest, "winrate_test")
     try:
         q.processAllAvailable()
     finally:
