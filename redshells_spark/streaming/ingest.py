@@ -1,41 +1,58 @@
 """Streaming corpus ingestion with incremental exact + near dedup.
 
 The end-to-end ingest shape of a production LLM-data pipeline: documents
-arrive continuously; each micro-batch is
+arrive continuously; each micro-batch is exact-deduped (portable md5
+fingerprint) within the batch, keeping the first by doc id, and against
+every previously accepted document (anti-join on the persisted
+fingerprint set); then near-deduped (MinHash band buckets +
+signature-agreement Jaccard) within the batch, dropping the larger doc
+id, and against the persisted corpus index
+(:func:`redshells_spark.dedup.minhash.minhash_dedup_against_index` —
+band-bucket equi-join, corpus text never re-read).
 
-1. exact-deduped within the batch (portable md5 fingerprint, keep
-   first by doc id),
-2. exact-deduped against every previously accepted document (anti-join
-   on the persisted fingerprint set),
-3. near-deduped within the batch (MinHash band buckets + signature-
-   agreement Jaccard, keep the smaller doc id),
-4. near-deduped against the persisted corpus index
-   (:func:`redshells_spark.dedup.minhash.minhash_dedup_against_index` —
-   band-bucket equi-join, corpus text never re-read),
+A batch runs as two pins, one probe plan and four sinks:
 
-and only the survivors are appended: their text to ``corpus/``, their
-band buckets to ``index/`` (partitioned by band → future probes prune),
-their wide signatures to ``signatures/``, their fingerprints to
-``fingerprints/``. State lives entirely in parquet — a restart resumes
-from what was accepted, and the nightly batch path
-(``minhash_dedup_against_index``) reads the same index.
+1. **docs pin** — the batch after both exact dedups, left-joined to
+   its wide MinHash signature (null for a doc without an in-vocab
+   shingle). The same job observes the batch's input row count.
+2. **accepted pin** — one plan holds both near-dup probes, the batch
+   against its own band index and the batch against the corpus index,
+   and anti-joins the union of their dropped ids. A probe scores each
+   new doc on its own, so probing the corpus with the whole batch
+   drops exactly what probing it with the within-batch survivors plus
+   the within-batch drops does.
+3. **sinks** — four projections of ``accepted``. Text is appended to
+   ``corpus/`` first; then three chains, one thread each, append and
+   roll-compact fingerprints to ``fingerprints/``, wide signatures to
+   ``signatures/`` and band buckets to ``index/`` (partitioned by band
+   → future probes prune). Each chain writes only its own directory. A
+   doc without a signature lands in corpus and fingerprints only.
+   Corpus commits before any dedup state gains the batch, so a failed
+   batch that is re-run may append its survivors to corpus twice but
+   never drops them as duplicates of its own state writes.
 
-Every step is a distributed DataFrame op: no driver-side collect, no
-per-row Python. The vocabulary is fixed at ingest-setup time (stream
-shingles must hash into the same token-id space as the corpus index;
-re-fitting vocab mid-stream would silently shift every signature).
+State lives entirely in parquet — a restart resumes from what was
+accepted, and the nightly batch path (``minhash_dedup_against_index``)
+reads the same index. Every step is a distributed DataFrame op: no
+driver-side collect, no per-row Python. The vocabulary is fixed at
+ingest-setup time (stream shingles must hash into the same token-id
+space as the corpus index; re-fitting vocab mid-stream would silently
+shift every signature).
 
 State reads and the stream wiring go through
 :mod:`redshells_spark.streaming.state`, which also states the
-idempotency caveat: a re-run batch double-writes its survivors.
+idempotency caveat: a re-run batch double-writes its survivors. The
+reads and compactions are typed by :meth:`CorpusIngest.state_ddl`.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from redshells_spark.dedup.minhash import (
@@ -72,14 +89,15 @@ def _append_bucketed(
     )
 
 
-def _compact_bucket(spark: SparkSession, path: str, bucket) -> int:
+def _compact_bucket(spark: SparkSession, path: str, bucket, schema: str) -> int:
     """Rewrite one bucket subdirectory of a state path into a single
     file (rolling compaction — callers pass ``batch_id % n_buckets``).
-    Works on any partition column spelling (``__b=3``, ``band=2``).
+    Works on any partition column spelling (``__b=3``, ``band=2``);
+    ``schema`` is the DDL of the columns the bucket's files hold.
     Returns the number of files merged away (0 = nothing to do)."""
     sub = f"{path.rstrip('/')}/{bucket}"
     try:
-        cur = spark.read.parquet(sub)
+        cur = spark.read.schema(schema).parquet(sub)
     except AnalysisException:
         if _unwritten(spark, sub):  # bucket not written yet
             return 0
@@ -91,6 +109,29 @@ def _compact_bucket(spark: SparkSession, path: str, bucket) -> int:
     snap = cur.coalesce(1).localCheckpoint(eager=True)
     snap.write.mode("overwrite").parquet(sub)
     return len(files) - 1
+
+
+def _run_concurrently(chains: list[Callable[[], int]]) -> list[int]:
+    """Run each chain on its own :class:`pyspark.InheritableThread`,
+    which carries the caller's job group and local properties to the
+    chain's jobs; join them all, then re-raise the first chain's error."""
+    results: list = [None] * len(chains)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = chains[i]()
+        except BaseException as e:  # re-raised on the calling thread
+            results[i] = e
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(len(chains))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for r in results:
+        if isinstance(r, BaseException):
+            raise r
+    return results
 
 
 @dataclass
@@ -119,109 +160,119 @@ class CorpusIngest:
     def _p(self, name: str) -> str:
         return f"{self.base_path}/{name}"
 
+    def state_ddl(self) -> dict[str, str]:
+        """State dir → DDL of the columns its files hold. The DDL, not
+        the parquet footers, types every read and compaction of the dir;
+        its partition column (``__b``, ``band`` for the index) lives in
+        the directory names."""
+        sigs = ", ".join(f"mh{j} long" for j in range(self.num_hashes))
+        return {
+            "fingerprints": "fingerprint string",
+            "signatures": f"doc_id long, {sigs}",
+            "index": "doc_id long, bucket string",
+        }
+
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        docs = batch_df.withColumn(
+        ddl = self.state_ddl()
+        sig_cols = [f"mh{j}" for j in range(self.num_hashes)]
+
+        # docs pin: exact dedup within the batch (keep-first by id) and
+        # against the accepted fingerprints, left-joined to the wide
+        # signatures (keyed on "doc_id", whatever id_column is)
+        n_in = Observation()
+        docs = batch_df.observe(n_in, F.count(F.lit(1)).alias("n")).withColumn(
             "fingerprint", fingerprint_column(self.text_column)
         )
-        n_in = docs.count()
-
-        # 1. exact dedup within batch — deterministic keep-first (min id)
-        from pyspark.sql import Window
-
         w = Window.partitionBy("fingerprint").orderBy(self.id_column)
         docs = (
             docs.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
+            .join(
+                read_state(spark, self._p("fingerprints"), ddl["fingerprints"]),
+                on="fingerprint", how="left_anti",
+            )
         )
-
-        # 2. exact dedup against accepted corpus
-        seen = read_state(spark, self._p("fingerprints"), "fingerprint string")
-        docs = docs.join(seen, on="fingerprint", how="left_anti")
-
-        # one pass of signatures for steps 3+4 (and the final index append)
-        docs = docs.localCheckpoint(eager=True)  # cut lineage; reused 4×
         tokens = tokenize_on_space(docs, self.text_column, "tokens", lowercase=True)
         shingles = doc_shingles(
             tokens, self.vocab, self.id_column, "tokens", self.shingle_len
         )
-        wide = minhash_signatures_wide(
-            shingles, self.num_hashes, with_size=False
-        ).localCheckpoint(eager=True)
-        batch_index = minhash_band_index(wide, self.bands, self.rows_per_band)
-
-        # 3. near dedup within batch: self-match via the index machinery,
-        #    orient pairs new > corpus → the larger id is dropped
-        self_pairs = minhash_dedup_against_index(
-            wide, batch_index, wide,
-            threshold=self.threshold, bands=self.bands,
-            rows_per_band=self.rows_per_band, num_hashes=self.num_hashes,
-            max_bucket_size=self.max_bucket_size,
-        ).filter(F.col("new_doc_id") > F.col("corpus_doc_id"))
-        # wide/shingle frames always key on "doc_id"; docs keys on id_column
-        drop_in_batch = self_pairs.select(
-            F.col("new_doc_id").alias("doc_id")
-        ).distinct()
+        wide = minhash_signatures_wide(shingles, self.num_hashes, with_size=False)
         docs = docs.join(
-            F.broadcast(drop_in_batch.withColumnRenamed("doc_id", self.id_column)),
-            on=self.id_column, how="left_anti",
+            wide.withColumnRenamed("doc_id", self.id_column),
+            on=self.id_column, how="left",
+        ).localCheckpoint(eager=True)
+        wide = docs.filter(F.col("mh0").isNotNull()).select(
+            F.col(self.id_column).alias("doc_id"), *sig_cols
         )
-        wide = wide.join(F.broadcast(drop_in_batch), on="doc_id", how="left_anti")
 
-        # 4. near dedup against the persisted corpus index
-        corpus_index = read_state(
-            spark, self._p("index"), "doc_id long, band int, bucket string"
-        )
-        corpus_wide = read_state(
-            spark, self._p("signatures"),
-            "doc_id long, " + ", ".join(f"mh{j} long" for j in range(self.num_hashes)),
-        )
-        near = minhash_dedup_against_index(
-            wide, corpus_index, corpus_wide,
+        # accepted pin: both near-dup probes in one plan — the batch
+        # against itself (pairs oriented new > corpus, so the larger id
+        # is dropped) and against the persisted corpus index
+        probe = dict(
             threshold=self.threshold, bands=self.bands,
             rows_per_band=self.rows_per_band, num_hashes=self.num_hashes,
             max_bucket_size=self.max_bucket_size,
         )
-        drop_vs_corpus = near.select(F.col("new_doc_id").alias("doc_id")).distinct()
+        in_batch = minhash_dedup_against_index(
+            wide, minhash_band_index(wide, self.bands, self.rows_per_band), wide,
+            **probe,
+        ).filter(F.col("new_doc_id") > F.col("corpus_doc_id"))
+        vs_corpus = minhash_dedup_against_index(
+            wide,
+            read_state(spark, self._p("index"), f"{ddl['index']}, band int"),
+            read_state(spark, self._p("signatures"), ddl["signatures"]),
+            **probe,
+        )
+        dropped = (
+            in_batch.select("new_doc_id")
+            .union(vs_corpus.select("new_doc_id"))
+            .distinct()
+            .withColumnRenamed("new_doc_id", self.id_column)
+        )
         accepted, n_accepted = pin_count(
-            docs.join(
-                F.broadcast(drop_vs_corpus.withColumnRenamed("doc_id", self.id_column)),
-                on=self.id_column, how="left_anti",
-            )
+            docs.join(F.broadcast(dropped), on=self.id_column, how="left_anti")
         )
 
-        # 5. append survivors to corpus + state sinks (state dirs are
-        # hash-bucketed so step 6 can compact them incrementally)
-        accepted.drop("fingerprint").write.mode("append").parquet(self._p("corpus"))
-        _append_bucketed(
-            accepted.select("fingerprint"),
-            self._p("fingerprints"), "fingerprint", self.n_state_buckets,
+        # sinks: corpus first, then each state append and a rolling
+        # compaction of one fingerprint/signature bucket or index band —
+        # every bucket is revisited each n_state_buckets (resp. bands)
+        # batches, so the per-batch rewrite cost stays at
+        # |state|/n_buckets and the file count bounded
+        accepted.drop("fingerprint", *sig_cols).write.mode("append").parquet(
+            self._p("corpus")
         )
-        acc_wide = wide.join(
-            F.broadcast(drop_vs_corpus), on="doc_id", how="left_anti"
-        ).localCheckpoint(eager=True)
-        _append_bucketed(
-            acc_wide, self._p("signatures"), "doc_id", self.n_state_buckets
+        acc_wide = accepted.filter(F.col("mh0").isNotNull()).select(
+            F.col(self.id_column).alias("doc_id"), *sig_cols
         )
-        minhash_band_index(acc_wide, self.bands, self.rows_per_band).write.mode(
-            "append"
-        ).partitionBy("band").parquet(self._p("index"))
-
-        # 6. rolling compaction: one fingerprint/signature bucket and
-        # one index band per batch — every bucket is revisited each
-        # n_state_buckets (resp. bands) batches, so per-batch rewrite
-        # cost stays at |state|/n_buckets and the file count bounded
         b = batch_id % self.n_state_buckets
-        compacted = _compact_bucket(spark, self._p("fingerprints"), f"__b={b}")
-        compacted += _compact_bucket(spark, self._p("signatures"), f"__b={b}")
-        compacted += _compact_bucket(
-            spark, self._p("index"), f"band={batch_id % self.bands}"
+
+        def bucketed(name: str, rows: DataFrame, key: str) -> Callable[[], int]:
+            def chain() -> int:
+                _append_bucketed(rows, self._p(name), key, self.n_state_buckets)
+                return _compact_bucket(spark, self._p(name), f"__b={b}", ddl[name])
+            return chain
+
+        def index() -> int:
+            minhash_band_index(acc_wide, self.bands, self.rows_per_band).write.mode(
+                "append"
+            ).partitionBy("band").parquet(self._p("index"))
+            return _compact_bucket(
+                spark, self._p("index"), f"band={batch_id % self.bands}", ddl["index"]
+            )
+
+        compacted = sum(
+            _run_concurrently([
+                bucketed("fingerprints", accepted.select("fingerprint"), "fingerprint"),
+                bucketed("signatures", acc_wide, "doc_id"),
+                index,
+            ])
         )
         self.stats.append(
             {
                 "batch_id": batch_id,
-                "n_in": n_in,
+                "n_in": n_in.get["n"],
                 "n_accepted": n_accepted,
                 "files_compacted": compacted,
             }

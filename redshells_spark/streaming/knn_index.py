@@ -30,7 +30,7 @@ from redshells_spark.similarity.knn_graph import (
 )
 from redshells_spark.streaming.state import fold_state, read_state
 
-_GRAPH_SCHEMA = "src long, dst long, score double, rank long"
+_GRAPH_SCHEMA = "src long, dst long, score double, rank int"
 
 
 @dataclass

@@ -28,11 +28,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from redshells_spark.dedup.lines import block_units, split_units
-from redshells_spark.operators.observe import pin_count
 from redshells_spark.streaming.ingest import _append_bucketed, _compact_bucket
 from redshells_spark.streaming.state import read_state
 
@@ -83,7 +82,9 @@ class LineDedupIngest:
                 & (F.col("__first.pos") == F.col("pos")),
             )
         )
-        cleaned, n_docs = pin_count(
+        # the stats ride along with the corpus append
+        obs = Observation()
+        (
             flagged.groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_units"),
@@ -100,8 +101,14 @@ class LineDedupIngest:
                     self.joiner, F.transform(F.col("__kept"), lambda s: s["unit"])
                 ).alias(self.text_column),
             )
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.coalesce(F.sum("n_dropped"), F.lit(0)).alias("n_dropped_units"),
+            )
+            .write.mode("append")
+            .parquet(self._p("corpus"))
         )
-        cleaned.write.mode("append").parquet(self._p("corpus"))
         # every distinct batch hash becomes state — once a unit has
         # appeared, any later occurrence is a duplicate
         new_hashes = (
@@ -116,14 +123,8 @@ class LineDedupIngest:
             spark,
             self._p("unit_hashes"),
             f"__b={batch_id % self.n_state_buckets}",
+            "__h string",
         )
         self.stats.append(
-            {
-                "batch_id": batch_id,
-                "n_docs": n_docs,
-                "n_dropped_units": int(
-                    cleaned.agg(F.sum("n_dropped")).collect()[0][0] or 0
-                ),
-                "files_compacted": compacted,
-            }
+            {"batch_id": batch_id, **obs.get, "files_compacted": compacted}
         )

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from redshells_spark.dedup.spans import (
@@ -99,20 +99,14 @@ class SpanFilterIngest:
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        cleaned = self.clean_batch(batch_df).localCheckpoint(eager=True)
-        cleaned.write.mode("append").parquet(self._p("corpus"))
-        agg = cleaned.agg(
+        # the stats ride along with the append: one execution per batch
+        obs = Observation()
+        self.clean_batch(batch_df).observe(
+            obs,
             F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("n_removed"), F.lit(0)).alias("n_removed"),
+            F.coalesce(F.sum("n_removed"), F.lit(0)).alias("n_removed_tokens"),
             F.coalesce(
                 F.sum((F.col("n_removed") > 0).cast("long")), F.lit(0)
-            ).alias("n_contaminated"),
-        ).collect()[0]
-        self.stats.append(
-            {
-                "batch_id": batch_id,
-                "n_docs": int(agg["n_docs"]),
-                "n_removed_tokens": int(agg["n_removed"]),
-                "n_contaminated_docs": int(agg["n_contaminated"]),
-            }
-        )
+            ).alias("n_contaminated_docs"),
+        ).write.mode("append").parquet(self._p("corpus"))
+        self.stats.append({"batch_id": batch_id, **obs.get})

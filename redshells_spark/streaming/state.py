@@ -1,11 +1,13 @@
 """Streaming state: the one way a processor reads, folds and wires the
 parquet state it keeps under its ``base_path``.
 
-- :func:`read_state` reads a state directory projected to its declared
-  columns. Only a directory that was never written reads as empty: the
-  path does not exist, or it is a committed empty write (a ``_SUCCESS``
-  marker and no data files, which an empty ``partitionBy`` append
-  leaves). Any other unreadable directory raises.
+- :func:`read_state` reads a state directory as its declared DDL
+  (schema on read: the DDL, not the parquet footers, types the read, so
+  reading state launches no schema-inference job). Only a directory
+  that was never written reads as empty: the path does not exist, or it
+  is a committed empty write (a ``_SUCCESS`` marker and no data files,
+  which an empty ``partitionBy`` append leaves). Any other directory
+  without data files raises.
 - :func:`fold_state` is read → fold → pin → overwrite for state that is
   rewritten whole each micro-batch (sums, sketches, extremes, graphs).
 - :func:`start_ingest` wires a processor's ``process_batch`` into a
@@ -50,17 +52,25 @@ def _unwritten(spark: SparkSession, path: str) -> bool:
 
 
 def read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """The state at ``path`` projected to the columns of the DDL
-    ``schema`` (drops partition columns such as ``__b``); the empty
+    """The state at ``path`` read as the DDL ``schema`` (partition
+    columns not named in it, such as ``__b``, are dropped); the empty
     frame of ``schema`` if the state was never written."""
     # split on top-level commas only: "a long, w array<bigint>, s struct<x:int,y:int>"
     cols = [c.split()[0] for c in re.split(r",(?![^<]*>)", schema)]
     try:
-        state = spark.read.parquet(path)
+        state = spark.read.schema(schema).parquet(path)
     except AnalysisException:
         if not _unwritten(spark, path):
             raise
         state = spark.createDataFrame([], schema)
+    else:
+        # a declared schema reads a directory without data files as empty
+        # instead of failing footer inference: only the file listing the
+        # read already made tells a committed empty write from a lost one
+        if not state.inputFiles() and not _unwritten(spark, path):
+            raise AnalysisException(
+                f"state directory {path} holds no data files and no committed empty write"
+            )
     return state.select(*cols)
 
 

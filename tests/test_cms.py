@@ -61,7 +61,7 @@ def test_cms_cell_count_bounded(spark, skewed):
     assert sk.filter((F.col("bucket") < 0) | (F.col("bucket") >= 32)).count() == 0
 
 
-def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
+def test_streaming_cms_equals_batch_sketch(spark, tmp_path, state_ddl_check):
     from redshells_spark.operators.sketches import cms_build
     from redshells_spark.streaming.stats import StreamingCms
 

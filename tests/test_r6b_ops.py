@@ -66,7 +66,7 @@ def test_hll_small_range_is_linear_counting(spark):
     assert abs(out["hll_est"] - 5) < 0.1
 
 
-def test_streaming_hll_batch_parity(spark, tmp_path):
+def test_streaming_hll_batch_parity(spark, tmp_path, state_ddl_check):
     rows = [(f"t{i % 2}", i % 37) for i in range(300)]
     df = spark.createDataFrame(rows, "event_type string, user_id long")
     h = StreamingHll(base_path=str(tmp_path / "hll"), group_column="event_type",
@@ -107,7 +107,7 @@ def test_psi_detects_shift(spark):
     assert out["psi"] > 0.25  # the standard "action" threshold
 
 
-def test_streaming_psi_batch_parity(spark, tmp_path):
+def test_streaming_psi_batch_parity(spark, tmp_path, state_ddl_check):
     rows = [("a", float(1 + i % 50), i % 2) for i in range(400)]
     df = spark.createDataFrame(rows, "event_type string, value double, is_early long")
     p = StreamingPsi(base_path=str(tmp_path / "psi"))

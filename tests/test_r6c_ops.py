@@ -274,7 +274,7 @@ def test_greedy_max_coverage_semantics(spark):
 # ------------------------------------------- streaming Mann-Whitney
 
 
-def test_streaming_mann_whitney_parity(spark, tmp_path):
+def test_streaming_mann_whitney_parity(spark, tmp_path, state_ddl_check):
     from redshells_spark.operators.drift import mann_whitney_u
     from redshells_spark.streaming.drift import DriftIngest
 

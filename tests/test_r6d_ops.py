@@ -57,7 +57,7 @@ def test_kcenter_early_stop_small_corpus(spark):
     assert len(out) == 2  # only 2 points exist
 
 
-def test_streaming_digest_batch_parity(spark, tmp_path):
+def test_streaming_digest_batch_parity(spark, tmp_path, state_ddl_check):
     from redshells_spark.streaming.stats import StreamingDigest
 
     rows = [(i, f"text {i % 17}") for i in range(200)]

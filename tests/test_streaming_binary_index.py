@@ -14,7 +14,7 @@ from redshells_spark.streaming.binary_index import (
 from redshells_spark.streaming.state import start_ingest
 
 # measured >=10s in the round-9 duration profile (pytest.ini tiering)
-pytestmark = pytest.mark.slow
+pytestmark = [pytest.mark.slow, pytest.mark.usefixtures("state_ddl_check")]
 
 DIM = 8
 SCHEMA = "vec_id long, embedding array<double>"

@@ -12,7 +12,7 @@ from redshells_spark.streaming.state import start_ingest
 import pytest
 
 # measured >=10s in the round-9 duration profile (pytest.ini tiering)
-pytestmark = pytest.mark.slow
+pytestmark = [pytest.mark.slow, pytest.mark.usefixtures("state_ddl_check")]
 
 SCHEMA = "doc_id long, text string"
 

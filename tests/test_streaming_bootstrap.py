@@ -9,7 +9,7 @@ from redshells_spark.streaming.state import start_ingest
 import pytest
 
 # measured >=10s in the round-9 duration profile (pytest.ini tiering)
-pytestmark = pytest.mark.slow
+pytestmark = [pytest.mark.slow, pytest.mark.usefixtures("state_ddl_check")]
 
 SCHEMA = "event_id long, value double"
 ROWS = [(i, float((i * 37) % 100) / 4.0 + 1.0) for i in range(900)]

@@ -1,16 +1,21 @@
 """Streaming corpus ingest e2e: micro-batches exact+near-deduped against
-persisted state; survivors appended to corpus/index/fingerprints."""
+persisted state; survivors appended to corpus/index/fingerprints/
+signatures."""
 
 from __future__ import annotations
 
 import glob
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from redshells_spark.streaming import ingest as ingest_module
 from redshells_spark.streaming.ingest import CorpusIngest
 from redshells_spark.streaming.state import start_ingest
+
+pytestmark = pytest.mark.usefixtures("state_ddl_check")
 
 BATCHES = [
     [
@@ -31,7 +36,7 @@ BATCHES = [
 ]
 
 
-@pytest.fixture()
+@pytest.fixture(scope="module")
 def vocab(spark):
     # every token in the fixture corpus, deterministic ids — the ingest
     # contract is a FIXED vocab shared with the corpus index
@@ -39,6 +44,108 @@ def vocab(spark):
     df = spark.createDataFrame([(t,) for t in tokens], "token string")
     w = Window.partitionBy().orderBy("token")
     return df.withColumn("token_id", F.row_number().over(w).cast("long") - 1)
+
+
+def _jobs(spark, group, fn):
+    """→ (fn(), number of Spark jobs fn ran), counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# one batch against BATCHES[0]'s state that takes every drop path
+DIRECT_BATCH = [
+    (3, "the quick brown fox jumps over the lazy dog"),  # exact dup of accepted 1
+    (4, "the quick brown fox jumps over the lazy cat"),  # near dup of accepted 1
+    (5, "another fresh document with novel content entirely"),
+    (7, "alpha beta gamma delta epsilon zeta eta theta"),
+    (8, "alpha beta gamma delta epsilon zeta eta iota"),  # near dup of 7, same batch
+    (9, "alpha beta gamma delta epsilon zeta eta theta"),  # exact dup of 7, same batch
+    (10, "lorem ipsum dolor"),  # no in-vocab token: no shingle, no signature
+]
+
+
+@pytest.fixture(scope="module")
+def direct(spark, vocab, tmp_path_factory):
+    """Two direct ``process_batch`` calls into one state: BATCHES[0],
+    then DIRECT_BATCH → (ingest, base path, jobs of the second batch)."""
+    base = str(tmp_path_factory.mktemp("direct") / "state")
+    ingest = CorpusIngest(base_path=base, vocab=vocab, threshold=0.3)
+    ingest.process_batch(spark.createDataFrame(BATCHES[0], "doc_id long, text string"), 0)
+    batch = spark.createDataFrame(DIRECT_BATCH, "doc_id long, text string")
+    _, jobs = _jobs(spark, "corpus_ingest_direct", lambda: ingest.process_batch(batch, 1))
+    return ingest, base, jobs
+
+
+def _ids(spark, path):
+    return sorted({r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect()})
+
+
+def test_direct_batch_drop_paths_sinks_and_stats(spark, direct):
+    ingest, base, jobs = direct
+    # 3 exact vs corpus, 4 near vs corpus, 8 near within batch, 9 exact
+    # within batch; 10 has no signature and is accepted
+    assert _ids(spark, f"{base}/corpus") == [1, 2, 5, 7, 10]
+    assert spark.read.parquet(f"{base}/fingerprints").count() == 5
+    # the signature-less doc reaches neither signatures nor index
+    assert _ids(spark, f"{base}/signatures") == [1, 2, 5, 7]
+    assert _ids(spark, f"{base}/index") == [1, 2, 5, 7]
+    assert spark.read.parquet(f"{base}/index").count() == 4 * 4
+    assert ingest.stats[-1]["n_in"] == len(DIRECT_BATCH)
+    assert ingest.stats[-1]["n_accepted"] == 3
+    assert jobs <= 35
+
+
+def test_state_ddl_matches_what_the_processor_writes(spark, direct):
+    ingest, base, _ = direct
+    for name, ddl in ingest.state_ddl().items():
+        written = spark.read.parquet(f"{base}/{name}").drop("__b", "band")
+        assert written.schema.simpleString() == (
+            spark.createDataFrame([], ddl).schema.simpleString()
+        ), name
+
+
+def _failing_batch(spark, vocab, tmp_path, error):
+    """Run BATCHES[0] into fresh state where one sink fails with
+    ``error`` → the state's base path."""
+    base = tmp_path / "state"
+    ingest = CorpusIngest(base_path=str(base), vocab=vocab, threshold=0.3)
+    with pytest.raises(error):
+        ingest.process_batch(spark.createDataFrame(BATCHES[0], "doc_id long, text string"), 0)
+    assert ingest.stats == []
+    return base
+
+
+def test_corpus_failure_leaves_dedup_state_untouched(spark, vocab, tmp_path):
+    # a re-run of the batch must not find its own docs in the dedup
+    # state: corpus commits before any state sink starts
+    (tmp_path / "state").mkdir()
+    (tmp_path / "state" / "corpus").write_text("not a directory")
+    base = _failing_batch(spark, vocab, tmp_path, Py4JJavaError)
+    for name in ("fingerprints", "signatures", "index"):
+        assert not (base / name).exists(), name
+
+
+def test_state_sink_failure_raises_after_every_sink_finished(
+    spark, vocab, tmp_path, monkeypatch
+):
+    compact = ingest_module._compact_bucket
+
+    def fail_on_index(spark, path, bucket, schema):
+        if path.endswith("/index"):
+            raise RuntimeError("index compaction failed")
+        return compact(spark, path, bucket, schema)
+
+    monkeypatch.setattr(ingest_module, "_compact_bucket", fail_on_index)
+    base = _failing_batch(spark, vocab, tmp_path, RuntimeError)
+    # corpus, the index append and the other two state chains all ran
+    for name in ("corpus", "signatures", "index"):
+        assert _ids(spark, str(base / name)) == [1, 2], name
+    assert spark.read.parquet(str(base / "fingerprints")).count() == 2
 
 
 @pytest.fixture()

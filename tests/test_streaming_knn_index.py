@@ -9,6 +9,8 @@ import pyspark.sql.functions as F
 from redshells_spark.streaming.knn_index import KnnGraphIngest
 from redshells_spark.streaming.state import start_ingest
 
+pytestmark = pytest.mark.usefixtures("state_ddl_check")
+
 SF = "/root/testdata/sf0.001"
 
 

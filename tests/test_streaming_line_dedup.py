@@ -13,6 +13,8 @@ from redshells_spark.dedup.lines import cross_doc_unit_dedup, split_units
 from redshells_spark.streaming.line_dedup import LineDedupIngest
 from redshells_spark.streaming.state import start_ingest
 
+pytestmark = pytest.mark.usefixtures("state_ddl_check")
+
 SCHEMA = "doc_id long, text string"
 
 BATCHES = [

@@ -3,11 +3,15 @@ operators, exactly, under any micro-batching."""
 
 from __future__ import annotations
 
+import pytest
+
 from redshells_spark.data.preference import preference_pairs
 from redshells_spark.operators.drift import ks_two_sample
 from redshells_spark.streaming.drift import DriftIngest
 from redshells_spark.streaming.preference import PreferencePairIngest
 from redshells_spark.streaming.state import start_ingest
+
+pytestmark = pytest.mark.usefixtures("state_ddl_check")
 
 P_SCHEMA = "grp long, item long, score long"
 P_ROWS = [

@@ -3,11 +3,15 @@ micro-batching of the event log."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from redshells_spark.operators.sequential import sprt_monitor
 from redshells_spark.streaming.sprt import SprtIngest
 from redshells_spark.streaming.state import start_ingest
+
+pytestmark = pytest.mark.usefixtures("state_ddl_check")
 
 SCHEMA = "us long, event_type string"
 DAY = 86_400_000_000

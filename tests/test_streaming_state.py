@@ -10,8 +10,10 @@ from pathlib import Path
 
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from redshells_spark.streaming.drift import DriftIngest
+from redshells_spark.streaming.ingest import _append_bucketed
 from redshells_spark.streaming.state import read_state, start_ingest
 from redshells_spark.streaming.winrate import WinRateIngest
 
@@ -96,6 +98,23 @@ def test_missing_path_reads_as_empty(spark, tmp_path):
     assert state.schema.simpleString() == (
         "struct<id:bigint,words:array<bigint>,s:struct<x:int,y:int>>"
     )
+
+
+def test_reading_bucketed_state_launches_no_job(spark, tmp_path):
+    path = str(tmp_path / "bucketed")
+    _append_bucketed(
+        spark.range(40).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v")),
+        path, "k", 4,
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("read_state_jobs", "read_state_jobs")
+    try:
+        state = read_state(spark, path, "k long, v string")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read_state_jobs") == []
+    assert state.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert state.count() == 40
 
 
 # -- structure: one state read, one fold, one wiring -------------------------

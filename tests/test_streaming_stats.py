@@ -10,6 +10,8 @@ from redshells_spark.operators.sketches import kmv_distinct
 from redshells_spark.streaming.state import start_ingest
 from redshells_spark.streaming.stats import StreamingStats
 
+pytestmark = pytest.mark.usefixtures("state_ddl_check")
+
 
 @pytest.fixture()
 def doc_batches(spark, tmp_path):

@@ -3,9 +3,13 @@ any micro-batching of the match log."""
 
 from __future__ import annotations
 
+import pytest
+
 from redshells_spark.data.preference import win_rate_matrix
 from redshells_spark.streaming.winrate import WinRateIngest
 from redshells_spark.streaming.state import start_ingest
+
+pytestmark = pytest.mark.usefixtures("state_ddl_check")
 
 SCHEMA = "winner string, loser string"
 MODELS = ["m1", "m2", "m3", "m4"]
