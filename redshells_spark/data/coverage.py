@@ -19,7 +19,7 @@ localCheckpoint rewrite of the full remaining relation: k fact-scale
 shuffles collapse into one array build.
 
 Deterministic (total-order argmax tie-break on id), so the whole loop
-unrolls into exact SQL stages — see queries/r6c_ops.py's oracle.
+unrolls into exact SQL stages — see queries/corpus.py's oracle.
 """
 
 from __future__ import annotations

@@ -31,18 +31,6 @@ P = 2147483647  # 2^31 - 1 (Mersenne prime); all arithmetic fits in int64
 SHINGLE_BASE = 1000003
 
 
-def _hash_params(spark, num_hashes: int) -> DataFrame:
-    """Deterministic (j, a_j, b_j) table, a_j odd-ish nonzero mod p."""
-    return (
-        spark.range(num_hashes)
-        .select(
-            F.col("id").cast("int").alias("j"),
-            ((F.col("id") * 2654435761 + 1) % P).alias("a"),
-            ((F.col("id") * 40503 + 17) % P).alias("b"),
-        )
-    )
-
-
 def doc_shingles(
     docs: DataFrame,
     vocab: DataFrame,
@@ -320,80 +308,6 @@ def verify_jaccard(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_id_0", "doc_id_1", "jaccard")
-    )
-
-
-def doc_shingle_arrays(
-    docs: DataFrame,
-    vocab: DataFrame,
-    doc_id_column: str = "doc_id",
-    tokens_column: str = "tokens",
-    shingle_len: int = 2,
-) -> DataFrame:
-    """→ (doc_id, shingles: array<long>) with NO shuffle: the vocab is
-    collected into a literal map expression (bounded — keep_n caps it)
-    and shingling is pure array algebra inside codegen. Semantics are
-    identical to :func:`doc_shingles` (OOV dropped before pairing,
-    distinct shingles). Use when the vocab fits the driver (≤ ~100k
-    entries); fall back to the join path otherwise."""
-    require_columns(docs, [doc_id_column, tokens_column])
-    pairs = vocab.select("token", "token_id").collect()
-    vocab_map = F.create_map(
-        *[F.lit(x) for row in pairs for x in (row["token"], int(row["token_id"]))]
-    )
-    ids = F.filter(
-        F.transform(F.col(tokens_column), lambda t: F.element_at(vocab_map, t)),
-        lambda x: x.isNotNull(),
-    )
-    docs = docs.withColumn("__ids", F.transform(ids, lambda x: x.cast("long")))
-    sh = F.col("__ids")
-
-    def mk(i):
-        # shingle value for the window starting at 1-based index i
-        v = F.element_at(sh, i)
-        for k in range(1, shingle_len):
-            v = (v * SHINGLE_BASE + F.element_at(sh, i + k)) % P
-        return v
-    idxs = F.sequence(F.lit(1), F.greatest(F.size(sh) - (shingle_len - 1), F.lit(0)))
-    shingles = F.array_distinct(F.transform(idxs, lambda i: mk(i)))
-    return docs.select(
-        F.col(doc_id_column).alias("doc_id"), shingles.alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
-def minhash_near_dedup_fast(
-    docs: DataFrame,
-    vocab: DataFrame,
-    doc_id_column: str = "doc_id",
-    tokens_column: str = "tokens",
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    threshold: float = 0.5,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """Array-native end-to-end near-dedup: shingles AND all k
-    permutation minima are computed as codegen array expressions per
-    row — the plan's only shuffles are the LSH bucket self-join and
-    the Jaccard verify join. Bit-identical results to the staged
-    pipeline (same oracle)."""
-    arr = doc_shingle_arrays(docs, vocab, doc_id_column, tokens_column).cache()
-    def perm_min(a: int, b: int):
-        return F.array_min(
-            F.transform(F.col("shingles"), lambda s: (F.lit(a) * s + F.lit(b)) % P)
-        )
-
-    mh_cols = [
-        perm_min(a, b).alias(f"mh{j}")
-        for j, (a, b) in enumerate(_perm_params(num_hashes))
-    ]
-    wide = arr.select("doc_id", F.size("shingles").cast("long").alias("sz"), *mh_cols)
-    cand = minhash_lsh_candidates_wide(
-        wide, bands=bands, rows_per_band=rows_per_band, max_bucket_size=max_bucket_size
-    )
-    shingles = arr.select("doc_id", F.explode("shingles").alias("shingle"))
-    return verify_jaccard(
-        cand, shingles, threshold=threshold, sizes=wide.select("doc_id", "sz")
     )
 
 

@@ -43,7 +43,7 @@ rank-sorted per-doc index (``build_rank_sorted_sets``) is
 threshold-FREE, deterministic, and parquet-serializable — callers can
 build it once through the param-hash task target (task.py) and run
 joins at any threshold from the stored index, exactly as the k-NN
-graph index is shared (queries/r5c_ops.py _knn_graph). All comparisons
+graph index is shared (queries/similarity.py _knn_graph). All comparisons
 integer (⌈τ·n⌉ = (num·n + den − 1) div den; Jaccard ≥ τ as
 inter·den ≥ num·union; α as ⌈num·(sz0+sz1)/(num+den)⌉).
 """
@@ -634,7 +634,7 @@ def prefix_filter_jaccard_pairs(
     call's cache is released, so repeated calls hold one corpus copy.
     Long-lived callers should instead persist ``build_rank_sorted_sets``
     through the param-hash task target and call
-    ``pairs_from_rank_sorted`` (queries/r6c_ops.py does)."""
+    ``pairs_from_rank_sorted`` (queries/dedup.py does)."""
     docarr = build_rank_sorted_sets(
         sets_df, id_column, element_column, block_column
     ).persist(StorageLevel.MEMORY_AND_DISK)

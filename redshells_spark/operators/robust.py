@@ -4,7 +4,7 @@ Heavy-tailed metrics (revenue per user, latency) make the plain mean
 useless for experiment readouts; the standard warehouse fix is the
 trimmed / winsorized mean. Both are exact order statistics here,
 computed on the DISTINCT-VALUE level table (value, n, cum_before) —
-the weighted-median pattern (queries/r6d_ops.py) — so the only window
+the weighted-median pattern (queries/stat_tests.py) — so the only window
 runs over distinct values per group, never over fact rows, and every
 sum is exact int64: a float appears only in the final mean division.
 

@@ -1,9 +1,8 @@
-"""Relational core: frame ops, one-hot, sampling, set ops, joins (+ round-3 driver-window tier).
-
-Split from the former single-file queries.py (round 4); registration
-order within and across tier modules is preserved by the package
-__init__ import order and pinned by tests/test_ann_recall.py.
+"""Relational core: frame ops, one-hot, sampling, set ops, joins,
+grouped aggregates and cubes over the TPC-H and events tables.
 """
+
+from __future__ import annotations
 
 from redshells_spark.queries._shared import *  # noqa: F401,F403
 
@@ -476,3 +475,232 @@ def _word_embedding_sum(spark, sf_dir):
     )
 
 
+@q(
+    "weighted_sample_orders",
+    f"""WITH p AS (SELECT o_orderpriority, o_orderkey,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS w_cents,
+                  {_duck_h60("'0|' || o_orderkey")} AS u
+           FROM orders),
+       r AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
+                                          ORDER BY u / w_cents ASC, o_orderkey ASC) AS rn
+             FROM p)
+       SELECT o_orderpriority, o_orderkey, w_cents FROM r WHERE rn <= 20""",
+)
+def _weighted_sample_orders(spark, sf_dir):
+    """Priority sampling (data/sampling.py:weighted_sample_priority):
+    20 orders per priority class, inclusion ≈ proportional to price,
+    without replacement. The priority u/w is one int64→double divide —
+    IEEE-identical in DuckDB — so even the *random* sample is
+    oracle-exact."""
+    from redshells_spark.data.sampling import weighted_sample_priority
+
+    o = _t(spark, sf_dir, "orders").withColumn(
+        "w_cents", F.round(F.col("o_totalprice") * 100, 0).cast("long")
+    )
+    out = weighted_sample_priority(
+        o, "o_orderpriority", "o_orderkey", "w_cents", k=20, seed=0
+    )
+    return out.select("o_orderpriority", "o_orderkey", "w_cents")
+
+
+@q(
+    "grouped_median_price",
+    """WITH r AS (SELECT o_orderpriority, o_totalprice,
+                  row_number() OVER (PARTITION BY o_orderpriority
+                                     ORDER BY o_totalprice ASC, o_orderkey ASC) AS rn,
+                  count(*) OVER (PARTITION BY o_orderpriority) AS n
+           FROM orders)
+       SELECT o_orderpriority, n::BIGINT AS n,
+              round(o_totalprice, 4) AS median_price
+       FROM r WHERE rn = (n + 1) // 2""",
+)
+def _grouped_median_price(spark, sf_dir):
+    """Exact per-group lower median via window selection (no
+    percentile-function semantics to reconcile across engines: the
+    median is literally the row at rank (n+1)/2 under a total order)."""
+    o = _t(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_orderpriority").orderBy(
+        F.col("o_totalprice").asc(), F.col("o_orderkey").asc()
+    )
+    wn = Window.partitionBy("o_orderpriority")
+    return (
+        o.withColumn("rn", F.row_number().over(w))
+        .withColumn("n", F.count(F.lit(1)).over(wn))
+        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
+        .select(
+            "o_orderpriority",
+            F.col("n").cast("long").alias("n"),
+            _r4(F.col("o_totalprice"), "median_price"),
+        )
+    )
+
+
+@q(
+    "latest_by_key",
+    """SELECT user_id, event_id, round(value, 4) AS value FROM (
+         SELECT user_id, event_id, value,
+                row_number() OVER (PARTITION BY user_id
+                                   ORDER BY ts DESC, event_id DESC) AS rn
+         FROM events) WHERE rn = 1""",
+)
+def _latest_by_key(spark, sf_dir):
+    """CDC compaction primitive: latest row per key by version order
+    (here event time, id tie-break) — the keep-last window every
+    upsert/merge pipeline runs before publishing a snapshot.
+    WindowGroupLimit prunes non-latest rows map-side."""
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        ev.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "event_id", _r4(F.col("value"), "value"))
+    )
+
+
+@q(
+    "salted_join_revenue",
+    f"""SELECT o_orderpriority, {_MONEY_SUM('l_extendedprice')} AS revenue,
+              count(*) AS n_lines
+       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+       GROUP BY o_orderpriority""",
+)
+def _salted_join_revenue(spark, sf_dir):
+    """Skew-resistant fact join (operators/skew.py:salted_join): the
+    big side takes a deterministic salt, the small side replicates
+    ×num_salts, and the join key becomes (key, salt) — a hot orderkey
+    spreads over num_salts reducers instead of stalling one. Result is
+    identical to the plain join (each fact row matches exactly one
+    replica), which is exactly what the oracle checks."""
+    from redshells_spark.operators.skew import salted_join
+
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
+    o = _t(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
+    )
+    joined = salted_join(li, o, on=["l_orderkey"], num_salts=8)
+    return joined.groupBy("o_orderpriority").agg(
+        exact_money_sum(F.col("l_extendedprice")).alias("revenue"),
+        F.count(F.lit(1)).alias("n_lines"),
+    )
+
+
+@q(
+    "events_cube",
+    """SELECT coalesce(event_type, 'ALL') AS etype,
+              coalesce(CAST(user_id % 10 AS VARCHAR), 'ALL') AS user_bucket,
+              count(*) AS n
+       FROM events GROUP BY CUBE (event_type, CAST(user_id % 10 AS VARCHAR))""",
+)
+def _events_cube(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events").withColumn(
+        "user_bucket", (F.col("user_id") % 10).cast("string")
+    )
+    return (
+        ev.cube("event_type", "user_bucket")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.coalesce("event_type", F.lit("ALL")).alias("etype"),
+            F.coalesce("user_bucket", F.lit("ALL")).alias("user_bucket"),
+            "n",
+        )
+    )
+
+
+# ------------------------------------------ exact stratified sampling
+
+
+@q(
+    "stratified_sample_exact",
+    """WITH pop AS (SELECT c_mktsegment AS seg, CAST(count(*) AS BIGINT) AS n_pop
+               FROM customer GROUP BY 1),
+       tot AS (SELECT CAST(sum(n_pop) AS BIGINT) AS n FROM pop),
+       quo AS (SELECT seg, n_pop,
+                      CAST((500 * n_pop) // tot.n AS BIGINT) AS base,
+                      CAST((500 * n_pop) % tot.n AS BIGINT) AS rem
+               FROM pop CROSS JOIN tot),
+       sumb AS (SELECT CAST(sum(base) AS BIGINT) AS sb FROM quo),
+       alloc AS (SELECT seg, n_pop,
+                        base + CASE WHEN row_number() OVER (
+                                 ORDER BY rem DESC, seg ASC)
+                               <= 500 - sumb.sb THEN 1 ELSE 0 END AS alloc
+                 FROM quo CROSS JOIN sumb),
+       rk AS (SELECT c_mktsegment AS seg, c_custkey AS k,
+                     row_number() OVER (PARTITION BY c_mktsegment
+                       ORDER BY md5(CAST(c_custkey AS VARCHAR) || '7') ASC,
+                                c_custkey ASC) AS rn
+              FROM customer),
+       samp AS (SELECT r.seg, r.k
+                FROM rk r JOIN alloc a ON a.seg = r.seg AND r.rn <= a.alloc)
+       SELECT a.seg AS segment, a.n_pop, CAST(a.alloc AS BIGINT) AS alloc,
+              CAST(coalesce(s.ck, 0) AS BIGINT) AS key_checksum
+       FROM alloc a LEFT JOIN (SELECT seg, CAST(sum(k) AS BIGINT) AS ck
+                               FROM samp GROUP BY 1) s ON s.seg = a.seg
+       ORDER BY a.seg""",
+)
+def _stratified_sample_exact(spark, sf_dir):
+    """Deterministic proportional stratified sampling, EXECUTED (the
+    companion to neyman_allocation's planning table): total n=500
+    split across market segments by largest-remainder quotas (the
+    token_budget_allocation idiom — exact integer base + remainder
+    ranking, sums to n by construction), then each stratum's sample is
+    its first alloc keys in portable md5 order (reproducible across
+    engines and cluster sizes — the seeded-permutation idiom of
+    make_similarity_data). Output is the per-stratum audit: population,
+    allocation, and the sampled-key checksum that certifies BOTH
+    engines picked the identical rows. Scale: one window per stratum
+    over the customer relation; at 100x the sample stays n=500 and
+    only the rank window grows — partitioned by segment, never
+    global."""
+    c = _t(spark, sf_dir, "customer")
+    # segment-bounded; the total probe and the quota projection both
+    # consume it (9 customer scans at the r8 audit without the pins)
+    pop = (
+        c.groupBy(F.col("c_mktsegment").alias("seg"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_pop"))
+        .localCheckpoint(eager=True)
+    )
+    tot = pop.agg(F.sum("n_pop").cast("long").alias("n"))
+    quo = pop.crossJoin(F.broadcast(tot)).select(
+        "seg",
+        "n_pop",
+        F.expr("cast((500 * n_pop) div n as bigint)").alias("base"),
+        F.expr("cast((500 * n_pop) % n as bigint)").alias("rem"),
+    )
+    sumb = quo.agg(F.sum("base").cast("long").alias("sb"))
+    wr = Window.orderBy(F.col("rem").desc(), F.col("seg").asc())
+    alloc = (
+        quo.crossJoin(F.broadcast(sumb))
+        .select(
+            "seg",
+            "n_pop",
+            (
+                F.col("base")
+                + F.when(F.row_number().over(wr) <= 500 - F.col("sb"), 1).otherwise(0)
+            ).alias("alloc"),
+        )
+        # |segments| rows feeding the sample join and the final audit
+        .localCheckpoint(eager=True)
+    )
+    wk = Window.partitionBy("seg").orderBy(
+        F.md5(F.concat(F.col("k").cast("string"), F.lit("7"))).asc(),
+        F.col("k").asc(),
+    )
+    rk = c.select(
+        F.col("c_mktsegment").alias("seg"), F.col("c_custkey").alias("k")
+    ).select("seg", "k", F.row_number().over(wk).alias("rn"))
+    samp = rk.join(F.broadcast(alloc.select("seg", "alloc")), "seg").filter(
+        F.col("rn") <= F.col("alloc")
+    )
+    ck = samp.groupBy("seg").agg(F.sum("k").cast("long").alias("ck"))
+    return (
+        alloc.join(ck, "seg", "left")
+        .select(
+            F.col("seg").alias("segment"),
+            "n_pop",
+            F.col("alloc").cast("long").alias("alloc"),
+            F.coalesce(F.col("ck"), F.lit(0)).cast("long").alias("key_checksum"),
+        )
+        .orderBy("segment")
+    )

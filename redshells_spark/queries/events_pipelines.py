@@ -1,8 +1,5 @@
-"""Events/SQL shapes and reference app pipelines (click train data, similarity data, word-item retrieval).
-
-Split from the former single-file queries.py (round 4); registration
-order within and across tier modules is preserved by the package
-__init__ import order and pinned by tests/test_ann_recall.py.
+"""Events/SQL shapes and reference app pipelines (click train data,
+similarity data, word-item retrieval).
 """
 
 from redshells_spark.queries._shared import *  # noqa: F401,F403
@@ -601,5 +598,3 @@ def _word_item_similarity_two_stage(spark, sf_dir):
         words, emb, prequery_return_size=50, return_size=10
     )
     return out.select("word", "item_id", _r4(F.col("similarity"), "similarity"))
-
-

@@ -1,127 +1,16 @@
-"""Stats tests, data quality, incremental maintenance / diff / retrieval shapes.
-
-Split from the former single-file queries.py (round 4); registration
-order within and across tier modules is preserved by the package
-__init__ import order and pinned by tests/test_ann_recall.py.
+"""Data quality and warehouse ops: checks, profiling, privacy audits
+(k-anonymity, l-diversity, t-closeness), SCD2/CDC, compaction and layout
+planning, intervals, skew and histograms, incremental maintenance,
+snapshot diff, retrieval shapes.
 """
 
+from __future__ import annotations
+
+import math as _math
+
 from redshells_spark.queries._shared import *  # noqa: F401,F403
-from redshells_spark.queries.text import _duck_h60  # noqa: F401,E402
 
-# ------------------------------------------ stats tests / data quality
-
-
-@q(
-    "ab_test_welch",
-    """WITH e AS (SELECT user_id % 2 AS grp,
-                         CAST(round(value * 100) AS BIGINT) AS vc
-                  FROM events WHERE event_type = 'purchase'),
-       st AS (SELECT grp, count(*) AS n,
-                     sum(CAST(vc AS DOUBLE)) AS s,
-                     sum(CAST(vc AS DOUBLE) * CAST(vc AS DOUBLE)) AS ss
-              FROM e GROUP BY grp),
-       w AS (SELECT a.n AS n1, b.n AS n2,
-                    a.s / a.n AS m1, b.s / b.n AS m2,
-                    (a.ss - a.s * a.s / a.n) / (a.n - 1) AS v1,
-                    (b.ss - b.s * b.s / b.n) / (b.n - 1) AS v2
-             FROM st a, st b WHERE a.grp = 0 AND b.grp = 1)
-       SELECT n1, n2, round(m1 / 100.0, 4) AS mean1, round(m2 / 100.0, 4) AS mean2,
-              round((m1 - m2) / sqrt(v1 / n1 + v2 / n2), 4) AS t_stat,
-              round(pow(v1 / n1 + v2 / n2, 2) /
-                    (pow(v1 / n1, 2) / (n1 - 1) + pow(v2 / n2, 2) / (n2 - 1)), 4)
-                AS welch_df
-       FROM w""",
-)
-def _ab_test_welch(spark, sf_dir):
-    """Welch's unequal-variance t-test between two experiment arms
-    (portable assignment: user_id parity) on purchase values — the A/B
-    analysis primitive. Group moments come from integer-cent sums
-    folded as doubles (exact for these magnitudes, so fold order is
-    irrelevant); the t statistic and Welch–Satterthwaite df are then
-    one fixed IEEE expression, identical on both engines."""
-    ev = _t(spark, sf_dir, "events")
-    e = ev.filter(F.col("event_type") == "purchase").select(
-        (F.col("user_id") % 2).alias("grp"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
-    )
-    st = e.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("vc").cast("double")).alias("s"),
-        F.sum(F.col("vc").cast("double") * F.col("vc").cast("double")).alias("ss"),
-    )
-    a = st.filter(F.col("grp") == 0).alias("a")
-    b = st.filter(F.col("grp") == 1).alias("b")
-    j = a.crossJoin(b)
-    m1, m2 = F.col("a.s") / F.col("a.n"), F.col("b.s") / F.col("b.n")
-    v1 = (F.col("a.ss") - F.col("a.s") * F.col("a.s") / F.col("a.n")) / (F.col("a.n") - 1)
-    v2 = (F.col("b.ss") - F.col("b.s") * F.col("b.s") / F.col("b.n")) / (F.col("b.n") - 1)
-    se2 = v1 / F.col("a.n") + v2 / F.col("b.n")
-    return j.select(
-        F.col("a.n").alias("n1"),
-        F.col("b.n").alias("n2"),
-        _r4(m1 / 100.0, "mean1"),
-        _r4(m2 / 100.0, "mean2"),
-        _r4((m1 - m2) / F.sqrt(se2), "t_stat"),
-        _r4(
-            F.pow(se2, 2)
-            / (
-                F.pow(v1 / F.col("a.n"), 2) / (F.col("a.n") - 1)
-                + F.pow(v2 / F.col("b.n"), 2) / (F.col("b.n") - 1)
-            ),
-            "welch_df",
-        ),
-    )
-
-
-@q(
-    "chi_square_independence",
-    """WITH o AS (SELECT lang, source, count(*) AS obs
-                  FROM documents GROUP BY lang, source),
-       r AS (SELECT lang, sum(obs) AS rt FROM o GROUP BY lang),
-       c AS (SELECT source, sum(obs) AS ct FROM o GROUP BY source),
-       n AS (SELECT sum(obs) AS tot FROM o),
-       cells AS (SELECT o.lang, o.source,
-                        CAST(round(1000000.0 *
-                          CAST((tot * obs - rt * ct) AS DOUBLE) * (tot * obs - rt * ct)
-                          / (CAST(tot AS DOUBLE) * rt * ct)) AS BIGINT) AS term_u
-                 FROM o JOIN r ON o.lang = r.lang
-                        JOIN c ON o.source = c.source, n)
-       SELECT CAST(sum(term_u) AS BIGINT) AS chi2_micro,
-              round(CAST(sum(term_u) AS DOUBLE) / 1000000.0, 4) AS chi2,
-              count(*) AS n_cells
-       FROM cells""",
-)
-def _chi_square_independence(spark, sf_dir):
-    """Chi-square independence test on the lang × source contingency
-    table. Per-cell terms use the all-integer form
-    (N·o − r·c)²/(N·r·c) — exact int64 numerators — and are *rounded
-    to integer micro-units before summing*, so the final reduction is
-    order-free integer addition (a plain double sum of 20 cells folds
-    in engine-dependent order). The statistic is exact to 1e-6, which
-    is far inside any significance-test tolerance."""
-    d = _t(spark, sf_dir, "documents")
-    o = d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("obs"))
-    r = o.groupBy("lang").agg(F.sum("obs").alias("rt"))
-    c = o.groupBy("source").agg(F.sum("obs").alias("ct"))
-    n = o.agg(F.sum("obs").alias("tot"))
-    num = F.col("tot") * F.col("obs") - F.col("rt") * F.col("ct")
-    term = (
-        F.lit(1000000.0)
-        * num.cast("double")
-        * num
-        / (F.col("tot").cast("double") * F.col("rt") * F.col("ct"))
-    )
-    cells = (
-        o.join(F.broadcast(r), "lang")
-        .join(F.broadcast(c), "source")
-        .crossJoin(F.broadcast(n))
-        .select(F.round(term, 0).cast("long").alias("term_u"))
-    )
-    return cells.agg(
-        F.sum("term_u").cast("long").alias("chi2_micro"),
-        _r4(F.sum("term_u").cast("double") / 1000000.0, "chi2"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
+# ---------------------------------------------------------- data quality
 
 
 @q(
@@ -475,3 +364,822 @@ def _bm25_keyword_search(spark, sf_dir):
     return scored.select("doc_id", F.col("dl").alias("doc_len"), _r4(score, "bm25"))
 
 
+def _zorder_oracle_sql() -> str:
+    from redshells_spark.operators.layout import interleave_sql
+
+    inter = interleave_sql(["su", "st"], bits=16)
+    return f"""WITH rng AS (SELECT min(user_id) AS mnu, max(user_id) AS mxu,
+                      min(epoch_us(ts) // 1000000) AS mnt,
+                      max(epoch_us(ts) // 1000000) AS mxt
+               FROM events),
+       e AS (SELECT event_id, user_id, epoch_us(ts) // 1000000 AS sec FROM events),
+       s AS (SELECT event_id,
+                    ((user_id - mnu) * 65535) // (mxu - mnu) AS su,
+                    ((sec - mnt) * 65535) // (mxt - mnt) AS st
+             FROM e, rng)
+       SELECT event_id, {inter} AS zkey FROM s"""
+
+
+@q("zorder_events", _zorder_oracle_sql())
+def _zorder_events(spark, sf_dir):
+    """Morton/Z-order layout key over (user_id, event-second)
+    (operators/layout.py): the sort key `write_zordered` clusters files
+    by, making parquet min/max stats selective on both dimensions. Pure
+    int64 scale+interleave arithmetic — the oracle evaluates the same
+    generated expression, so physical-layout decisions are part of the
+    correctness contract."""
+    from redshells_spark.operators.layout import with_zorder_key
+
+    ev = _t(spark, sf_dir, "events")
+    e = ev.select("event_id", "user_id", event_us(ev, "ts").alias("__us")).withColumn(
+        "sec", F.expr("__us div 1000000")
+    )
+    keyed = with_zorder_key(e, ["user_id", "sec"], bits=16)
+    return keyed.select("event_id", F.col("zkey").cast("long").alias("zkey"))
+
+
+def _profile_oracle_sql() -> str:
+    def num(c):
+        return f"""SELECT '{c}' AS col_name, count(*)::BIGINT AS n_rows,
+              sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
+              count(DISTINCT {c})::BIGINT AS n_distinct,
+              min({c})::DOUBLE AS min_num, max({c})::DOUBLE AS max_num,
+              round(avg({c}::DOUBLE), 4) AS avg_num,
+              NULL::VARCHAR AS min_str, NULL::VARCHAR AS max_str
+       FROM orders"""
+
+    def st(c):
+        return f"""SELECT '{c}' AS col_name, count(*)::BIGINT AS n_rows,
+              sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
+              count(DISTINCT {c})::BIGINT AS n_distinct,
+              NULL::DOUBLE AS min_num, NULL::DOUBLE AS max_num, NULL::DOUBLE AS avg_num,
+              min({c}) AS min_str, max({c}) AS max_str
+       FROM orders"""
+
+    return " UNION ALL ".join(
+        [num("o_custkey"), num("o_totalprice"), st("o_orderstatus"), st("o_orderpriority")]
+    )
+
+
+@q("profile_orders", _profile_oracle_sql())
+def _profile_orders(spark, sf_dir):
+    """One-pass column profiling (data/profile.py): null counts, exact
+    distinct cardinalities, numeric ranges/means and string extremes in
+    a single scan — the trust-a-new-drop primitive, oracle-checked per
+    statistic. (dtype stays out of the contract: physical int32/int64
+    encodings legitimately vary across testdata generations.)"""
+    from redshells_spark.data.profile import profile_columns
+
+    prof = profile_columns(
+        _t(spark, sf_dir, "orders"),
+        ["o_custkey", "o_totalprice", "o_orderstatus", "o_orderpriority"],
+    )
+    return prof.select(
+        F.col("column").alias("col_name"),
+        "n_rows",
+        "n_nulls",
+        "n_distinct",
+        "min_num",
+        "max_num",
+        _r4(F.col("avg_num"), "avg_num"),
+        "min_str",
+        "max_str",
+    )
+
+
+@q(
+    "scd2_user_event_type",
+    """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events),
+       c AS (SELECT user_id, event_type, us, event_id,
+                    CASE WHEN lag(event_type) OVER
+                              (PARTITION BY user_id ORDER BY us ASC, event_id ASC)
+                              IS DISTINCT FROM event_type
+                         THEN 1 ELSE 0 END AS chg
+             FROM e),
+       i AS (SELECT user_id, event_type, us, event_id,
+                    sum(chg) OVER (PARTITION BY user_id ORDER BY us ASC, event_id ASC
+                                   ROWS UNBOUNDED PRECEDING) AS island
+             FROM c),
+       a AS (SELECT user_id, island, min(event_type) AS event_type,
+                    min(us) AS valid_from_us, count(*)::BIGINT AS n_events
+             FROM i GROUP BY user_id, island)
+       SELECT user_id, event_type, valid_from_us,
+              lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY island ASC)
+                  AS valid_to_us,
+              n_events
+       FROM a""",
+)
+def _scd2_user_event_type(spark, sf_dir):
+    """SCD type-2 interval construction (operators/scd.py): collapse
+    each user's event stream into half-open validity intervals per run
+    of equal event_type — the gaps-and-islands shape, partitioned by
+    the entity key so 100 TB shuffles once by user. event_id breaks
+    timestamp ties, making the interval table deterministic."""
+    from redshells_spark.operators.scd import scd2_intervals
+
+    ev = _t(spark, sf_dir, "events")
+    base = ev.select(
+        "user_id", "event_type", event_us(ev, "ts").alias("us"), "event_id"
+    )
+    out = scd2_intervals(base, "user_id", "event_type", "us", tie_break="event_id")
+    return out.select(
+        "user_id",
+        "event_type",
+        F.col("valid_from").alias("valid_from_us"),
+        F.col("valid_to").alias("valid_to_us"),
+        "n_events",
+    )
+
+
+@q(
+    "compaction_plan",
+    """WITH f AS (SELECT printf('doc_%08d', doc_id) AS path, n_chars AS bytes
+                  FROM documents),
+       p AS (SELECT path, bytes,
+                    coalesce(sum(bytes) OVER (ORDER BY path ASC
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                        AS prefix
+             FROM f)
+       SELECT CAST(prefix // 4000 AS BIGINT) AS bin, count(*)::BIGINT AS n_files,
+              sum(bytes)::BIGINT AS total_bytes,
+              min(path) AS first_path, max(path) AS last_path
+       FROM p GROUP BY 1""",
+)
+def _compaction_plan(spark, sf_dir):
+    """Small-file compaction planning (operators/layout.py): files in
+    path order bin by exclusive-prefix-sum div target — a metadata-only
+    global window (the manifest, not the data), after which each bin
+    rewrites independently. Documents stand in as the file inventory
+    (path=doc_id, bytes=n_chars, 4 KB target)."""
+    from redshells_spark.operators.layout import plan_compaction
+
+    files = _t(spark, sf_dir, "documents").select(
+        F.format_string("doc_%08d", F.col("doc_id")).alias("path"),
+        F.col("n_chars").alias("bytes"),
+    )
+    return plan_compaction(files, target_bytes=4000)
+
+
+@q(
+    "cdc_merge_snapshot",
+    """WITH base AS (SELECT user_id, event_id, value FROM (
+              SELECT user_id, event_id, value,
+                     row_number() OVER (PARTITION BY user_id
+                                        ORDER BY ts DESC, event_id DESC) AS rn
+              FROM events WHERE event_id % 2 = 0) WHERE rn = 1),
+       ch AS (SELECT user_id, event_id, value, epoch_us(ts) AS version,
+                     CASE WHEN event_type = 'click' THEN 'D' ELSE 'U' END AS op
+              FROM events WHERE event_id % 2 = 1),
+       latest AS (SELECT user_id, event_id, value, op FROM (
+              SELECT user_id, event_id, value, op,
+                     row_number() OVER (PARTITION BY user_id
+                                        ORDER BY version DESC, event_id DESC) AS rn
+              FROM ch) WHERE rn = 1)
+       SELECT user_id, event_id, round(value, 4) AS value
+       FROM base WHERE user_id NOT IN (SELECT user_id FROM latest)
+       UNION ALL
+       SELECT user_id, event_id, round(value, 4) AS value
+       FROM latest WHERE op <> 'D'""",
+)
+def _cdc_merge_snapshot(spark, sf_dir):
+    """MERGE semantics (operators/cdc.py:apply_changes): even events
+    form the base snapshot (latest per user), odd events a change
+    stream where clicks delete the key and everything else upserts;
+    latest version wins with an event-id tie-break. The base is only
+    touched by one anti-join on the compacted delta's (broadcast) key
+    set — the delta-vs-base asymmetry a 100 TB MERGE depends on."""
+    from redshells_spark.operators.cdc import apply_changes
+
+    ev = _t(spark, sf_dir, "events")
+    us = event_us(ev, "ts")
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
+    base = (
+        ev.filter(F.col("event_id") % 2 == 0)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "event_id", "value")
+    )
+    changes = ev.filter(F.col("event_id") % 2 == 1).select(
+        "user_id",
+        "event_id",
+        "value",
+        us.alias("version"),
+        F.when(F.col("event_type") == "click", F.lit("D")).otherwise(F.lit("U")).alias("op"),
+    )
+    snap = apply_changes(
+        base, changes, ["user_id"], "version", tie_break="event_id"
+    )
+    return snap.select("user_id", "event_id", _r4(F.col("value"), "value"))
+
+
+@q(
+    "max_concurrent_events",
+    """WITH iv AS (SELECT event_type, epoch_us(ts) AS s,
+                          epoch_us(ts) + 1800000000 AS e FROM events),
+       pts AS (SELECT event_type, s AS t, 1 AS delta FROM iv
+               UNION ALL
+               SELECT event_type, e AS t, -1 AS delta FROM iv),
+       r AS (SELECT event_type,
+                    sum(delta) OVER (PARTITION BY event_type
+                                     ORDER BY t ASC, delta ASC
+                                     ROWS UNBOUNDED PRECEDING) AS open
+             FROM pts)
+       SELECT event_type, max(open)::BIGINT AS max_concurrent
+       FROM r GROUP BY event_type""",
+)
+def _max_concurrent_events(spark, sf_dir):
+    """Sweep-line peak concurrency (operators/intervals.py): each
+    event opens a 30-minute [start, end) interval; per event_type the
+    running ±1 sum's max is the peak number of simultaneously open
+    intervals. Ends sort before starts at the same instant (half-open
+    semantics); the sweep partitions by group so each key is an
+    independent sort — no global order."""
+    from redshells_spark.operators.intervals import max_concurrency
+
+    ev = _t(spark, sf_dir, "events")
+    us = event_us(ev, "ts")
+    iv = ev.select(
+        "event_type", us.alias("s"), (us + F.lit(1_800_000_000)).alias("e")
+    )
+    return max_concurrency(iv, "s", "e", ["event_type"])
+
+
+@q(
+    "interval_coverage_users",
+    """WITH iv AS (SELECT user_id, epoch_us(ts) AS s,
+                          epoch_us(ts) + 1800000000 AS e FROM events),
+       f AS (SELECT user_id, s, e,
+                    CASE WHEN max(e) OVER (PARTITION BY user_id ORDER BY s ASC, e ASC
+                                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                              IS NULL
+                           OR s > max(e) OVER (PARTITION BY user_id ORDER BY s ASC, e ASC
+                                               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                         THEN 1 ELSE 0 END AS ni
+             FROM iv),
+       isl AS (SELECT user_id, s, e,
+                      sum(ni) OVER (PARTITION BY user_id ORDER BY s ASC, e ASC
+                                    ROWS UNBOUNDED PRECEDING) AS island
+               FROM f),
+       g AS (SELECT user_id, island, max(e) - min(s) AS len
+             FROM isl GROUP BY user_id, island)
+       SELECT user_id, sum(len)::BIGINT AS covered, count(*)::BIGINT AS n_islands
+       FROM g GROUP BY user_id""",
+)
+def _interval_coverage_users(spark, sf_dir):
+    """Merged interval coverage (operators/intervals.py): per user,
+    total active time under 30-minute event intervals with overlaps
+    merged — islands begin where a start exceeds the running max of
+    prior ends (gaps-and-islands, keyed by user)."""
+    from redshells_spark.operators.intervals import merged_coverage
+
+    ev = _t(spark, sf_dir, "events")
+    us = event_us(ev, "ts")
+    iv = ev.select("user_id", us.alias("s"), (us + F.lit(1_800_000_000)).alias("e"))
+    return merged_coverage(iv, "s", "e", ["user_id"])
+
+
+@q(
+    "equi_depth_histogram",
+    """WITH b AS (SELECT event_type, value,
+                    ntile(8) OVER (PARTITION BY event_type
+                                   ORDER BY value ASC, event_id ASC) AS bucket
+             FROM events)
+       SELECT event_type, bucket, count(*) AS n,
+              round(min(value), 4) AS lo, round(max(value), 4) AS hi
+       FROM b GROUP BY event_type, bucket""",
+)
+def _equi_depth_histogram(spark, sf_dir):
+    """Equi-depth (equal-frequency) histogram per group via ntile —
+    the summary statistics engines keep for selectivity estimation.
+    event_id breaks value ties so bucket boundaries are deterministic.
+    Partitioned by event_type: per-group ntile windows, no global
+    sort."""
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("event_type").orderBy(
+        F.col("value").asc(), F.col("event_id").asc()
+    )
+    return (
+        ev.withColumn("bucket", F.ntile(8).over(w))
+        .groupBy("event_type", "bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            _r4(F.min("value"), "lo"),
+            _r4(F.max("value"), "hi"),
+        )
+    )
+
+
+@q(
+    "key_skew_profile",
+    """SELECT user_id, count(*) AS rows,
+              round(count(*) / (SELECT count(*)::DOUBLE FROM events), 6) AS share
+       FROM events GROUP BY user_id
+       ORDER BY rows DESC, user_id ASC LIMIT 10""",
+)
+def _key_skew_profile(spark, sf_dir):
+    """Skew diagnostic (operators/skew.py:key_skew_profile): the
+    top-10 heaviest keys and their row share — the number that decides
+    whether a join/aggregate needs salting (share ≫ 1/partitions).
+    One aggregate + TakeOrderedAndProject; the kind of probe a planner
+    runs before choosing the salted path."""
+    from redshells_spark.operators.skew import key_skew_profile
+
+    ev = _t(spark, sf_dir, "events")
+    return key_skew_profile(ev, "user_id", top_n=10)
+
+
+@q(
+    "k_anonymity_audit",
+    """WITH c AS (SELECT c_nationkey, c_mktsegment, count(*) AS n_rows,
+                         count(DISTINCT c_acctbal) AS n_sensitive
+                  FROM customer GROUP BY 1, 2)
+       SELECT count(*) AS n_classes,
+              sum(CASE WHEN n_rows < 50 THEN 1 ELSE 0 END)::BIGINT AS k_violating_classes,
+              sum(CASE WHEN n_rows < 50 THEN n_rows ELSE 0 END)::BIGINT AS rows_at_risk,
+              round(sum(CASE WHEN n_rows < 50 THEN n_rows ELSE 0 END)
+                    / sum(n_rows)::DOUBLE, 6) AS risk_share,
+              sum(CASE WHEN n_sensitive < 2 THEN 1 ELSE 0 END)::BIGINT
+                  AS l_violating_classes
+       FROM c""",
+)
+def _k_anonymity_audit(spark, sf_dir):
+    """Release-audit governance op (operators/privacy.py): equivalence
+    classes over the quasi-identifiers (nation, market segment) with
+    account balance as the sensitive attribute — k=50 anonymity and
+    l=2 diversity in ONE groupBy + summary aggregate, map-side
+    combined, no driver state."""
+    from redshells_spark.operators.privacy import k_anonymity_audit
+
+    cust = _t(spark, sf_dir, "customer")
+    return k_anonymity_audit(
+        cust, ["c_nationkey", "c_mktsegment"], k=50, sensitive_col="c_acctbal"
+    )
+
+
+# ---------------------------------------------------- Benford audit
+
+
+_BENFORD_P_E6 = {d: int(round(_math.log10(1 + 1 / d) * 1_000_000)) for d in range(1, 10)}
+_BENFORD_P = {d: _math.log10(1 + 1 / d) for d in range(1, 10)}
+
+
+def _benford_oracle() -> str:
+    p_rows = ", ".join(f"({d}, {_BENFORD_P_E6[d]}, {_BENFORD_P[d]!r})" for d in range(1, 10))
+    return f"""WITH u AS (
+         SELECT CAST(floor(o_totalprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT) AS cents
+         FROM orders),
+       d AS (
+         SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit
+         FROM u WHERE cents > 0),
+       obs AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_obs FROM d GROUP BY 1),
+       n AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n_total FROM obs),
+       pb(digit, p_e6, p) AS (VALUES {p_rows}),
+       terms AS (
+         SELECT pb.digit, coalesce(obs.n_obs, 0) AS n_obs,
+                CAST(pb.p_e6 AS BIGINT) AS p_benford_e6,
+                CAST(floor(
+                  (coalesce(obs.n_obs, 0) - n.n_total * CAST(pb.p AS DOUBLE))
+                  * (coalesce(obs.n_obs, 0) - n.n_total * CAST(pb.p AS DOUBLE))
+                  / (n.n_total * CAST(pb.p AS DOUBLE)) * 1000000 + CAST(0.5 AS DOUBLE))
+                  AS BIGINT) AS chi2_term_e6
+         FROM pb LEFT JOIN obs USING (digit), n)
+       SELECT CAST(digit AS BIGINT) AS digit,
+              CAST(n_obs AS BIGINT) AS n_obs, p_benford_e6, chi2_term_e6
+       FROM terms
+       UNION ALL
+       SELECT CAST(0 AS BIGINT), CAST(sum(n_obs) AS BIGINT),
+              CAST(1000000 AS BIGINT), CAST(sum(chi2_term_e6) AS BIGINT)
+       FROM terms"""
+
+
+@q("benford_digit_audit", _benford_oracle())
+def _benford_digit_audit(spark, sf_dir):
+    """Benford's-law first-digit audit over order totals — the classic
+    fabricated-data / unit-mixing detector (Benford 1938; Nigrini's
+    forensic-accounting standard). First digits come from the STRING
+    of the exact cent units (no float log10 on data); expected
+    proportions log10(1+1/d) are plan-time literals shared by both
+    engines; each chi-square term is one fixed IEEE expression
+    truncated to e6 int64 so the digit=0 TOTAL row's chi2 sum is exact
+    integer addition. One map-combined count by digit — nothing else
+    touches the fact table."""
+    o = _t(spark, sf_dir, "orders")
+    cents = o.select(money_units(F.col("o_totalprice"), 100).alias("cents")).filter(
+        F.col("cents") > 0
+    )
+    obs = (
+        cents.select(
+            F.substring(F.col("cents").cast("string"), 1, 1).cast("long").alias("digit")
+        )
+        .groupBy("digit")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
+    )
+    pb = spark.createDataFrame(
+        [(d, _BENFORD_P_E6[d], _BENFORD_P[d]) for d in range(1, 10)],
+        "digit long, p_e6 long, p double",
+    )
+    n = obs.agg(F.sum("n_obs").cast("long").alias("n_total"))
+    # nz, not F.col("n_obs"), in the chi2 term: inside this select the
+    # raw column is still the LEFT-join output — NULL for a digit with
+    # zero observations — and a NULL there would both blank the term
+    # and silently drop that digit's expected-count penalty from the
+    # TOTAL row. The oracle coalesces; so must we.
+    nz = F.coalesce(F.col("n_obs"), F.lit(0)).cast("long")
+    terms = (
+        pb.join(obs, "digit", "left")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "digit",
+            nz.alias("n_obs"),
+            F.col("p_e6").cast("long").alias("p_benford_e6"),
+            F.floor(
+                (nz * F.lit(1.0) - F.col("n_total") * F.col("p"))
+                * (nz * F.lit(1.0) - F.col("n_total") * F.col("p"))
+                / (F.col("n_total") * F.col("p"))
+                * F.lit(1000000)
+                + F.lit(0.5)
+            )
+            .cast("long")
+            .alias("chi2_term_e6"),
+        )
+    )
+    total = terms.agg(
+        F.lit(0).cast("long").alias("digit"),
+        F.sum("n_obs").cast("long").alias("n_obs"),
+        F.lit(1000000).cast("long").alias("p_benford_e6"),
+        F.sum("chi2_term_e6").cast("long").alias("chi2_term_e6"),
+    )
+    return terms.unionByName(total)
+
+
+# ------------------------------------------------- l-diversity audit
+
+
+@q(
+    "l_diversity_audit",
+    """WITH b AS (SELECT c_nationkey, c_mktsegment,
+                CASE WHEN c_acctbal < 0 THEN 'neg'
+                     WHEN c_acctbal < 5000 THEN 'mid'
+                     ELSE 'high' END AS sens
+              FROM customer),
+       cls AS (SELECT c_nationkey, c_mktsegment, sens,
+                      CAST(count(*) AS BIGINT) AS n_s
+               FROM b GROUP BY 1, 2, 3),
+       tot AS (SELECT c_nationkey, c_mktsegment,
+                      CAST(sum(n_s) AS BIGINT) AS k,
+                      CAST(count(*) AS BIGINT) AS l_distinct
+               FROM cls GROUP BY 1, 2),
+       tm AS (SELECT c.c_nationkey, c.c_mktsegment,
+                CAST(floor(-(CAST(c.n_s AS DOUBLE) / CAST(t.k AS DOUBLE))
+                           * ln(CAST(c.n_s AS DOUBLE) / CAST(t.k AS DOUBLE))
+                           * CAST(1000000000 AS DOUBLE)
+                           + CAST(0.5 AS DOUBLE)) AS BIGINT) AS term_e9
+              FROM cls c JOIN tot t USING (c_nationkey, c_mktsegment)),
+       ent AS (SELECT c_nationkey, c_mktsegment,
+                      CAST(sum(term_e9) AS BIGINT) AS ent_e9
+               FROM tm GROUP BY 1, 2)
+       SELECT CAST(t.c_nationkey AS BIGINT) AS nationkey, t.c_mktsegment AS segment,
+              t.k, t.l_distinct,
+              round(exp(CAST(e.ent_e9 AS DOUBLE)
+                        / CAST(1000000000 AS DOUBLE)), 4) AS entropy_l,
+              CAST(t.k >= 5 AS BIGINT) AS meets_k5,
+              CAST(t.l_distinct >= 2 AS BIGINT) AS meets_l2
+       FROM tot t JOIN ent e USING (c_nationkey, c_mktsegment)""",
+)
+def _l_diversity_audit(spark, sf_dir):
+    """l-diversity audit (Machanavajjhala et al. 2007) layered on the
+    k-anonymity quasi-identifier groups (nation x market segment):
+    per group, the distinct count and the ENTROPY l-diversity of the
+    sensitive attribute (account-balance band) — entropy_l = exp(H)
+    where each class term -(p)ln(p) is a single double over exact
+    int64 class counts, e9-quantized before the per-group sum so H is
+    partition-order-free. Flags carry the k>=5 / l>=2 release gates.
+    Extends k_anonymity_audit; same relations, one extra level table."""
+    cust = _t(spark, sf_dir, "customer")
+    b = cust.select(
+        "c_nationkey",
+        "c_mktsegment",
+        F.when(F.col("c_acctbal") < 0, "neg")
+        .when(F.col("c_acctbal") < 5000, "mid")
+        .otherwise("high")
+        .alias("sens"),
+    )
+    cls = b.groupBy("c_nationkey", "c_mktsegment", "sens").agg(
+        F.count(F.lit(1)).cast("long").alias("n_s")
+    )
+    tot = cls.groupBy("c_nationkey", "c_mktsegment").agg(
+        F.sum("n_s").cast("long").alias("k"),
+        F.count(F.lit(1)).cast("long").alias("l_distinct"),
+    )
+    p = F.col("n_s").cast("double") / F.col("k").cast("double")
+    tm = cls.join(tot, ["c_nationkey", "c_mktsegment"]).select(
+        "c_nationkey",
+        "c_mktsegment",
+        F.floor((-p) * F.log(p) * F.lit(1.0e9) + F.lit(0.5))
+        .cast("long")
+        .alias("term_e9"),
+    )
+    ent = tm.groupBy("c_nationkey", "c_mktsegment").agg(
+        F.sum("term_e9").cast("long").alias("ent_e9")
+    )
+    return (
+        tot.join(ent, ["c_nationkey", "c_mktsegment"])
+        .select(
+            F.col("c_nationkey").cast("long").alias("nationkey"),
+            F.col("c_mktsegment").alias("segment"),
+            "k",
+            "l_distinct",
+            F.round(F.exp(F.col("ent_e9").cast("double") / F.lit(1.0e9)), 4).alias(
+                "entropy_l"
+            ),
+            (F.col("k") >= 5).cast("long").alias("meets_k5"),
+            (F.col("l_distinct") >= 2).cast("long").alias("meets_l2"),
+        )
+    )
+
+
+# --------------------------------------------------------- t-closeness
+
+
+@q(
+    "t_closeness_audit",
+    """WITH b AS (
+         SELECT c_nationkey, c_mktsegment,
+                CAST(floor(c_acctbal * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)
+                  AS cents
+         FROM customer),
+       mm AS (SELECT CAST(min(cents) AS BIGINT) AS mn,
+                     CAST(max(cents) AS BIGINT) AS mx FROM b),
+       pt AS (SELECT c_nationkey, c_mktsegment,
+                     CAST((b.cents - mm.mn) * 10 // (mm.mx - mm.mn + 1)
+                          AS BIGINT) AS bucket
+              FROM b CROSS JOIN mm),
+       g AS (SELECT bucket, CAST(count(*) AS BIGINT) AS cg
+             FROM pt GROUP BY 1),
+       gc AS (SELECT bucket,
+                     CAST(sum(cg) OVER (ORDER BY bucket ASC
+                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumg
+              FROM g),
+       n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM pt),
+       cls AS (SELECT c_nationkey, c_mktsegment,
+                      CAST(count(*) AS BIGINT) AS nc
+               FROM pt GROUP BY 1, 2),
+       cb AS (SELECT c_nationkey, c_mktsegment, bucket,
+                     CAST(count(*) AS BIGINT) AS cc
+              FROM pt GROUP BY 1, 2, 3),
+       grid AS (SELECT cls.c_nationkey, cls.c_mktsegment, cls.nc,
+                       g.bucket, CAST(coalesce(cb.cc, 0) AS BIGINT) AS cc
+                FROM cls CROSS JOIN g
+                LEFT JOIN cb ON cb.c_nationkey = cls.c_nationkey
+                            AND cb.c_mktsegment = cls.c_mktsegment
+                            AND cb.bucket = g.bucket),
+       cum AS (SELECT c_nationkey, c_mktsegment, nc, bucket,
+                      CAST(sum(cc) OVER (
+                        PARTITION BY c_nationkey, c_mktsegment
+                        ORDER BY bucket ASC ROWS UNBOUNDED PRECEDING)
+                        AS BIGINT) AS cumc
+               FROM grid),
+       dm AS (SELECT c.c_nationkey, c.c_mktsegment, c.nc,
+                     CAST(sum(abs(c.cumc * n.n - gc.cumg * c.nc)) AS BIGINT)
+                       AS num
+              FROM cum c JOIN gc USING (bucket) CROSS JOIN n
+              GROUP BY 1, 2, 3)
+       SELECT CAST(dm.c_nationkey AS BIGINT) AS nationkey,
+              dm.c_mktsegment AS segment, dm.nc,
+              CAST(dm.num * 1000000 // (dm.nc * n.n * 9) AS BIGINT) AS t_e6,
+              CAST(CASE WHEN dm.num * 1000000 // (dm.nc * n.n * 9) > 200000
+                        THEN 1 ELSE 0 END AS BIGINT) AS breach_02
+       FROM dm CROSS JOIN n""",
+)
+def _t_closeness_audit(spark, sf_dir):
+    """t-closeness privacy audit (Li et al. 2007) completing the
+    k-anonymity / l-diversity release-gate family on the same
+    quasi-identifier classes (nation x market segment): per class, the
+    ordered earth-mover distance between the class's account-balance
+    decile distribution and the global one, normalized by B-1=9. The
+    EMD numerator sum|cumc*n - cumg*nc| is exact int64 over a complete
+    class x 10-decile grid (class cumsums partitioned by class; the
+    global decile cumsum is a 10-row level table); t is an exact e6
+    integer division. Classes are domain-bounded (<=125), so the
+    output and every window stay fixed-size at any corpus scale."""
+    cust = _t(spark, sf_dir, "customer")
+    b = cust.select(
+        "c_nationkey",
+        "c_mktsegment",
+        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+    )
+    mm = b.agg(
+        F.min("cents").cast("long").alias("mn"),
+        F.max("cents").cast("long").alias("mx"),
+    )
+    pt = b.crossJoin(F.broadcast(mm)).select(
+        "c_nationkey",
+        "c_mktsegment",
+        F.expr("cast((cents - mn) * 10 div (mx - mn + 1) as long)").alias("bucket"),
+    )
+    # ONE fact aggregation: the class x bucket contingency is
+    # domain-bounded (<=125 classes x 10 deciles) and the global decile
+    # counts, the total, and the class sizes all derive from it —
+    # unpinned, g/n/cls/cb each re-ran the customer scan + min-max
+    # probe (12 scans at the r8 audit)
+    cb = (
+        pt.groupBy("c_nationkey", "c_mktsegment", "bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("cc"))
+        .localCheckpoint(eager=True)
+    )
+    g = cb.groupBy("bucket").agg(F.sum("cc").cast("long").alias("cg"))
+    wg = Window.orderBy(F.col("bucket").asc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    gc = g.select(
+        "bucket", F.sum("cg").over(wg).cast("long").alias("cumg")
+    )
+    n = cb.agg(F.sum("cc").cast("long").alias("n"))
+    cls = cb.groupBy("c_nationkey", "c_mktsegment").agg(
+        F.sum("cc").cast("long").alias("nc")
+    )
+    grid = (
+        cls.crossJoin(F.broadcast(g.select("bucket")))
+        .join(cb, ["c_nationkey", "c_mktsegment", "bucket"], "left")
+        .select(
+            "c_nationkey",
+            "c_mktsegment",
+            "nc",
+            "bucket",
+            F.coalesce(F.col("cc"), F.lit(0)).cast("long").alias("cc"),
+        )
+    )
+    wc = Window.partitionBy("c_nationkey", "c_mktsegment").orderBy(
+        F.col("bucket").asc()
+    ).rowsBetween(Window.unboundedPreceding, 0)
+    cum = grid.select(
+        "c_nationkey",
+        "c_mktsegment",
+        "nc",
+        "bucket",
+        F.sum("cc").over(wc).cast("long").alias("cumc"),
+    )
+    dm = (
+        cum.join(F.broadcast(gc), "bucket")
+        .crossJoin(F.broadcast(n))
+        .groupBy("c_nationkey", "c_mktsegment", "nc")
+        .agg(
+            F.sum(
+                F.abs(F.col("cumc") * F.col("n") - F.col("cumg") * F.col("nc"))
+            )
+            .cast("long")
+            .alias("num")
+        )
+    )
+    t_e6 = F.expr("cast(num * 1000000 div (nc * n * 9) as long)")
+    return dm.crossJoin(F.broadcast(n)).select(
+        F.col("c_nationkey").cast("long").alias("nationkey"),
+        F.col("c_mktsegment").alias("segment"),
+        "nc",
+        t_e6.alias("t_e6"),
+        (t_e6 > F.lit(200000)).cast("long").alias("breach_02"),
+    )
+
+
+# ---------------------------------------------- zone-map pruning
+
+
+@q(
+    "zonemap_prune_report",
+    """WITH o AS (SELECT o_orderkey AS k,
+                CAST(epoch_us(o_orderdate) // 86400000000 AS BIGINT) AS day
+         FROM orders),
+       bb AS (SELECT CAST(min(k) AS BIGINT) AS mnk, CAST(max(k) AS BIGINT) AS mxk,
+                     CAST(min(day) AS BIGINT) AS mnd,
+                     CAST(max(day) AS BIGINT) AS mxd
+              FROM o),
+       pt AS (SELECT 'key_clustered' AS layout,
+                     CAST((o.k - bb.mnk) * 64 // (bb.mxk - bb.mnk + 1)
+                          AS BIGINT) AS chunk, o.day
+              FROM o CROSS JOIN bb
+              UNION ALL
+              SELECT 'date_clustered',
+                     CAST((o.day - bb.mnd) * 64 // (bb.mxd - bb.mnd + 1)
+                          AS BIGINT), o.day
+              FROM o CROSS JOIN bb),
+       ch AS (SELECT layout, chunk, CAST(min(day) AS BIGINT) AS mn_d,
+                     CAST(max(day) AS BIGINT) AS mx_d
+              FROM pt GROUP BY 1, 2),
+       preds AS (SELECT r.m,
+                        CAST(bb.mnd + (bb.mxd - bb.mnd + 1) * r.m // 12
+                             AS BIGINT) AS lo,
+                        CAST(bb.mnd + (bb.mxd - bb.mnd + 1) * (r.m + 1) // 12
+                             - 1 AS BIGINT) AS hi
+                 FROM range(0, 12) r(m) CROSS JOIN bb),
+       scan AS (SELECT ch.layout, preds.m,
+                       CAST(sum(CASE WHEN ch.mx_d < preds.lo
+                                       OR ch.mn_d > preds.hi
+                                     THEN 0 ELSE 1 END) AS BIGINT) AS scanned
+                FROM ch CROSS JOIN preds GROUP BY 1, 2),
+       nc AS (SELECT layout, CAST(count(*) AS BIGINT) AS n_chunks
+              FROM ch GROUP BY 1)
+       SELECT nc.layout, nc.n_chunks,
+              CAST(sum(scan.scanned) AS BIGINT) AS chunks_scanned_12preds,
+              CAST(sum(scan.scanned) * 1000000 // (12 * nc.n_chunks)
+                   AS BIGINT) AS avg_scan_fraction_e6
+       FROM scan JOIN nc USING (layout)
+       GROUP BY 1, 2 ORDER BY nc.layout""",
+)
+def _zonemap_prune_report(spark, sf_dir):
+    """Zone-map (min/max data-skipping) effectiveness report — the
+    data-layout decision every lakehouse makes: split orders into 64
+    fixed chunks under two layouts (key-clustered vs date-clustered),
+    record each chunk's orderdate min/max zone map, and measure what
+    fraction of chunks 12 equal-width date-range predicates must scan.
+    Date-clustered layouts prune to ~1/12; key-clustered zone maps
+    span everything and prune nothing — the quantitative argument for
+    sort/z-order before write (compaction_plan / zorder_events'
+    companion readout). All chunk ids, zone bounds, and fractions are
+    exact integer arithmetic; relations are 64 chunks x 12 predicates."""
+    o0 = _t(spark, sf_dir, "orders")
+    o = o0.select(
+        F.col("o_orderkey").alias("k"),
+        event_us(o0, "o_orderdate").alias("us"),
+    ).select("k", F.expr(f"cast(us div {_DAY_US} as long)").alias("day"))
+    bb = o.agg(
+        F.min("k").cast("long").alias("mnk"),
+        F.max("k").cast("long").alias("mxk"),
+        F.min("day").cast("long").alias("mnd"),
+        F.max("day").cast("long").alias("mxd"),
+    ).localCheckpoint(eager=True)  # 1 row; three consumers (both
+    # layout projections + the predicate grid) re-ran the orders scan
+    ob = o.crossJoin(F.broadcast(bb))
+    # both layouts in ONE orders pass: each row emits its two
+    # (layout, chunk) assignments via explode instead of a union of
+    # two scans (values identical to the unionAll form)
+    pt = ob.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.lit("key_clustered").alias("layout"),
+                    F.expr(
+                        "cast((k - mnk) * 64 div (mxk - mnk + 1) as long)"
+                    ).alias("chunk"),
+                ),
+                F.struct(
+                    F.lit("date_clustered").alias("layout"),
+                    F.expr(
+                        "cast((day - mnd) * 64 div (mxd - mnd + 1) as long)"
+                    ).alias("chunk"),
+                ),
+            )
+        ).alias("s"),
+        "day",
+    ).select(F.col("s.layout").alias("layout"), F.col("s.chunk").alias("chunk"), "day")
+    ch = (
+        pt.groupBy("layout", "chunk")
+        .agg(
+            F.min("day").cast("long").alias("mn_d"),
+            F.max("day").cast("long").alias("mx_d"),
+        )
+        # 2 x 64 zone-map rows; the predicate scan and the chunk count
+        # both consume it
+        .localCheckpoint(eager=True)
+    )
+    preds = (
+        spark.range(12)
+        .select(F.col("id").cast("long").alias("m"))
+        .crossJoin(F.broadcast(bb))
+        .select(
+            "m",
+            F.expr("cast(mnd + (mxd - mnd + 1) * m div 12 as long)").alias("lo"),
+            F.expr(
+                "cast(mnd + (mxd - mnd + 1) * (m + 1) div 12 - 1 as long)"
+            ).alias("hi"),
+        )
+    )
+    scan = (
+        ch.crossJoin(F.broadcast(preds))
+        .groupBy("layout", "m")
+        .agg(
+            F.sum(
+                F.when(
+                    (F.col("mx_d") < F.col("lo")) | (F.col("mn_d") > F.col("hi")),
+                    F.lit(0),
+                ).otherwise(F.lit(1))
+            )
+            .cast("long")
+            .alias("scanned")
+        )
+    )
+    nc = ch.groupBy("layout").agg(F.count(F.lit(1)).cast("long").alias("n_chunks"))
+    return (
+        scan.join(nc, "layout")
+        .groupBy("layout", "n_chunks")
+        .agg(F.sum("scanned").cast("long").alias("chunks_scanned_12preds"))
+        .select(
+            "layout",
+            "n_chunks",
+            "chunks_scanned_12preds",
+            F.expr(
+                "cast(chunks_scanned_12preds * 1000000 div (12 * n_chunks)"
+                " as long)"
+            ).alias("avg_scan_fraction_e6"),
+        )
+        .orderBy("layout")
+    )

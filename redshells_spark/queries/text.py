@@ -1,9 +1,10 @@
-"""Text ops: tokenize/dictionary/tfidf, LLM text analysis, plus the round-3 scale tier registered into the driver window (bloom, KMV, pagerank, gapfill, zorder, rolling stats).
-
-Split from the former single-file queries.py (round 4); registration
-order within and across tier modules is preserved by the package
-__init__ import order and pinned by tests/test_ann_recall.py.
+"""Text ops: tokenize, dictionary, tf-idf, keyword match, LLM text
+analysis (quality, language, PII, repetition, perplexity), multimodal
+headers, and corpus statistics (vocabulary laws, burstiness, PMI,
+entropy rates, keyword extraction).
 """
+
+from __future__ import annotations
 
 from redshells_spark.queries._shared import *  # noqa: F401,F403
 
@@ -337,851 +338,6 @@ def _stream_dedup_fingerprints(spark, sf_dir):
     )
 
 
-# Bloom runtime-filter oracle: DuckDB reconstructs the *identical*
-# 8192-bit bitmap from portable arithmetic (md5-hex folded to 60 bits,
-# Kirsch-Mitzenmacher double hashing with the minhash constant family)
-# and therefore the identical false-positive set — an approximate
-# operator made exactly checkable. See operators/bloom.py.
-_BLOOM_P = 2147483647
-# 4096 words = 128 Kbit = 16 KB: ~8 bits/key at sf0.1's ~15k hot keys
-# (k=3 → ~3% FP); 256 words saturated there and passed everything
-_BLOOM_WORDS = 4096
-_BLOOM_M = _BLOOM_WORDS * 32
-_BLOOM_K = 3
-
-
-def _duck_h60(key_sql: str) -> str:
-    """DuckDB: first 15 hex digits of md5 as int64 (same fold as
-    dedup/simhash.py's portable signatures)."""
-    return (
-        "("
-        + " + ".join(
-            f"(instr('0123456789abcdef', substr(md5(CAST({key_sql} AS VARCHAR)), {i + 1}, 1)) - 1)"
-            f" * {16 ** (14 - i)}"
-            for i in range(15)
-        )
-        + ")"
-    )
-
-
-def _bloom_oracle_sql() -> str:
-    from redshells_spark.operators.bloom import _hash_consts
-
-    consts = _hash_consts(_BLOOM_K)
-    pos_terms = " UNION ALL ".join(
-        f"SELECT ((hp * {a} + {b}) % {_BLOOM_P}) % {_BLOOM_M} AS p FROM kh" for a, b in consts
-    )
-    probe_terms = " AND ".join(
-        f"(a[((((hp * {a} + {b}) % {_BLOOM_P}) % {_BLOOM_M}) // 32)::INTEGER + 1]"
-        f" & (1::BIGINT << (((((hp * {a} + {b}) % {_BLOOM_P}) % {_BLOOM_M}) % 32)::INTEGER))) <> 0"
-        for a, b in consts
-    )
-    # numeric keys: base hash is key % P directly (no md5) — matches
-    # operators/bloom.py's integer fast path
-    return f"""WITH keys AS (SELECT DISTINCT o_orderkey AS key FROM orders
-                    WHERE o_totalprice > 400000),
-       kh AS (SELECT (key::BIGINT % {_BLOOM_P}) AS hp FROM keys),
-       pos AS ({pos_terms}),
-       words AS (SELECT p // 32 AS word,
-                        bit_or(1::BIGINT << (p % 32)::INTEGER) AS bits
-                 FROM pos GROUP BY 1),
-       dense AS (SELECT g AS word, COALESCE(w.bits, 0::BIGINT) AS bits
-                 FROM generate_series(0, {_BLOOM_WORDS - 1}) AS gs(g)
-                 LEFT JOIN words w ON w.word = g),
-       arr AS (SELECT list(bits ORDER BY word) AS a FROM dense),
-       probe AS (SELECT l_orderkey, l_linenumber, l_quantity,
-                        (l_orderkey::BIGINT % {_BLOOM_P}) AS hp
-                 FROM lineitem)
-       SELECT l_orderkey, l_linenumber, l_quantity
-       FROM probe, arr WHERE {probe_terms}"""
-
-
-@q("bloom_filter_probe", _bloom_oracle_sql())
-def _bloom_filter_probe(spark, sf_dir):
-    """Raw runtime-filter output: lineitem rows whose key passes the
-    bloom built from high-value orders — a deterministic superset of
-    the true semi-join (the oracle reconstructs the same bitmap, so
-    even the false positives MATCH). The fact side is filtered inside
-    the scan stage: no shuffle, no join."""
-    from redshells_spark.operators.bloom import bloom_contains, build_bloom
-
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    bloom = build_bloom(
-        orders.select(F.col("o_orderkey").alias("key")).dropDuplicates(),
-        "key",
-        num_words=_BLOOM_WORDS,
-        num_hashes=_BLOOM_K,
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return li.filter(bloom_contains(bloom, "l_orderkey")).select(
-        "l_orderkey", "l_linenumber", "l_quantity"
-    )
-
-
-@q(
-    "bloom_semi_join",
-    """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-       WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-                            WHERE o_totalprice > 400000)""",
-)
-def _bloom_semi_join(spark, sf_dir):
-    """Bloom pre-filter + broadcast semi-join cleanup: exact semi-join
-    semantics (the plain-SQL oracle), but the fact scan emits only
-    bloom survivors, so the join input is ~FP-rate above the true
-    match set instead of the whole table."""
-    from redshells_spark.operators.bloom import bloom_semi_join
-
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    li = _t(spark, sf_dir, "lineitem")
-    return bloom_semi_join(
-        li,
-        orders.select("o_orderkey"),
-        big_key="l_orderkey",
-        small_key="o_orderkey",
-        num_words=_BLOOM_WORDS,
-        num_hashes=_BLOOM_K,
-        exact=True,
-    ).select("l_orderkey", "l_linenumber", "l_quantity")
-
-
-@q(
-    "time_bucket_gapfill",
-    """WITH obs AS (
-         SELECT user_id, epoch_us(ts) // 3600000000 AS bucket,
-                round(avg(value), 10) AS v
-         FROM events GROUP BY 1, 2),
-       span AS (SELECT user_id, min(bucket) AS b0, max(bucket) AS b1 FROM obs GROUP BY 1),
-       grid AS (SELECT user_id, unnest(range(b0, b1 + 1)) AS bucket FROM span),
-       gfull AS (SELECT g.user_id, g.bucket, o.v
-                 FROM grid g LEFT JOIN obs o ON o.user_id = g.user_id AND o.bucket = g.bucket),
-       w AS (SELECT user_id, bucket, v,
-               last_value(v IGNORE NULLS) OVER fw AS prev_v,
-               last_value(CASE WHEN v IS NOT NULL THEN bucket END IGNORE NULLS) OVER fw AS prev_b,
-               first_value(v IGNORE NULLS) OVER bw AS next_v,
-               first_value(CASE WHEN v IS NOT NULL THEN bucket END IGNORE NULLS) OVER bw AS next_b
-             FROM gfull
-             WINDOW fw AS (PARTITION BY user_id ORDER BY bucket ROWS UNBOUNDED PRECEDING),
-                    bw AS (PARTITION BY user_id ORDER BY bucket
-                           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-       SELECT user_id, (bucket * 3600)::BIGINT AS bucket_start,
-              (v IS NULL)::INTEGER AS is_gap,
-              CAST(round(prev_v * 10000) AS BIGINT) AS v_locf_e4,
-              CAST(round((CASE WHEN v IS NOT NULL THEN v
-                    ELSE prev_v + (next_v - prev_v) * (bucket - prev_b) / (next_b - prev_b)
-                    END) * 10000) AS BIGINT) AS v_interp_e4
-       FROM w""",
-)
-def _time_bucket_gapfill(spark, sf_dir):
-    """Hypertable-style gap-fill (operators/gapfill.py): hourly per-user
-    buckets, missing buckets materialized inside each user's observed
-    span, LOCF + linear interpolation. Fills are exported as 1e-4-scaled
-    integers: ``round(x*10000)`` rounds the *same* IEEE product on both
-    engines, where ``round(x, 4)`` diverges (Spark's exact-BigDecimal
-    HALF_UP vs DuckDB's multiply-then-round double-rounding) whenever an
-    interpolated value lands exactly on a 5e-5 boundary."""
-    from redshells_spark.operators.gapfill import time_bucket_gapfill
-
-    out = time_bucket_gapfill(
-        _t(spark, sf_dir, "events"),
-        key_column="user_id",
-        value_column="value",
-        ts_column="ts",
-        bucket_seconds=3600,
-    )
-    return out.select(
-        "user_id",
-        "bucket_start",
-        "is_gap",
-        F.round(F.col("v_locf") * 10000, 0).cast("long").alias("v_locf_e4"),
-        F.round(F.col("v_interp") * 10000, 0).cast("long").alias("v_interp_e4"),
-    )
-
-
-# PageRank oracle: the power iteration unrolled as CTEs. Every iterate
-# is rounded to 10 decimals on BOTH engines, which erases the ~1e-17
-# order-of-summation noise of double aggregation and makes the whole
-# fixpoint bit-reproducible. Damping constants go through explicit
-# DOUBLE casts — DuckDB parses 0.85 as DECIMAL, whose arithmetic would
-# diverge from Spark's IEEE doubles.
-def _pagerank_oracle_sql(iterations: int = 3) -> str:
-    base = "((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn))"
-    steps = []
-    prev = "r0"
-    for i in range(1, iterations + 1):
-        steps.append(
-            f"""rk{i} AS (SELECT e.dst AS node,
-                     round({base} + CAST(0.85 AS DOUBLE) * sum(p.r / d.deg), 10) AS r
-              FROM edges e JOIN {prev} p ON p.node = e.src JOIN deg d ON d.src = e.src
-              GROUP BY e.dst)"""
-        )
-        prev = f"rk{i}"
-    joined = ",\n       ".join(steps)
-    return f"""WITH e0 AS (SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
-                   FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       edges AS (SELECT src, dst FROM e0 UNION SELECT dst AS src, src AS dst FROM e0),
-       deg AS (SELECT src, count(*)::DOUBLE AS deg FROM edges GROUP BY 1),
-       nn AS (SELECT count(DISTINCT src)::DOUBLE AS n FROM edges),
-       r0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS r
-              FROM (SELECT DISTINCT src FROM edges)),
-       {joined}
-       SELECT node, r AS rank FROM {prev}"""
-
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetrized customer–supplier purchase graph, cached per
-    (session, sf): pagerank and the bounded BFS consume the identical
-    relation, and the build (fact join + two shuffling dedups over
-    ~1M string pairs) costs more than either algorithm's supersteps —
-    one ``cache()`` makes the second graph query start from RAM. The
-    pre-symmetrize dedup is skipped on purpose: ``symmetrize_edges``
-    dedups the union anyway, so deduping e0 first only adds a
-    shuffle."""
-    return _copurchase_edges_weighted(spark, sf_dir).select("src", "dst")
-
-
-@session_memo
-def _copurchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(src, dst, cnt): the cached relation itself — symmetrized edges
-    WITH the per-pair purchase count, so the whole graph tier (pagerank,
-    BFS, LPA, Katz, AND the weighted Bellman-Ford) shares ONE
-    materialization of the fact join. The count aggregate replaces the
-    former symmetrize-then-dropDuplicates (one shuffle, not two): the
-    groupBy yields distinct directed (c→s) pairs and the mirror's
-    prefixes are disjoint from them, so the union is distinct by
-    construction — bit-identical edge set to symmetrize_edges(e0)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e0 = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    sym = e0.unionByName(
-        e0.select(
-            F.col("dst").alias("src"),
-            F.col("src").alias("dst"),
-            F.col("cnt"),
-        )
-    )
-    return sym.cache()
-
-
-@session_memo
-def _copurchase_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(src, deg): outgoing-arc count per node of the symmetrized
-    co-purchase graph — the degree relation rich_club_coefficient and
-    graph_modularity both derive; cached per (session, sf) so the
-    groupBy over the ~1M-arc cached edge list runs once instead of
-    once per lazy reference (assortativity-style queries read it 3x)."""
-    return (
-        _copurchase_edges(spark, sf_dir)
-        .groupBy("src")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .cache()
-    )
-
-
-@q("pagerank_copurchase", _pagerank_oracle_sql(3))
-def _pagerank_copurchase(spark, sf_dir):
-    """Distributed PageRank (operators/graph.py) over the symmetrized
-    customer–supplier purchase graph: 3 synchronous power steps,
-    d=0.85, iterates rounded to 10 decimals for cross-engine
-    determinism. Each step is one co-partitioned join + one sum — the
-    relational Pregel shape, checkpointed on longer runs."""
-    from redshells_spark.operators.graph import pagerank
-
-    return pagerank(
-        _copurchase_edges(spark, sf_dir),
-        iterations=3,
-        damping=0.85,
-        assume_no_dangling=True,  # symmetrize guarantees out-degree ≥ 1
-    )
-
-
-@q(
-    "pq_topk",
-    """WITH cent AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid,
-                     embedding
-              FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 800),
-       ms AS (SELECT unnest(range(8)) AS m),
-       sub AS (SELECT m, cid,
-                      list_transform(range(1, 9), i -> embedding[m * 8 + i]::DOUBLE) AS cw
-               FROM cent, ms),
-       vsub AS (SELECT vec_id, m,
-                       list_transform(range(1, 9), i -> embedding[m * 8 + i]::DOUBLE) AS v
-                FROM embeddings, ms),
-       d2 AS (SELECT v.vec_id, v.m, s.cid,
-                     list_reduce(list_transform(range(1, 9),
-                         i -> (v.v[i] - s.cw[i]) * (v.v[i] - s.cw[i])),
-                         (a, b) -> a + b) AS d2
-              FROM vsub v JOIN sub s ON s.m = v.m),
-       codes AS (SELECT vec_id, m, cid AS code FROM (
-                   SELECT vec_id, m, cid,
-                          row_number() OVER (PARTITION BY vec_id, m
-                                             ORDER BY d2 ASC, cid ASC) AS rn
-                   FROM d2) WHERE rn = 1),
-       dt AS (SELECT vec_id AS query_id, m, cid,
-                     CAST(floor(d2 * 1000000 + 0.5) AS BIGINT) AS d_e6
-              FROM d2 WHERE vec_id < 50),
-       adc AS (SELECT t.query_id, c.vec_id, sum(t.d_e6)::BIGINT AS approx_d2_e6
-               FROM codes c JOIN dt t ON t.m = c.m AND t.cid = c.code
-               GROUP BY 1, 2)
-       SELECT query_id, vec_id, approx_d2_e6, CAST(rn AS BIGINT) AS rank
-       FROM (SELECT query_id, vec_id, approx_d2_e6,
-                    row_number() OVER (PARTITION BY query_id
-                                       ORDER BY approx_d2_e6 ASC, vec_id ASC) AS rn
-             FROM adc)
-       WHERE rn <= 10""",
-)
-def _pq_topk(spark, sf_dir):
-    """Product-quantization ADC top-k (similarity/pq.py): M=8 subspaces,
-    16 strided-corpus codewords each, integer-scaled distance tables.
-    Every stage — left-fold subspace distances, argmin codes, ADC
-    integer sums, boundary-tie cuts — is pinned bit-for-bit against the
-    DuckDB oracle; the approximation error vs exact search is a *fixed
-    deterministic function* of the codebooks, not engine noise."""
-    from redshells_spark.similarity.pq import pq_adc_topk, pq_codebooks, pq_encode
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cent_rows = (
-        emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 800))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()  # ≤16 rows — bounded codebook probe, mirrors index build
-    )
-    cbs = pq_codebooks([[float(x) for x in r["embedding"]] for r in cent_rows], num_subspaces=8)
-    codes = pq_encode(emb, cbs)
-    queries = emb.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return pq_adc_topk(queries, codes, cbs, k=10)
-
-
-@q(
-    "heavy_hitter_tokens",
-    f"""WITH {_TOK_SQL}
-       SELECT token, cnt FROM (
-         SELECT token, count(*)::BIGINT AS cnt,
-                row_number() OVER (ORDER BY count(*) DESC, token ASC) AS rn
-         FROM tok GROUP BY token)
-       WHERE rn <= 50""",
-)
-def _heavy_hitter_tokens(spark, sf_dir):
-    """Exact top-50 tokens via Misra-Gries candidates + recount
-    (operators/heavy_hitters.py): per-partition bounded summaries (no
-    shuffle) feed a candidates-only recount, with a per-run exactness
-    certificate — so the oracle is the plain top-k SQL even though the
-    full token vocabulary never shuffles."""
-    from redshells_spark.operators.heavy_hitters import top_k_frequent
-
-    toks = _tokens(spark, sf_dir).select(F.explode("tokens").alias("token"))
-    out = top_k_frequent(toks, "token", k=50, capacity=4096)
-    return out.select("token", F.col("cnt").cast("long").alias("cnt"))
-
-
-@q(
-    "kmv_distinct_users",
-    f"""WITH h AS (SELECT DISTINCT event_type, {_duck_h60("user_id")} AS h FROM events),
-       r AS (SELECT event_type, h,
-                    row_number() OVER (PARTITION BY event_type ORDER BY h ASC) AS rn
-             FROM h),
-       a AS (SELECT event_type, count(*)::BIGINT AS n_hashes, max(h) AS hk
-             FROM r WHERE rn <= 64 GROUP BY 1),
-       x AS (SELECT event_type, count(DISTINCT user_id)::BIGINT AS n_exact
-             FROM events GROUP BY 1)
-       SELECT a.event_type, a.n_hashes, x.n_exact,
-              round(CASE WHEN a.n_hashes < 64 THEN a.n_hashes::DOUBLE
-                    ELSE 63.0 * 1152921504606846976.0 / hk::DOUBLE END, 4) AS kmv_estimate
-       FROM a JOIN x ON x.event_type = a.event_type""",
-)
-def _kmv_distinct_users(spark, sf_dir):
-    """K-Minimum-Values distinct-user sketch (operators/sketches.py):
-    the portable counterpart to `approx_distinct_users`'s HLL — an
-    approximate aggregate whose estimate the DuckDB oracle reproduces
-    bit-for-bit (portable md5 hashing + IEEE estimate arithmetic).
-    n_exact rides along so the sketch error is visible in the result."""
-    from redshells_spark.operators.sketches import kmv_distinct
-
-    ev = _t(spark, sf_dir, "events")
-    sk = kmv_distinct(ev, ["event_type"], "user_id", k=64)
-    exact = ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("n_exact"))
-    return sk.join(exact, on="event_type").select(
-        "event_type",
-        "n_hashes",
-        F.col("n_exact").cast("long").alias("n_exact"),
-        _r4(F.col("kmv_estimate"), "kmv_estimate"),
-    )
-
-
-@q(
-    "rolling_event_stats",
-    """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us,
-                         CAST(round(value * 100) AS BIGINT) AS vc
-                  FROM events)
-       SELECT event_id, user_id,
-              (count(*) OVER w)::BIGINT AS n_1h,
-              (sum(vc) OVER w)::BIGINT AS sum_c_1h,
-              round((sum(vc) OVER w)::DOUBLE / (100.0 * (count(*) OVER w)), 4) AS avg_1h
-       FROM e
-       WINDOW w AS (PARTITION BY user_id ORDER BY us
-                    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""",
-)
-def _rolling_event_stats(spark, sf_dir):
-    """Sliding event-time aggregate: per event, count/sum/avg of the
-    user's trailing 1-hour window via a RANGE frame over microseconds —
-    the per-row counterpart to the tumbling `windowed_event_counts`.
-    Values ride as integer cents (`round(value*100)` — 2-decimal source
-    data), so the sliding sums are order-free integer arithmetic and
-    the avg divides identical ints: bit-stable on both engines."""
-    ev = _t(spark, sf_dir, "events")
-    e = ev.select(
-        "event_id",
-        "user_id",
-        event_us(ev, "ts").alias("__us"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("__us")
-        .rangeBetween(-3_600_000_000, Window.currentRow)
-    )
-    return e.select(
-        "event_id",
-        "user_id",
-        F.count(F.lit(1)).over(w).cast("long").alias("n_1h"),
-        F.sum("vc").over(w).cast("long").alias("sum_c_1h"),
-        _r4(
-            F.sum("vc").over(w).cast("double") / (F.lit(100.0) * F.count(F.lit(1)).over(w)),
-            "avg_1h",
-        ),
-    )
-
-
-def _zorder_oracle_sql() -> str:
-    from redshells_spark.operators.layout import interleave_sql
-
-    inter = interleave_sql(["su", "st"], bits=16)
-    return f"""WITH rng AS (SELECT min(user_id) AS mnu, max(user_id) AS mxu,
-                      min(epoch_us(ts) // 1000000) AS mnt,
-                      max(epoch_us(ts) // 1000000) AS mxt
-               FROM events),
-       e AS (SELECT event_id, user_id, epoch_us(ts) // 1000000 AS sec FROM events),
-       s AS (SELECT event_id,
-                    ((user_id - mnu) * 65535) // (mxu - mnu) AS su,
-                    ((sec - mnt) * 65535) // (mxt - mnt) AS st
-             FROM e, rng)
-       SELECT event_id, {inter} AS zkey FROM s"""
-
-
-@q("zorder_events", _zorder_oracle_sql())
-def _zorder_events(spark, sf_dir):
-    """Morton/Z-order layout key over (user_id, event-second)
-    (operators/layout.py): the sort key `write_zordered` clusters files
-    by, making parquet min/max stats selective on both dimensions. Pure
-    int64 scale+interleave arithmetic — the oracle evaluates the same
-    generated expression, so physical-layout decisions are part of the
-    correctness contract."""
-    from redshells_spark.operators.layout import with_zorder_key
-
-    ev = _t(spark, sf_dir, "events")
-    e = ev.select("event_id", "user_id", event_us(ev, "ts").alias("__us")).withColumn(
-        "sec", F.expr("__us div 1000000")
-    )
-    keyed = with_zorder_key(e, ["user_id", "sec"], bits=16)
-    return keyed.select("event_id", F.col("zkey").cast("long").alias("zkey"))
-
-
-def _profile_oracle_sql() -> str:
-    def num(c):
-        return f"""SELECT '{c}' AS col_name, count(*)::BIGINT AS n_rows,
-              sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-              count(DISTINCT {c})::BIGINT AS n_distinct,
-              min({c})::DOUBLE AS min_num, max({c})::DOUBLE AS max_num,
-              round(avg({c}::DOUBLE), 4) AS avg_num,
-              NULL::VARCHAR AS min_str, NULL::VARCHAR AS max_str
-       FROM orders"""
-
-    def st(c):
-        return f"""SELECT '{c}' AS col_name, count(*)::BIGINT AS n_rows,
-              sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-              count(DISTINCT {c})::BIGINT AS n_distinct,
-              NULL::DOUBLE AS min_num, NULL::DOUBLE AS max_num, NULL::DOUBLE AS avg_num,
-              min({c}) AS min_str, max({c}) AS max_str
-       FROM orders"""
-
-    return " UNION ALL ".join(
-        [num("o_custkey"), num("o_totalprice"), st("o_orderstatus"), st("o_orderpriority")]
-    )
-
-
-@q("profile_orders", _profile_oracle_sql())
-def _profile_orders(spark, sf_dir):
-    """One-pass column profiling (data/profile.py): null counts, exact
-    distinct cardinalities, numeric ranges/means and string extremes in
-    a single scan — the trust-a-new-drop primitive, oracle-checked per
-    statistic. (dtype stays out of the contract: physical int32/int64
-    encodings legitimately vary across testdata generations.)"""
-    from redshells_spark.data.profile import profile_columns
-
-    prof = profile_columns(
-        _t(spark, sf_dir, "orders"),
-        ["o_custkey", "o_totalprice", "o_orderstatus", "o_orderpriority"],
-    )
-    return prof.select(
-        F.col("column").alias("col_name"),
-        "n_rows",
-        "n_nulls",
-        "n_distinct",
-        "min_num",
-        "max_num",
-        _r4(F.col("avg_num"), "avg_num"),
-        "min_str",
-        "max_str",
-    )
-
-
-@q(
-    "weighted_sample_orders",
-    f"""WITH p AS (SELECT o_orderpriority, o_orderkey,
-                  CAST(round(o_totalprice * 100) AS BIGINT) AS w_cents,
-                  {_duck_h60("'0|' || o_orderkey")} AS u
-           FROM orders),
-       r AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
-                                          ORDER BY u / w_cents ASC, o_orderkey ASC) AS rn
-             FROM p)
-       SELECT o_orderpriority, o_orderkey, w_cents FROM r WHERE rn <= 20""",
-)
-def _weighted_sample_orders(spark, sf_dir):
-    """Priority sampling (data/sampling.py:weighted_sample_priority):
-    20 orders per priority class, inclusion ≈ proportional to price,
-    without replacement. The priority u/w is one int64→double divide —
-    IEEE-identical in DuckDB — so even the *random* sample is
-    oracle-exact."""
-    from redshells_spark.data.sampling import weighted_sample_priority
-
-    o = _t(spark, sf_dir, "orders").withColumn(
-        "w_cents", F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    )
-    out = weighted_sample_priority(
-        o, "o_orderpriority", "o_orderkey", "w_cents", k=20, seed=0
-    )
-    return out.select("o_orderpriority", "o_orderkey", "w_cents")
-
-
-@q(
-    "grouped_median_price",
-    """WITH r AS (SELECT o_orderpriority, o_totalprice,
-                  row_number() OVER (PARTITION BY o_orderpriority
-                                     ORDER BY o_totalprice ASC, o_orderkey ASC) AS rn,
-                  count(*) OVER (PARTITION BY o_orderpriority) AS n
-           FROM orders)
-       SELECT o_orderpriority, n::BIGINT AS n,
-              round(o_totalprice, 4) AS median_price
-       FROM r WHERE rn = (n + 1) // 2""",
-)
-def _grouped_median_price(spark, sf_dir):
-    """Exact per-group lower median via window selection (no
-    percentile-function semantics to reconcile across engines: the
-    median is literally the row at rank (n+1)/2 under a total order)."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").asc(), F.col("o_orderkey").asc()
-    )
-    wn = Window.partitionBy("o_orderpriority")
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(wn))
-        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select(
-            "o_orderpriority",
-            F.col("n").cast("long").alias("n"),
-            _r4(F.col("o_totalprice"), "median_price"),
-        )
-    )
-
-
-@q(
-    "market_share_asia",
-    """WITH rev AS (
-         SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                n2.n_name AS supp_nation,
-                CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)
-                  * (100 - CAST(floor(l_discount * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS vol_e4
-         FROM lineitem
-         JOIN orders   ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation n1 ON c_nationkey = n1.n_nationkey
-         JOIN region   ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation n2 ON s_nationkey = n2.n_nationkey
-         JOIN part     ON l_partkey = p_partkey AND p_size <= 10)
-       SELECT o_year, supp_nation,
-              CAST(CAST((sum(vol_e4) + 50) // 100 AS BIGINT) AS DOUBLE) / 100
-                AS nation_volume,
-              count(*) AS n_lines
-       FROM rev GROUP BY o_year, supp_nation""",
-)
-def _market_share_asia(spark, sf_dir):
-    """TPC-H Q8-shaped market share: 7-table star join (fact +
-    customer-side nation/region, supplier-side nation, part filter).
-    Spark-first: every dimension is explicitly broadcast, so the plan
-    is a chain of BroadcastHashJoins over ONE fact scan — zero fact
-    shuffles until the final aggregate; Catalyst reorders/prunes the
-    rest. Revenue carries EXACT integer e4 units (2-decimal price ×
-    2-decimal discount) summed as longs — the factor-10 probe caught
-    the float-sum version crossing cent-rounding boundaries at 10×
-    term counts; integer cents are order-free at any scale."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    s = _t(spark, sf_dir, "supplier")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 10)
-    n1 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk"))
-    n2 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    rev = (
-        li.join(F.broadcast(p.select("p_partkey")), li["l_partkey"] == F.col("p_partkey"))
-        .join(o.select("o_orderkey", "o_custkey", "o_orderdate"), li["l_orderkey"] == F.col("o_orderkey"))
-        .join(F.broadcast(c.select("c_custkey", "c_nationkey")), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("c_nk"))
-        .join(F.broadcast(r.select("r_regionkey")), F.col("c_rk") == F.col("r_regionkey"))
-        .join(F.broadcast(s.select("s_suppkey", "s_nationkey")), li["l_suppkey"] == F.col("s_suppkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nk"))
-        .select(
-            F.year("o_orderdate").cast("long").alias("o_year"),
-            "supp_nation",
-            (
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-                * (
-                    F.lit(100)
-                    - F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
-                )
-            ).alias("vol_e4"),
-        )
-    )
-    return (
-        rev.groupBy("o_year", "supp_nation")
-        .agg(F.sum("vol_e4").alias("__s"), F.count(F.lit(1)).alias("n_lines"))
-        .select(
-            "o_year",
-            "supp_nation",
-            (F.expr("(__s + 50) div 100").cast("double") / 100).alias(
-                "nation_volume"
-            ),
-            "n_lines",
-        )
-    )
-
-
-@q(
-    "latest_by_key",
-    """SELECT user_id, event_id, round(value, 4) AS value FROM (
-         SELECT user_id, event_id, value,
-                row_number() OVER (PARTITION BY user_id
-                                   ORDER BY ts DESC, event_id DESC) AS rn
-         FROM events) WHERE rn = 1""",
-)
-def _latest_by_key(spark, sf_dir):
-    """CDC compaction primitive: latest row per key by version order
-    (here event time, id tie-break) — the keep-last window every
-    upsert/merge pipeline runs before publishing a snapshot.
-    WindowGroupLimit prunes non-latest rows map-side."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", _r4(F.col("value"), "value"))
-    )
-
-
-@q(
-    "salted_join_revenue",
-    f"""SELECT o_orderpriority, {_MONEY_SUM('l_extendedprice')} AS revenue,
-              count(*) AS n_lines
-       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-       GROUP BY o_orderpriority""",
-)
-def _salted_join_revenue(spark, sf_dir):
-    """Skew-resistant fact join (operators/skew.py:salted_join): the
-    big side takes a deterministic salt, the small side replicates
-    ×num_salts, and the join key becomes (key, salt) — a hot orderkey
-    spreads over num_salts reducers instead of stalling one. Result is
-    identical to the plain join (each fact row matches exactly one
-    replica), which is exactly what the oracle checks."""
-    from redshells_spark.operators.skew import salted_join
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
-    )
-    joined = salted_join(li, o, on=["l_orderkey"], num_salts=8)
-    return joined.groupBy("o_orderpriority").agg(
-        exact_money_sum(F.col("l_extendedprice")).alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-@q(
-    "triangle_counts",
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45),
-       e AS (SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-             FROM li a JOIN li b
-               ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-       tri AS (SELECT e1.a AS a, e1.b AS b, e2.c AS c
-               FROM e e1
-               JOIN (SELECT a AS b, b AS c FROM e) e2 ON e2.b = e1.b
-               JOIN (SELECT a, b AS c FROM e) e3 ON e3.a = e1.a AND e3.c = e2.c)
-       SELECT node, count(*) AS n_triangles FROM (
-         SELECT a AS node FROM tri
-         UNION ALL SELECT b FROM tri
-         UNION ALL SELECT c FROM tri)
-       GROUP BY node""",
-)
-def _triangle_counts(spark, sf_dir):
-    """Per-node triangle counts (operators/graph.py) over the bulk
-    co-purchase part graph (parts bought with quantity ≥ 45 in the same
-    order). Id-ordered wedge closure: two equi-joins, each triangle
-    enumerated once — the third classic graph kernel next to PageRank
-    and connected components, oracle-checked as plain SQL."""
-    from redshells_spark.operators.graph import count_triangles_per_node
-
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 45)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .dropDuplicates()
-    )
-    out = count_triangles_per_node(edges)
-    return out.select("node", F.col("n_triangles").cast("long").alias("n_triangles"))
-
-
-@q(
-    "ivfpq_topk",
-    """WITH cent AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid,
-                     embedding
-              FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 800),
-       cd2 AS (SELECT e.vec_id, c.cid,
-                      list_reduce(list_transform(range(1, 65),
-                          i -> (e.embedding[i]::DOUBLE - c.embedding[i]::DOUBLE)
-                             * (e.embedding[i]::DOUBLE - c.embedding[i]::DOUBLE)),
-                          (a, b) -> a + b) AS d2
-               FROM embeddings e CROSS JOIN cent c),
-       assign AS (SELECT vec_id, cid FROM (
-                    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                                                           ORDER BY d2 ASC, cid ASC) AS rn
-                    FROM cd2) WHERE rn = 1),
-       resid AS (SELECT a.vec_id, a.cid,
-                        list_transform(range(1, 65),
-                            i -> e.embedding[i]::DOUBLE - c.embedding[i]::DOUBLE) AS r
-                 FROM assign a JOIN embeddings e ON e.vec_id = a.vec_id
-                               JOIN cent c ON c.cid = a.cid),
-       ptrain AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS j, r
-                  FROM resid WHERE vec_id % 37 = 1 AND vec_id < 593),
-       ms AS (SELECT unnest(range(8)) AS m),
-       cw AS (SELECT m, j, list_transform(range(1, 9), i -> r[m * 8 + i]) AS cw
-              FROM ptrain, ms),
-       vsub AS (SELECT vec_id, cid, m, list_transform(range(1, 9), i -> r[m * 8 + i]) AS v
-                FROM resid, ms),
-       pd2 AS (SELECT v.vec_id, v.cid, v.m, s.j,
-                      list_reduce(list_transform(range(1, 9),
-                          i -> (v.v[i] - s.cw[i]) * (v.v[i] - s.cw[i])),
-                          (a, b) -> a + b) AS d2
-               FROM vsub v JOIN cw s ON s.m = v.m),
-       codes AS (SELECT vec_id, cid, m, j AS code FROM (
-                   SELECT vec_id, cid, m, j,
-                          row_number() OVER (PARTITION BY vec_id, m
-                                             ORDER BY d2 ASC, j ASC) AS rn
-                   FROM pd2) WHERE rn = 1),
-       qprobe AS (SELECT vec_id AS query_id, cid FROM (
-                    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                                                           ORDER BY d2 ASC, cid ASC) AS rn
-                    FROM cd2 WHERE vec_id < 30) WHERE rn <= 4),
-       qres AS (SELECT q.query_id, q.cid,
-                       list_transform(range(1, 65),
-                           i -> e.embedding[i]::DOUBLE - c.embedding[i]::DOUBLE) AS r
-                FROM qprobe q JOIN embeddings e ON e.vec_id = q.query_id
-                              JOIN cent c ON c.cid = q.cid),
-       qsub AS (SELECT query_id, cid, m, list_transform(range(1, 9), i -> r[m * 8 + i]) AS v
-                FROM qres, ms),
-       dt AS (SELECT q.query_id, q.cid, q.m, s.j,
-                     CAST(floor(list_reduce(list_transform(range(1, 9),
-                         i -> (q.v[i] - s.cw[i]) * (q.v[i] - s.cw[i])),
-                         (a, b) -> a + b) * 1000000 + 0.5) AS BIGINT) AS d_e6
-              FROM qsub q JOIN cw s ON s.m = q.m),
-       adc AS (SELECT t.query_id, c.vec_id, sum(t.d_e6)::BIGINT AS approx_d2_e6
-               FROM codes c JOIN dt t ON t.cid = c.cid AND t.m = c.m AND t.j = c.code
-               GROUP BY 1, 2)
-       SELECT query_id, vec_id, approx_d2_e6, CAST(rn AS BIGINT) AS rank
-       FROM (SELECT query_id, vec_id, approx_d2_e6,
-                    row_number() OVER (PARTITION BY query_id
-                                       ORDER BY approx_d2_e6 ASC, vec_id ASC) AS rn
-             FROM adc)
-       WHERE rn <= 10""",
-)
-def _ivfpq_topk(spark, sf_dir):
-    """IVF-PQ (similarity/pq.py:ivfpq_encode/ivfpq_topk): coarse
-    strided centroids partition the corpus into inverted lists, PQ
-    codes compress the RESIDUALS (x − centroid), and queries ADC-scan
-    only their nprobe nearest cells — the Faiss billion-scale default,
-    with every stage (coarse argmin, residual codes, per-cell integer
-    distance tables, boundary ties) pinned bit-for-bit against the
-    DuckDB oracle."""
-    from redshells_spark.similarity.pq import (
-        _centroid_d2,
-        ivfpq_encode,
-        ivfpq_topk,
-        pq_codebooks,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cent_rows = (
-        emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 800))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    centroids = np.asarray(
-        [[float(x) for x in r["embedding"]] for r in cent_rows], dtype=np.float64
-    )
-    train_rows = (
-        emb.filter((F.col("vec_id") % 37 == 1) & (F.col("vec_id") < 593))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    train = np.asarray(
-        [[float(x) for x in r["embedding"]] for r in train_rows], dtype=np.float64
-    )
-    # PQ codebooks from the TRAINING VECTORS' residuals in their own
-    # coarse cells (numpy left-fold assignment == the oracle's argmin)
-    tcid = np.argmin(_centroid_d2(train, centroids), axis=1)
-    tres = train - centroids[tcid]
-    cbs = pq_codebooks([list(map(float, r)) for r in tres], num_subspaces=8)
-
-    index = ivfpq_encode(emb, centroids, cbs)
-    queries = emb.filter(F.col("vec_id") < 30).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivfpq_topk(queries, index, centroids, cbs, k=10, nprobe=4)
-
-
 @q(
     "audio_header_fields",
     """SELECT doc_id, 'wav' AS format,
@@ -1285,28 +441,6 @@ def _tfidf_normalized(spark, sf_dir):
 
 
 @q(
-    "events_cube",
-    """SELECT coalesce(event_type, 'ALL') AS etype,
-              coalesce(CAST(user_id % 10 AS VARCHAR), 'ALL') AS user_bucket,
-              count(*) AS n
-       FROM events GROUP BY CUBE (event_type, CAST(user_id % 10 AS VARCHAR))""",
-)
-def _events_cube(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "user_bucket", (F.col("user_id") % 10).cast("string")
-    )
-    return (
-        ev.cube("event_type", "user_bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.coalesce("event_type", F.lit("ALL")).alias("etype"),
-            F.coalesce("user_bucket", F.lit("ALL")).alias("user_bucket"),
-            "n",
-        )
-    )
-
-
-@q(
     "tfidf_top_tokens",
     f"""WITH {_VOCAB_SQL}, {_TOK_SQL},
        tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY doc_id, token),
@@ -1366,8 +500,6 @@ def _find_item_keyword(spark, sf_dir):
     top_tokens = top.groupBy("doc_id").agg(F.collect_list("token").alias("tokens"))
     keywords = spark.createDataFrame([(k,) for k in KEYWORDS], "keyword string")
     return keyword_match_join(top_tokens, keywords, "doc_id", "tokens")
-
-
 
 
 @q(
@@ -1880,3 +1012,1112 @@ def _gopher_repetition_battery(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return gopher_repetition_battery(docs)
+
+
+@q("compression_ratio_signals")
+def _compression_ratio_signals(spark, sf_dir):
+    """zlib compression-ratio quality signal (text/compress.py) — the
+    Dolma/RedPajama-v2 'zlib filter': repetitive text compresses far
+    better than prose, binary junk barely at all. One Arrow
+    mapInPandas pass (a legitimate UDF boundary: DEFLATE has no JVM
+    expression), zero shuffles. Rows-only (DuckDB has no DEFLATE) —
+    property-gated in tests/test_compress.py."""
+    from redshells_spark.text.compress import compression_signals
+
+    return compression_signals(_t(spark, sf_dir, "documents"))
+
+
+@q(
+    "keyword_in_context",
+    """WITH tok AS (
+         SELECT doc_id,
+                list_filter(string_split(lower(text), ' '), t -> t <> '') AS toks
+         FROM documents),
+       occ AS (
+         SELECT doc_id, toks, generate_subscripts(toks, 1) - 1 AS pos, unnest(toks) AS token
+         FROM tok)
+       SELECT doc_id, CAST(pos AS BIGINT) AS pos,
+              coalesce(array_to_string(toks[greatest(1, pos - 2) : pos], ' '), '') AS left_ctx,
+              'spark' AS keyword,
+              coalesce(array_to_string(toks[pos + 2 : pos + 4], ' '), '') AS right_ctx
+       FROM occ WHERE token = 'spark'""",
+)
+def _keyword_in_context(spark, sf_dir):
+    """KWIC concordance for 'spark' with a 3-token window each side
+    (text/kwic.py): posexplode carrying the token array, context by
+    F.slice on the same row — no self-join, shuffle-free, output
+    bounded by match count."""
+    from redshells_spark.text.kwic import keyword_in_context
+
+    return keyword_in_context(_tokens(spark, sf_dir), "spark", window=3)
+
+
+# ------------------------------------------------------- fuzzy name match
+
+
+@q(
+    "fuzzy_name_match",
+    """WITH names AS (SELECT DISTINCT p_name AS name FROM part),
+       b AS (SELECT name, string_split(name, ' ')[2] AS block
+             FROM names)
+       SELECT x.block AS block, x.name AS name_a, y.name AS name_b,
+              CAST(levenshtein(x.name, y.name) AS BIGINT) AS lev
+       FROM b x JOIN b y ON x.block = y.block AND x.name < y.name
+       WHERE levenshtein(x.name, y.name) <= 3""",
+)
+def _fuzzy_name_match(spark, sf_dir):
+    """Blocked fuzzy matching over part names (operators/fuzzy.py):
+    dedupe to DISTINCT names first (the step that keeps a billion-row
+    corpus's pairwise work on its million distinct strings), block on
+    the SECOND name token, then JVM-codegen `levenshtein` ≤ 3
+    inside blocks only — the Fellegi-Sunter blocking shape. The
+    block-partitioned self-join shuffles on the blocking key, so cost
+    is Σ block², never corpus²."""
+    from redshells_spark.operators.fuzzy import fuzzy_blocked_matches
+
+    part = _t(spark, sf_dir, "part")
+    return fuzzy_blocked_matches(
+        part,
+        "p_name",
+        "element_at(split(name, ' '), 2)",
+        max_distance=3,
+    )
+
+
+# -------------------------------------------------------- token PMI
+
+
+@q(
+    "token_pmi_topk",
+    f"""WITH {_TOK_SQL},
+       n AS (SELECT CAST(count(*) AS BIGINT) AS n_tok FROM tok),
+       uni AS (SELECT token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
+       prs AS (
+         SELECT a.token AS tok_a, b.token AS tok_b
+         FROM tok a JOIN tok b
+           ON a.doc_id = b.doc_id AND b.pos = a.pos + 1 AND a.token < b.token
+         UNION ALL
+         SELECT b.token, a.token
+         FROM tok a JOIN tok b
+           ON a.doc_id = b.doc_id AND b.pos = a.pos + 1 AND b.token < a.token),
+       co AS (SELECT tok_a, tok_b, CAST(count(*) AS BIGINT) AS c_ab
+              FROM prs GROUP BY 1, 2),
+       scored AS (
+         SELECT co.tok_a, co.tok_b, co.c_ab,
+                round(ln((CAST(co.c_ab AS DOUBLE) * n.n_tok)
+                         / (CAST(ua.c AS DOUBLE) * ub.c)), 6) AS pmi
+         FROM co
+         JOIN uni ua ON ua.token = co.tok_a
+         JOIN uni ub ON ub.token = co.tok_b, n
+         WHERE co.c_ab >= 20)
+       SELECT tok_a, tok_b, c_ab, pmi FROM (
+         SELECT *, row_number() OVER (ORDER BY pmi DESC, tok_a ASC, tok_b ASC) AS rn
+         FROM scored) WHERE rn <= 30""",
+)
+def _token_pmi_topk(spark, sf_dir):
+    """Top-30 adjacent-token associations by pointwise mutual
+    information (Church & Hanks 1990) — collocation mining, the
+    lexical-association companion to association_rules' basket lift.
+    Pairs are ADJACENT positions only (one self-join on (doc, pos+1) —
+    token-volume linear, never doc²), unordered via the lexicographic
+    swap; counts exact int64, PMI one fixed ln expression rounded
+    after; the ranking window runs over the vocab²-bounded pair
+    relation."""
+    toks = _tokens(spark, sf_dir)
+    flat = toks.select(
+        "doc_id", F.posexplode("tokens").alias("pos0", "token")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "token")
+    n = flat.agg(F.count(F.lit(1)).cast("long").alias("n_tok"))
+    uni = flat.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    a = flat.select("doc_id", "pos", F.col("token").alias("ta"))
+    b = flat.select(
+        "doc_id", (F.col("pos") - 1).alias("pos"), F.col("token").alias("tb")
+    )
+    adj = a.join(b, ["doc_id", "pos"]).select(
+        F.least("ta", "tb").alias("tok_a"), F.greatest("ta", "tb").alias("tok_b")
+    ).filter(F.col("tok_a") != F.col("tok_b"))
+    co = adj.groupBy("tok_a", "tok_b").agg(
+        F.count(F.lit(1)).cast("long").alias("c_ab")
+    ).filter(F.col("c_ab") >= 20)
+    scored = (
+        co.join(F.broadcast(uni.select(F.col("token").alias("tok_a"), F.col("c").alias("__ca"))), "tok_a")
+        .join(F.broadcast(uni.select(F.col("token").alias("tok_b"), F.col("c").alias("__cb"))), "tok_b")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "tok_a",
+            "tok_b",
+            "c_ab",
+            F.round(
+                F.log(
+                    (F.col("c_ab").cast("double") * F.col("n_tok"))
+                    / (F.col("__ca").cast("double") * F.col("__cb"))
+                ),
+                6,
+            ).alias("pmi"),
+        )
+    )
+    w = Window.orderBy(F.col("pmi").desc(), F.col("tok_a").asc(), F.col("tok_b").asc())
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 30)
+        .select("tok_a", "tok_b", "c_ab", "pmi")
+    )
+
+
+# ------------------------------------------------- code-switch flags
+
+_CS_LANGS = {
+    "de": ("der", "die", "das", "und", "ist", "nicht", "mit", "ein", "zu", "den"),
+    "en": ("the", "and", "of", "to", "in", "is", "that", "with", "for", "it"),
+    "es": ("el", "los", "las", "es", "no", "una", "por", "con", "para", "del"),
+    "fr": ("le", "la", "les", "et", "est", "pas", "des", "une", "dans", "que"),
+}
+
+
+def _cs_oracle() -> str:
+    def hits(slice_sql: str, lang: str) -> str:
+        lst = ", ".join(f"'{w}'" for w in _CS_LANGS[lang])
+        return f"len(list_filter({slice_sql}, t -> t IN ({lst})))"
+
+    def argmax(prefix: str) -> str:
+        g = f"greatest({prefix}_de, {prefix}_en, {prefix}_es, {prefix}_fr)"
+        return f"""CASE WHEN {g} = 0 THEN 'und'
+                WHEN {prefix}_de = {g} THEN 'de'
+                WHEN {prefix}_en = {g} THEN 'en'
+                WHEN {prefix}_es = {g} THEN 'es'
+                ELSE 'fr' END"""
+
+    h1 = "list_slice(toks, 1, len(toks) // 2)"
+    h2 = "list_slice(toks, len(toks) // 2 + 1, len(toks))"
+    hit_cols = ", ".join(
+        f"{hits(h1, lang)} AS h1_{lang}, {hits(h2, lang)} AS h2_{lang}"
+        for lang in sorted(_CS_LANGS)
+    )
+    return f"""WITH tok AS (
+         SELECT doc_id,
+                list_filter(string_split(lower(text), ' '), t -> t <> '') AS toks
+         FROM documents),
+       h AS (SELECT doc_id, {hit_cols} FROM tok WHERE len(toks) >= 4),
+       l AS (SELECT doc_id, {argmax("h1")} AS lang_h1, {argmax("h2")} AS lang_h2
+             FROM h)
+       SELECT doc_id, lang_h1, lang_h2,
+              CAST(CASE WHEN lang_h1 <> lang_h2 AND lang_h1 <> 'und'
+                         AND lang_h2 <> 'und' THEN 1 ELSE 0 END AS BIGINT)
+                  AS code_switch
+       FROM l"""
+
+
+@q("code_switch_flags", _cs_oracle())
+def _code_switch_flags(spark, sf_dir):
+    """Within-document code-switch detection: language-ID the first
+    and second token halves independently (the same stopword-hit
+    argmax detect_language uses, identical tie rules) and flag docs
+    whose halves disagree with confident labels — the data-cleaning
+    audit that catches concatenation artifacts and mixed-language
+    scrapes which a whole-doc language filter waves through. One
+    map-only pass: slices, filters, and the argmax are all codegen."""
+    toks = _tokens(spark, sf_dir)
+    half1 = F.slice(F.col("tokens"), 1, (F.size("tokens") / 2).cast("int"))
+    half2 = F.slice(
+        F.col("tokens"),
+        (F.size("tokens") / 2).cast("int") + 1,
+        F.size("tokens"),
+    )
+
+    def hits(col, lang):
+        kws = _CS_LANGS[lang]
+        return F.size(F.filter(col, lambda t: t.isin(*kws)))
+
+    h = toks.filter(F.size("tokens") >= 4).select(
+        "doc_id",
+        *[hits(half1, lang).alias(f"h1_{lang}") for lang in sorted(_CS_LANGS)],
+        *[hits(half2, lang).alias(f"h2_{lang}") for lang in sorted(_CS_LANGS)],
+    )
+
+    def argmax(prefix):
+        g = F.greatest(*[F.col(f"{prefix}_{la}") for la in sorted(_CS_LANGS)])
+        expr = F.when(g == 0, "und")
+        for la in sorted(_CS_LANGS):
+            expr = expr.when(F.col(f"{prefix}_{la}") == g, la)
+        return expr
+
+    l = h.select(
+        "doc_id", argmax("h1").alias("lang_h1"), argmax("h2").alias("lang_h2")
+    )
+    return l.select(
+        "doc_id",
+        "lang_h1",
+        "lang_h2",
+        (
+            (F.col("lang_h1") != F.col("lang_h2"))
+            & (F.col("lang_h1") != "und")
+            & (F.col("lang_h2") != "und")
+        )
+        .cast("long")
+        .alias("code_switch"),
+    )
+
+
+# ------------------------------------------------- Heaps' law
+
+
+@q(
+    "heaps_law_fit",
+    f"""WITH {_TOK_SQL},
+       mx AS (SELECT max(doc_id) AS md FROM documents),
+       tb AS (SELECT t.doc_id * 10 // (mx.md + 1) AS bucket, t.token
+              FROM tok t CROSS JOIN mx),
+       cnt AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_tok FROM tb GROUP BY 1),
+       fst AS (SELECT token, CAST(min(bucket) AS BIGINT) AS fb FROM tb GROUP BY 1),
+       vcb AS (SELECT fb AS bucket, CAST(count(*) AS BIGINT) AS n_new
+               FROM fst GROUP BY 1),
+       cum AS (SELECT c.bucket,
+                      CAST(sum(c.n_tok) OVER (ORDER BY c.bucket ASC) AS BIGINT)
+                        AS cum_tokens,
+                      CAST(sum(coalesce(v.n_new, 0)) OVER (ORDER BY c.bucket ASC)
+                        AS BIGINT) AS cum_vocab
+               FROM cnt c LEFT JOIN vcb v USING (bucket)),
+       pt AS (SELECT CAST(count(*) AS BIGINT) AS np,
+                     sum(ln(CAST(cum_tokens AS DOUBLE))) AS sx,
+                     sum(ln(CAST(cum_vocab AS DOUBLE))) AS sy,
+                     sum(ln(CAST(cum_tokens AS DOUBLE))
+                         * ln(CAST(cum_vocab AS DOUBLE))) AS sxy,
+                     sum(ln(CAST(cum_tokens AS DOUBLE))
+                         * ln(CAST(cum_tokens AS DOUBLE))) AS sxx
+              FROM cum)
+       SELECT CAST(cum.bucket AS BIGINT) AS bucket, cum.cum_tokens, cum.cum_vocab,
+              round((CAST(np AS DOUBLE) * sxy - sx * sy)
+                    / (CAST(np AS DOUBLE) * sxx - sx * sx), 6) AS heaps_beta,
+              round(exp((sy - ((CAST(np AS DOUBLE) * sxy - sx * sy)
+                               / (CAST(np AS DOUBLE) * sxx - sx * sx)) * sx)
+                        / CAST(np AS DOUBLE)), 6) AS heaps_k
+       FROM cum CROSS JOIN pt""",
+)
+def _heaps_law_fit(spark, sf_dir):
+    """Heaps'-law fit V(n) = K * n^beta of vocabulary growth: docs are
+    split into 10 ordered doc_id ranges, cumulative token totals and
+    first-occurrence vocabulary counts per range are exact int64, and
+    (beta, K) come from a 10-point log-log OLS — the corpus-growth
+    profile that predicts vocab size (and tokenizer OOV pressure) at
+    1000x the data from a prefix. Token totals and min-first-bucket
+    are map-combinable; the only window runs over the 10-row bucket
+    relation. Companion to vocab_coverage_curve / hill_tail_index."""
+    toks = _tokens(spark, sf_dir)
+    mx = toks.agg(F.max("doc_id").alias("md"))
+    tb = toks.crossJoin(F.broadcast(mx)).select(
+        F.expr("doc_id * 10 div (md + 1)").cast("long").alias("bucket"),
+        F.explode("tokens").alias("token"),
+    )
+    cnt = tb.groupBy("bucket").agg(F.count(F.lit(1)).cast("long").alias("n_tok"))
+    fst = tb.groupBy("token").agg(F.min("bucket").cast("long").alias("fb"))
+    vcb = fst.groupBy(F.col("fb").alias("bucket")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_new")
+    )
+    w = Window.orderBy(F.col("bucket").asc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = (
+        cnt.join(vcb, "bucket", "left")
+        .select("bucket", "n_tok", F.coalesce("n_new", F.lit(0)).alias("n_new"))
+        .select(
+            "bucket",
+            F.sum("n_tok").over(w).cast("long").alias("cum_tokens"),
+            F.sum("n_new").over(w).cast("long").alias("cum_vocab"),
+        )
+    )
+    lx = F.log(F.col("cum_tokens").cast("double"))
+    ly = F.log(F.col("cum_vocab").cast("double"))
+    pt = cum.agg(
+        F.count(F.lit(1)).cast("long").alias("np"),
+        F.sum(lx).alias("sx"),
+        F.sum(ly).alias("sy"),
+        F.sum(lx * ly).alias("sxy"),
+        F.sum(lx * lx).alias("sxx"),
+    )
+    d = lambda c: F.col(c).cast("double")  # noqa: E731
+    beta = (d("np") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
+        d("np") * F.col("sxx") - F.col("sx") * F.col("sx")
+    )
+    return cum.crossJoin(F.broadcast(pt)).select(
+        F.col("bucket").cast("long").alias("bucket"),
+        "cum_tokens",
+        "cum_vocab",
+        F.round(beta, 6).alias("heaps_beta"),
+        F.round(F.exp((F.col("sy") - beta * F.col("sx")) / d("np")), 6).alias(
+            "heaps_k"
+        ),
+    )
+
+
+# ------------------------------------------------- Good-Turing
+
+
+@q(
+    "good_turing_bigrams",
+    f"""WITH {_TOK_SQL},
+       bg AS (SELECT a.token || ' ' || b.token AS gram
+              FROM tok a JOIN tok b
+                ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
+       c AS (SELECT gram, CAST(count(*) AS BIGINT) AS r FROM bg GROUP BY 1),
+       nr AS (SELECT r, CAST(count(*) AS BIGINT) AS n_r FROM c GROUP BY 1),
+       tot AS (SELECT CAST(sum(r * n_r) AS BIGINT) AS n_grams,
+                      CAST(sum(CASE WHEN r = 1 THEN n_r ELSE 0 END) AS BIGINT)
+                        AS n1
+               FROM nr)
+       SELECT CAST(a.r AS BIGINT) AS r, a.n_r,
+              CAST(coalesce(b.n_r, 0) AS BIGINT) AS n_r1,
+              round(CAST(a.r + 1 AS DOUBLE) * CAST(coalesce(b.n_r, 0) AS DOUBLE)
+                    / CAST(a.n_r AS DOUBLE), 6) AS r_star,
+              round(CAST(t.n1 AS DOUBLE) / CAST(t.n_grams AS DOUBLE), 6)
+                AS p_unseen
+       FROM nr a LEFT JOIN nr b ON b.r = a.r + 1 CROSS JOIN tot t
+       WHERE a.r <= 10 ORDER BY a.r""",
+)
+def _good_turing_bigrams(spark, sf_dir):
+    """Good-Turing adjusted counts r* = (r+1)·N_(r+1)/N_r for word
+    bigrams (Good 1953) — the frequency-of-frequencies smoothing table
+    an n-gram LM uses for unseen-mass estimation, with the leave-mass
+    p0 = N_1/N. Bigrams come from one positional self-join (token-
+    volume linear); everything downstream runs on the FREQUENCY-OF-
+    FREQUENCIES level table (bounded by max gram count, a domain not a
+    row count). All counts exact int64; the adjusted count and unseen
+    mass are final one-shot ratios. Companion to kn_perplexity's
+    Kneser-Ney table (text/ngram_lm.py)."""
+    toks = _tokens(spark, sf_dir)
+    flat = toks.select(
+        "doc_id", F.posexplode("tokens").alias("pos0", "token")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "token")
+    a = flat.select("doc_id", "pos", F.col("token").alias("ta"))
+    b = flat.select(
+        "doc_id", (F.col("pos") - 1).alias("pos"), F.col("token").alias("tb")
+    )
+    bg = a.join(b, ["doc_id", "pos"]).select(
+        F.concat(F.col("ta"), F.lit(" "), F.col("tb")).alias("gram")
+    )
+    c = bg.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("r"))
+    nr = c.groupBy("r").agg(F.count(F.lit(1)).cast("long").alias("n_r"))
+    tot = nr.agg(
+        F.sum(F.col("r") * F.col("n_r")).cast("long").alias("n_grams"),
+        F.sum(F.when(F.col("r") == 1, F.col("n_r")).otherwise(0))
+        .cast("long")
+        .alias("n1"),
+    )
+    nxt = nr.select((F.col("r") - 1).alias("r"), F.col("n_r").alias("n_r1"))
+    return (
+        nr.filter(F.col("r") <= 10)
+        .join(nxt, "r", "left")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            F.col("r").cast("long"),
+            "n_r",
+            F.coalesce(F.col("n_r1"), F.lit(0)).cast("long").alias("n_r1"),
+            F.round(
+                (F.col("r") + 1).cast("double")
+                * F.coalesce(F.col("n_r1"), F.lit(0)).cast("double")
+                / F.col("n_r").cast("double"),
+                6,
+            ).alias("r_star"),
+            F.round(
+                F.col("n1").cast("double") / F.col("n_grams").cast("double"), 6
+            ).alias("p_unseen"),
+        )
+    )
+
+
+# ------------------------------------------------- Zipf fit
+
+
+@q(
+    "zipf_law_fit",
+    f"""WITH {_TOK_SQL},
+       c AS (SELECT token, CAST(count(*) AS BIGINT) AS freq FROM tok GROUP BY 1),
+       top AS (SELECT token, freq, rnk FROM (
+                 SELECT token, freq,
+                        row_number() OVER (ORDER BY freq DESC, token ASC) AS rnk
+                 FROM c) WHERE rnk <= 100),
+       qx AS (SELECT CAST(floor(ln(CAST(rnk AS DOUBLE)) * 1000000
+                                + CAST(0.5 AS DOUBLE)) AS BIGINT) AS lx,
+                     CAST(floor(ln(CAST(freq AS DOUBLE)) * 1000000
+                                + CAST(0.5 AS DOUBLE)) AS BIGINT) AS ly
+              FROM top),
+       s AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(lx) AS BIGINT) AS sx,
+                    CAST(sum(ly) AS BIGINT) AS sy,
+                    CAST(sum(lx * lx) AS BIGINT) AS sxx,
+                    CAST(sum(lx * ly) AS BIGINT) AS sxy,
+                    CAST(sum(ly * ly) AS BIGINT) AS syy
+             FROM qx)
+       SELECT n AS n_terms,
+              round(CAST(n * sxy - sx * sy AS DOUBLE)
+                    / CAST(n * sxx - sx * sx AS DOUBLE), 6) AS slope,
+              round((CAST(sy AS DOUBLE)
+                     - CAST(n * sxy - sx * sy AS DOUBLE)
+                       / CAST(n * sxx - sx * sx AS DOUBLE)
+                       * CAST(sx AS DOUBLE))
+                    / CAST(n AS DOUBLE) / CAST(1000000 AS DOUBLE), 6)
+                AS intercept_ln,
+              round(CAST(n * sxy - sx * sy AS DOUBLE)
+                    * CAST(n * sxy - sx * sy AS DOUBLE)
+                    / (CAST(n * sxx - sx * sx AS DOUBLE)
+                       * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS r2
+       FROM s""",
+)
+def _zipf_law_fit(spark, sf_dir):
+    """Zipf rank-frequency fit (Zipf 1949): OLS slope of ln(freq) on
+    ln(rank) over the top-100 vocabulary — the corpus-health power-law
+    readout next to heaps_law_fit and hill_tail_index. The ln values
+    are e6-quantized per term so the OLS moment sums are EXACT int64
+    (the heaps-law idiom); slope/intercept/r2 are final one-shot double
+    ratios of those integers. The ranking window runs over the
+    vocab-bounded count relation, never the token stream."""
+    toks = _tokens(spark, sf_dir)
+    flat = toks.select("doc_id", F.explode("tokens").alias("token"))
+    c = flat.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("freq"))
+    w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
+    top = c.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 100)
+    qx = top.select(
+        F.floor(F.log(F.col("rnk").cast("double")) * F.lit(1000000.0) + F.lit(0.5))
+        .cast("long")
+        .alias("lx"),
+        F.floor(F.log(F.col("freq").cast("double")) * F.lit(1000000.0) + F.lit(0.5))
+        .cast("long")
+        .alias("ly"),
+    )
+    s = qx.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("lx").cast("long").alias("sx"),
+        F.sum("ly").cast("long").alias("sy"),
+        F.sum(F.col("lx") * F.col("lx")).cast("long").alias("sxx"),
+        F.sum(F.col("lx") * F.col("ly")).cast("long").alias("sxy"),
+        F.sum(F.col("ly") * F.col("ly")).cast("long").alias("syy"),
+    )
+    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    deny = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
+    return s.select(
+        F.col("n").alias("n_terms"),
+        F.round(num / den, 6).alias("slope"),
+        F.round(
+            (F.col("sy").cast("double") - num / den * F.col("sx").cast("double"))
+            / F.col("n").cast("double")
+            / F.lit(1000000.0),
+            6,
+        ).alias("intercept_ln"),
+        F.round(num * num / (den * deny), 6).alias("r2"),
+    )
+
+
+# --------------------------------------------- per-source token KL
+
+
+@q(
+    "source_token_kl",
+    f"""WITH {_TOK_SQL},
+       src AS (SELECT d.source, t.token
+               FROM tok t JOIN documents d USING (doc_id)),
+       cs AS (SELECT source, token, CAST(count(*) AS BIGINT) AS c_s
+              FROM src GROUP BY 1, 2),
+       ns AS (SELECT source, CAST(sum(c_s) AS BIGINT) AS n_s
+              FROM cs GROUP BY 1),
+       ct AS (SELECT token, CAST(count(*) AS BIGINT) AS c_t FROM src GROUP BY 1),
+       nt AS (SELECT CAST(sum(c_t) AS BIGINT) AS n_t FROM ct),
+       terms AS (SELECT cs.source,
+                CAST(floor((CAST(cs.c_s AS DOUBLE) / CAST(ns.n_s AS DOUBLE))
+                           * ln((CAST(cs.c_s AS DOUBLE) * CAST(nt.n_t AS DOUBLE))
+                                / (CAST(ns.n_s AS DOUBLE) * CAST(ct.c_t AS DOUBLE)))
+                           * CAST(1000000000 AS DOUBLE)
+                           + CAST(0.5 AS DOUBLE)) AS BIGINT) AS term_e9
+              FROM cs JOIN ns USING (source) JOIN ct USING (token)
+              CROSS JOIN nt)
+       SELECT s.source, n.n_s AS n_tokens,
+              round(CAST(s.kl_e9 AS DOUBLE) / CAST(1000000000 AS DOUBLE), 6)
+                AS kl_divergence
+       FROM (SELECT source, CAST(sum(term_e9) AS BIGINT) AS kl_e9
+             FROM terms GROUP BY 1) s
+       JOIN ns n USING (source)""",
+)
+def _source_token_kl(spark, sf_dir):
+    """Per-source token-distribution drift: KL(p_source || p_corpus)
+    over the unigram vocabulary — the domain-shift readout a data-mix
+    pipeline tracks per source next to psi_value_drift (PSI on values;
+    this is its lexical twin). Each KL term p*ln(p/q) is one double
+    expression over four exact int64 counts, e9-quantized BEFORE the
+    per-source sum (vocab-bounded, <=|V| terms per source); zero-count
+    tokens contribute nothing by construction since terms only exist
+    for observed (source, token) pairs."""
+    toks = _tokens(spark, sf_dir)
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    src = (
+        toks.select("doc_id", F.explode("tokens").alias("token"))
+        .join(docs, "doc_id")
+        .select("source", "token")
+    )
+    # ONE fact aggregation: the (source, token) counts are
+    # vocab x source bounded and the per-source totals, corpus token
+    # counts, and grand total all fold from them — unpinned, ns/ct/nt
+    # each re-ran the token explode + dim join (6 scans at the r8 audit)
+    cs = (
+        src.groupBy("source", "token")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_s"))
+        .localCheckpoint(eager=True)
+    )
+    ns = cs.groupBy("source").agg(F.sum("c_s").cast("long").alias("n_s"))
+    ct = cs.groupBy("token").agg(F.sum("c_s").cast("long").alias("c_t"))
+    nt = ct.agg(F.sum("c_t").cast("long").alias("n_t"))
+    p = F.col("c_s").cast("double") / F.col("n_s").cast("double")
+    ratio = (F.col("c_s").cast("double") * F.col("n_t").cast("double")) / (
+        F.col("n_s").cast("double") * F.col("c_t").cast("double")
+    )
+    terms = (
+        cs.join(F.broadcast(ns), "source")
+        .join(F.broadcast(ct), "token")
+        .crossJoin(F.broadcast(nt))
+        .select(
+            "source",
+            F.floor(p * F.log(ratio) * F.lit(1.0e9) + F.lit(0.5))
+            .cast("long")
+            .alias("term_e9"),
+        )
+    )
+    kl = terms.groupBy("source").agg(F.sum("term_e9").cast("long").alias("kl_e9"))
+    return kl.join(F.broadcast(ns), "source").select(
+        "source",
+        F.col("n_s").alias("n_tokens"),
+        F.round(F.col("kl_e9").cast("double") / F.lit(1.0e9), 6).alias(
+            "kl_divergence"
+        ),
+    )
+
+
+# ------------------------------------------- Chao1 vocabulary richness
+
+
+@q(
+    "chao1_vocab_richness",
+    """WITH tok AS (
+         SELECT lang, unnest(list_filter(string_split(lower(text), ' '),
+                                         t -> t <> '')) AS token
+         FROM documents),
+       tf AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS c
+              FROM tok GROUP BY 1, 2),
+       fof AS (SELECT lang, c, CAST(count(*) AS BIGINT) AS f
+               FROM tf GROUP BY 1, 2),
+       s AS (SELECT lang,
+                    CAST(sum(f) AS BIGINT) AS s_obs,
+                    CAST(sum(CASE WHEN c = 1 THEN f ELSE 0 END) AS BIGINT)
+                      AS f1,
+                    CAST(sum(CASE WHEN c = 2 THEN f ELSE 0 END) AS BIGINT)
+                      AS f2,
+                    CAST(sum(c * f) AS BIGINT) AS n_tokens
+             FROM fof GROUP BY 1)
+       SELECT lang, s_obs, f1, f2, n_tokens,
+              round(CAST(s_obs AS DOUBLE)
+                    + CAST(f1 AS DOUBLE) * CAST(f1 - 1 AS DOUBLE)
+                      / (CAST(2 AS DOUBLE) * CAST(f2 + 1 AS DOUBLE)), 4)
+                AS chao1,
+              round(CAST(1 AS DOUBLE)
+                    - CAST(f1 AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6)
+                AS coverage
+       FROM s ORDER BY lang""",
+)
+def _chao1_vocab_richness(spark, sf_dir):
+    """Chao1 species-richness estimate of the unseen vocabulary per
+    language (Chao 1984, bias-corrected form) plus the Good-Turing
+    coverage estimate 1 - F1/N — the corpus-growth planning readout
+    ("how much vocabulary is this corpus still missing?") that
+    complements heaps_law_fit and good_turing_bigrams. Everything
+    folds through two map-combined groupBys (term frequencies, then
+    frequency-of-frequencies); counts are exact int64 and the Chao1 /
+    coverage formulas are one final fixed IEEE tree per language."""
+    toks = _tokens(spark, sf_dir)
+    tok = toks.select("lang", F.explode("tokens").alias("token"))
+    tf = tok.groupBy("lang", "token").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+    fof = tf.groupBy("lang", "c").agg(F.count(F.lit(1)).cast("long").alias("f"))
+    s = fof.groupBy("lang").agg(
+        F.sum("f").cast("long").alias("s_obs"),
+        F.sum(F.when(F.col("c") == 1, F.col("f")).otherwise(F.lit(0)))
+        .cast("long")
+        .alias("f1"),
+        F.sum(F.when(F.col("c") == 2, F.col("f")).otherwise(F.lit(0)))
+        .cast("long")
+        .alias("f2"),
+        F.sum(F.col("c") * F.col("f")).cast("long").alias("n_tokens"),
+    )
+    return s.select(
+        "lang",
+        "s_obs",
+        "f1",
+        "f2",
+        "n_tokens",
+        F.round(
+            F.col("s_obs").cast("double")
+            + F.col("f1").cast("double")
+            * (F.col("f1") - 1).cast("double")
+            / (F.lit(2.0) * (F.col("f2") + 1).cast("double")),
+            4,
+        ).alias("chao1"),
+        F.round(
+            F.lit(1.0) - F.col("f1").cast("double") / F.col("n_tokens").cast("double"),
+            6,
+        ).alias("coverage"),
+    ).orderBy("lang")
+
+
+# ------------------------------------------------ Yule's K diversity
+
+
+@q(
+    "yule_k_diversity",
+    """WITH tok AS (
+         SELECT lang, unnest(list_filter(string_split(lower(text), ' '),
+                                         t -> t <> '')) AS token
+         FROM documents),
+       tf AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS c
+              FROM tok GROUP BY 1, 2),
+       fof AS (SELECT lang, c, CAST(count(*) AS BIGINT) AS f
+               FROM tf GROUP BY 1, 2),
+       s AS (SELECT lang,
+                    CAST(sum(f) AS BIGINT) AS vocab,
+                    CAST(sum(c * f) AS BIGINT) AS n_tokens,
+                    CAST(sum(c * c * f) AS BIGINT) AS sum_c2
+             FROM fof GROUP BY 1)
+       SELECT lang, n_tokens, vocab,
+              round(CAST(10000 AS DOUBLE)
+                    * CAST(sum_c2 - n_tokens AS DOUBLE)
+                    / (CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE)), 4)
+                AS yule_k
+       FROM s ORDER BY lang""",
+)
+def _yule_k_diversity(spark, sf_dir):
+    """Yule's characteristic K (Yule 1944) per language — the
+    repeat-rate lexical-diversity statistic that, unlike TTR, is
+    length-invariant: K = 10^4 * (sum_f f^2*V_f - N)/N^2, entirely
+    from the frequency-of-frequencies level table (the same relation
+    Chao1 and Good-Turing consume), all sums exact int64 and one
+    final double. High K = repetitive corpus slice — the quality
+    signal used alongside gopher_repetition_battery."""
+    toks = _tokens(spark, sf_dir)
+    tok = toks.select("lang", F.explode("tokens").alias("token"))
+    tf = tok.groupBy("lang", "token").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+    fof = tf.groupBy("lang", "c").agg(F.count(F.lit(1)).cast("long").alias("f"))
+    s = fof.groupBy("lang").agg(
+        F.sum("f").cast("long").alias("vocab"),
+        F.sum(F.col("c") * F.col("f")).cast("long").alias("n_tokens"),
+        F.sum(F.col("c") * F.col("c") * F.col("f")).cast("long").alias("sum_c2"),
+    )
+    nd = F.col("n_tokens").cast("double")
+    return s.select(
+        "lang",
+        "n_tokens",
+        "vocab",
+        F.round(
+            F.lit(10000.0) * (F.col("sum_c2") - F.col("n_tokens")).cast("double")
+            / (nd * nd),
+            4,
+        ).alias("yule_k"),
+    ).orderBy("lang")
+
+
+# ------------------------------------------------ token burstiness
+
+
+@q(
+    "token_burstiness_topk",
+    """WITH tok AS (
+         SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '),
+                                           t -> t <> '')) AS token
+         FROM documents),
+       s AS (SELECT token, CAST(count(*) AS BIGINT) AS tf,
+                    CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+             FROM tok GROUP BY 1)
+       SELECT token, tf, df,
+              CAST(tf * 1000000 // df AS BIGINT) AS burstiness_e6
+       FROM s WHERE df >= 20
+       ORDER BY tf * 1000000 // df DESC, token ASC
+       LIMIT 20""",
+)
+def _token_burstiness_topk(spark, sf_dir):
+    """Token burstiness (Church & Gale 1995): mean occurrences per
+    containing document tf/df, exported as an exact e6 integer
+    division — bursty tokens (high tf/df) concentrate in few documents
+    and are the ones dedup shingles and quality filters should weight;
+    uniform tokens approach 1.0. One map-combined count plus one exact
+    distinct-doc count per token; top-20 among df>=20 tokens with a
+    full tie-break. Dimension-scale output at any corpus size."""
+    toks = _tokens(spark, sf_dir)
+    tok = toks.select("doc_id", F.explode("tokens").alias("token"))
+    s = tok.groupBy("token").agg(
+        F.count(F.lit(1)).cast("long").alias("tf"),
+        F.countDistinct("doc_id").cast("long").alias("df"),
+    )
+    return (
+        s.filter(F.col("df") >= 20)
+        .select(
+            "token",
+            "tf",
+            "df",
+            F.expr("cast(tf * 1000000 div df as long)").alias("burstiness_e6"),
+        )
+        .orderBy(F.col("burstiness_e6").desc(), F.col("token").asc())
+        .limit(20)
+    )
+
+
+# ------------------------------------------ source-pair EMD matrix
+
+
+@q(
+    "doc_length_emd_by_source",
+    """WITH b AS (SELECT source, CAST(n_chars AS BIGINT) AS nc FROM documents),
+       mm AS (SELECT CAST(min(nc) AS BIGINT) AS mn,
+                     CAST(max(nc) AS BIGINT) AS mx FROM b),
+       pt AS (SELECT source,
+                     CAST((b.nc - mm.mn) * 10 // (mm.mx - mm.mn + 1) AS BIGINT)
+                       AS bucket
+              FROM b CROSS JOIN mm),
+       g AS (SELECT DISTINCT bucket FROM pt),
+       ns AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM pt GROUP BY 1),
+       cb AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS c
+              FROM pt GROUP BY 1, 2),
+       grid AS (SELECT ns.source, ns.n, g.bucket,
+                       CAST(coalesce(cb.c, 0) AS BIGINT) AS c
+                FROM ns CROSS JOIN g
+                LEFT JOIN cb ON cb.source = ns.source AND cb.bucket = g.bucket),
+       cum AS (SELECT source, n, bucket,
+                      CAST(sum(c) OVER (PARTITION BY source ORDER BY bucket ASC
+                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+               FROM grid),
+       pr AS (SELECT a.source AS source_a, b2.source AS source_b,
+                     a.n AS na, b2.n AS nb,
+                     CAST(sum(abs(a.cum * b2.n - b2.cum * a.n)) AS BIGINT)
+                       AS num
+              FROM cum a JOIN cum b2
+                ON a.bucket = b2.bucket AND a.source < b2.source
+              GROUP BY 1, 2, 3, 4)
+       SELECT source_a, source_b, na, nb,
+              CAST(num * 1000000 // (na * nb * 9) AS BIGINT) AS emd_e6
+       FROM pr ORDER BY source_a, source_b""",
+)
+def _doc_length_emd_by_source(spark, sf_dir):
+    """Pairwise 1-D earth-mover distance between every source pair's
+    document-length distributions over 10 global equal-width buckets —
+    the corpus-mix drift matrix a training-data pipeline checks when a
+    new crawl snapshot lands (which sources stopped looking alike?).
+    Per-source decile cumsums are partitioned windows over a complete
+    source x 10-bucket grid; each pair's EMD numerator is an exact
+    int64 fold and the normalized distance an exact e6 integer
+    division. Sources are domain-bounded (20 -> 190 pairs); fact-scale
+    work is one map-combined groupBy of the documents scan."""
+    d = _t(spark, sf_dir, "documents").select(
+        "source", F.col("n_chars").cast("long").alias("nc")
+    )
+    mm = d.agg(
+        F.min("nc").cast("long").alias("mn"), F.max("nc").cast("long").alias("mx")
+    )
+    pt = d.crossJoin(F.broadcast(mm)).select(
+        "source",
+        F.expr("cast((nc - mn) * 10 div (mx - mn + 1) as long)").alias("bucket"),
+    )
+    # ONE fact aggregation: the (source, bucket) contingency is
+    # domain-bounded (sources x 10) and both the bucket domain and the
+    # per-source totals derive from it — unpinned, g/ns/cb each re-ran
+    # the documents scan + min-max probe (12 scans at the r8 audit)
+    cb = (
+        pt.groupBy("source", "bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .localCheckpoint(eager=True)
+    )
+    g = cb.select("bucket").distinct()
+    ns = cb.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
+    grid = (
+        ns.crossJoin(F.broadcast(g))
+        .join(cb, ["source", "bucket"], "left")
+        .select(
+            "source",
+            "n",
+            "bucket",
+            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("c"),
+        )
+    )
+    wc = Window.partitionBy("source").orderBy(F.col("bucket").asc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    cum = grid.select(
+        "source", "n", "bucket", F.sum("c").over(wc).cast("long").alias("cum")
+    )
+    a = cum.select(
+        F.col("source").alias("source_a"),
+        F.col("n").alias("na"),
+        "bucket",
+        F.col("cum").alias("cuma"),
+    )
+    b2 = cum.select(
+        F.col("source").alias("source_b"),
+        F.col("n").alias("nb"),
+        "bucket",
+        F.col("cum").alias("cumb"),
+    )
+    pr = (
+        a.join(b2, "bucket")
+        .filter(F.col("source_a") < F.col("source_b"))
+        .groupBy("source_a", "source_b", "na", "nb")
+        .agg(
+            F.sum(F.abs(F.col("cuma") * F.col("nb") - F.col("cumb") * F.col("na")))
+            .cast("long")
+            .alias("num")
+        )
+    )
+    return pr.select(
+        "source_a",
+        "source_b",
+        "na",
+        "nb",
+        F.expr("cast(num * 1000000 div (na * nb * 9) as long)").alias("emd_e6"),
+    ).orderBy("source_a", "source_b")
+
+
+# ------------------------------------------------ tokenizer OOV rate
+
+
+@q(
+    "vocab_oov_rate",
+    f"""WITH {_VOCAB_SQL},
+       tok AS (SELECT lang, unnest(list_filter(string_split(lower(text), ' '),
+                                               t -> t <> '')) AS token
+               FROM documents),
+       j AS (SELECT tok.lang, tok.token,
+                    CASE WHEN vocab.token IS NULL THEN 1 ELSE 0 END AS oov
+             FROM tok LEFT JOIN vocab ON vocab.token = tok.token)
+       SELECT lang, CAST(count(*) AS BIGINT) AS n_tokens,
+              CAST(sum(oov) AS BIGINT) AS oov_tokens,
+              CAST(sum(oov) * 1000000 // count(*) AS BIGINT) AS oov_rate_e6,
+              CAST(count(DISTINCT CASE WHEN oov = 1 THEN token END) AS BIGINT)
+                AS oov_types
+       FROM j GROUP BY 1 ORDER BY lang""",
+)
+def _vocab_oov_rate(spark, sf_dir):
+    """Out-of-vocabulary rate per language against the trained
+    dictionary (the same 100-token vocab the tfidf family ships) —
+    the tokenizer-coverage readout that decides whether a vocab needs
+    retraining when corpus mix shifts. The vocab is a <=100-row
+    broadcast; the per-language token/OOV counts are one map-combined
+    groupBy plus one exact distinct count of OOV types. Rates are
+    exact e6 integer divisions."""
+    toks = _tokens(spark, sf_dir)
+    tok = toks.select("lang", F.explode("tokens").alias("token"))
+    v = _vocab(spark, sf_dir).select("token", F.lit(1).alias("in_v"))
+    j = tok.join(F.broadcast(v), "token", "left").select(
+        "lang",
+        "token",
+        F.when(F.col("in_v").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("oov"),
+    )
+    return (
+        j.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_tokens"),
+            F.sum("oov").cast("long").alias("oov_tokens"),
+            F.expr("cast(sum(oov) * 1000000 div count(1) as long)").alias(
+                "oov_rate_e6"
+            ),
+            F.countDistinct(F.when(F.col("oov") == 1, F.col("token")))
+            .cast("long")
+            .alias("oov_types"),
+        )
+        .orderBy("lang")
+    )
+
+
+# ------------------------------------------ bigram entropy rate
+
+
+@q(
+    "bigram_entropy_rate",
+    """WITH tok AS (
+         SELECT doc_id, lang,
+                list_filter(string_split(lower(text), ' '), t -> t <> '') AS toks
+         FROM documents),
+       t2 AS (SELECT doc_id, lang, unnest(toks) AS token,
+                     generate_subscripts(toks, 1) AS pos
+              FROM tok),
+       bg AS (SELECT lang,
+                     token || '|' || lead(token) OVER (
+                       PARTITION BY doc_id ORDER BY pos ASC) AS gram,
+                     token AS head
+              FROM t2 QUALIFY gram IS NOT NULL),
+       cb AS (SELECT lang, gram, head, CAST(count(*) AS BIGINT) AS c
+              FROM bg GROUP BY 1, 2, 3),
+       ch AS (SELECT lang, head, CAST(sum(c) AS BIGINT) AS ch
+              FROM cb GROUP BY 1, 2),
+       nn AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n FROM cb GROUP BY 1),
+       tm AS (SELECT cb.lang,
+                     CAST(floor(-(CAST(cb.c AS DOUBLE) / CAST(nn.n AS DOUBLE))
+                          * ln(CAST(cb.c AS DOUBLE) / CAST(ch.ch AS DOUBLE))
+                          * CAST(1000000000 AS DOUBLE)
+                          + CAST(0.5 AS DOUBLE)) AS BIGINT) AS t_e9
+              FROM cb
+              JOIN ch ON ch.lang = cb.lang AND ch.head = cb.head
+              JOIN nn ON nn.lang = cb.lang)
+       SELECT tm.lang, nn.n AS n_bigrams,
+              round(CAST(sum(tm.t_e9) AS DOUBLE)
+                    / CAST(1000000000 AS DOUBLE), 6) AS h_cond,
+              round(exp(CAST(sum(tm.t_e9) AS DOUBLE)
+                        / CAST(1000000000 AS DOUBLE)), 4) AS perplexity
+       FROM tm JOIN nn ON nn.lang = tm.lang
+       GROUP BY 1, 2 ORDER BY tm.lang""",
+)
+def _bigram_entropy_rate(spark, sf_dir):
+    """Conditional bigram entropy rate H(next|current) per language —
+    the corpus predictability statistic behind perplexity-based
+    quality filters (low-entropy slices are boilerplate; high-entropy
+    ones are noise), computed as -sum p(xy) ln p(y|x) with each term
+    e9-quantized over exact bigram/head counts before the
+    vocabulary-bounded sum; the per-language perplexity exp(H) is the
+    single final double. Complements token_pmi_topk (which ranks
+    individual bigrams) with the corpus-level rate."""
+    toks = _tokens(spark, sf_dir)
+    t2 = toks.select(
+        "doc_id", "lang", F.posexplode("tokens").alias("pos", "token")
+    )
+    wl = Window.partitionBy("doc_id").orderBy(F.col("pos").asc())
+    bg = t2.select(
+        "lang",
+        F.concat(F.col("token"), F.lit("|"), F.lead("token").over(wl)).alias(
+            "gram"
+        ),
+        F.col("token").alias("head"),
+    ).filter(F.col("gram").isNotNull())
+    cb = bg.groupBy("lang", "gram", "head").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+    ch = cb.groupBy("lang", "head").agg(F.sum("c").cast("long").alias("ch"))
+    nn = cb.groupBy("lang").agg(F.sum("c").cast("long").alias("n"))
+    tm = (
+        cb.join(ch, ["lang", "head"])
+        .join(F.broadcast(nn), "lang")
+        .select(
+            "lang",
+            F.floor(
+                -(F.col("c").cast("double") / F.col("n").cast("double"))
+                * F.log(F.col("c").cast("double") / F.col("ch").cast("double"))
+                * F.lit(1000000000.0)
+                + F.lit(0.5)
+            )
+            .cast("long")
+            .alias("t_e9"),
+        )
+    )
+    h = tm.groupBy("lang").agg(F.sum("t_e9").cast("long").alias("h_e9"))
+    return (
+        h.join(F.broadcast(nn), "lang")
+        .select(
+            "lang",
+            F.col("n").alias("n_bigrams"),
+            F.round(F.col("h_e9").cast("double") / F.lit(1000000000.0), 6).alias(
+                "h_cond"
+            ),
+            F.round(
+                F.exp(F.col("h_e9").cast("double") / F.lit(1000000000.0)), 4
+            ).alias("perplexity"),
+        )
+        .orderBy("lang")
+    )
+
+
+# --------------------------------------------------- TextRank keywords
+
+
+def _textrank_oracle_sql(iterations: int = 3) -> str:
+    base = "((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn))"
+    steps = []
+    prev = "r0"
+    for i in range(1, iterations + 1):
+        steps.append(
+            f"""rk{i} AS (SELECT e.dst AS node,
+                     round({base} + CAST(0.85 AS DOUBLE) * sum(p.r / d.deg), 10) AS r
+              FROM edges e JOIN {prev} p ON p.node = e.src JOIN deg d ON d.src = e.src
+              GROUP BY e.dst)"""
+        )
+        prev = f"rk{i}"
+    joined = ",\n       ".join(steps)
+    return f"""WITH {_VOCAB_SQL}, {_TOK_SQL},
+       vt AS (SELECT t.doc_id, t.pos, t.token
+              FROM tok t JOIN vocab v ON v.token = t.token),
+       e0 AS (SELECT DISTINCT a.token AS src, b.token AS dst
+              FROM vt a JOIN vt b
+                ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
+              WHERE a.token <> b.token),
+       edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+       deg AS (SELECT src, count(*)::DOUBLE AS deg FROM edges GROUP BY 1),
+       nn AS (SELECT count(DISTINCT src)::DOUBLE AS n FROM edges),
+       r0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS r
+              FROM (SELECT DISTINCT src FROM edges)),
+       {joined}
+       SELECT node AS token, r AS score,
+              CAST(row_number() OVER (ORDER BY r DESC, node ASC) AS BIGINT)
+                AS rank
+       FROM {prev}
+       QUALIFY row_number() OVER (ORDER BY r DESC, node ASC) <= 20"""
+
+
+@q("textrank_keywords", _textrank_oracle_sql(3))
+def _textrank_keywords(spark, sf_dir):
+    """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank
+    over the undirected co-occurrence graph of ADJACENT vocab tokens —
+    the graph-text bridge that ranks tokens by centrality instead of
+    frequency (tfidf_top_tokens' counterpart). The graph is
+    vocabulary-bounded (≤ keep_n nodes regardless of corpus size), so
+    the 3 power steps are a dimension-table iteration; the fact-scale
+    work is the one adjacency scan the shingle pipeline already
+    shapes. Same round-10 iterate and deg/teleport algebra as
+    pagerank_copurchase; top-20 by (score desc, token asc)."""
+    from redshells_spark.operators.graph import pagerank
+
+    toks = _tokens(spark, sf_dir)
+    vocab = _vocab(spark, sf_dir)
+    # the vocabulary is keep_n-bounded — collect it once (codebook-
+    # sized) and extract adjacency IN-ROW from the cached token
+    # arrays: zip each token with its successor, keep pairs whose two
+    # endpoints are both in vocab. Replaces the posexplode +
+    # (doc, pos) self-join — two fact-scale exchanges — with a single
+    # explode straight off the cache; adjacency stays defined on the
+    # ORIGINAL token positions exactly as the join formulation had it.
+    vset = sorted(r["token"] for r in vocab.select("token").collect())
+    vlit = F.array(*[F.lit(t) for t in vset])
+    ln = F.greatest(F.size("tokens") - 1, F.lit(0))
+    zz = F.zip_with(
+        F.slice(F.col("tokens"), 1, ln),
+        F.slice(F.col("tokens"), 2, ln),
+        lambda x, y: F.struct(x.alias("src"), y.alias("dst")),
+    )
+    e0 = (
+        toks.select(F.explode(zz).alias("p"))
+        .select("p.src", "p.dst")
+        .filter(
+            (F.col("src") != F.col("dst"))
+            & F.array_contains(vlit, F.col("src"))
+            & F.array_contains(vlit, F.col("dst"))
+        )
+        .distinct()
+    )
+    edges = e0.unionByName(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+    pr = pagerank(
+        edges,
+        iterations=3,
+        damping=0.85,
+        assume_no_dangling=True,  # symmetrized: every node has out-degree
+    )
+    wr = Window.orderBy(F.col("rank").desc(), F.col("node").asc())
+    return (
+        pr.select(
+            F.col("node").alias("token"),
+            F.col("rank").alias("score"),
+            F.row_number().over(wr).cast("long").alias("rank"),
+        )
+        .filter(F.col("rank") <= 20)
+        .orderBy("rank")
+    )

@@ -1,8 +1,4 @@
 """TPC-H shape completion (Q2-Q22 analogues).
-
-Split from the former single-file queries.py (round 4); registration
-order within and across tier modules is preserved by the package
-__init__ import order and pinned by tests/test_ann_recall.py.
 """
 
 from redshells_spark.queries._shared import *  # noqa: F401,F403
@@ -692,3 +688,76 @@ def _click_attribution(spark, sf_dir):
     )
 
 
+@q(
+    "market_share_asia",
+    """WITH rev AS (
+         SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+                n2.n_name AS supp_nation,
+                CAST(floor(l_extendedprice * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT)
+                  * (100 - CAST(floor(l_discount * 100 + CAST(0.5 AS DOUBLE)) AS BIGINT))
+                  AS vol_e4
+         FROM lineitem
+         JOIN orders   ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN nation n1 ON c_nationkey = n1.n_nationkey
+         JOIN region   ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
+         JOIN supplier ON l_suppkey = s_suppkey
+         JOIN nation n2 ON s_nationkey = n2.n_nationkey
+         JOIN part     ON l_partkey = p_partkey AND p_size <= 10)
+       SELECT o_year, supp_nation,
+              CAST(CAST((sum(vol_e4) + 50) // 100 AS BIGINT) AS DOUBLE) / 100
+                AS nation_volume,
+              count(*) AS n_lines
+       FROM rev GROUP BY o_year, supp_nation""",
+)
+def _market_share_asia(spark, sf_dir):
+    """TPC-H Q8-shaped market share: 7-table star join (fact +
+    customer-side nation/region, supplier-side nation, part filter).
+    Spark-first: every dimension is explicitly broadcast, so the plan
+    is a chain of BroadcastHashJoins over ONE fact scan — zero fact
+    shuffles until the final aggregate; Catalyst reorders/prunes the
+    rest. Revenue carries EXACT integer e4 units (2-decimal price ×
+    2-decimal discount) summed as longs — the factor-10 probe caught
+    the float-sum version crossing cent-rounding boundaries at 10×
+    term counts; integer cents are order-free at any scale."""
+    li = _t(spark, sf_dir, "lineitem")
+    o = _t(spark, sf_dir, "orders")
+    c = _t(spark, sf_dir, "customer")
+    n = _t(spark, sf_dir, "nation")
+    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    s = _t(spark, sf_dir, "supplier")
+    p = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 10)
+    n1 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk"))
+    n2 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
+    rev = (
+        li.join(F.broadcast(p.select("p_partkey")), li["l_partkey"] == F.col("p_partkey"))
+        .join(o.select("o_orderkey", "o_custkey", "o_orderdate"), li["l_orderkey"] == F.col("o_orderkey"))
+        .join(F.broadcast(c.select("c_custkey", "c_nationkey")), F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("c_nk"))
+        .join(F.broadcast(r.select("r_regionkey")), F.col("c_rk") == F.col("r_regionkey"))
+        .join(F.broadcast(s.select("s_suppkey", "s_nationkey")), li["l_suppkey"] == F.col("s_suppkey"))
+        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nk"))
+        .select(
+            F.year("o_orderdate").cast("long").alias("o_year"),
+            "supp_nation",
+            (
+                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+                * (
+                    F.lit(100)
+                    - F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")
+                )
+            ).alias("vol_e4"),
+        )
+    )
+    return (
+        rev.groupBy("o_year", "supp_nation")
+        .agg(F.sum("vol_e4").alias("__s"), F.count(F.lit(1)).alias("n_lines"))
+        .select(
+            "o_year",
+            "supp_nation",
+            (F.expr("(__s + 50) div 100").cast("double") / 100).alias(
+                "nation_volume"
+            ),
+            "n_lines",
+        )
+    )

@@ -15,7 +15,7 @@ over k distances per point, a TakeOrdered argmax. k bounded rounds,
 O(k·N) total — linear in the corpus, the property that matters at
 100 TB. Deterministic: md5-min seed, squared-L2 distances (one fixed
 IEEE tree), (distance, id) total-order argmax — so the loop unrolls
-into exact SQL stages (queries/r6c_ops.py oracle).
+into exact SQL stages (queries/similarity.py oracle).
 """
 
 from __future__ import annotations

@@ -144,40 +144,6 @@ def test_ivf_seed_centroids_deterministic_order(spark, sf_dir):
     assert a[:4] == c4
 
 
-def test_registry_front_window(spark):
-    from redshells_spark.queries import _FRONT, ORACLES, QUERIES, get_oracles, get_queries
-
-    qs, os_ = get_queries(), get_oracles()
-    # _FRONT may re-list a name across round sections (a changed query
-    # fronted again in a later window); dict ordering keeps the FIRST
-    # occurrence, so the pin compares against the deduped list
-    front = list(dict.fromkeys(_FRONT))
-    assert list(qs)[: len(front)] == front
-    assert set(qs) == set(QUERIES) and set(os_) == set(ORACLES)
-    # the driver's 50-entry window is exactly the head of _FRONT —
-    # newest registrations first (older _FRONT entries may age out of
-    # the window once it has been full; they stay verified by the
-    # full-registry differential)
-    assert list(qs)[:50] == front[:50]
-
-
-def test_registry_order_pinned_across_split():
-    # the queries.py -> queries/ package split (round 4) must preserve
-    # the exact registration order: the driver's CORRECTNESS gate reads
-    # the first 50 entries of get_queries(). Pinned from the pre-split
-    # single file.
-    import json
-    import os
-
-    from redshells_spark.queries import get_oracles, get_queries
-
-    want = json.load(
-        open(os.path.join(os.path.dirname(__file__), "registry_order.json"))
-    )
-    assert list(get_queries()) == want["queries"]
-    assert list(get_oracles()) == want["oracles"]
-
-
 def test_sqrt_centroid_rule_scales_with_corpus(spark):
     """VERDICT r5 task: centroid count derives from N as max(16, ceil
     sqrt N) when the caller passes none — a 100x-larger corpus gets

@@ -359,7 +359,7 @@ def test_rbo_suffix_weights_identity():
     """Identical top-10 rankings must score RBO@10 = (1-p) * sum
     p^(d-1) = 1 - p^10 (up to the documented nano-unit weight
     quantization)."""
-    from redshells_spark.queries.r5d_ops import _rbo_suffix_weights
+    from redshells_spark.queries.llm_eval import _rbo_suffix_weights
 
     ws = _rbo_suffix_weights(p=0.9, k=10, lcm=2520)
     # identical lists: the doc at rank r has m = r

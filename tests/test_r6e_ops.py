@@ -77,11 +77,10 @@ def test_rank_normalize_bounds_and_order(spark):
 
 def test_code_switch_detects_mixed_doc(spark):
     from pyspark.sql import functions as F
-    from redshells_spark.queries.r6e_ops import _CS_LANGS  # noqa: F401
+    from redshells_spark.queries.text import _CS_LANGS
 
     # hand-built: English first half, German second half → flagged;
     # all-English doc → not flagged
-    import redshells_spark.queries.r6e_ops as m
 
     mixed = "the cat is in the house " * 3 + "der hund ist nicht mit und " * 3
     pure = "the cat is in the house and it is the best " * 3
@@ -95,18 +94,18 @@ def test_code_switch_detects_mixed_doc(spark):
     half2 = F.slice(F.col("tokens"), (F.size("tokens") / 2).cast("int") + 1, F.size("tokens"))
 
     def hits(col, lang):
-        return F.size(F.filter(col, lambda t: t.isin(*m._CS_LANGS[lang])))
+        return F.size(F.filter(col, lambda t: t.isin(*_CS_LANGS[lang])))
 
     h = df.select(
         "doc_id",
-        *[hits(half1, la).alias(f"h1_{la}") for la in sorted(m._CS_LANGS)],
-        *[hits(half2, la).alias(f"h2_{la}") for la in sorted(m._CS_LANGS)],
+        *[hits(half1, la).alias(f"h1_{la}") for la in sorted(_CS_LANGS)],
+        *[hits(half2, la).alias(f"h2_{la}") for la in sorted(_CS_LANGS)],
     )
 
     def argmax(prefix):
-        g = F.greatest(*[F.col(f"{prefix}_{la}") for la in sorted(m._CS_LANGS)])
+        g = F.greatest(*[F.col(f"{prefix}_{la}") for la in sorted(_CS_LANGS)])
         e = F.when(g == 0, "und")
-        for la in sorted(m._CS_LANGS):
+        for la in sorted(_CS_LANGS):
             e = e.when(F.col(f"{prefix}_{la}") == g, la)
         return e
 

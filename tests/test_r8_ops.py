@@ -13,6 +13,8 @@ from itertools import combinations
 import pytest
 from pyspark.sql import functions as F
 
+from redshells_spark.queries import QUERIES
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -159,18 +161,14 @@ def test_containment_bitmask_equals_array_path(spark):
 
 
 def test_count_min_never_underestimates(spark):
-    from redshells_spark.queries.r8_ops import _count_min_error_report
-
-    out = _count_min_error_report(spark, SF).collect()
+    out = QUERIES["count_min_error_report"](spark, SF).collect()
     assert 0 < len(out) <= 20
     assert all(r["overcount"] >= 0 for r in out)
     assert all(r["est"] >= r["exact_df"] for r in out)
 
 
 def test_bloom_no_false_negatives_and_counts(spark):
-    from redshells_spark.queries.r8_ops import _bloom_filter_fpr_audit
-
-    r = _bloom_filter_fpr_audit(spark, SF).collect()[0]
+    r = QUERIES["bloom_filter_fpr_audit"](spark, SF).collect()[0]
     # every member must hit: fp counted only among negatives, and
     # n_fp <= n_neg; build keys are a subset of probes here
     assert r["n_probe"] >= r["n_neg"] >= r["n_fp"] >= 0
@@ -182,9 +180,7 @@ def test_bloom_no_false_negatives_and_counts(spark):
 
 
 def test_stratified_allocation_sums_to_n(spark):
-    from redshells_spark.queries.r8_ops import _stratified_sample_exact
-
-    out = _stratified_sample_exact(spark, SF).collect()
+    out = QUERIES["stratified_sample_exact"](spark, SF).collect()
     assert sum(r["alloc"] for r in out) == 500
     assert all(r["alloc"] <= r["n_pop"] or r["key_checksum"] >= 0 for r in out)
     # allocation is proportional within 1 of the exact quota
@@ -198,9 +194,7 @@ def test_stratified_allocation_sums_to_n(spark):
 
 
 def test_theta_forecast_hand_recurrence(spark):
-    from redshells_spark.queries.r8b_ops import _theta_forecast
-
-    out = _theta_forecast(spark, SF).orderBy("t").collect()
+    out = QUERIES["theta_forecast"](spark, SF).orderBy("t").collect()
     if len(out) < 2:
         pytest.skip("degenerate corpus")
     ts = [r["t"] for r in out]
@@ -232,8 +226,6 @@ def test_theta_forecast_hand_recurrence(spark):
 def test_pr_auc_hand_value(spark):
     # scores: pos at 3,2 / neg at 2,1 → levels desc: 3 (tp1,fp0 P=1),
     # 2 (tp2,fp1 P=2/3), 1 (tp2,fp2) → AP = (1/2)*1 + (1/2)*(2/3) = 5/6
-    import redshells_spark.queries.r8b_ops  # noqa: F401 — registers the query
-
     rows = [(3.0, 1), (2.0, 1), (2.0, 0), (1.0, 0)]
     ev = spark.createDataFrame(rows, "score double, pos int")
     lvl = ev.groupBy(
@@ -258,9 +250,7 @@ def test_pr_auc_hand_value(spark):
     ap_e9 = terms.agg(F.sum("t")).collect()[0][0]
     assert ap_e9 == 500000000 + 333333333  # floor terms of 1/2 and 1/3
 
-    out = __import__(
-        "redshells_spark.queries.r8b_ops", fromlist=["_pr_auc_exact"]
-    )._pr_auc_exact(spark, SF).collect()[0]
+    out = QUERIES["pr_auc_exact"](spark, SF).collect()[0]
     assert 0 <= out["ap"] <= 1 and out["n_levels"] > 0
 
 
@@ -296,7 +286,7 @@ def test_k_core_multi_round_cascade_matches_unrolled(spark):
         edges += [(f"n{i}", f"n{i+1}"), (f"n{i+1}", f"n{i}")]
     e = spark.createDataFrame(edges, "src string, dst string")
 
-    from redshells_spark.queries.r8b_ops import _k_core_rounds_table
+    from redshells_spark.queries.graph import _k_core_rounds_table
 
     got = {
         r["round"]: (r["n_nodes"], r["n_edges2"])
@@ -321,9 +311,7 @@ def test_k_core_multi_round_cascade_matches_unrolled(spark):
 
 
 def test_k_core_rounds_converge_on_testdata(spark):
-    from redshells_spark.queries.r8b_ops import _k_core_peel_rounds
-
-    out = {r["round"]: (r["n_nodes"], r["n_edges2"]) for r in _k_core_peel_rounds(spark, SF).collect()}
+    out = {r["round"]: (r["n_nodes"], r["n_edges2"]) for r in QUERIES["k_core_peel_rounds"](spark, SF).collect()}
     assert len(out) == 6
     # documented fixpoint gate: the last two rounds agree
     assert out[5] == out[6]
@@ -360,9 +348,7 @@ def test_rich_club_hand_graph(spark):
 
 
 def test_rich_club_query_monotone_nodes(spark):
-    from redshells_spark.queries.r8b_ops import _rich_club_coefficient
-
-    out = _rich_club_coefficient(spark, SF).orderBy("k").collect()
+    out = QUERIES["rich_club_coefficient"](spark, SF).orderBy("k").collect()
     for p, c in zip(out, out[1:]):
         assert p["n_nodes"] >= c["n_nodes"]
     for r in out:

@@ -10,6 +10,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from redshells_spark.queries import QUERIES
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -17,9 +19,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_kruskal_wallis_invariants(spark):
-    from redshells_spark.queries.r8c_ops import _kruskal_wallis_order_totals
-
-    row = _kruskal_wallis_order_totals(spark, SF).collect()[0]
+    row = QUERIES["kruskal_wallis_order_totals"](spark, SF).collect()[0]
     n_orders = spark.read.parquet(f"{SF}/orders.parquet").count()
     assert row["n"] == n_orders
     assert row["h"] >= 0.0
@@ -54,9 +54,7 @@ def test_kruskal_wallis_matches_textbook_no_ties(spark):
 
 
 def test_herfindahl_bounds(spark):
-    from redshells_spark.queries.r8c_ops import _herfindahl_concentration
-
-    out = _herfindahl_concentration(spark, SF).collect()
+    out = QUERIES["herfindahl_concentration"](spark, SF).collect()
     assert len(out) > 0
     for r in out:
         assert 0 < r["hhi_e6"] <= 1_000_000
@@ -78,9 +76,7 @@ def test_herfindahl_monopoly_is_one(spark):
 
 
 def test_pettitt_invariants(spark):
-    from redshells_spark.queries.r8c_ops import _pettitt_changepoint_daily
-
-    row = _pettitt_changepoint_daily(spark, SF).collect()[0]
+    row = QUERIES["pettitt_changepoint_daily"](spark, SF).collect()[0]
     assert row["k_stat"] >= 0
     assert 0.0 <= row["p_approx"] <= 2.0  # the 2exp() form can exceed 1
     assert row["reject_005"] == (1 if row["p_approx"] < 0.05 else 0)
@@ -103,9 +99,7 @@ def test_pettitt_hand_shift_series():
 
 
 def test_ohlc_ordering(spark):
-    from redshells_spark.queries.r8c_ops import _ohlc_daily_value
-
-    out = _ohlc_daily_value(spark, SF).collect()
+    out = QUERIES["ohlc_daily_value"](spark, SF).collect()
     assert len(out) > 0
     for r in out:
         assert r["low_c"] <= r["open_c"] <= r["high_c"]
@@ -117,9 +111,7 @@ def test_ohlc_ordering(spark):
 
 
 def test_croston_levels_convex(spark):
-    from redshells_spark.queries.r8c_ops import _croston_intermittent
-
-    out = _croston_intermittent(spark, SF).orderBy("k").collect()
+    out = QUERIES["croston_intermittent"](spark, SF).orderBy("k").collect()
     if not out:  # degenerate corpus: no cohort purchases
         return
     vs = [r["v"] for r in out]

@@ -10,6 +10,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from redshells_spark.queries import QUERIES
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -17,7 +19,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_harmonic_table_is_exact_unit_circle():
-    from redshells_spark.queries.r8d_ops import _HARMONICS
+    from redshells_spark.queries.forecasting import _HARMONICS
 
     assert len(_HARMONICS) == 21
     for k, m, c, s in _HARMONICS:
@@ -30,7 +32,7 @@ def test_harmonic_table_is_exact_unit_circle():
 def test_periodogram_constant_series_zero_power():
     # a constant series has zero power at every nonzero harmonic:
     # sum of cos/sin over a full period is 0 (e9 ints sum to ~0)
-    from redshells_spark.queries.r8d_ops import _HARMONICS
+    from redshells_spark.queries.forecasting import _HARMONICS
 
     for k in (1, 2, 3):
         cs = sum(c for kk, m, c, s in _HARMONICS if kk == k)
@@ -39,9 +41,7 @@ def test_periodogram_constant_series_zero_power():
 
 
 def test_periodogram_query_shape(spark):
-    from redshells_spark.queries.r8d_ops import _periodogram_weekly
-
-    out = _periodogram_weekly(spark, SF).collect()
+    out = QUERIES["periodogram_weekly"](spark, SF).collect()
     assert [r["k"] for r in out] == [1, 2, 3]
     for r in out:
         assert r["power"] >= 0.0
@@ -51,9 +51,7 @@ def test_periodogram_query_shape(spark):
 
 
 def test_textrank_scores_positive_and_ranked(spark):
-    from redshells_spark.queries.r8d_ops import _textrank_keywords
-
-    out = _textrank_keywords(spark, SF).orderBy("rank").collect()
+    out = QUERIES["textrank_keywords"](spark, SF).orderBy("rank").collect()
     assert 0 < len(out) <= 20
     scores = [r["score"] for r in out]
     assert all(s > 0 for s in scores)
@@ -65,7 +63,7 @@ def test_textrank_scores_positive_and_ranked(spark):
 
 
 def test_top5_parts_is_top5(spark):
-    from redshells_spark.queries.r8d_ops import _top5_parts
+    from redshells_spark.queries.llm_eval import _top5_parts
 
     recs = _top5_parts(spark, SF)
     per_cust = recs.groupBy("custkey").count().agg(F.max("count")).collect()
@@ -78,9 +76,7 @@ def test_top5_parts_is_top5(spark):
 
 
 def test_intra_list_diversity_bounds(spark):
-    from redshells_spark.queries.r8d_ops import _intra_list_diversity
-
-    out = _intra_list_diversity(spark, SF).collect()
+    out = QUERIES["intra_list_diversity"](spark, SF).collect()
     assert len(out) > 0
     for r in out:
         assert 0 <= r["avg_ild_e6"] <= 1_000_000
@@ -88,9 +84,7 @@ def test_intra_list_diversity_bounds(spark):
 
 
 def test_catalog_coverage_bounds(spark):
-    from redshells_spark.queries.r8d_ops import _catalog_coverage_topk
-
-    r = _catalog_coverage_topk(spark, SF).collect()[0]
+    r = QUERIES["catalog_coverage_topk"](spark, SF).collect()[0]
     assert 0 < r["coverage_e6"] <= 1_000_000
     assert 0 < r["avg_pop_rank_e6"] <= 1_000_000
     assert r["n_rec_parts"] <= r["n_parts"]
@@ -118,8 +112,6 @@ def test_jb_hand_symmetric_series():
 
 
 def test_jb_query_consistency(spark):
-    from redshells_spark.queries.r8d_ops import _jarque_bera_event_values
-
-    r = _jarque_bera_event_values(spark, SF).collect()[0]
+    r = QUERIES["jarque_bera_event_values"](spark, SF).collect()[0]
     assert r["jb"] >= 0.0
     assert r["reject_005"] == (1 if r["jb"] > 5.991464547107979 else 0)

@@ -10,6 +10,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from redshells_spark.queries import QUERIES
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -28,9 +30,7 @@ def test_kappa_hand_confusion():
 
 
 def test_kappa_query_bounds(spark):
-    from redshells_spark.queries.r8e_ops import _cohens_kappa_judges
-
-    r = _cohens_kappa_judges(spark, SF).collect()[0]
+    r = QUERIES["cohens_kappa_judges"](spark, SF).collect()[0]
     assert r["n"] == r["n11"] + r["n10"] + r["n01"] + r["n00"]
     assert -1_000_000 <= r["kappa_e6"] <= 1_000_000
 
@@ -39,7 +39,7 @@ def test_kappa_query_bounds(spark):
 
 
 def test_gumbel_constants():
-    from redshells_spark.queries.r8e_ops import (
+    from redshells_spark.queries.stat_tests import (
         _EULER_GAMMA,
         _GUMBEL_Q99,
         _SQRT6_OVER_PI,
@@ -51,9 +51,7 @@ def test_gumbel_constants():
 
 
 def test_gumbel_query_p99_above_mu(spark):
-    from redshells_spark.queries.r8e_ops import _block_maxima_gumbel_fit
-
-    r = _block_maxima_gumbel_fit(spark, SF).collect()[0]
+    r = QUERIES["block_maxima_gumbel_fit"](spark, SF).collect()[0]
     assert r["beta"] >= 0.0
     assert r["p99_gumbel"] >= r["mu"]  # q99 > 0 so return level above mode
     assert r["n_blocks"] >= 2
@@ -63,9 +61,7 @@ def test_gumbel_query_p99_above_mu(spark):
 
 
 def test_negbin_query_identities(spark):
-    from redshells_spark.queries.r8e_ops import _negbin_overdispersion_fit
-
-    r = _negbin_overdispersion_fit(spark, SF).collect()[0]
+    r = QUERIES["negbin_overdispersion_fit"](spark, SF).collect()[0]
     assert r["n_users"] > 0 and r["s1"] > 0
     assert abs(r["vmr"] - round(r["variance"] / r["mean"], 6)) < 1e-6
     if r["overdispersed"]:
@@ -106,9 +102,7 @@ def test_seasonal_mk_monotone_trend():
 
 
 def test_seasonal_mk_query_consistency(spark):
-    from redshells_spark.queries.r8e_ops import _seasonal_mann_kendall
-
-    r = _seasonal_mann_kendall(spark, SF).collect()[0]
+    r = QUERIES["seasonal_mann_kendall"](spark, SF).collect()[0]
     assert r["var18_total"] >= 0
     assert r["reject_005"] == (1 if abs(r["z"]) > 1.96 else 0)
 
@@ -117,9 +111,7 @@ def test_seasonal_mk_query_consistency(spark):
 
 
 def test_asof_tolerance_semantics(spark):
-    from redshells_spark.queries.r8e_ops import _asof_join_tolerance
-
-    out = _asof_join_tolerance(spark, SF)
+    out = QUERIES["asof_join_tolerance"](spark, SF)
     ev = spark.read.parquet(f"{SF}/events.parquet")
     n_clicks = ev.filter(F.col("event_type") == "click").count()
     rows = out.collect()

@@ -10,6 +10,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from redshells_spark.queries import QUERIES
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -22,9 +24,7 @@ def test_chapman_hand_example():
 
 
 def test_capture_recapture_query(spark):
-    from redshells_spark.queries.r8f_ops import _capture_recapture_users
-
-    r = _capture_recapture_users(spark, SF).collect()[0]
+    r = QUERIES["capture_recapture_users"](spark, SF).collect()[0]
     assert r["m"] <= min(r["n1"], r["n2"])
     assert r["true_n"] <= r["n1"] + r["n2"]  # union bound
     assert r["chapman"] >= max(r["n1"], r["n2"]) - 1  # estimate >= captures
@@ -49,9 +49,7 @@ def test_kendall_w_perfect_agreement():
 
 
 def test_kendall_w_query_bounds(spark):
-    from redshells_spark.queries.r8f_ops import _kendall_w_rankings
-
-    r = _kendall_w_rankings(spark, SF).collect()[0]
+    r = QUERIES["kendall_w_rankings"](spark, SF).collect()[0]
     assert 0 <= r["w_e6"] <= 1_000_000
     assert r["k_judges"] == 3
     assert r["chi2"] >= 0.0
@@ -61,9 +59,7 @@ def test_kendall_w_query_bounds(spark):
 
 
 def test_psi_first_week_is_zero(spark):
-    from redshells_spark.queries.r8f_ops import _psi_weekly_series
-
-    out = _psi_weekly_series(spark, SF).orderBy("w").collect()
+    out = QUERIES["psi_weekly_series"](spark, SF).orderBy("w").collect()
     assert len(out) >= 1
     # the baseline week compares against itself: every term is exactly
     # floor(0 * ln(1) * 1e9 + .5) = 0
@@ -78,9 +74,7 @@ def test_psi_first_week_is_zero(spark):
 
 
 def test_retention_decay_query(spark):
-    from redshells_spark.queries.r8f_ops import _retention_decay_fit
-
-    rows = _retention_decay_fit(spark, SF).collect()
+    rows = QUERIES["retention_decay_fit"](spark, SF).collect()
     if not rows:  # <2 pooled ages on a tiny corpus is legitimate
         return
     r = rows[0]
@@ -99,9 +93,7 @@ def test_retention_decay_query(spark):
 
 
 def test_staleness_profile_invariants(spark):
-    from redshells_spark.queries.r8f_ops import _feature_staleness_profile
-
-    r = _feature_staleness_profile(spark, SF).collect()[0]
+    r = QUERIES["feature_staleness_profile"](spark, SF).collect()[0]
     assert 0 <= r["n_matched"] <= r["n_clicks"]
     assert 0 <= r["match_rate_e6"] <= 1_000_000
     assert (
@@ -117,11 +109,8 @@ def test_staleness_profile_invariants(spark):
 
 
 def test_staleness_consistent_with_asof(spark):
-    from redshells_spark.queries.r8e_ops import _asof_join_tolerance
-    from redshells_spark.queries.r8f_ops import _feature_staleness_profile
-
-    prof = _feature_staleness_profile(spark, SF).collect()[0]
-    asof = _asof_join_tolerance(spark, SF)
+    prof = QUERIES["feature_staleness_profile"](spark, SF).collect()[0]
+    asof = QUERIES["asof_join_tolerance"](spark, SF)
     n_matched = asof.filter(F.col("matched_purchase_id").isNotNull()).count()
     assert prof["n_matched"] == n_matched
     assert prof["n_clicks"] == asof.count()

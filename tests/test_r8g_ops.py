@@ -3,6 +3,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from redshells_spark.queries import QUERIES
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -23,17 +25,13 @@ def test_cox_stuart_hand_monotone():
 
 
 def test_cox_stuart_query(spark):
-    from redshells_spark.queries.r8g_ops import _cox_stuart_trend
-
-    r = _cox_stuart_trend(spark, SF).collect()[0]
+    r = QUERIES["cox_stuart_trend"](spark, SF).collect()[0]
     assert r["n_pairs"] == r["pos"] + r["neg"]
     assert r["reject_005"] == (1 if abs(r["z"]) > 1.96 else 0)
 
 
 def test_price_dispersion_bounds(spark):
-    from redshells_spark.queries.r8g_ops import _price_dispersion_by_brand
-
-    out = _price_dispersion_by_brand(spark, SF).collect()
+    out = QUERIES["price_dispersion_by_brand"](spark, SF).collect()
     assert len(out) > 0
     for r in out:
         assert 0 <= r["avg_cv_e6"] <= r["max_cv_e6"]
@@ -41,11 +39,7 @@ def test_price_dispersion_bounds(spark):
 
 
 def test_burstiness_bounds(spark):
-    from redshells_spark.queries.r8g_ops import (
-        _order_interarrival_burstiness,
-    )
-
-    out = _order_interarrival_burstiness(spark, SF).collect()
+    out = QUERIES["order_interarrival_burstiness"](spark, SF).collect()
     assert len(out) > 0
     for r in out:
         assert r["avg_cv2_e6"] >= 0
