@@ -52,7 +52,7 @@ def main() -> None:
     sh = doc_shingles(toks, _vocab(spark, sf_dir)).cache()
     wide = minhash_signatures_wide(sh, num_hashes=16)
     cand = minhash_lsh_candidates_wide(wide, bands=4, rows_per_band=4)
-    pairs = verify_jaccard(cand, sh, threshold=0.1, sizes=wide.select("doc_id", "sz"))
+    pairs = verify_jaccard(cand, sh, threshold=0.1)
     comps = connected_components_dedup(pairs.select("doc_id_0", "doc_id_1"))
 
     # 2. canonical member per cluster (keep-longest), survivors only

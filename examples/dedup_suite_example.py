@@ -45,7 +45,7 @@ def main() -> None:
     sh = doc_shingles(toks, vocab).cache()
     wide = minhash_signatures_wide(sh, num_hashes=16)
     cand = minhash_lsh_candidates_wide(wide, bands=4, rows_per_band=4)
-    pairs = verify_jaccard(cand, sh, threshold=0.5, sizes=wide.select("doc_id", "sz"))
+    pairs = verify_jaccard(cand, sh, threshold=0.5)
     print(f"minhash near-dup pairs (J>=0.5): {pairs.count()}")
 
     # 3. cross-document unit dedup: corpus-wide boilerplate removal

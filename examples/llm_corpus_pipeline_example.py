@@ -55,7 +55,7 @@ def main() -> None:
     sh = doc_shingles(toks, vocab).cache()
     wide = minhash_signatures_wide(sh, num_hashes=16)
     cand = minhash_lsh_candidates_wide(wide, bands=4, rows_per_band=4)
-    pairs = verify_jaccard(cand, sh, threshold=0.1, sizes=wide.select("doc_id", "sz"))
+    pairs = verify_jaccard(cand, sh, threshold=0.1)
     comp = connected_components_dedup(pairs.select("doc_id_0", "doc_id_1"))
     drop = comp.filter(F.col("doc_id") != F.col("keep_id")).select("doc_id")
     clean = exact.join(drop, on="doc_id", how="left_anti")

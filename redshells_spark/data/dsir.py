@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from redshells_spark.dedup.simhash import portable_token_hash
+from redshells_spark.text.tokenize import space_tokens
 
 
 def _ngrams(tokens: Column, n: int) -> Column:
@@ -61,8 +62,7 @@ def hashed_ngram_buckets(
     (DSIR §2 features). One explode + one groupBy; ``extra_columns``
     must be functionally determined by the id (they ride the groupBy
     key without changing granularity — used for the target flag)."""
-    text = F.lower(F.col(text_column)) if lowercase else F.col(text_column)
-    toks = F.filter(F.split(text, " "), lambda t: t != "")
+    toks = space_tokens(F.col(text_column), lowercase)
     grams = _ngrams(toks, ngram)
     exploded = df.select(
         id_column, *extra_columns, F.explode(grams).alias("gram")

@@ -52,11 +52,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from redshells_spark.schema import require_columns
 
-_LAST_DOCARR: DataFrame | None = None
+# The one small-universe gate: an element universe of at most one
+# int64 word's worth of elements is ranked IN-ROW through a literal map
+# (build_rank_sorted_sets_from_arrays) and verified by inline bitmask
+# popcounts (pairs_from_rank_sorted, containment_pairs_from_rank_sorted).
+# Wider masks were measured and lose: they inflate the candidate-join
+# shuffle by 8 bytes per word per row, and at dedup-grade thresholds
+# Xiao's positional pruning on the array path beats them (u=931 as 15
+# words, τ=0.8, sf0.1: Jaccard 2.5s array vs 3.3s+ bitset, containment
+# 2.6-2.9s vs 3.3-4.5s). One word beats the positional tail at every
+# threshold measured (13.7s → 2.2s on the τ=0.5 698k-pair relation).
+BITSET_UNIVERSE = 64
 
 
 def build_rank_sorted_sets(
@@ -107,11 +116,10 @@ def build_rank_sorted_sets_from_arrays(
     docs_df: DataFrame,
     id_column: str = "doc_id",
     array_column: str = "tokens",
-    max_map_universe: int = 64,
 ) -> tuple[DataFrame, int | None]:
     """Array-native twin of :func:`build_rank_sorted_sets` for inputs
     that are ALREADY per-doc element arrays (e.g. the shared tokenized
-    relation): when the element universe fits ``max_map_universe``,
+    relation): when the element universe fits ``BITSET_UNIVERSE``,
     the whole index is computed IN-ROW — ``array_distinct`` for set
     semantics, rank lookup through a universe-bounded literal map,
     ``array_sort`` for the canonical order — with ZERO doc-keyed
@@ -125,13 +133,11 @@ def build_rank_sorted_sets_from_arrays(
     ``build_rank_sorted_sets`` schema and ordering (ranks dense 1..u,
     frequency asc, ties element asc; docs with empty/NULL arrays are
     absent, matching the long form where they contribute no rows).
-    When the universe exceeds ``max_map_universe`` — where per-element
-    linear scans of the literal map stop being obviously cheap — it
-    falls back to the long-form builder and returns ``(index, None)``
-    (caller probes the universe if it needs it). The default cap is 64
-    = one bitset word: below it the downstream verification is the
-    inline popcount path, so index build AND verify are both in the
-    small-universe regime."""
+    Above ``BITSET_UNIVERSE`` — where per-element linear scans of the
+    literal map stop being obviously cheap and verification takes the
+    array path anyway — it falls back to the long-form builder and
+    returns ``(index, None)``; pass that ``None`` straight on as
+    ``element_universe``."""
     require_columns(docs_df, [id_column, array_column])
     sets = docs_df.select(
         F.col(id_column).alias("__id"),
@@ -144,10 +150,10 @@ def build_rank_sorted_sets_from_arrays(
     )
     rows = (
         freq.orderBy(F.col("__f").asc(), F.col("__el").asc())
-        .limit(max_map_universe + 1)
+        .limit(BITSET_UNIVERSE + 1)
         .collect()
     )
-    if len(rows) > max_map_universe:
+    if len(rows) > BITSET_UNIVERSE:
         long_form = docs_df.select(
             F.col(id_column), F.explode(F.col(array_column)).alias("__el")
         ).distinct()
@@ -200,7 +206,6 @@ def pairs_from_rank_sorted(
     threshold_den: int = 10,
     collapse_identical: bool = False,
     element_universe: int | None = None,
-    force_bitset: bool = False,
 ) -> DataFrame:
     """→ ([block,] id_0, id_1, inter, sz_0, sz_1, union_sz, jac_e4):
     ALL pairs
@@ -224,20 +229,18 @@ def pairs_from_rank_sorted(
 
     ``element_universe`` (optional): the number of DISTINCT elements
     across the corpus, when the caller knows it (one bounded-scalar
-    agg over the index — the ranks are dense 1..u). When u ≤ 64 (one
-    int64 word; see BITSET_AUTO_WORDS for why the automatic gate
-    stops there), every set becomes a bitmask riding the prefix rows
-    and the exact intersection is popcount(AND) computed INLINE on
-    the candidate join — the rank↔element bijection makes the
-    popcount exact, and the whole two-phase verification tail
-    (positional groupBy + two joins + per-pair array_intersect)
-    collapses into filter + dropDuplicates (measured 13.7s → 2.2s on
-    the 698k-pair sf0.1 relation, identical output). Above the gate
-    (or None) the array path runs unchanged; ``force_bitset=True``
-    widens the gate to 64·BITSET_MAX_WORDS multi-word bitsets."""
+    agg over the index — the ranks are dense 1..u). When u ≤
+    ``BITSET_UNIVERSE`` (one int64 word), every set becomes a bitmask
+    riding the prefix rows and the exact intersection is popcount(AND)
+    computed INLINE on the candidate join — the rank↔element bijection
+    makes the popcount exact, and the whole two-phase verification
+    tail (positional groupBy + two joins + per-pair array_intersect)
+    collapses into one filter (measured 13.7s → 2.2s on the 698k-pair
+    sf0.1 relation, identical output). Above the gate (or None) the
+    array path runs."""
     num, den = threshold_num, threshold_den
     if collapse_identical:
-        return _pairs_collapsed(docarr, num, den, element_universe, force_bitset)
+        return _pairs_collapsed(docarr, num, den, element_universe)
     blocked = "__blk" in docarr.columns
     # prefix length p = sz − ceil(τ·sz) + 1, integer form
     plen = (
@@ -246,13 +249,8 @@ def pairs_from_rank_sorted(
         + 1
     ).cast("int")
     blk = ["__blk"] if blocked else []
-    auto_words = BITSET_MAX_WORDS if force_bitset else BITSET_AUTO_WORDS
-    if (
-        element_universe is not None
-        and 0 <= element_universe <= 64 * auto_words
-    ):
-        n_words = max(1, -(-element_universe // 64))
-        return _pairs_bitmask(docarr, num, den, plen, blk, n_words)
+    if _fits_bitset(element_universe):
+        return _pairs_bitmask(docarr, num, den, plen, blk)
     # join key is the dense int element RANK, not the element value —
     # __erk is a bijection of the element universe, so the candidate
     # set is identical and the self-join hashes ints, not strings
@@ -364,74 +362,46 @@ def pairs_from_rank_sorted(
     return inter.filter(F.col("inter") * den >= num * union_sz).select(*out_cols)
 
 
-# Bitset verification mechanism cap: correct up to BITSET_MAX_WORDS
-# int64 words (≤ 512 bytes riding each prefix row). The AUTOMATIC gate
-# is far tighter — BITSET_AUTO_WORDS = 1 — because the economics flip
-# with mask width: a single 8-byte mask riding the candidate rows
-# beats the two-phase positional tail at every threshold measured
-# (13.7s → 2.2s on the τ=0.5 698k-pair relation), but multi-word
-# masks inflate the candidate-join shuffle by 8·n_words bytes/row and
-# LOSE to Xiao's positional pruning at dedup-grade thresholds
-# (measured at u=931/15 words, τ=0.8, sf0.1: Jaccard 2.5s array-path
-# vs 3.3s+ bitset, containment 2.6-2.9s vs 3.3-4.5s — both zip_with
-# and unrolled-popcount variants). Callers can still force the wide
-# path (``force_bitset=True``) where their relation shape warrants
-# it; correctness is pinned by tests either way.
-BITSET_MAX_WORDS = 64
-BITSET_AUTO_WORDS = 1
+def _fits_bitset(element_universe: int | None) -> bool:
+    return element_universe is not None and 0 <= element_universe <= BITSET_UNIVERSE
 
 
-def _bitset_col(n_words: int):
-    """array<long> (or a single long when ``n_words == 1``) bitset of a
-    doc's dense element ranks — rank r sets bit (r−1) % 64 of word
-    (r−1) div 64. Exact |∩| = popcount(AND) via the rank ↔ element
-    bijection."""
-    if n_words == 1:
-        return F.expr(
-            "aggregate(__rk, 0L, (acc, x) ->"
-            " acc + shiftleft(1L, cast(x.__erk as int) - 1))"
-        )
+def _bitset_col():
+    """int64 bitset of a doc's dense element ranks — rank r sets bit
+    r−1. Exact |∩| = popcount(AND) via the rank ↔ element bijection."""
     return F.expr(
-        f"transform(sequence(0, {n_words - 1}), w ->"
-        " aggregate(__rk, 0L, (acc, x) ->"
-        " acc + IF((cast(x.__erk as int) - 1) div 64 = w,"
-        " shiftleft(1L, (cast(x.__erk as int) - 1) % 64), 0L)))"
+        "aggregate(__rk, 0L, (acc, x) ->"
+        " acc + shiftleft(1L, cast(x.__erk as int) - 1))"
     )
 
 
-def _bitset_inter(c0: str, c1: str, n_words: int):
+def _bitset_inter(c0: str, c1: str):
     """Exact intersection count of two bitset columns."""
-    if n_words == 1:
-        return F.bit_count(F.col(c0).bitwiseAND(F.col(c1))).cast("long")
-    return F.expr(
-        f"aggregate(zip_with({c0}, {c1}, (x, y) -> cast(bit_count(x & y) as bigint)),"
-        " 0L, (acc, v) -> acc + v)"
-    ).cast("long")
+    return F.bit_count(F.col(c0).bitwiseAND(F.col(c1))).cast("long")
 
 
 def _pairs_bitmask(
-    docarr: DataFrame, num: int, den: int, plen, blk: list[str], n_words: int = 1
+    docarr: DataFrame, num: int, den: int, plen, blk: list[str]
 ) -> DataFrame:
     """Small-universe fast path of :func:`pairs_from_rank_sorted`
-    (element universe ≤ 64·``n_words``): ranks are dense 1..u, so
-    every set is an ``n_words``-word int64 bitset and the exact
-    intersection is popcount(AND) — a few codegen cycles. The bitset
-    rides ALONG THE PREFIX ROWS, so verification happens INLINE on the
-    candidate join's output and the whole two-phase tail (per-pair
-    positional groupBy + two verify joins + per-pair array_intersect)
-    collapses into filter + dropDuplicates. Measured 13.7s → 2.2s on
-    the same 698k-pair relation at sf0.1, identical rows.
+    (element universe ≤ ``BITSET_UNIVERSE``): ranks are dense 1..u, so
+    every set is one int64 bitset and the exact intersection is
+    popcount(AND) — a few codegen cycles. The bitset rides ALONG THE
+    PREFIX ROWS, so verification happens INLINE on the candidate
+    join's output and the whole two-phase tail (per-pair positional
+    groupBy + two verify joins + per-pair array_intersect) collapses
+    into one filter. Measured 13.7s → 2.2s on the same 698k-pair
+    relation at sf0.1, identical rows.
 
     Exactness: the prefix-filter theorem still guarantees every
     qualifying pair shares ≥ 1 prefix element (the join finds it), the
-    popcount is the true |∩| (rank ↔ element bijection), and the final
-    dropDuplicates collapses pairs matched on several prefix elements
-    — all carried columns are functions of the id pair."""
+    popcount is the true |∩| (rank ↔ element bijection), and a pair
+    matched on several prefix elements keeps exactly one row (below)."""
     prefix = docarr.select(
         "__id",
         "__sz",
         *blk,
-        _bitset_col(n_words).alias("__m"),
+        _bitset_col().alias("__m"),
         F.explode(
             F.slice(F.expr("transform(__rk, x -> x.__erk)"), F.lit(1), plen)
         ).alias("__el"),
@@ -450,47 +420,34 @@ def _pairs_bitmask(
         F.col("__sz").alias("__sz1"),
         F.col("__m").alias("__m1"),
     )
-    inter = _bitset_inter("__m0", "__m1", n_words)
-    pairs = a.join(b, ["__el"] + blk).filter(
-        (F.col("__id0") < F.col("__id1"))
-        & (F.col("__sz0") * den >= F.col("__sz1") * num)
-        & (F.col("__sz1") * den >= F.col("__sz0") * num)
+    # pair-dedup WITHOUT a shuffle: a pair sharing k prefix elements
+    # emits k join rows; keep exactly the row whose matched element is
+    # the pair's LOWEST-ranked shared element (unique per pair, and for
+    # any qualifying pair it lies in both prefixes: were it outside
+    # side a's prefix, a's whole prefix would be unshared and
+    # inter ≤ |a| − p < ⌈τ|a|⌉, a contradiction — the prefix-filter
+    # theorem's own argument). "No shared bit below the matched one" is
+    # one codegen'd mask test, replacing dropDuplicates' full exchange +
+    # hash aggregate of the candidate relation. ((1L<<63)−1 wraps to
+    # Long.MAX_VALUE = bits 0..62 — still "all bits below 63".)
+    low_mask = F.expr("shiftleft(1L, cast(__el as int) - 1) - 1L")
+    pairs = (
+        a.join(b, ["__el"] + blk)
+        .filter(
+            (F.col("__id0") < F.col("__id1"))
+            & (F.col("__sz0") * den >= F.col("__sz1") * num)
+            & (F.col("__sz1") * den >= F.col("__sz0") * num)
+            & (F.col("__m0").bitwiseAND(F.col("__m1")).bitwiseAND(low_mask) == 0)
+        )
+        .select(
+            "__id0", "__id1", *blk, "__sz0", "__sz1",
+            _bitset_inter("__m0", "__m1").alias("inter"),
+        )
+        .filter(
+            F.col("inter") * den
+            >= num * (F.col("__sz0") + F.col("__sz1") - F.col("inter"))
+        )
     )
-    if n_words == 1:
-        # pair-dedup WITHOUT a shuffle: a pair sharing k prefix
-        # elements emits k join rows; keep exactly the row whose
-        # matched element is the pair's LOWEST-ranked shared element
-        # (unique per pair, and for any qualifying pair it lies in
-        # both prefixes: were it outside side a's prefix, a's whole
-        # prefix would be unshared and inter ≤ |a| − p < ⌈τ|a|⌉, a
-        # contradiction — the prefix-filter theorem's own argument).
-        # "No shared bit below the matched one" is one codegen'd mask
-        # test, replacing dropDuplicates' full exchange + hash
-        # aggregate of the candidate relation. ((1L<<63)−1 wraps to
-        # Long.MAX_VALUE = bits 0..62 — still "all bits below 63".)
-        low_mask = F.expr("shiftleft(1L, cast(__el as int) - 1) - 1L")
-        pairs = (
-            pairs.filter(
-                (F.col("__m0").bitwiseAND(F.col("__m1")).bitwiseAND(low_mask))
-                == 0
-            )
-            .select("__id0", "__id1", *blk, "__sz0", "__sz1", inter.alias("inter"))
-            .filter(
-                F.col("inter") * den
-                >= num * (F.col("__sz0") + F.col("__sz1") - F.col("inter"))
-            )
-        )
-    else:
-        pairs = (
-            pairs.select(
-                "__id0", "__id1", *blk, "__sz0", "__sz1", inter.alias("inter")
-            )
-            .filter(
-                F.col("inter") * den
-                >= num * (F.col("__sz0") + F.col("__sz1") - F.col("inter"))
-            )
-            .dropDuplicates(["__id0", "__id1"])
-        )
     union_sz = (F.col("__sz0") + F.col("__sz1") - F.col("inter")).cast("long")
     out_cols = ([F.col("__blk").alias("block")] if blk else []) + [
         F.col("__id0").alias("id_0"),
@@ -506,21 +463,25 @@ def _pairs_bitmask(
     return pairs.select(*out_cols)
 
 
-_LAST_GROUPS: DataFrame | None = None
-
-
 def _pairs_collapsed(
     docarr: DataFrame,
     num: int,
     den: int,
     element_universe: int | None = None,
-    force_bitset: bool = False,
 ) -> DataFrame:
     """Duplicate-set collapsing for :func:`pairs_from_rank_sorted`:
     group by the exact element-rank array (a bijection of the element
     set), run the pair algebra on one representative per group, expand
     through membership. Exact — group-level Jaccard equals every
-    member pair's Jaccard, and within-group pairs are Jaccard 1."""
+    member pair's Jaccard, and within-group pairs are Jaccard 1.
+
+    The groups relation is pinned with a lazy ``localCheckpoint``: the
+    first job that reads it fills it (eager costs one more job — 12 vs
+    11 per token_jaccard_join call at sf0.01 — for the same wall time
+    at sf0.1). Its blocks live on the executors that computed them and
+    are released when the returned plan is garbage-collected, so the
+    pin does NOT survive executor loss — a lost executor fails the
+    query instead of recomputing the groups."""
     blocked = "__blk" in docarr.columns
     blk = ["__blk"] if blocked else []
     blkout = [F.col("block")] if blocked else []
@@ -528,13 +489,13 @@ def _pairs_collapsed(
     # one shuffle: groups keyed on the int-rank array (+ block). __rk
     # is functionally determined by __arr (rank ↔ element bijection),
     # so first() is exact, not a tie-break.
-    # Materialized once (distinct-set-proportional, MEMORY_AND_DISK
-    # spills rather than OOMs at 100×, rolling handle releases the
-    # previous call's copy): SIX downstream branches read it — reps
-    # through the pair algebra's prefix-a/prefix-b/verify-0/verify-1
-    # legs, plus the cross-group and within-group membership
-    # expansions — and without the persist each branch re-ran the
-    # docarr→groupBy lineage (measured ~0.9s × 5 extra runs at sf0.1).
+    # Materialized once (distinct-set-proportional; the checkpoint's
+    # blocks spill to disk rather than OOM at 100×): SIX downstream
+    # branches read it — reps through the pair algebra's
+    # prefix-a/prefix-b/verify-0/verify-1 legs, plus the cross-group
+    # and within-group membership expansions — and without the pin
+    # each branch re-ran the docarr→groupBy lineage (measured
+    # ~0.9s × 5 extra runs at sf0.1).
     # pin the group shuffle at the session's core count: the groups
     # relation is BYTES-tiny (distinct sets) but everything downstream
     # — rep candidate join, verify, membership expansion — multiplies
@@ -552,18 +513,13 @@ def _pairs_collapsed(
             F.first("__rk").alias("__rk"),
         )
         .withColumn("__sz", F.size("__arr").cast("long"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    global _LAST_GROUPS
-    if _LAST_GROUPS is not None:
-        _LAST_GROUPS.unpersist()
-    _LAST_GROUPS = groups
+    ).localCheckpoint(eager=False)
     members = groups.select(
         "__gid", *blk, "__sz", F.explode("__mem").alias("__m")
     )
     reps = groups.select(F.col("__gid").alias("__id"), *blk, "__rk", "__sz")
     sp = pairs_from_rank_sorted(
-        reps, num, den, element_universe=element_universe,
-        force_bitset=force_bitset,
+        reps, num, den, element_universe=element_universe
     ).select(
         *blkout,
         F.col("id_0").alias("__g0"),
@@ -614,44 +570,12 @@ def _pairs_collapsed(
     return cross.unionByName(within)
 
 
-def prefix_filter_jaccard_pairs(
-    sets_df: DataFrame,
-    id_column: str = "doc_id",
-    element_column: str = "shingle",
-    threshold_num: int = 5,
-    threshold_den: int = 10,
-    block_column: str | None = None,
-) -> DataFrame:
-    """Build the rank-sorted index from raw (id, element) rows and run
-    the join (one-shot form). ``sets_df`` must be distinct rows.
-
-    Materializes the index once: four downstream branches (prefix-a,
-    prefix-b, verify-a0, verify-a1) would each re-run the element
-    lineage otherwise (measured 7.5s → 1.1s warm at sf0.1).
-    MEMORY_AND_DISK spills rather than OOMs at 100× — the standard
-    materialize-the-ordered-sets step of distributed set-similarity
-    joins (Vernica et al. SIGMOD 2010). Rolling handle: the previous
-    call's cache is released, so repeated calls hold one corpus copy.
-    Long-lived callers should instead persist ``build_rank_sorted_sets``
-    through the param-hash task target and call
-    ``pairs_from_rank_sorted`` (queries/dedup.py does)."""
-    docarr = build_rank_sorted_sets(
-        sets_df, id_column, element_column, block_column
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    global _LAST_DOCARR
-    if _LAST_DOCARR is not None:
-        _LAST_DOCARR.unpersist()
-    _LAST_DOCARR = docarr
-    return pairs_from_rank_sorted(docarr, threshold_num, threshold_den)
-
-
 def containment_pairs_from_rank_sorted(
     docarr: DataFrame,
     threshold_num: int = 8,
     threshold_den: int = 10,
     min_size_a: int | None = None,
     element_universe: int | None = None,
-    force_bitset: bool = False,
 ) -> DataFrame:
     """→ (id_a, id_b, inter, size_a, size_b, cont_e4): ALL ordered
     pairs with exact containment |A∩B|/|A| ≥ num/den (a ≠ b), from the
@@ -683,24 +607,18 @@ def containment_pairs_from_rank_sorted(
 
     ``element_universe`` (optional): same contract as
     :func:`pairs_from_rank_sorted` — when the distinct-element count
-    fits the automatic single-word gate (u ≤ 64; BITSET_AUTO_WORDS),
-    verification happens INLINE on the probe join via bitset
-    popcounts (the rank ↔ element bijection keeps the count exact)
-    and the two-phase tail collapses into filter + dropDuplicates;
-    ``force_bitset=True`` widens the gate to multi-word bitsets."""
+    fits one bitset word (u ≤ ``BITSET_UNIVERSE``), verification
+    happens INLINE on the probe join via bitset popcounts (the rank ↔
+    element bijection keeps the count exact) and the two-phase tail
+    collapses into filter + dropDuplicates."""
     num, den = threshold_num, threshold_den
     plen = (
         F.col("__sz")
         - F.expr(f"cast(({num} * __sz + {den} - 1) div {den} as bigint)")
         + 1
     ).cast("int")
-    auto_words = BITSET_MAX_WORDS if force_bitset else BITSET_AUTO_WORDS
-    if (
-        element_universe is not None
-        and 0 <= element_universe <= 64 * auto_words
-    ):
-        n_words = max(1, -(-element_universe // 64))
-        return _containment_bitmask(docarr, num, den, plen, min_size_a, n_words)
+    if _fits_bitset(element_universe):
+        return _containment_bitmask(docarr, num, den, plen, min_size_a)
     a_side = (
         docarr
         if min_size_a is None
@@ -790,12 +708,11 @@ def _containment_bitmask(
     den: int,
     plen,
     min_size_a: int | None,
-    n_words: int,
 ) -> DataFrame:
     """Small-universe fast path of
     :func:`containment_pairs_from_rank_sorted` (element universe ≤
-    64·``n_words``): every set is an ``n_words``-word int64 bitset
-    riding the probe rows, the exact |A∩B| is popcount(AND) computed
+    ``BITSET_UNIVERSE``): every set is one int64 bitset riding the
+    probe rows, the exact |A∩B| is popcount(AND) computed
     INLINE on the A-prefix × full-inverted-index join, and the whole
     two-phase verification tail collapses into filter +
     dropDuplicates — the containment twin of :func:`_pairs_bitmask`.
@@ -814,7 +731,7 @@ def _containment_bitmask(
     pre_a = a_side.select(
         F.col("__id").alias("__ida"),
         F.col("__sz").alias("__sza"),
-        _bitset_col(n_words).alias("__ma"),
+        _bitset_col().alias("__ma"),
         F.explode(
             F.slice(F.expr("transform(__rk, x -> x.__erk)"), F.lit(1), plen)
         ).alias("__el"),
@@ -822,10 +739,10 @@ def _containment_bitmask(
     full_b = docarr.select(
         F.col("__id").alias("__idb"),
         F.col("__sz").alias("__szb"),
-        _bitset_col(n_words).alias("__mb"),
+        _bitset_col().alias("__mb"),
         F.explode(F.expr("transform(__rk, x -> x.__erk)")).alias("__el"),
     )
-    inter = _bitset_inter("__ma", "__mb", n_words)
+    inter = _bitset_inter("__ma", "__mb")
     pairs = (
         pre_a.join(full_b, "__el")
         .filter(

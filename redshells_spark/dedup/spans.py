@@ -19,8 +19,8 @@ and the removal transform is provided.
 
 Scale shape (the 100 TB story):
 - ONE corpus-wide shuffle on the shingle key (md5 of the k-token
-  window — identical bytes in any engine; ``xxhash64`` opt-in halves
-  the shuffle width when cross-engine portability is not needed);
+  window — identical bytes in any engine, so a DuckDB oracle or a
+  stored benchmark index computes the same keys);
 - the duplicated-key set joins back big-big sort-merge on that same
   key — no broadcast of anything corpus-sized;
 - interval merging is a per-document window (partitionBy doc_id), so
@@ -45,15 +45,11 @@ def positional_shingles(
     shingle_len: int = 3,
     doc_id_column: str = "doc_id",
     tokens_column: str = "tokens",
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """→ (doc_id, pos, shingle) — one row per token position ``pos``
     (0-based over the doc's token list) that starts a full
     ``shingle_len``-token window; ``shingle`` is md5 (hex string) of
-    the space-joined window, or xxhash64 (long) when ``use_xxhash``.
-
-    md5 is the cross-engine-portable default; xxhash64 is the
-    production option (8-byte shuffle key instead of 32 hex chars).
+    the space-joined window — cross-engine portable.
     """
     require_columns(tokens_df, [doc_id_column, tokens_column])
     k = int(shingle_len)
@@ -61,7 +57,6 @@ def positional_shingles(
         raise ValueError(f"shingle_len must be >= 1, got {shingle_len}")
     t = F.col(tokens_column)
     win = F.concat_ws(" ", F.slice(F.col("__toks"), F.col("pos") + 1, k))
-    key = F.xxhash64(win) if use_xxhash else F.md5(win)
     return (
         tokens_df.select(
             F.col(doc_id_column).alias("doc_id"),
@@ -72,7 +67,7 @@ def positional_shingles(
             ).alias("pos"),
             t.alias("__toks"),
         )
-        .select("doc_id", "pos", key.alias("shingle"))
+        .select("doc_id", "pos", F.md5(win).alias("shingle"))
     )
 
 
@@ -144,15 +139,12 @@ def repeated_span_report(
     min_count: int = 2,
     doc_id_column: str = "doc_id",
     tokens_column: str = "tokens",
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """→ one row per document: (doc_id, n_tokens, n_spans, dup_tokens,
     dup_fraction) where ``dup_tokens`` is the total token count inside
     merged duplicated spans and ``dup_fraction`` its share of the doc
     (4 decimals). Documents with no duplicated span report zeros."""
-    sh = positional_shingles(
-        tokens_df, shingle_len, doc_id_column, tokens_column, use_xxhash
-    )
+    sh = positional_shingles(tokens_df, shingle_len, doc_id_column, tokens_column)
     spans = merge_spans(duplicated_positions(sh, min_count), shingle_len)
     per_doc = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -184,14 +176,11 @@ def remove_repeated_spans(
     min_count: int = 2,
     doc_id_column: str = "doc_id",
     tokens_column: str = "tokens",
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """→ (doc_id, kept_tokens:array<string>, n_removed) — the removal
     transform: every token position inside a merged duplicated span is
     dropped, the rest keep their original order."""
-    sh = positional_shingles(
-        tokens_df, shingle_len, doc_id_column, tokens_column, use_xxhash
-    )
+    sh = positional_shingles(tokens_df, shingle_len, doc_id_column, tokens_column)
     spans = merge_spans(duplicated_positions(sh, min_count), shingle_len)
     return cut_spans(tokens_df, spans, doc_id_column, tokens_column)
 
@@ -256,7 +245,6 @@ def contamination_spans(
     shingle_len: int = 5,
     doc_id_column: str = "doc_id",
     tokens_column: str = "tokens",
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """→ (doc_id, span_start, span_end, span_len): the exact token
     ranges of ``corpus_tokens`` documents that reproduce a
@@ -271,13 +259,9 @@ def contamination_spans(
     merge. Reuses :func:`positional_shingles`/:func:`merge_spans`, so
     batch dedup and decontamination share one fingerprint space."""
     k = int(shingle_len)
-    c_sh = positional_shingles(
-        corpus_tokens, k, doc_id_column, tokens_column, use_xxhash
-    )
+    c_sh = positional_shingles(corpus_tokens, k, doc_id_column, tokens_column)
     b_sh = (
-        positional_shingles(
-            benchmark_tokens, k, doc_id_column, tokens_column, use_xxhash
-        )
+        positional_shingles(benchmark_tokens, k, doc_id_column, tokens_column)
         .select("shingle")
         .distinct()
     )
@@ -293,19 +277,13 @@ def contamination_span_report(
     shingle_len: int = 5,
     doc_id_column: str = "doc_id",
     tokens_column: str = "tokens",
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """→ one row per CONTAMINATED corpus document: (doc_id, n_tokens,
     n_spans, leaked_tokens, leaked_fraction). Clean documents are
     absent (at corpus scale almost everything is clean — emitting only
     offenders keeps the result eval-set-sized)."""
     spans = contamination_spans(
-        corpus_tokens,
-        benchmark_tokens,
-        shingle_len,
-        doc_id_column,
-        tokens_column,
-        use_xxhash,
+        corpus_tokens, benchmark_tokens, shingle_len, doc_id_column, tokens_column
     )
     per_doc = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -332,7 +310,6 @@ def decontaminate_spans(
     shingle_len: int = 5,
     doc_id_column: str = "doc_id",
     tokens_column: str = "tokens",
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """→ (doc_id, kept_tokens, n_removed): surgical decontamination —
     cut exactly the leaked spans instead of dropping whole documents
@@ -340,11 +317,6 @@ def decontaminate_spans(
     drop-the-document variant). Every corpus document appears in the
     output; clean ones carry n_removed = 0."""
     spans = contamination_spans(
-        corpus_tokens,
-        benchmark_tokens,
-        shingle_len,
-        doc_id_column,
-        tokens_column,
-        use_xxhash,
+        corpus_tokens, benchmark_tokens, shingle_len, doc_id_column, tokens_column
     )
     return cut_spans(corpus_tokens, spans, doc_id_column, tokens_column)

@@ -83,7 +83,7 @@ from redshells_spark.text.analysis import (
 )
 from redshells_spark.text.dictionary import train_dictionary
 from redshells_spark.text.tfidf import tfidf_scores, tfidf_top_tokens
-from redshells_spark.text.tokenize import tokenize_on_space
+from redshells_spark.text.tokenize import space_tokens, tokenize_on_space
 from redshells_spark.timeutil import event_range_filter, event_ts, event_us
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -124,7 +124,8 @@ def session_memo(build):
     keeps its ``storageLevel``); each builder keeps its own pin choice.
     Data under ``sf_dir`` is immutable within a session. When a
     ``MEMO_PATHS + 1``-th path arrives, the least recently used path is
-    dropped and its DataFrames are ``unpersist()``-ed. Paths of another
+    dropped and its DataFrames, also those in a returned tuple, are
+    ``unpersist()``-ed. Paths of another
     applicationId belong to a stopped context and are dropped without
     calling into Spark."""
 
@@ -137,8 +138,9 @@ def session_memo(build):
         _MEMO[path] = values = _MEMO.pop(path, {})
         while len(_MEMO) > MEMO_PATHS:
             for v in _MEMO.pop(next(iter(_MEMO))).values():
-                if isinstance(v, DataFrame):
-                    v.unpersist()
+                for df in v if isinstance(v, tuple) else (v,):
+                    if isinstance(df, DataFrame):
+                        df.unpersist()
         if build not in values:
             values[build] = build(spark, sf_dir)
         return values[build]
@@ -561,11 +563,14 @@ def _near_dup_labeled(spark, sf_dir):
     ).localCheckpoint(eager=True)
 
 
-_COS_AB = (
-    "(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) / "
+# cosine of a.embedding and b.embedding; _COS_AB is the parenthesized
+# spelling some oracle texts were pinned with
+_COS_SQL = (
+    "list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) / "
     "(greatest(sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])), 1e-12) * "
-    "greatest(sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])), 1e-12)))"
+    "greatest(sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])), 1e-12))"
 )
+_COS_AB = f"({_COS_SQL})"
 
 
 _WEEK_US = 7 * _DAY_US

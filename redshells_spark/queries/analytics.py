@@ -268,18 +268,11 @@ def _token_jaccard_join(spark, sf_dir):
     sf0.01; the Spark side is the sub-quadratic plan)."""
     from redshells_spark.similarity.stringjoin import token_jaccard_join
 
-    # pass the cached per-doc ARRAY relation: the rank-sorted index is
-    # then built in-row (zero doc-keyed shuffles) — the long form would
-    # explode + distinct + re-group arrays the cache already holds
+    # the cached per-doc token arrays: at this corpus's small token
+    # universe the rank-sorted index is built in-row from them (zero
+    # doc-keyed shuffles)
     toks = _tokens(spark, sf_dir).select("doc_id", "tokens")
-    return token_jaccard_join(
-        None,
-        id_col="doc_id",
-        token_col="token",
-        threshold=0.8,
-        arrays_df=toks,
-        arrays_col="tokens",
-    )
+    return token_jaccard_join(toks, "doc_id", "tokens", threshold=0.8)
 
 
 # -------------------------------------- correlated-subquery SQL shapes

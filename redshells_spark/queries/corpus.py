@@ -473,7 +473,7 @@ def _token_budget_allocation(spark, sf_dir):
     from redshells_spark.data.sampling import largest_remainder_allocation
 
     docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    toks = space_tokens(F.col("text"), lowercase=False)
     counts = (
         docs.select("source", F.size(toks).alias("nt"))
         .groupBy("source")

@@ -931,10 +931,8 @@ def _min_k_prob_contamination(spark, sf_dir):
     + one window — no shuffle carries text."""
     docs = _t(spark, sf_dir, "documents")
     lm = _kn_lm(spark, sf_dir)
-    from redshells_spark.text.ngram_lm import _bigrams, _tokens
-
     toks = docs.select(
-        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("pos0", "word")
+        "doc_id", F.posexplode(space_tokens(F.col("text"))).alias("pos0", "word")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
     w_lag = Window.partitionBy("doc_id").orderBy("pos")
     prs = toks.withColumn(
@@ -980,43 +978,42 @@ def _min_k_prob_contamination(spark, sf_dir):
 
 
 @session_memo
-def _ppjoin_index(spark, sf_dir):
-    # the rank-sorted per-doc set index is the prefix-filter join's
-    # shared, threshold-independent index, cached IN-SESSION only (memo
-    # + persist, like every _shared.py memo). It is recomputed from
-    # the parquet inputs by every fresh session: no cross-run disk
-    # target, so a bench/oracle invocation never reads a precomputed
-    # intermediate. (task.py's param-hash targets remain the pipeline
-    # feature — tests/test_r6c_ops.py::test_ppjoin_index_task_parity —
-    # but query paths do not use them.)
-    from pyspark import StorageLevel
+def _ppjoin_index(spark, sf_dir) -> tuple[DataFrame, int]:
+    """→ (index, u): the prefix-filter join's shared,
+    threshold-independent rank-sorted shingle index, pinned IN-SESSION
+    only, and its distinct-element count u. Every fresh session
+    recomputes it from the parquet inputs: no cross-run disk target,
+    so a bench/oracle invocation never reads a precomputed
+    intermediate (task.py's param-hash targets remain the pipeline
+    feature — tests/test_r6c_ops.py::test_ppjoin_index_task_parity —
+    but query paths do not use them).
+
+    The ranks are dense 1..u, so the max rank of each set's last
+    (highest-ranked) element IS u; it is observed during the job that
+    materializes the pin, as ``pin_count`` observes its count. The pin
+    is a persist, not a ``localCheckpoint``: the cached relation's
+    measured size lets the planner pick broadcast joins up front, where
+    the checkpoint's estimated size cost prefix_filter_jaccard 2 and
+    containment_dedup_join 3 extra AQE jobs at sf0.01. Feeding u to
+    the ppjoin calls switches verification to the inline bitset
+    popcount path whenever u fits one int64 word (u ≤ BITSET_UNIVERSE;
+    at sf0.1 the shingle universe is 931, so the measured-faster array
+    path runs: u is vocabulary²-bounded by the keep_n=100 dictionary
+    cap, not corpus-proportional, so a small-universe corpus flips to
+    the bitset path automatically at any scale)."""
+    from pyspark.sql import Observation
+    from pyspark.storagelevel import StorageLevel
 
     from redshells_spark.dedup.ppjoin import build_rank_sorted_sets
 
-    sh = _shingles(spark, sf_dir)
-    return build_rank_sorted_sets(
-        sh, "doc_id", "shingle"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-
-@session_memo
-def _ppjoin_universe(spark, sf_dir) -> int:
-    """Distinct-element count of the shared shingle index — the ranks
-    are dense 1..u, so the max rank of the last (highest-ranked)
-    element IS u. One bounded-scalar agg per (session, sf); feeding it
-    to the ppjoin calls switches verification to the inline bitset
-    popcount path whenever u fits one int64 word (u ≤ 64 —
-    BITSET_AUTO_WORDS; at sf0.1 the shingle universe is 931, so the
-    measured-faster array path runs and this value is adaptive
-    plumbing: u is vocabulary²-bounded by the keep_n=100 dictionary
-    cap, not corpus-proportional, so a small-universe corpus flips to
-    the bitset path automatically at any scale)."""
-    u = (
-        _ppjoin_index(spark, sf_dir)
-        .agg(F.max(F.expr("__rk[size(__rk) - 1].__erk")))
-        .collect()[0][0]
+    obs = Observation()
+    index = (
+        build_rank_sorted_sets(_shingles(spark, sf_dir), "doc_id", "shingle")
+        .observe(obs, F.max(F.expr("__rk[size(__rk) - 1].__erk")).alias("u"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    return int(u or 0)
+    index.count()  # materializes the pin; the observation rides along
+    return index, int(obs.get["u"] or 0)
 
 
 @q(
@@ -1076,12 +1073,8 @@ def _prefix_filter_jaccard(spark, sf_dir):
     parquet inputs."""
     from redshells_spark.dedup.ppjoin import pairs_from_rank_sorted
 
-    out = pairs_from_rank_sorted(
-        _ppjoin_index(spark, sf_dir),
-        8,
-        10,
-        element_universe=_ppjoin_universe(spark, sf_dir),
-    )
+    index, u = _ppjoin_index(spark, sf_dir)
+    out = pairs_from_rank_sorted(index, 8, 10, element_universe=u)
     return out.select(
         F.col("id_0").alias("doc_id_0"),
         F.col("id_1").alias("doc_id_1"),
@@ -1200,11 +1193,9 @@ def _containment_pairs(spark, sf_dir):
     popcount verify — see dedup/ppjoin.py:_containment_bitmask)."""
     from redshells_spark.dedup.ppjoin import containment_pairs_from_rank_sorted
 
+    index, u = _ppjoin_index(spark, sf_dir)
     return containment_pairs_from_rank_sorted(
-        _ppjoin_index(spark, sf_dir),
-        8,
-        10,
-        element_universe=_ppjoin_universe(spark, sf_dir),
+        index, 8, 10, element_universe=u
     ).cache()
 
 

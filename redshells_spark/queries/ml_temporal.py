@@ -958,9 +958,7 @@ def _negative_sampling_table(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")
-        ).alias("token")
+        F.explode(space_tokens(F.col("text"))).alias("token")
     )
     return negative_sampling_table(toks)
 

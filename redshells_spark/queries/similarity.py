@@ -9,12 +9,6 @@ from redshells_spark.queries._shared import *  # noqa: F401,F403
 
 # ------------------------------------------------- embeddings / similarity
 
-_COS_SQL = (
-    "list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) / "
-    "(greatest(sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])), 1e-12) * "
-    "greatest(sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])), 1e-12))"
-)
-
 
 @q(
     "dot_product_pairs",

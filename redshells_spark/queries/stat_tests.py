@@ -1029,7 +1029,7 @@ def _mcnemar_rule_compare(spark, sf_dir):
     swapping quality filters (companion to fleiss_kappa_ratings /
     cohen_kappa_positions on the agreement side)."""
     docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")
+    toks = space_tokens(F.col("text"))
     d = docs.select(
         F.when(F.col("n_chars") >= 200, 1).otherwise(0).alias("pred_a"),
         F.when(F.size(toks) >= 40, 1).otherwise(0).alias("pred_b"),

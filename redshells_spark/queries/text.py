@@ -529,7 +529,7 @@ def _corpus_report(spark, sf_dir):
     from redshells_spark.text.analysis import fingerprint as add_fp
 
     docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    toks = space_tokens(F.col("text"), lowercase=False)
     base = add_fp(docs).select(
         "source",
         F.size(toks).alias("n_tok"),

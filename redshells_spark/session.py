@@ -18,6 +18,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _host_driver_memory() -> str:
+    """Half of the host's physical memory, at most 24g: a 24g heap on a
+    smaller host lets the driver JVM grow until the kernel kills it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, total // 2 // 2**20)}m"
+
 _DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -34,7 +41,9 @@ _DEFAULT_CONFS: dict[str, str] = {
     # the executor heap: 8g thrashed GC once a bench session accumulated
     # ~30 queries of cached relations (pagerank 12.4s -> 4.3s at 24g).
     # On a real cluster spark-submit overrides this per deployment.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _host_driver_memory()
+    ),
 }
 
 

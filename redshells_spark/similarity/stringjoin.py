@@ -31,8 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_LAST_TJJ_DOCARR: DataFrame | None = None
-
 
 def _segments(k: int) -> str:
     """SQL array of (seg_no, start, len) evenly partitioning a string
@@ -142,23 +140,15 @@ def edit_distance_join(
 
 
 def token_jaccard_join(
-    tokens: DataFrame | None,
+    docs: DataFrame,
     id_col: str,
-    token_col: str,
+    tokens_col: str,
     threshold: float,
-    arrays_df: DataFrame | None = None,
-    arrays_col: str = "tokens",
 ) -> DataFrame:
     """Self-join: all id pairs whose *distinct-token sets* have
-    Jaccard ≥ ``threshold``. Input is long form (id, token); duplicate
-    tokens are collapsed (set semantics, as in AllPairs).
-
-    ``arrays_df`` (optional, replaces ``tokens``): the same relation
-    in per-doc ARRAY form (``id_col``, ``arrays_col``) — e.g. the
-    shared tokenized cache. When given, the rank-sorted index is built
-    array-natively (build_rank_sorted_sets_from_arrays): at a small
-    token universe that is zero doc-keyed shuffles instead of the long
-    form's distinct + groupBy collect_list.
+    Jaccard ≥ ``threshold``. Input is per-doc token arrays
+    (``id_col``, ``tokens_col``) — e.g. the shared tokenized relation;
+    duplicate tokens are collapsed (set semantics, as in AllPairs).
 
     Returns ``id1 < id2, inter, n1, n2, jaccard`` (jaccard rounded 4).
 
@@ -185,52 +175,25 @@ def token_jaccard_join(
     # division rounded to 4, as before.
     from fractions import Fraction
 
-    from pyspark.storagelevel import StorageLevel
-
     from redshells_spark.dedup.ppjoin import (
-        build_rank_sorted_sets,
         build_rank_sorted_sets_from_arrays,
         pairs_from_rank_sorted,
     )
 
     frac = Fraction(str(threshold)).limit_denominator(10**6)
     num, den = frac.numerator, frac.denominator
+    # at a small token universe the index is built in-row and the
+    # universe comes back with it (inline bitset verify); above the
+    # one-word gate it is None and the array path runs.
     # collapse_identical: docs with bit-identical token sets are
     # grouped before the candidate algebra — at a small token universe
     # most qualifying pairs sit inside duplicate-set groups, and the
-    # expansion is membership algebra instead of per-pair verification
-    # Materialize the index once (Vernica et al.'s ordered-sets step;
-    # MEMORY_AND_DISK spills rather than OOMs at 100×, rolling handle
-    # holds one corpus copy): the universe probe plus the collapse
-    # groupBy would otherwise each re-run the tokenize→rank lineage
-    # (~1.3s × 2 extra at sf0.1).
-    u = None
-    if arrays_df is not None:
-        docarr, u = build_rank_sorted_sets_from_arrays(
-            arrays_df, id_col, arrays_col
-        )
-    else:
-        t = tokens.select(
-            F.col(id_col).alias("__id"), F.col(token_col).alias("token")
-        ).distinct()
-        docarr = build_rank_sorted_sets(t, "__id", "token")
-    docarr = docarr.persist(StorageLevel.MEMORY_AND_DISK)
-    global _LAST_TJJ_DOCARR
-    if _LAST_TJJ_DOCARR is not None:
-        _LAST_TJJ_DOCARR.unpersist()
-    _LAST_TJJ_DOCARR = docarr
-    if u is None:
-        # bounded driver scalar: the element-universe size (ranks are
-        # dense 1..u, so the max rank of the last — highest-ranked —
-        # element IS u). Vocabulary-sized by definition, one agg over
-        # the persisted index; ≤ 64 switches verification to int64
-        # bitmask popcounts (exact — see pairs_from_rank_sorted).
-        u = docarr.agg(
-            F.max(F.expr("__rk[size(__rk) - 1].__erk")).alias("u")
-        ).collect()[0]["u"]
+    # expansion is membership algebra instead of per-pair verification.
+    # That grouping (pinned) is the index's only reader, so the index
+    # itself needs no pin.
+    docarr, u = build_rank_sorted_sets_from_arrays(docs, id_col, tokens_col)
     out = pairs_from_rank_sorted(
-        docarr, num, den, collapse_identical=True,
-        element_universe=int(u or 0),
+        docarr, num, den, collapse_identical=True, element_universe=u
     )
     return out.select(
         F.col("id_0").alias("id1"),

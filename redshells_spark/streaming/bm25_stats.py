@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from redshells_spark.streaming.state import fold_state
-from redshells_spark.text.bm25 import _tokens
+from redshells_spark.text.tokenize import space_tokens
 
 
 @dataclass
@@ -39,7 +39,7 @@ class Bm25StatsIngest:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         base = batch_df.select(
-            self.id_column, F.explode(_tokens(self.text_column)).alias("term")
+            self.id_column, F.explode(space_tokens(F.col(self.text_column))).alias("term")
         )
         dl = base.groupBy(self.id_column).agg(F.count(F.lit(1)).alias("dl"))
         batch_tot = dl.agg(
@@ -81,7 +81,7 @@ def corpus_index_stats(
 ) -> tuple[DataFrame, DataFrame]:
     """Batch ground truth for the streamed state: (term_stats, totals)
     with identical schemas — the parity target for any micro-batching."""
-    base = docs.select(id_column, F.explode(_tokens(text_column)).alias("term"))
+    base = docs.select(id_column, F.explode(space_tokens(F.col(text_column))).alias("term"))
     dl = base.groupBy(id_column).agg(F.count(F.lit(1)).alias("dl"))
     totals = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -42,18 +42,15 @@ def build_benchmark_shingle_index(
     shingle_len: int = 4,
     id_column: str = "doc_id",
     text_column: str = "text",
-    use_xxhash: bool = False,
 ) -> int:
     """Batch step: persist the benchmark's DISTINCT positional-shingle
-    keys to ``path`` (32-hex md5 strings, or int64 xxhash). Returns the
-    number of distinct shingles written."""
+    keys to ``path`` (32-hex md5 strings). Returns the number of
+    distinct shingles written."""
     toks = tokenize_on_space(
         benchmark_docs, text_column, "tokens", lowercase=True
     )
     sh = (
-        positional_shingles(
-            toks, shingle_len, id_column, "tokens", use_xxhash
-        )
+        positional_shingles(toks, shingle_len, id_column, "tokens")
         .select("shingle")
         .distinct()
     )
@@ -69,7 +66,6 @@ class SpanFilterIngest:
     shingle_len: int = 4
     id_column: str = "doc_id"
     text_column: str = "text"
-    use_xxhash: bool = False
     stats: list[dict] = field(default_factory=list)
 
     def _p(self, name: str) -> str:
@@ -83,9 +79,7 @@ class SpanFilterIngest:
         toks = tokenize_on_space(
             batch_df, self.text_column, "tokens", lowercase=True
         )
-        sh = positional_shingles(
-            toks, self.shingle_len, self.id_column, "tokens", self.use_xxhash
-        )
+        sh = positional_shingles(toks, self.shingle_len, self.id_column, "tokens")
         hits = sh.join(
             F.broadcast(bench), on="shingle", how="leftsemi"
         ).select("doc_id", "pos")

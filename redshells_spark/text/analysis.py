@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from redshells_spark.schema import require_columns
+from redshells_spark.text.tokenize import space_tokens
 
 # Tiny language-marker stopword sets. An n-gram/stopword heuristic, not
 # a trained model — deterministic, SQL-expressible, and cheap; swap in
@@ -27,15 +28,11 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _tokens(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), " "), lambda t: t != "")
-
-
 def token_count(df: DataFrame, text_column: str = "text") -> DataFrame:
     """Whitespace token count + a BPE-ish subword estimate
     (≈ chars/4 heuristic used by LLM pipelines for budget accounting)."""
     require_columns(df, [text_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     return (
         df.withColumn("n_tokens", F.size(toks))
         .withColumn("n_words", F.size(F.array_distinct(toks)))
@@ -52,7 +49,7 @@ def quality_score(df: DataFrame, text_column: str = "text") -> DataFrame:
     uppercase ratio. Mirrors C4/Gopher-style filter signals."""
     require_columns(df, [text_column])
     text = F.col(text_column)
-    toks = _tokens(text)
+    toks = space_tokens(text)
     n_chars = F.length(text)
     n_tokens = F.size(toks)
     stop = LANG_MARKERS["en"]
@@ -83,7 +80,7 @@ def detect_language(df: DataFrame, text_column: str = "text") -> DataFrame:
     argmax marker-hit count (ties → language code asc), 'und' when no
     marker hits."""
     require_columns(df, [text_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     out = df
     def _hits(markers: tuple[str, ...]) -> Column:
         return F.size(F.filter(toks, lambda t: t.isin(*markers)))
@@ -181,7 +178,7 @@ def repetition_signals(
 
     One explode + two aggregations, all partial map-side; no UDFs."""
     require_columns(df, [text_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     base = df.select("doc_id", toks.alias("__t"))
     grams = base.select(
         "doc_id",
@@ -237,7 +234,7 @@ def gopher_quality_rules(df: DataFrame, text_column: str = "text") -> DataFrame:
     """
     require_columns(df, [text_column])
     text = F.col(text_column)
-    toks = _tokens(text)
+    toks = space_tokens(text)
     n_tokens = F.size(toks)
     n_tok_d = F.greatest(n_tokens, F.lit(1)).cast("double")
     wl_sum = F.length(F.concat_ws("", toks))
@@ -301,7 +298,7 @@ def token_entropy_signals(
     (0 when a doc has a single distinct token).
     """
     require_columns(df, [id_column, text_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     c = (
         df.select(id_column, F.explode(toks).alias("__tok"))
         .groupBy(id_column, "__tok")
@@ -344,7 +341,7 @@ def gopher_repetition_battery(
     shuffle stage), keyed on the doc id.
     """
     require_columns(df, [id_column, text_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     base = df.select(
         id_column,
         toks.alias("__t"),

@@ -25,12 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from redshells_spark.schema import require_columns
-
-
-def _tokens(text_column: str):
-    return F.filter(
-        F.split(F.lower(F.col(text_column)), " "), lambda t: t != ""
-    )
+from redshells_spark.text.tokenize import space_tokens
 
 
 def _sql_quote(term: str) -> str:
@@ -56,7 +51,7 @@ def bm25_topk(
     engine-independent ranking (tie-break on id). ``query_terms`` are
     matched as lowercase whole tokens."""
     require_columns(docs, [id_column, text_column])
-    # corpus tokens are lowercased by _tokens; lowercase the query the
+    # corpus tokens are lowercased by space_tokens; lowercase the query the
     # same way (matching bm25_batch_scores) so uppercase query terms
     # don't silently match nothing
     query_terms = tuple(dict.fromkeys(t.lower() for t in query_terms))
@@ -64,7 +59,7 @@ def bm25_topk(
         return docs.select(
             F.col(id_column), F.lit(0.0).alias("score")
         ).limit(0)
-    toks = _tokens(text_column)
+    toks = space_tokens(F.col(text_column))
     # ONE corpus tokenize pass (the same per-doc dl + per-term tf fold
     # as bm25_wand_topk): doc length and query-term tfs in a single
     # groupBy, pinned so the corpus stats and the postings unpivot
@@ -133,7 +128,7 @@ def bm25_batch_scores(
     on term so the postings relation shuffles once regardless of how
     many queries ride along."""
     require_columns(queries, [query_id_column, term_column])
-    toks = _tokens(text_column)
+    toks = space_tokens(F.col(text_column))
     base = docs.select(id_column, F.explode(toks).alias("term"))
     dl = base.groupBy(id_column).agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
@@ -221,7 +216,7 @@ def bm25_wand_topk(
         return docs.select(
             F.col(id_column), F.lit(0.0).alias("score")
         ).limit(0)
-    toks = _tokens(text_column)
+    toks = space_tokens(F.col(text_column))
     base = docs.select(id_column, F.explode(toks).alias("term"))
     tf_cols = [
         F.sum(F.when(F.col("term") == t, 1).otherwise(0))

@@ -34,12 +34,9 @@ from pyspark.sql import functions as F
 
 from redshells_spark.operators.observe import pin_count
 from redshells_spark.schema import require_columns
+from redshells_spark.text.tokenize import space_tokens
 
 BOS = "␟<s>"  # sentinel that cannot collide with a whitespace token
-
-
-def _tokens(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), " "), lambda t: t != "")
 
 
 def _bigrams(tokens: Column) -> Column:
@@ -88,7 +85,7 @@ def train_bigram_lm(
     prunes rare bigrams from the model table (context counts and V stay
     exact so probabilities remain a proper distribution)."""
     require_columns(docs, [text_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     grams = docs.select(F.explode(_bigrams(toks)).alias("g")).select("g.prev", "g.word")
     bigram_counts = grams.groupBy("prev", "word").agg(F.count(F.lit(1)).alias("n"))
     if min_count > 1:
@@ -114,7 +111,7 @@ def score_perplexity(
     is trained once on a bounded clean corpus, then scores petabytes);
     leave False to let AQE pick for a large in-domain LM."""
     require_columns(docs, [text_column, doc_id_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     pairs = docs.select(
         F.col(doc_id_column).alias("doc_id"), F.explode(_bigrams(toks)).alias("g")
     ).select("doc_id", "g.prev", "g.word")
@@ -171,7 +168,7 @@ def train_kn_bigram_lm(docs: DataFrame, text_column: str = "text") -> KneserNeyL
     the pin itself observes the type count, and without the pin each
     consumer re-ran the corpus explode."""
     require_columns(docs, [text_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     grams = docs.select(F.explode(_bigrams(toks)).alias("g")).select(
         "g.prev", "g.word"
     )
@@ -204,7 +201,7 @@ def score_kn_perplexity(
     token-for-token in an oracle; export with round-4.
     """
     require_columns(docs, [text_column, doc_id_column])
-    toks = _tokens(F.col(text_column))
+    toks = space_tokens(F.col(text_column))
     pairs = docs.select(
         F.col(doc_id_column).alias("doc_id"), F.explode(_bigrams(toks)).alias("g")
     ).select("doc_id", "g.prev", "g.word")

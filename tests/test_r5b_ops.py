@@ -101,28 +101,6 @@ def test_remove_repeated_spans_transform(spark):
     assert out[2]["kept_tokens"] == [] and out[2]["n_removed"] == 5
 
 
-def test_xxhash_path_matches_md5_classification(spark):
-    from redshells_spark.dedup.spans import repeated_span_report
-
-    df = _tokens_df(
-        spark,
-        [
-            (1, ["x", "a", "b", "c", "d", "e", "y"]),
-            (2, ["a", "b", "c", "d", "e", "q"]),
-            (3, ["u", "v", "w", "m", "n"]),
-        ],
-    )
-    md5 = sorted(
-        repeated_span_report(df, 3, 2, use_xxhash=False).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    xx = sorted(
-        repeated_span_report(df, 3, 2, use_xxhash=True).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    assert [r.asDict() for r in md5] == [r.asDict() for r in xx]
-
-
 # ------------------------------------------------------------- phrase
 
 

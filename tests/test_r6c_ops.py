@@ -163,11 +163,12 @@ def test_prefix_filter_equals_brute_force(spark):
     }
     rows = [(i, e) for i, els in sets.items() for e in els]
     df = spark.createDataFrame(rows, "doc_id long, shingle string")
-    from redshells_spark.dedup.ppjoin import prefix_filter_jaccard_pairs
+    from redshells_spark.dedup.ppjoin import build_rank_sorted_sets, pairs_from_rank_sorted
 
+    idx = build_rank_sorted_sets(df, "doc_id", "shingle")
     got = {
         (r["id_0"], r["id_1"]): (r["inter"], r["union_sz"])
-        for r in prefix_filter_jaccard_pairs(df, "doc_id", "shingle", 5, 10).collect()
+        for r in pairs_from_rank_sorted(idx, 5, 10).collect()
     }
     want = {}
     for a, b in itertools.combinations(sorted(sets), 2):
@@ -202,11 +203,12 @@ def test_prefix_filter_randomized_brute_force(spark):
         sets[i] = s
     rows = [(i, e) for i, els in sets.items() for e in els]
     df = spark.createDataFrame(rows, "doc_id long, shingle string")
-    from redshells_spark.dedup.ppjoin import prefix_filter_jaccard_pairs
+    from redshells_spark.dedup.ppjoin import build_rank_sorted_sets, pairs_from_rank_sorted
 
+    idx = build_rank_sorted_sets(df, "doc_id", "shingle")
     got = {
         (r["id_0"], r["id_1"]): (r["inter"], r["union_sz"])
-        for r in prefix_filter_jaccard_pairs(df, "doc_id", "shingle", 8, 10).collect()
+        for r in pairs_from_rank_sorted(idx, 8, 10).collect()
     }
     want = {}
     for a, b in itertools.combinations(sorted(sets), 2):

@@ -32,14 +32,10 @@ def test_blocked_ppjoin_equals_bruteforce(spark):
     }
     rows = [(i, b, e) for i, (b, s) in data.items() for e in s]
     df = spark.createDataFrame(rows, "doc_id long, blk string, el string")
-    from redshells_spark.dedup.ppjoin import prefix_filter_jaccard_pairs
+    from redshells_spark.dedup.ppjoin import build_rank_sorted_sets, pairs_from_rank_sorted
 
-    got = {
-        (r["id_0"], r["id_1"])
-        for r in prefix_filter_jaccard_pairs(
-            df, "doc_id", "el", 5, 10, block_column="blk"
-        ).collect()
-    }
+    idx = build_rank_sorted_sets(df, "doc_id", "el", block_column="blk")
+    got = {(r["id_0"], r["id_1"]) for r in pairs_from_rank_sorted(idx, 5, 10).collect()}
     want = set()
     for i, j in combinations(sorted(data), 2):
         bi, si = data[i]
@@ -52,11 +48,10 @@ def test_blocked_ppjoin_equals_bruteforce(spark):
 def test_blocked_ppjoin_output_carries_block(spark):
     rows = [(1, "a", "x"), (1, "a", "y"), (2, "a", "x"), (2, "a", "y")]
     df = spark.createDataFrame(rows, "doc_id long, blk string, el string")
-    from redshells_spark.dedup.ppjoin import prefix_filter_jaccard_pairs
+    from redshells_spark.dedup.ppjoin import build_rank_sorted_sets, pairs_from_rank_sorted
 
-    out = prefix_filter_jaccard_pairs(
-        df, "doc_id", "el", 5, 10, block_column="blk"
-    ).collect()
+    idx = build_rank_sorted_sets(df, "doc_id", "el", block_column="blk")
+    out = pairs_from_rank_sorted(idx, 5, 10).collect()
     assert [(r["block"], r["id_0"], r["id_1"], r["jac_e4"]) for r in out] == [
         ("a", 1, 2, 10000)
     ]
@@ -65,9 +60,9 @@ def test_blocked_ppjoin_output_carries_block(spark):
 def test_unblocked_ppjoin_sizes_in_output(spark):
     rows = [(1, "x"), (1, "y"), (1, "z"), (2, "x"), (2, "y")]
     df = spark.createDataFrame(rows, "doc_id long, el string")
-    from redshells_spark.dedup.ppjoin import prefix_filter_jaccard_pairs
+    from redshells_spark.dedup.ppjoin import build_rank_sorted_sets, pairs_from_rank_sorted
 
-    out = prefix_filter_jaccard_pairs(df, "doc_id", "el", 5, 10).collect()
+    out = pairs_from_rank_sorted(build_rank_sorted_sets(df, "doc_id", "el"), 5, 10).collect()
     assert [(r["id_0"], r["id_1"], r["sz_0"], r["sz_1"], r["inter"]) for r in out] == [
         (1, 2, 3, 2, 2)
     ]
@@ -108,17 +103,22 @@ def test_containment_floor_is_subset(spark):
 
 
 def test_containment_bitmask_equals_array_path(spark):
-    # force_bitset switches containment verification to the inline
-    # bitset popcount path (the automatic gate stops at one word —
-    # BITSET_AUTO_WORDS — so universe 150 needs the flag) — must be
-    # row-identical to the array_intersect path, with and without the
-    # min-|A| floor, and the floored relation must equal the unfloored
-    # filtered on size_a (the registry's shared-cache contract).
-    # Universe of 150 exercises the multi-word (3-long) bitset.
+    # a universe of 64 fills one bitset word (BITSET_UNIVERSE), so
+    # passing it switches containment verification to the inline
+    # popcount path — which must be row-identical to the
+    # array_intersect path, with and without the min-|A| floor, and
+    # the floored relation must equal the unfloored filtered on size_a
+    # (the registry's shared-cache contract). Rank 64 sets the sign bit.
     import random
 
+    from redshells_spark.dedup.ppjoin import (
+        BITSET_UNIVERSE,
+        build_rank_sorted_sets,
+        containment_pairs_from_rank_sorted,
+    )
+
     rng = random.Random(13)
-    universe = [f"e{i:03d}" for i in range(150)]
+    universe = [f"e{i:03d}" for i in range(64)]
     rows = []
     for d in range(1, 41):
         base = rng.sample(universe, rng.randint(2, 40))
@@ -126,31 +126,24 @@ def test_containment_bitmask_equals_array_path(spark):
         if d % 5 == 0:  # superset doc: base + extras (containment hit)
             extra = rng.sample([e for e in universe if e not in base], 10)
             rows += [(d + 100, e) for e in base + extra]
-    from redshells_spark.dedup.ppjoin import (
-        build_rank_sorted_sets,
-        containment_pairs_from_rank_sorted,
-    )
-
     idx = build_rank_sorted_sets(
         spark.createDataFrame(rows, "doc_id long, el string"), element_column="el"
     )
+    u = len({e for _, e in rows})
+    assert u == BITSET_UNIVERSE
 
     def rows_of(df):
         return {tuple(r) for r in df.collect()}
 
     arr = rows_of(containment_pairs_from_rank_sorted(idx, 8, 10))
-    bm = rows_of(
-        containment_pairs_from_rank_sorted(
-            idx, 8, 10, element_universe=150, force_bitset=True
-        )
-    )
+    bm = rows_of(containment_pairs_from_rank_sorted(idx, 8, 10, element_universe=u))
     assert bm == arr and len(arr) > 0
     arr_f = rows_of(
         containment_pairs_from_rank_sorted(idx, 8, 10, min_size_a=10)
     )
     bm_f = rows_of(
         containment_pairs_from_rank_sorted(
-            idx, 8, 10, min_size_a=10, element_universe=150, force_bitset=True
+            idx, 8, 10, min_size_a=10, element_universe=u
         )
     )
     filtered = {t for t in arr if t[3] >= 10}  # size_a is column 4
@@ -398,11 +391,12 @@ def test_collapsed_pairs_equal_plain(spark):
 
 
 @pytest.mark.slow  # measured >=10s (round-9 tiering)
-def test_array_native_index_equals_long_form(spark):
+def test_array_native_index_equals_long_form(spark, monkeypatch):
     # build_rank_sorted_sets_from_arrays must produce the EXACT index
     # (ranks, order, sizes) and the exact pairs the long-form builder
     # does — including dup tokens inside arrays (set semantics), an
     # empty-array doc (absent from both), and the >cap fallback path
+    from redshells_spark.dedup import ppjoin
     from redshells_spark.dedup.ppjoin import (
         build_rank_sorted_sets,
         build_rank_sorted_sets_from_arrays,
@@ -436,9 +430,8 @@ def test_array_native_index_equals_long_form(spark):
     assert got == want and want
 
     # cap exceeded -> long-form fallback, universe None, same index
-    fb_idx, fb_u = build_rank_sorted_sets_from_arrays(
-        docs, "doc_id", "tokens", max_map_universe=4
-    )
+    monkeypatch.setattr(ppjoin, "BITSET_UNIVERSE", 4)
+    fb_idx, fb_u = build_rank_sorted_sets_from_arrays(docs, "doc_id", "tokens")
     assert fb_u is None
     assert _idx_rows(fb_idx) == _idx_rows(want_idx)
 
@@ -480,53 +473,6 @@ def test_bitmask_verify_equals_array_path(spark):
             )
         )
         assert bm_c == arr_c == arr
-
-
-@pytest.mark.slow  # measured >=10s (round-9 tiering)
-def test_multiword_bitset_verify_equals_array_path(spark):
-    # element_universe in (64, 64*BITSET_MAX_WORDS] switches to the
-    # array<long> bitset verification (n_words ≥ 2) — must be
-    # row-identical to the array_intersect path; universe of 150 spans
-    # 3 words so bits land in every word and across word boundaries
-    import random
-
-    rng = random.Random(7)
-    universe = [f"e{i:03d}" for i in range(150)]
-    rows = []
-    for d in range(1, 61):
-        base = rng.sample(universe, rng.randint(3, 40))
-        rows += [(d, e) for e in base]
-        if d % 4 == 0:  # exact duplicate of the previous doc's set
-            rows += [(d + 200, e) for e in base]
-    from redshells_spark.dedup.ppjoin import (
-        build_rank_sorted_sets,
-        pairs_from_rank_sorted,
-    )
-
-    idx = build_rank_sorted_sets(
-        spark.createDataFrame(rows, "doc_id long, el string"), element_column="el"
-    )
-    for num, den in ((3, 10), (5, 10), (8, 10)):
-        arr = _pairs_set(pairs_from_rank_sorted(idx, num, den))
-        bm = _pairs_set(
-            pairs_from_rank_sorted(
-                idx, num, den, element_universe=150, force_bitset=True
-            )
-        )
-        assert bm == arr
-        bm_c = _pairs_set(
-            pairs_from_rank_sorted(
-                idx,
-                num,
-                den,
-                collapse_identical=True,
-                element_universe=150,
-                force_bitset=True,
-            )
-        )
-        assert bm_c == arr
-    # at least one threshold must produce pairs for the test to mean anything
-    assert len(_pairs_set(pairs_from_rank_sorted(idx, 3, 10))) > 0
 
 
 def test_collapsed_pairs_equal_plain_blocked(spark):

@@ -3,6 +3,7 @@ only place in ``queries/`` that keys one."""
 
 from __future__ import annotations
 
+import ast
 import inspect
 import re
 from pathlib import Path
@@ -57,6 +58,7 @@ def test_non_dataframe_values_are_evicted_without_error(spark, tmp_path):
     first = pair(spark, paths[0])
     for p in paths:
         scalar(spark, p)
+    assert first[0].storageLevel == StorageLevel.NONE  # a tuple's frame is released too
     assert pair(spark, paths[0]) is not first and scalar(spark, paths[0]) == 7
     assert pair_calls == [paths[0]] * 2 and scalar_calls == paths + [paths[0]]
 
@@ -82,3 +84,16 @@ def test_no_cache_is_keyed_outside_session_memo():
     assert {f: n for f, n in app_ids.items() if n} == {"_shared.py": helper}
     cache_dict = re.compile(r"^_\w*_CACHE\s*(:[^=]*)?=", re.M)
     assert [f for f in package.rglob("*.py") if cache_dict.search(f.read_text())] == []
+    # nor a module-global DataFrame handle rebound by a ``global``
+    # statement: such a handle outlives its session, and releasing it
+    # from the next session calls into a stopped context
+    globals_, handles = [], []
+    for f in package.rglob("*.py"):
+        tree = ast.parse(f.read_text())
+        globals_ += [f.name for n in ast.walk(tree) if isinstance(n, ast.Global)]
+        handles += [
+            f"{f.name}:{n.lineno}"
+            for n in tree.body
+            if isinstance(n, ast.AnnAssign) and "DataFrame" in ast.unparse(n.annotation)
+        ]
+    assert globals_ == [] and handles == []

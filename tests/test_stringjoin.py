@@ -8,6 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from redshells_spark.dedup.ppjoin import BITSET_UNIVERSE
 from redshells_spark.similarity.stringjoin import edit_distance_join, token_jaccard_join
 
 
@@ -60,10 +61,21 @@ def test_edit_distance_join_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-@pytest.mark.parametrize("tau", [0.5, 0.8])
-def test_token_jaccard_join_equals_brute_force(spark, tau):
+@pytest.mark.parametrize(
+    "tau,n_vocab",
+    [
+        # 30 tokens: the in-row index and the inline bitset verify
+        pytest.param(0.5, 30, id="0.5"),
+        pytest.param(0.8, 30, id="0.8"),
+        # 100 tokens: above one bitset word, so the long-form index
+        # fallback and the array verify
+        pytest.param(0.5, 100, id="0.5-fallback"),
+        pytest.param(0.8, 100, id="0.8-fallback"),
+    ],
+)
+def test_token_jaccard_join_equals_brute_force(spark, tau, n_vocab):
     rng = random.Random(7)
-    vocab = [f"t{i}" for i in range(30)]
+    vocab = [f"t{i}" for i in range(n_vocab)]
     sets = {i: set(rng.sample(vocab, rng.randint(3, 12))) for i in range(40)}
     # plant near-duplicates
     for i in range(40, 48):
@@ -72,24 +84,26 @@ def test_token_jaccard_join_equals_brute_force(spark, tau):
         if len(s) > 3:
             s.discard(next(iter(s)))
         sets[i] = s
-    rows = [(i, t) for i, ts in sets.items() for t in ts]
+    assert (len(set().union(*sets.values())) > BITSET_UNIVERSE) == (n_vocab > 30)
     expected = set()
     for a, b in itertools.combinations(sorted(sets), 2):
         inter = len(sets[a] & sets[b])
         union = len(sets[a] | sets[b])
         if union and inter / union >= tau:
             expected.add((a, b, inter))
-    df = spark.createDataFrame(rows, "id bigint, token string")
+    df = spark.createDataFrame(
+        [(i, sorted(ts)) for i, ts in sets.items()], "id bigint, tokens array<string>"
+    )
     got = {
         (r["id1"], r["id2"], r["inter"])
-        for r in token_jaccard_join(df, "id", "token", threshold=tau).collect()
+        for r in token_jaccard_join(df, "id", "tokens", threshold=tau).collect()
     }
     assert got == expected
 
 
 def test_token_jaccard_join_set_semantics(spark):
     # duplicate tokens collapse before sizing
-    rows = [(1, "a"), (1, "a"), (1, "b"), (2, "a"), (2, "b"), (2, "b")]
-    df = spark.createDataFrame(rows, "id bigint, token string")
-    out = token_jaccard_join(df, "id", "token", threshold=0.9).collect()
+    rows = [(1, ["a", "a", "b"]), (2, ["a", "b", "b"])]
+    df = spark.createDataFrame(rows, "id bigint, tokens array<string>")
+    out = token_jaccard_join(df, "id", "tokens", threshold=0.9).collect()
     assert len(out) == 1 and out[0]["jaccard"] == 1.0 and out[0]["n1"] == 2
