@@ -16,7 +16,7 @@ def main() -> None:
     from pyspark.sql import Window
 
     from redshells_spark.functions.vector import cosine_similarity
-    from redshells_spark.similarity.allpairs import matmul_topk
+    from redshells_spark.similarity.ann import brute_force_topk
     from redshells_spark.similarity.binary import binary_quantize, hamming_topk
     from redshells_spark.similarity.quantize import int8_reconstruction_report
 
@@ -29,7 +29,7 @@ def main() -> None:
     queries = emb.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    exact = matmul_topk(queries, emb, k=k)
+    exact = brute_force_topk(queries, emb, k=k)
     truth = {
         (r["query_id"], r["vec_id"]) for r in exact.collect()
     }

@@ -387,7 +387,6 @@ def train_gcmc(
     encoder_size: int = 16,
     epochs: int = 60,
     learning_rate: float = 0.01,
-    dropout: float = 0.0,
     max_data_size: int = 50_000_000,
     seed: int = 42,
     verbose: bool = False,

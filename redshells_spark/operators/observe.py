@@ -29,9 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
 
-def audit_metrics(
-    df: DataFrame, null_check_cols: list[str] | None = None
-) -> list[Column]:
+def audit_metrics(null_check_cols: list[str] | None = None) -> list[Column]:
     """Standard publish-audit expression set: row count + per-column
     null counts (+ add your own to the list)."""
     cols = [F.count(F.lit(1)).alias("n_rows")]

@@ -27,7 +27,7 @@ from redshells_spark.functions.vector import dot_product
 from redshells_spark.operators.aggregates import sum_embeddings_by_key
 from redshells_spark.operators.joins import lookup_join_embedding
 from redshells_spark.operators.topk import per_group_topk
-from redshells_spark.similarity.allpairs import matmul_topk
+from redshells_spark.similarity.ann import brute_force_topk
 
 
 def calculate_word_embedding(
@@ -118,7 +118,7 @@ def calculate_word_item_similarity(
     """Two-stage retrieval per word → (word, item_id, similarity).
 
     Stage 1: candidate generation — by default the exact BLAS
-    dot-product top-N₁ per word (``matmul_topk``); pass
+    dot-product top-N₁ per word (``brute_force_topk``); pass
     ``candidate_fn(queries, corpus, k) -> (query_id, vec_id, score)``
     to swap in the approximate tiers at scale, e.g.
     ``lambda q, c, k: lsh_topk(q, c, k=k, multiprobe=1)`` or an
@@ -132,7 +132,7 @@ def calculate_word_item_similarity(
         F.col(item_key).alias("vec_id"), "embedding"
     )
     if candidate_fn is None:
-        candidates = matmul_topk(queries, corpus, k=prequery_return_size, metric="dot")
+        candidates = brute_force_topk(queries, corpus, k=prequery_return_size, metric="dot")
     else:
         candidates = candidate_fn(queries, corpus, prequery_return_size)
     stage1 = candidates.select(

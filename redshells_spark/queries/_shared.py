@@ -117,6 +117,18 @@ MEMO_PATHS = 4
 _MEMO: dict[tuple[str, str], dict[Callable, object]] = {}  # LRU first
 
 
+def _release(df: DataFrame) -> None:
+    """Free the storage a memoized frame pins. A ``localCheckpoint``
+    pin is a ``LogicalRDD`` whose checkpointed RDD ``unpersist()`` on
+    the frame does not reach; it is unpersisted directly. Anything else
+    (``.cache()``/``persist()``) is ``unpersist()``-ed."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(True)
+    else:
+        df.unpersist()
+
+
 def session_memo(build):
     """Memoize a ``build(spark, sf_dir)`` per (session, sf_dir) path.
 
@@ -124,10 +136,11 @@ def session_memo(build):
     keeps its ``storageLevel``); each builder keeps its own pin choice.
     Data under ``sf_dir`` is immutable within a session. When a
     ``MEMO_PATHS + 1``-th path arrives, the least recently used path is
-    dropped and its DataFrames, also those in a returned tuple, are
-    ``unpersist()``-ed. Paths of another
-    applicationId belong to a stopped context and are dropped without
-    calling into Spark."""
+    dropped and the storage of its DataFrames, also those in a returned
+    tuple, is released (:func:`_release`). A caller must not hold an
+    evicted memo's frame: a released checkpoint raises on its next use.
+    Paths of another applicationId belong to a stopped context and are
+    dropped without calling into Spark."""
 
     @functools.wraps(build)
     def memoized(spark: SparkSession, sf_dir: str):
@@ -140,7 +153,7 @@ def session_memo(build):
             for v in _MEMO.pop(next(iter(_MEMO))).values():
                 for df in v if isinstance(v, tuple) else (v,):
                     if isinstance(df, DataFrame):
-                        df.unpersist()
+                        _release(df)
         if build not in values:
             values[build] = build(spark, sf_dir)
         return values[build]

@@ -39,18 +39,17 @@ def _dot_product_pairs(spark, sf_dir):
        WHERE rn <= 10""",
 )
 def _brute_force_topk(spark, sf_dir):
-    # exact top-k via the BLAS matmul path (mapInPandas batch matmul +
-    # partial top-k) — identical results to the Catalyst
-    # brute_force_topk (pinned in tests/test_ann_recall.py) but ~10×
-    # faster: the higher-order-function cosine interprets ~dim·3 lambda
-    # steps per pair. Verified exact against the DuckDB oracle here.
-    from redshells_spark.similarity.allpairs import matmul_topk
+    # exact top-k on the block kernel (similarity/ann.py): one BLAS
+    # matmul per corpus batch against the broadcast queries, a partial
+    # per-query cut in the final (score desc, vec_id asc) order, then
+    # the per-query window. Verified exact against the DuckDB oracle.
+    from redshells_spark.similarity.ann import brute_force_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 200).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = matmul_topk(queries, emb, k=10)
+    out = brute_force_topk(queries, emb, k=10)
     return out.select(
         "query_id", "vec_id", _r4(F.col("score"), "score"), F.col("rank").cast("long").alias("rank")
     )
@@ -482,11 +481,10 @@ def _ann_recall_report(spark, sf_dir):
     """Offline ANN quality audit: per-query recall@10 of the
     multiprobe-LSH stage against the exact top-10 (the number a serving
     team monitors before trading recall for latency). Composes the two
-    already-oracled retrieval paths — the exact side on the BLAS matmul
-    route, the LSH side on the literal-hyperplane route — and counts
-    the overlap; the DuckDB oracle rebuilds both rankings in SQL."""
-    from redshells_spark.similarity.allpairs import matmul_topk
-    from redshells_spark.similarity.ann import lsh_topk
+    already-oracled retrieval paths — the exact block-kernel top-k and
+    the literal-hyperplane LSH candidates — and counts the overlap; the
+    DuckDB oracle rebuilds both rankings in SQL."""
+    from redshells_spark.similarity.ann import brute_force_topk, lsh_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 200).select(
@@ -495,7 +493,7 @@ def _ann_recall_report(spark, sf_dir):
     lsh = lsh_topk(
         queries, emb, k=10, num_planes=16, num_blocks=4, dim=64, multiprobe=1
     ).select("query_id", "vec_id", F.lit(1).alias("__hit"))
-    exact = matmul_topk(queries, emb, k=10).select("query_id", "vec_id")
+    exact = brute_force_topk(queries, emb, k=10).select("query_id", "vec_id")
     return (
         exact.join(lsh, on=["query_id", "vec_id"], how="left")
         .groupBy("query_id")
@@ -965,17 +963,16 @@ def _mmr_diversity_rerank(spark, sf_dir):
     greedy lambda=0.7 diversity selection of 5 on exact 1e-4-unit
     integer scores — the greedy loop runs in an Arrow applyInPandas per
     query; the oracle unrolls the same five picks as SQL stages."""
-    from redshells_spark.similarity.allpairs import matmul_topk
+    from redshells_spark.similarity.ann import brute_force_topk
     from redshells_spark.similarity.mmr import mmr_rerank
 
     emb = _t(spark, sf_dir, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # BLAS matmul candidate stage (same values as the Catalyst cosine,
-    # pinned in tests/test_ann_recall.py); k=21 then drop the query
-    # itself and re-rank, matching the oracle's b <> a pre-filter
-    top = matmul_topk(q_, emb, k=21).filter(
+    # exact cosine candidate stage; k=21 then drop the query itself
+    # and re-rank, matching the oracle's b <> a pre-filter
+    top = brute_force_topk(q_, emb, k=21).filter(
         F.col("vec_id") != F.col("query_id")
     )
     cand = per_group_topk(

@@ -1,12 +1,20 @@
-"""Vectorized all-pairs similarity (numpy/BLAS inside Arrow batches).
+"""Vectorized similarity in Arrow batches: the numpy core every exact
+scorer of the vector tier shares, and the exact all-pairs threshold
+join.
 
-The pure-Catalyst ``blocked_pairwise_similarity`` (higher-order array
-expressions) evaluates ~n²·d scalar lambda steps; fine for bounded n
-but ~30× slower than BLAS. This module is the production path: the
-smaller side is broadcast as a dense float64 matrix, the bigger side
-streams through ``mapInPandas``, and each Arrow batch does one
-``batch_matrix @ corpus_matrixᵀ`` matmul, emitting only pairs above
-the threshold — the n² intermediate never materializes as rows.
+The core is three pieces. :func:`_collect_bounded` brings a bounded
+side to the driver, :func:`_to_matrix` turns its rows into an id
+array and a float64 matrix, and :func:`_unit_rows` is the one cosine
+normalization. The block top-k kernel and the candidate-pair scorer in
+:mod:`redshells_spark.similarity.ann` score through the same helpers,
+so every exact path computes cosine the same way.
+
+:func:`all_pairs_above_threshold` broadcasts the smaller side as a
+dense float64 matrix; the bigger side streams through ``mapInPandas``,
+and each Arrow batch does one ``batch_matrix @ corpus_matrixᵀ`` matmul
+and emits only pairs above the threshold, so the n² intermediate never
+materializes as rows. The pure-Catalyst ``blocked_pairwise_similarity``
+evaluates ~n²·d scalar lambda steps and is ~30× slower.
 
 At 100 TB you don't all-pairs the full corpus; you LSH/IVF-bucket
 first (:mod:`redshells_spark.similarity.ann`) and run this within
@@ -23,13 +31,22 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
-def _to_matrix(rows: list, dim: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+def _to_matrix(rows: list) -> tuple[np.ndarray, np.ndarray]:
+    """(id, embedding) rows → (id array, float64 matrix)."""
     ids = np.array([r[0] for r in rows])
     mat = np.array([r[1] for r in rows], dtype=np.float64)
     return ids, mat
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm as float64; a zero row stays zero
+    (its norm counts as 1), so its cosine with anything is 0."""
+    mat = np.asarray(mat, dtype=np.float64)
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0] = 1.0
+    return mat / norms[:, None]
 
 
 def _collect_bounded(df: DataFrame, cap: int, what: str) -> list:
@@ -37,15 +54,17 @@ def _collect_bounded(df: DataFrame, cap: int, what: str) -> list:
 
     Probes with ``limit(cap + 1)`` so the check never scans more than
     cap+1 rows; an oversized side fails loudly instead of OOMing the
-    driver. Callers that genuinely have a bigger side must bucket
-    first (:func:`redshells_spark.similarity.ann.lsh_pairs_above_threshold`
-    / IVF) — the broadcast tier is for bounded candidate sets only."""
+    driver. The broadcast tier is for bounded sides only: a bigger
+    query set is split into batches, a bigger corpus is bucketed first
+    (:func:`redshells_spark.similarity.ann.lsh_pairs_above_threshold`
+    / IVF)."""
     rows = df.limit(cap + 1).collect()
     if len(rows) > cap:
         raise ValueError(
             f"{what}: side to broadcast exceeds max_broadcast_rows={cap}; "
-            "bucket it first (similarity.ann.lsh_pairs_above_threshold or "
-            "ivf_topk) or raise the cap explicitly if the driver can hold it"
+            "split a query side into batches, bucket a corpus first "
+            "(similarity.ann.lsh_pairs_above_threshold or ivf_topk), or raise "
+            "the cap explicitly if the driver can hold it"
         )
     return rows
 
@@ -75,9 +94,7 @@ def all_pairs_above_threshold(
     )
     ids_c, mat_c = _to_matrix(rows)
     if metric == "cosine":
-        norms = np.linalg.norm(mat_c, axis=1)
-        norms[norms == 0] = 1.0
-        mat_c = mat_c / norms[:, None]
+        mat_c = _unit_rows(mat_c)
     bc = spark.sparkContext.broadcast((ids_c, mat_c))
 
     out_schema = f"id0 {embeddings.schema[id_column].dataType.simpleString()}, " \
@@ -91,9 +108,7 @@ def all_pairs_above_threshold(
             ids_b = pdf[id_column].to_numpy()
             mat_b = np.array(list(pdf[embedding_column]), dtype=np.float64)
             if metric == "cosine":
-                bn = np.linalg.norm(mat_b, axis=1)
-                bn[bn == 0] = 1.0
-                mat_b = mat_b / bn[:, None]
+                mat_b = _unit_rows(mat_b)
             sims = mat_b @ mat_corpus.T
             bi, ci = np.where(sims >= threshold)
             if len(bi) == 0:
@@ -107,64 +122,4 @@ def all_pairs_above_threshold(
 
     return embeddings.select(id_column, embedding_column).mapInPandas(
         compute, schema=out_schema
-    )
-
-
-def matmul_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    embedding_column: str = "embedding",
-    metric: str = "cosine",
-    max_broadcast_rows: int = 200_000,
-) -> DataFrame:
-    """Exact top-k neighbours via per-batch BLAS matmul + partial top-k.
-
-    The query side (small, guarded by ``max_broadcast_rows``) is
-    broadcast as a matrix; the corpus streams through mapInPandas
-    producing each batch's top-k per query; a final per-query window
-    merges partial top-ks — the shuffle carries at most
-    (#queries × k × #partitions) rows, not n² scores."""
-    from redshells_spark.operators.topk import per_group_topk
-
-    spark = corpus.sparkSession
-    rows = _collect_bounded(
-        queries.select(query_id, embedding_column), max_broadcast_rows, "matmul_topk"
-    )
-    ids_q, mat_q = _to_matrix(rows)
-    if metric == "cosine":
-        qn = np.linalg.norm(mat_q, axis=1)
-        qn[qn == 0] = 1.0
-        mat_q = mat_q / qn[:, None]
-    bc = spark.sparkContext.broadcast((ids_q, mat_q))
-
-    qtype = queries.schema[query_id].dataType.simpleString()
-    ctype = corpus.schema[corpus_id].dataType.simpleString()
-    out_schema = f"query_id {qtype}, vec_id {ctype}, score double"
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, qmat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cids = pdf[corpus_id].to_numpy()
-            cmat = np.array(list(pdf[embedding_column]), dtype=np.float64)
-            if metric == "cosine":
-                cn = np.linalg.norm(cmat, axis=1)
-                cn[cn == 0] = 1.0
-                cmat = cmat / cn[:, None]
-            sims = qmat @ cmat.T  # (nq, batch)
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            qi = np.repeat(np.arange(len(qids)), kk)
-            ci = part.ravel()
-            yield pd.DataFrame(
-                {"query_id": qids[qi], "vec_id": cids[ci], "score": sims[qi, ci]}
-            )
-
-    partial = corpus.select(corpus_id, embedding_column).mapInPandas(compute, out_schema)
-    return per_group_topk(
-        partial, "query_id", "score", k, tie_break=["vec_id"], rank_column="rank"
     )

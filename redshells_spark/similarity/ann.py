@@ -1,35 +1,51 @@
 """Similarity search over an embedding column (array<float>).
 
-Three tiers, trading recall for cost:
+One exact scorer, fed by candidate generators that trade recall for
+cost:
 
-- :func:`brute_force_topk` — exact top-k cosine per query; broadcast
-  the (small) query side, per-partition partial top-k via window.
-  The baseline and the verifier for the approximate tiers.
-- :func:`lsh_topk` — random-hyperplane LSH: only candidates sharing a
-  signature block are scored. Sub-linear candidate sets at 100 TB.
-- :func:`ivf_topk` — IVF: k-means coarse quantizer (MLlib KMeans);
-  queries probe ``nprobe`` nearest centroids, scoring only those
-  inverted lists. The scale path when embeddings are re-used across
-  many query batches.
+- :func:`brute_force_topk` — exact top-k per query: every query is a
+  candidate of every corpus row.
+- :func:`lsh_topk` — random-hyperplane LSH: a corpus row is scored
+  only against the queries sharing one of its signature blocks
+  (optionally a Hamming-1 neighbour block). Sub-linear candidate sets
+  at 100 TB.
+- :func:`ivf_topk` — IVF: a coarse quantizer (MLlib KMeans or
+  deterministic seed centroids); queries probe their ``nprobe``
+  nearest centroids and only those inverted lists are scored. The
+  scale path when embeddings are re-used across many query batches.
+
+:func:`brute_force_topk` and :func:`lsh_topk` run on one block kernel
+(:func:`_block_topk`): the bounded query side is broadcast with a
+bucket table, the corpus streams once through ``mapInPandas``, each
+bucket is one BLAS matmul, and one partial cut per query
+(:func:`_partial_topk`) keeps the order the final
+``per_group_topk(tie_break=["vec_id"])`` applies. Join-generated
+candidates (IVF lists, LSH all-pairs buckets) are scored pair by pair
+in :func:`_rerank_pairs`. Cosine normalization is
+:func:`redshells_spark.similarity.allpairs._unit_rows` everywhere.
 
 Generalizes the reference's two-stage retrieval
 (``calculate_word_item_similarity.py:42-58``: cheap dot-product
 prequery → expensive rerank): stage 1 here is the ANN candidate
-generation, stage 2 the exact cosine rerank.
+generation, stage 2 the exact rerank.
 """
 
 from __future__ import annotations
 
 import functools
-from collections.abc import Iterator
+import json
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from redshells_spark.functions.vector import cosine_similarity, dot_product
 from redshells_spark.operators.topk import per_group_topk
+from redshells_spark.similarity.allpairs import _collect_bounded, _to_matrix, _unit_rows
+
+# scores per matmul: one (rows × queries) block stays ≤ 32 MiB
+_BLOCK_SCORES = 1 << 22
 
 
 @functools.lru_cache
@@ -54,6 +70,132 @@ def hyperplane_matrix(num_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return vals.reshape(num_planes, dim)
 
 
+def _signs(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Sign-bit signature per row: bit p is set when the row lies on
+    the positive side of hyperplane p (one BLAS matmul per call)."""
+    shifts = np.arange(planes.shape[0], dtype=np.int64)
+    return ((mat @ planes.T > 0).astype(np.int64) << shifts).sum(axis=1)
+
+
+def _partial_topk(
+    blocks: Iterable[tuple[np.ndarray, np.ndarray, np.ndarray]],
+    vec_ids: np.ndarray,
+    k: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each query's best ``k`` rows of one batch → (query index, row
+    index, score), ordered by score desc then vec_id asc: the order the
+    final ``per_group_topk(tie_break=["vec_id"])`` applies, so the cut
+    never keeps a different tied row than the final window would.
+
+    ``blocks`` yields (rows, queries, scores) with scores of shape
+    (len(rows), len(queries)). Each block is cut per query with
+    ``np.partition`` (O(rows)) and widened to every score equal to the
+    k-th; only those survivors are sorted. A pair scored in several
+    blocks has the same score in each and is kept once."""
+    parts = []
+    for rows, qidx, sc in blocks:
+        if len(rows) > k:
+            kth = np.partition(sc, len(rows) - k, axis=0)[len(rows) - k]
+            r, c = np.nonzero(sc >= kth)
+        else:
+            r, c = np.indices(sc.shape).reshape(2, -1)
+        parts.append((qidx[c], rows[r], sc[r, c]))
+    if not parts:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    qi, ri, sc = (np.concatenate(x) for x in zip(*parts))
+    order = np.lexsort((ri, vec_ids[ri], -sc, qi))
+    qi, ri, sc = qi[order], ri[order], sc[order]
+    new_q = np.r_[True, qi[1:] != qi[:-1]]
+    first = new_q | np.r_[True, ri[1:] != ri[:-1]]
+    starts = np.flatnonzero(new_q[first])
+    qi, ri, sc = qi[first], ri[first], sc[first]
+    rank = np.arange(len(qi)) - np.repeat(starts, np.diff(np.r_[starts, len(qi)]))
+    keep = rank < k
+    return qi[keep], ri[keep], sc[keep]
+
+
+def _one_bucket(mat: np.ndarray) -> np.ndarray:
+    return np.zeros((len(mat), 1), dtype=np.int64)
+
+
+def _block_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    query_id: str,
+    corpus_id: str,
+    embedding_column: str,
+    metric: str,
+    max_broadcast_rows: int,
+    what: str,
+    keys: Callable[[np.ndarray], np.ndarray] = _one_bucket,
+    probe_bits: int = 0,
+) -> DataFrame:
+    """The exact top-k kernel → (query_id, vec_id, score, rank).
+
+    ``keys(raw_matrix)`` gives each row one bucket value per block,
+    (rows, blocks) int64; a query is scored against the corpus rows
+    that share a bucket with it, and ``probe_bits`` also files it under
+    every block value with one of its low ``probe_bits`` bits flipped.
+    The queries are collected behind the ``max_broadcast_rows`` guard
+    and broadcast with the bucket → query-index table; the corpus is
+    scanned once and never shuffled. Per Arrow batch each bucket is one
+    BLAS matmul (split by query so a block stays ≤ ``_BLOCK_SCORES``),
+    and :func:`_partial_topk` cuts each query to k rows, so the final
+    exchange carries ≤ queries·k rows per batch."""
+    spark = corpus.sparkSession
+    qids, qmat = _to_matrix(
+        _collect_bounded(queries.select(query_id, embedding_column), max_broadcast_rows, what)
+    )
+    table: dict[tuple[int, int], np.ndarray] = {}
+    if len(qids):
+        # (queries, blocks, probes): each block value, then its bit flips
+        vals = keys(qmat)[:, :, None] ^ np.r_[0, 1 << np.arange(probe_bits)]
+        qi, blk, _ = np.indices(vals.shape).reshape(3, -1)
+        vals = vals.ravel()
+        order = np.lexsort((qi, vals, blk))
+        cuts = np.flatnonzero(np.diff(blk[order]) | np.diff(vals[order])) + 1
+        table = {(int(blk[i[0]]), int(vals[i[0]])): qi[i] for i in np.split(order, cuts)}
+        if metric == "cosine":
+            qmat = _unit_rows(qmat)
+    bc = spark.sparkContext.broadcast((qids, qmat, table))
+
+    def blocks(raw, cmat, mat_q, bkt):
+        row_keys = keys(raw)
+        for b in range(row_keys.shape[1]):
+            order = np.argsort(row_keys[:, b], kind="stable")
+            sv = row_keys[order, b]
+            for rows in np.split(order, np.flatnonzero(np.diff(sv)) + 1):
+                qidx = bkt.get((b, int(row_keys[rows[0], b])))
+                if qidx is None:
+                    continue
+                step = max(1, _BLOCK_SCORES // len(rows))
+                for s in range(0, len(qidx), step):
+                    qc = qidx[s : s + step]
+                    yield rows, qc, cmat[rows] @ mat_q[qc].T
+
+    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids_q, mat_q, bkt = bc.value
+        for pdf in batches:
+            if pdf.empty or not bkt:
+                continue
+            raw = np.array(list(pdf[embedding_column]), dtype=np.float64)
+            cmat = _unit_rows(raw) if metric == "cosine" else raw
+            cids = pdf[corpus_id].to_numpy()
+            qi, ri, sc = _partial_topk(blocks(raw, cmat, mat_q, bkt), cids, k)
+            if len(qi):
+                yield pd.DataFrame({"query_id": ids_q[qi], "vec_id": cids[ri], "score": sc})
+
+    qtype = queries.schema[query_id].dataType.simpleString()
+    ctype = corpus.schema[corpus_id].dataType.simpleString()
+    partial = corpus.select(corpus_id, embedding_column).mapInPandas(
+        compute, schema=f"query_id {qtype}, vec_id {ctype}, score double"
+    )
+    return per_group_topk(
+        partial, "query_id", "score", k, tie_break=["vec_id"], rank_column="rank"
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -62,27 +204,17 @@ def brute_force_topk(
     corpus_id: str = "vec_id",
     embedding_column: str = "embedding",
     metric: str = "cosine",
+    max_broadcast_rows: int = 200_000,
 ) -> DataFrame:
-    """Exact top-k neighbours per query → (query_id, vec_id, score, rank).
+    """Exact top-k neighbours per query → (query_id, vec_id, score, rank),
+    ``metric`` "cosine" or "dot"; ties go to the smaller vec_id.
 
-    Broadcast-crossJoin (queries are the small side by construction) →
-    codegen cosine → per-query window top-k. No shuffle of the corpus;
-    the only exchange is the final window on query_id, whose input is
-    already pruned to per-partition top-k by WindowGroupLimit."""
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(embedding_column).alias("__qe")
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"), F.col(embedding_column).alias("__ce")
-    )
-    score = (
-        cosine_similarity("__qe", "__ce") if metric == "cosine" else dot_product("__qe", "__ce")
-    )
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id", "vec_id", score.alias("score")
-    )
-    return per_group_topk(
-        scored, "query_id", "score", k, tie_break=["vec_id"], rank_column="rank"
+    :func:`_block_topk` with one bucket holding every query: the query
+    side (at most ``max_broadcast_rows``, else ValueError) is
+    broadcast, each corpus batch is one matmul against all of it."""
+    return _block_topk(
+        queries, corpus, k, query_id, corpus_id, embedding_column, metric,
+        max_broadcast_rows, "brute_force_topk",
     )
 
 
@@ -95,32 +227,27 @@ def lsh_hyperplane_signatures(
     seed: int = 42,
 ) -> DataFrame:
     """→ (id, sig:long): sign-bit signature against ``num_planes``
-    deterministic pseudo-random hyperplanes.
+    deterministic pseudo-random hyperplanes (:func:`hyperplane_matrix`).
 
-    The plane matrix (planes × dim, xxhash64-derived, centered via
-    pmod) is broadcast once; each Arrow batch computes all signatures
-    in ONE BLAS matmul + sign-bit pack — ~dim·planes fused float ops
-    per row instead of dim·planes interpreted Catalyst lambda steps
-    (at d=768, 16 planes that was ≈12k expression evaluations/row)."""
+    The plane matrix is broadcast once; each Arrow batch computes all
+    signatures in ONE BLAS matmul + sign-bit pack — ~dim·planes fused
+    float ops per row instead of dim·planes interpreted Catalyst lambda
+    steps (at d=768, 16 planes that was ≈12k expression
+    evaluations/row)."""
     spark = embeddings.sparkSession
     if dim is None:
         dim = len(
             embeddings.select(embedding_column).filter(F.col(embedding_column).isNotNull()).first()[0]
         )
-    planes = hyperplane_matrix(num_planes, dim, seed)
-    bc = spark.sparkContext.broadcast(planes)
+    bc = spark.sparkContext.broadcast(hyperplane_matrix(num_planes, dim, seed))
     idtype = embeddings.schema[id_column].dataType.simpleString()
-    shifts = np.arange(num_planes, dtype=np.int64)
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mat_planes = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             emb = np.array(list(pdf[embedding_column]), dtype=np.float64)
-            proj = emb @ mat_planes.T  # (batch, planes)
-            sig = ((proj > 0).astype(np.int64) << shifts).sum(axis=1)
-            yield pd.DataFrame({"vec_id": pdf[id_column], "sig": sig})
+            yield pd.DataFrame({"vec_id": pdf[id_column], "sig": _signs(emb, bc.value)})
 
     return embeddings.select(
         F.col(id_column), F.col(embedding_column)
@@ -139,14 +266,12 @@ def lsh_topk(
     seed: int = 42,
     dim: int | None = None,
     multiprobe: int = 0,
-    broadcast_queries: bool = True,
     max_broadcast_rows: int = 200_000,
 ) -> DataFrame:
     """Approximate top-k: candidates share ≥1 of ``num_blocks``
     signature blocks (banding), then exact cosine rerank. Recall rises
     with num_blocks (more probes) and falls with num_planes (finer
-    buckets). Pass ``dim`` explicitly to avoid a driver ``first()``
-    probe job.
+    buckets). ``dim`` defaults to the queries' width.
 
     ``multiprobe=1`` additionally probes every Hamming-distance-1
     neighbor of each query block value (classic multi-probe LSH, Lv et
@@ -155,247 +280,56 @@ def lsh_topk(
     them. Candidate volume grows ~(1+width)× on the QUERY side only —
     the corpus is never re-bucketed.
 
-    Plan shape (the part that matters at 10¹⁰ corpus vectors): the
-    corpus is scanned ONCE and never shuffled. With
-    ``broadcast_queries`` (default, guarded by ``max_broadcast_rows``
-    like :func:`redshells_spark.similarity.allpairs.matmul_topk`), the
-    query signatures and bucket table are built driver-side and the
-    whole candidate-match + exact-cosine happens in ONE Arrow pass over
-    the corpus; only candidate (query_id, vec_id, score) triples reach
-    the final top-k exchange. ``broadcast_queries=False`` keeps both
-    sides distributed (signature mapInPandas each side + broadcast-hash
-    join on exploded blocks) for query sets too big for the driver."""
-    if dim is None:
-        dim = len(queries.select(embedding_column).first()[0])
-    if broadcast_queries:
-        return _lsh_topk_broadcast(
-            queries, corpus, k, num_planes, num_blocks, query_id, corpus_id,
-            embedding_column, seed, dim, multiprobe, max_broadcast_rows,
-        )
-    qsig = _signatures_with_payload(
-        queries, query_id, embedding_column, num_planes, dim, seed, "query_id", "__qe"
-    )
-    csig = _signatures_with_payload(
-        corpus, corpus_id, embedding_column, num_planes, dim, seed, "vec_id", "__ce"
-    )
+    Runs on :func:`_block_topk`, so the corpus is scanned ONCE and never
+    shuffled (the plan shape that matters at 10¹⁰ corpus vectors). The
+    query side must fit the driver: more than ``max_broadcast_rows``
+    queries raise ValueError; split such a query set into batches."""
     width = num_planes // num_blocks
+    offsets = np.arange(num_blocks, dtype=np.int64) * width
 
-    def blocks(sig_df: DataFrame, idcol: str, payload: str, probe_bits: int = 0) -> DataFrame:
-        entries = []
-        for i in range(num_blocks):
-            base = F.shiftright(F.col("sig"), i * width).bitwiseAND(F.lit((1 << width) - 1))
-            entries.append(F.struct(F.lit(i).alias("block_idx"), base.alias("block_val")))
-            if probe_bits:
-                entries += [
-                    F.struct(
-                        F.lit(i).alias("block_idx"),
-                        base.bitwiseXOR(F.lit(1 << b)).alias("block_val"),
-                    )
-                    for b in range(width)
-                ]
-        blk = F.explode(F.array(*entries)).alias("blk")
-        return sig_df.select(idcol, payload, blk).select(
-            idcol, payload, "blk.block_idx", "blk.block_val"
-        )
+    def keys(mat: np.ndarray) -> np.ndarray:
+        planes = hyperplane_matrix(num_planes, dim or mat.shape[1], seed)
+        return (_signs(mat, planes)[:, None] >> offsets) & ((1 << width) - 1)
 
-    paired = blocks(csig, "vec_id", "__ce").join(
-        F.broadcast(blocks(qsig, "query_id", "__qe", probe_bits=multiprobe)),
-        on=["block_idx", "block_val"],
+    return _block_topk(
+        queries, corpus, k, query_id, corpus_id, embedding_column, "cosine",
+        max_broadcast_rows, "lsh_topk", keys, width if multiprobe else 0,
     )
-    # exact cosine per candidate, batch-local (q, v) pre-dedup in the
-    # same Arrow pass; exact dedup afterwards on the narrow scored
-    # triples (a pair can match in several blocks)
-    scored = _cosine_rerank(
-        paired, "query_id", "vec_id", "__qe", "__ce", batch_dedup=True
-    ).dropDuplicates(["query_id", "vec_id"])
-    return per_group_topk(scored, "query_id", "score", k, tie_break=["vec_id"], rank_column="rank")
 
 
-def _lsh_topk_broadcast(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    num_planes: int,
-    num_blocks: int,
-    query_id: str,
-    corpus_id: str,
-    embedding_column: str,
-    seed: int,
-    dim: int,
-    multiprobe: int,
-    max_broadcast_rows: int,
+def _rerank_pairs(
+    paired: DataFrame,
+    qid: str,
+    cid: str,
+    qe: str,
+    ce: str,
+    metric: str = "cosine",
+    score: str = "score",
+    min_score: float | None = None,
 ) -> DataFrame:
-    """Single-corpus-scan LSH top-k: query buckets driver-side,
-    candidate match + exact cosine fused into one Arrow pass.
-
-    Signatures are bit-identical to the distributed path (same
-    xxhash64-derived plane matrix, same sign-bit packing), so recall
-    pins hold for either path. A (query, vec) candidate arises only
-    from that corpus row's own blocks — all in one batch — so in-batch
-    pair dedup is exact and no shuffle-side dedup is needed."""
-    from redshells_spark.similarity.allpairs import _collect_bounded
-
-    spark = corpus.sparkSession
-    planes = hyperplane_matrix(num_planes, dim, seed)
-    rows = _collect_bounded(
-        queries.select(query_id, embedding_column), max_broadcast_rows,
-        "lsh_topk (pass broadcast_queries=False for unbounded query sets)",
-    )
-    qids = np.array([r[0] for r in rows])
-    qmat = np.array([r[1] for r in rows], dtype=np.float64)
-    shifts = np.arange(num_planes, dtype=np.int64)
-    qsig = ((qmat @ planes.T > 0).astype(np.int64) << shifts).sum(axis=1)
-    width = num_planes // num_blocks
-    mask = (1 << width) - 1
-    buckets: dict[tuple[int, int], list[int]] = {}
-    for qi, s in enumerate(qsig):
-        for i in range(num_blocks):
-            vals = {int((s >> (i * width)) & mask)}
-            if multiprobe:
-                vals |= {v ^ (1 << b) for v in set(vals) for b in range(width)}
-            for v in vals:
-                buckets.setdefault((i, v), []).append(qi)
-    bucket_arr = {key: np.array(v, dtype=np.int64) for key, v in buckets.items()}
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
-    bc = spark.sparkContext.broadcast((qids, qmat / qnorm[:, None], bucket_arr))
-
-    qtype = queries.schema[query_id].dataType.simpleString()
-    ctype = corpus.schema[corpus_id].dataType.simpleString()
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, mat_q, bkt = bc.value
-        mat_planes = planes
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cids = pdf[corpus_id].to_numpy()
-            cmat = np.array(list(pdf[embedding_column]), dtype=np.float64)
-            sig = ((cmat @ mat_planes.T > 0).astype(np.int64) << shifts).sum(axis=1)
-            cnorm = np.linalg.norm(cmat, axis=1)
-            cnorm[cnorm == 0] = 1.0
-            cmat_n = cmat / cnorm[:, None]
-            # score per bucket as one (rows × queries) BLAS matmul —
-            # pairwise gathers of the pair list would move |pairs|·dim
-            # floats; per-bucket matmuls touch each side once
-            row_parts, q_parts, s_parts = [], [], []
-            for i in range(num_blocks):
-                vals = (sig >> (i * width)) & mask
-                order = np.argsort(vals, kind="stable")
-                sv = vals[order]
-                starts = np.flatnonzero(np.r_[True, sv[1:] != sv[:-1]])
-                ends = np.r_[starts[1:], len(sv)]
-                for s_, e_ in zip(starts, ends):
-                    qidx = bkt.get((i, int(sv[s_])))
-                    if qidx is None:
-                        continue
-                    rows_i = order[s_:e_]
-                    sc = cmat_n[rows_i] @ mat_q[qidx].T  # (m, b)
-                    row_parts.append(np.repeat(rows_i, len(qidx)))
-                    q_parts.append(np.tile(qidx, len(rows_i)))
-                    s_parts.append(sc.ravel())
-            if not row_parts:
-                continue
-            ri = np.concatenate(row_parts)
-            qi = np.concatenate(q_parts)
-            sc_all = np.concatenate(s_parts)
-            # exact in-batch pair dedup (a pair matching in >1 block has
-            # identical scores — keep the first occurrence per key)
-            key = qi * np.int64(len(cids)) + ri
-            _, first = np.unique(key, return_index=True)
-            ri, qi, scores = ri[first], qi[first], sc_all[first]
-            # partial per-query top-k with the SAME ordering as the final
-            # window (score desc, vec_id asc) → the shuffle carries at
-            # most nq·k rows per batch instead of every candidate
-            order = np.lexsort((cids[ri], -scores, qi))
-            qs = qi[order]
-            starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-            rank = np.arange(len(qs)) - np.repeat(
-                starts, np.diff(np.r_[starts, len(qs)])
-            )
-            keep = order[rank < k]
-            yield pd.DataFrame(
-                {"query_id": ids_q[qi[keep]], "vec_id": cids[ri[keep]], "score": scores[keep]}
-            )
-
-    partial = corpus.select(corpus_id, embedding_column).mapInPandas(
-        compute, schema=f"query_id {qtype}, vec_id {ctype}, score double"
-    )
-    return per_group_topk(
-        partial, "query_id", "score", k, tie_break=["vec_id"], rank_column="rank"
-    )
-
-
-def _signatures_with_payload(
-    df: DataFrame,
-    id_column: str,
-    embedding_column: str,
-    num_planes: int,
-    dim: int,
-    seed: int,
-    out_id: str,
-    out_payload: str,
-) -> DataFrame:
-    """(id, sig, payload=embedding) in one Arrow pass — the embedding
-    rides along so downstream scoring never joins back to the source."""
-    spark = df.sparkSession
-    planes = hyperplane_matrix(num_planes, dim, seed)
-    bc = spark.sparkContext.broadcast(planes)
-    idtype = df.schema[id_column].dataType.simpleString()
-    etype = df.schema[embedding_column].dataType.simpleString()
-    shifts = np.arange(num_planes, dtype=np.int64)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mat_planes = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb = np.array(list(pdf[embedding_column]), dtype=np.float64)
-            proj = emb @ mat_planes.T
-            sig = ((proj > 0).astype(np.int64) << shifts).sum(axis=1)
-            yield pd.DataFrame(
-                {out_id: pdf[id_column], "sig": sig, out_payload: pdf[embedding_column]}
-            )
-
-    return df.select(id_column, embedding_column).mapInPandas(
-        compute, schema=f"{out_id} {idtype}, sig long, {out_payload} {etype}"
-    )
-
-
-def _cosine_rerank(
-    paired: DataFrame, qid: str, cid: str, qe: str, ce: str, batch_dedup: bool = False
-) -> DataFrame:
-    """Exact cosine over candidate pairs, one vectorized numpy batch
-    per Arrow chunk — the Catalyst higher-order-function cosine costs
-    ~3·dim interpreted lambda steps per pair, which dominates rerank
-    time once candidates reach ~10⁵. ``batch_dedup`` drops duplicate
-    (qid, cid) pairs within each Arrow batch before scoring (a cheap
-    pre-reduction when the caller dedups exactly afterwards)."""
+    """Exact score of each candidate pair → (qid, cid, score), one
+    vectorized numpy batch per Arrow chunk — the Catalyst
+    higher-order-function cosine costs ~3·dim interpreted lambda steps
+    per pair, which dominates rerank time once candidates reach ~10⁵.
+    With ``min_score`` only pairs scoring at least that leave the
+    batch: a threshold join's candidates mostly fail it, and each row
+    returned costs an Arrow round trip."""
     qt = paired.schema[qid].dataType.simpleString()
     ct = paired.schema[cid].dataType.simpleString()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if batch_dedup and not pdf.empty:
-                pdf = pdf.drop_duplicates(subset=[qid, cid])
             if pdf.empty:
                 continue
             a = np.array(list(pdf[qe]), dtype=np.float64)
             b = np.array(list(pdf[ce]), dtype=np.float64)
-            na = np.linalg.norm(a, axis=1)
-            nb = np.linalg.norm(b, axis=1)
-            denom = na * nb
-            denom[denom == 0] = 1.0
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf[qid],
-                    "vec_id": pdf[cid],
-                    "score": (a * b).sum(axis=1) / denom,
-                }
-            )
+            if metric == "cosine":
+                a, b = _unit_rows(a), _unit_rows(b)
+            out = pd.DataFrame({qid: pdf[qid], cid: pdf[cid], score: (a * b).sum(axis=1)})
+            yield out if min_score is None else out[out[score] >= min_score]
 
     return paired.select(qid, cid, qe, ce).mapInPandas(
-        run, schema=f"query_id {qt}, vec_id {ct}, score double"
+        run, schema=f"{qid} {qt}, {cid} {ct}, {score} double"
     )
 
 
@@ -478,36 +412,7 @@ def lsh_pairs_above_threshold(
     e0 = embeddings.select(F.col(id_column).alias("id0"), F.col(embedding_column).alias("__e0"))
     e1 = embeddings.select(F.col(id_column).alias("id1"), F.col(embedding_column).alias("__e1"))
     paired = cand.join(e0, on="id0").join(e1, on="id1")
-    # vectorized exact verification (one numpy batch per Arrow chunk —
-    # the Catalyst lambda metric costs ~3·dim interpreted steps/pair)
-    t0 = paired.schema["id0"].dataType.simpleString()
-    t1 = paired.schema["id1"].dataType.simpleString()
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            a = np.array(list(pdf["__e0"]), dtype=np.float64)
-            b = np.array(list(pdf["__e1"]), dtype=np.float64)
-            s = (a * b).sum(axis=1)
-            if metric == "cosine":
-                denom = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-                denom[denom == 0] = 1.0
-                s = s / denom
-            keep = s >= threshold
-            if not keep.any():
-                continue
-            yield pd.DataFrame(
-                {
-                    "id0": pdf["id0"].to_numpy()[keep],
-                    "id1": pdf["id1"].to_numpy()[keep],
-                    "similarity": s[keep],
-                }
-            )
-
-    return paired.select("id0", "id1", "__e0", "__e1").mapInPandas(
-        verify, schema=f"id0 {t0}, id1 {t1}, similarity double"
-    )
+    return _rerank_pairs(paired, "id0", "id1", "__e0", "__e1", metric, "similarity", threshold)
 
 
 def sqrt_num_centroids(n_rows: int, floor: int = 16) -> int:
@@ -524,7 +429,6 @@ def sqrt_num_centroids(n_rows: int, floor: int = 16) -> int:
 def ivf_build_index(
     corpus: DataFrame,
     num_centroids: int | None = 64,
-    corpus_id: str = "vec_id",
     embedding_column: str = "embedding",
     seed: int = 42,
 ) -> tuple[DataFrame, list[list[float]]]:
@@ -535,7 +439,7 @@ def ivf_build_index(
     count, so the index keeps the √N cell-population contract as the
     corpus grows."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     if num_centroids is None:
         num_centroids = sqrt_num_centroids(corpus.count())
@@ -598,21 +502,28 @@ def assign_to_centroids(
     order). Use instead of :func:`ivf_build_index` when centroids are
     fixed/deterministic (e.g. strided corpus vectors) and cross-engine
     verifiability matters more than quantizer quality."""
-    # The centroid matrix arrives as a broadcast 1-row VALUE, not as
-    # k*d codegen literals: with the sqrt(N) rule k grows with the
-    # corpus, and a literal form made Janino compile an O(k*d)
-    # expression tree per consumer (1.5s at k=16,d=64; unbounded at
-    # scale). The arithmetic below is unchanged — the same
-    # transform/zip_with/left-fold float64 tree an ANSI oracle
-    # reproduces bit-for-bit — only the centroid constants moved from
-    # the instruction stream to a column.
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
-        [([[float(x) for x in c] for c in centroids],)],
-        "__cents array<array<double>>",
+    return corpus.withColumn(
+        "centroid",
+        F.array_sort(_sq_l2_to_centroids(embedding_column, centroids))[0]["centroid"],
     )
-    dists = F.transform(
-        F.col("__cents"),
+
+
+def _sq_l2_to_centroids(embedding_column: str, centroids: list[list[float]]) -> Column:
+    """array<struct<d, centroid>>: squared L2 from the row to each
+    centroid, as the left-fold ``zip_with``/``aggregate`` an ANSI-SQL
+    oracle reproduces bit-for-bit.
+
+    The centroid matrix is ONE array<array<double>> constant: ``from_json``
+    of a literal folds at optimization time, and JSON carries every
+    double exactly (shortest round-trip repr). Building it from k·d
+    ``F.lit`` codegen literals instead made Janino compile an O(k·d)
+    expression tree per consumer (1.5s at k=16, d=64; unbounded at
+    scale, where the √N rule grows k with the corpus)."""
+    cents = F.from_json(
+        F.lit(json.dumps([[float(x) for x in c] for c in centroids])), "array<array<double>>"
+    )
+    return F.transform(
+        cents,
         lambda c, i: F.struct(
             F.aggregate(
                 F.zip_with(
@@ -625,11 +536,6 @@ def assign_to_centroids(
             ).alias("d"),
             i.alias("centroid"),
         ),
-    )
-    return (
-        corpus.crossJoin(F.broadcast(cent_df))  # 1-row constant join
-        .withColumn("centroid", F.array_sort(dists)[0]["centroid"])
-        .drop("__cents")
     )
 
 
@@ -645,8 +551,6 @@ def save_ivf_index(
     of the data), centroids as a tiny JSON sidecar. Build once, reuse
     across query batches — at 10¹⁰ vectors the KMeans fit + assignment
     is the expensive step and must not rerun per query batch."""
-    import json
-
     writer = indexed_corpus.write.mode("overwrite")
     if partition_by_centroid:
         writer = writer.partitionBy("centroid")
@@ -661,8 +565,6 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     """Counterpart of :func:`save_ivf_index` → (indexed_corpus,
     centroids). Centroid filters on the assignments frame prune
     partitions (asserted in tests)."""
-    import json
-
     assigned = spark.read.parquet(f"{path}/assignments")
     row = spark.read.json(f"{path}/centroids").head()
     centroids = json.loads(row["centroids_json"])
@@ -679,35 +581,19 @@ def ivf_topk(
     corpus_id: str = "vec_id",
     embedding_column: str = "embedding",
 ) -> DataFrame:
-    """Probe the ``nprobe`` nearest centroids per query; exact cosine
-    over those inverted lists only. The centroid table is a literal
-    array expression (num_centroids ≤ a few thousand)."""
-    cent = F.array(
-        *[F.array(*[F.lit(x) for x in c]).cast("array<double>") for c in centroids]
-    )
+    """Probe the ``nprobe`` nearest centroids per query (squared L2,
+    the same Catalyst expression as :func:`assign_to_centroids`); exact
+    cosine over those inverted lists only (:func:`_rerank_pairs`)."""
     q = queries.select(F.col(query_id).alias("query_id"), F.col(embedding_column).alias("__qe"))
-    qprobe = (
-        q.withColumn(
-            "__dists",
-            F.transform(
-                cent,
-                lambda c, i: F.struct(
-                    F.aggregate(
-                        F.zip_with(F.transform(F.col("__qe"), lambda x: x.cast("double")), c,
-                                   lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ).alias("d"),
-                    i.alias("centroid"),
-                ),
-            ),
-        )
-        .withColumn("__probe", F.slice(F.array_sort("__dists"), 1, nprobe))
-        .select("query_id", "__qe", F.explode("__probe.centroid").alias("centroid"))
+    qprobe = q.select(
+        "query_id",
+        "__qe",
+        F.explode(
+            F.slice(F.array_sort(_sq_l2_to_centroids("__qe", centroids)), 1, nprobe)["centroid"]
+        ).alias("centroid"),
     )
     c = indexed_corpus.select(
         F.col(corpus_id).alias("vec_id"), F.col(embedding_column).alias("__ce"), "centroid"
     )
-    paired = qprobe.join(c, on="centroid")
-    scored = _cosine_rerank(paired, "query_id", "vec_id", "__qe", "__ce")
+    scored = _rerank_pairs(qprobe.join(c, on="centroid"), "query_id", "vec_id", "__qe", "__ce")
     return per_group_topk(scored, "query_id", "score", k, tie_break=["vec_id"], rank_column="rank")

@@ -72,6 +72,14 @@ def _canon(df):
 @pytest.mark.parametrize("name", DTYPE_SENSITIVE)
 def test_query_matches_on_alt_dtypes(spark, sf_dir, alt_dir, registry, name):
     fn = registry[name]
+    if name == "brute_force_topk":
+        # the block kernel reads both encodings: array<float> as stored,
+        # array<double> as re-encoded
+        emb = "embeddings.parquet"
+        assert [
+            spark.read.parquet(f"{d}/{emb}").schema["embedding"].dataType.simpleString()
+            for d in (sf_dir, alt_dir)
+        ] == ["array<float>", "array<double>"]
     base = _canon(fn(spark, sf_dir))
     alt = _canon(fn(spark, alt_dir))
     assert len(base) > 0

@@ -12,7 +12,7 @@ def test_observed_metrics_match_ground_truth(spark, sf_dir, tmp_path):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", "value"
     )
-    metrics = audit_metrics(ev, ["user_id", "value"]) + [
+    metrics = audit_metrics(["user_id", "value"]) + [
         F.min("event_id").alias("min_id"),
         F.max("event_id").alias("max_id"),
     ]
@@ -36,7 +36,7 @@ def test_observed_metrics_match_ground_truth(spark, sf_dir, tmp_path):
 def test_empty_write_refused(spark, tmp_path):
     df = spark.createDataFrame([], "a long")
     with pytest.raises(ValueError, match="0 rows"):
-        write_parquet_with_audit(df, str(tmp_path / "e"), audit_metrics(df))
+        write_parquet_with_audit(df, str(tmp_path / "e"), audit_metrics())
 
 
 def test_observe_does_not_poison_mllib_transforms(spark, tmp_path):
@@ -45,7 +45,7 @@ def test_observe_does_not_poison_mllib_transforms(spark, tmp_path):
     # then dies serializing its transform closure. Our fits strip the
     # summary (ml/mllib_compat.py) — pin the combination explicitly.
     ev = spark.createDataFrame([(1, "a")], "id long, t string")
-    write_parquet_with_audit(ev, str(tmp_path / "w"), audit_metrics(ev))
+    write_parquet_with_audit(ev, str(tmp_path / "w"), audit_metrics())
 
     from redshells_spark.text.quality_model import train_quality_classifier
 

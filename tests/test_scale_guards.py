@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from redshells_spark.functions.vector import cosine_similarity, dot_product
 from redshells_spark.operators.joins import blocked_pairwise_similarity
-from redshells_spark.similarity.allpairs import all_pairs_above_threshold, matmul_topk
-from redshells_spark.similarity.ann import lsh_pairs_above_threshold
+from redshells_spark.similarity.allpairs import all_pairs_above_threshold
+from redshells_spark.similarity.ann import brute_force_topk, lsh_pairs_above_threshold
 
 
 def _plan(df) -> str:
@@ -84,10 +84,10 @@ def test_all_pairs_collect_guard(small):
         all_pairs_above_threshold(small, threshold=0.9, max_broadcast_rows=10)
 
 
-def test_matmul_topk_collect_guard(small, emb):
+def test_brute_force_topk_collect_guard(small, emb):
     q = small.select(F.col("vec_id").alias("query_id"), "embedding")
     with pytest.raises(ValueError, match="max_broadcast_rows"):
-        matmul_topk(q, emb, k=3, max_broadcast_rows=10)
+        brute_force_topk(q, emb, k=3, max_broadcast_rows=10)
 
 
 def test_lsh_pairs_precision_exact_recall_positive(emb):

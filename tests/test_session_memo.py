@@ -63,6 +63,27 @@ def test_non_dataframe_values_are_evicted_without_error(spark, tmp_path):
     assert pair_calls == [paths[0]] * 2 and scalar_calls == paths + [paths[0]]
 
 
+def test_evicting_a_checkpoint_memo_frees_its_rdd(spark, tmp_path):
+    # unpersist() on a localCheckpoint frame leaves its checkpointed RDD
+    # registered; eviction must unpersist that RDD itself
+    build, _ = _memo(
+        lambda s, p: s.range(3).select(F.lit(p).alias("p")).localCheckpoint(eager=True)
+    )
+    paths = _paths(tmp_path)
+    first = build(spark, paths[0])
+    rdd_id = first._jdf.queryExecution().analyzed().rdd().id()
+
+    def persistent():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs()
+
+    assert persistent().contains(rdd_id)
+    before = persistent().size()
+    for p in paths[1:]:
+        build(spark, p)  # the last one evicts paths[0]
+    assert not persistent().contains(rdd_id)
+    assert persistent().size() <= before + MEMO_PATHS - 1
+
+
 def test_stale_session_entries_dropped_without_spark(spark, tmp_path):
     build, calls = _memo(lambda s, p: 1)
     dead = object.__new__(DataFrame)  # no JVM handle
