@@ -70,13 +70,15 @@ def minhash_signatures_wide(
 ) -> DataFrame:
     """→ (doc_id, mh0..mh{k-1}[, sz]): all k permutation minima as
     parallel aggregate expressions in ONE groupBy — no k× row blowup,
-    one shuffle with map-side partial min per column."""
+    one shuffle with map-side partial min per column. Each aggregate is
+    one SQL expression: a Column tree would cost the driver a py4j
+    round trip per node."""
     aggs = [
-        F.min((F.lit(a) * F.col("shingle") + F.lit(b)) % P).alias(f"mh{j}")
+        F.expr(f"min(({a} * shingle + {b}) % {P}) AS mh{j}")
         for j, (a, b) in enumerate(_perm_params(num_hashes))
     ]
     if with_size:
-        aggs.append(F.count(F.lit(1)).alias("sz"))
+        aggs.append(F.expr("count(1) AS sz"))
     return shingles.groupBy("doc_id").agg(*aggs)
 
 
@@ -93,15 +95,10 @@ def minhash_signatures_from_wide(wide: DataFrame, num_hashes: int = 16) -> DataF
     """Long (doc_id, j, minhash) form unpivoted from an existing wide
     signature relation — the zero-shuffle path when the wide rows are
     already materialized (shared session caches)."""
-    stack = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(j).cast("int").alias("j"), F.col(f"mh{j}").alias("minhash"))
-                for j in range(num_hashes)
-            ]
-        )
-    ).alias("s")
-    return wide.select("doc_id", stack).select("doc_id", "s.j", "s.minhash")
+    structs = ", ".join(f"struct({j} AS j, mh{j} AS minhash)" for j in range(num_hashes))
+    return wide.selectExpr("doc_id", f"explode(array({structs})) AS s").select(
+        "doc_id", "s.j", "s.minhash"
+    )
 
 
 def minhash_lsh_candidates(
@@ -132,22 +129,16 @@ def minhash_lsh_candidates(
     return _bucket_pairs(banded, max_bucket_size)
 
 
-def _band_structs(bands: int, rows_per_band: int) -> list:
-    return [
-        F.struct(
-            F.lit(b).cast("int").alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{j}").cast("string")
-                        for j in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            ).alias("bucket"),
+def _band_structs(bands: int, rows_per_band: int) -> str:
+    """SQL for ``array(struct(band, bucket), ...)``: one struct per band,
+    its bucket the md5 of the band's minhashes joined by commas."""
+    def bucket(b: int) -> str:
+        mhs = ", ".join(
+            f"CAST(mh{j} AS STRING)" for j in range(b * rows_per_band, (b + 1) * rows_per_band)
         )
-        for b in range(bands)
-    ]
+        return f"struct({b} AS band, md5(concat_ws(',', {mhs})) AS bucket)"
+
+    return f"array({', '.join(bucket(b) for b in range(bands))})"
 
 
 def minhash_band_index(
@@ -157,8 +148,8 @@ def minhash_band_index(
     partitioned by ``band`` (or bucketed by ``bucket``) once per
     corpus build; nightly deltas then dedup against it without
     touching corpus text (see :func:`minhash_dedup_against_index`)."""
-    return wide.select(
-        "doc_id", F.explode(F.array(*_band_structs(bands, rows_per_band))).alias("bb")
+    return wide.selectExpr(
+        "doc_id", f"explode({_band_structs(bands, rows_per_band)}) AS bb"
     ).select("doc_id", "bb.band", "bb.bucket")
 
 
@@ -201,20 +192,17 @@ def minhash_jaccard_estimate(
     the two wide signatures — the standard unbiased MinHash estimator.
     Needs only the stored signatures, not shingle sets, which is what
     makes delta dedup possible without re-reading corpus text."""
-    wl = wide_left.select(
-        F.col("doc_id").alias(left_id), *[F.col(f"mh{j}").alias(f"__l{j}") for j in range(num_hashes)]
+    wl = wide_left.selectExpr(
+        f"doc_id AS {left_id}", *[f"mh{j} AS __l{j}" for j in range(num_hashes)]
     )
-    wr = wide_right.select(
-        F.col("doc_id").alias(right_id), *[F.col(f"mh{j}").alias(f"__r{j}") for j in range(num_hashes)]
+    wr = wide_right.selectExpr(
+        f"doc_id AS {right_id}", *[f"mh{j} AS __r{j}" for j in range(num_hashes)]
     )
-    agree = sum(
-        F.when(F.col(f"__l{j}") == F.col(f"__r{j}"), 1).otherwise(0) for j in range(num_hashes)
+    agree = " + ".join(
+        f"CASE WHEN __l{j} = __r{j} THEN 1 ELSE 0 END" for j in range(num_hashes)
     )
-    return (
-        pairs.join(wl, on=left_id)
-        .join(wr, on=right_id)
-        .withColumn("est_jaccard", agree / F.lit(float(num_hashes)))
-        .select(left_id, right_id, "est_jaccard")
+    return pairs.join(wl, on=left_id).join(wr, on=right_id).selectExpr(
+        left_id, right_id, f"({agree}) / {float(num_hashes)}D AS est_jaccard"
     )
 
 

@@ -434,7 +434,10 @@ def _copurchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     former symmetrize-then-dropDuplicates (one shuffle, not two): the
     groupBy yields distinct directed (c→s) pairs and the mirror's
     prefixes are disjoint from them, so the union is distinct by
-    construction — bit-identical edge set to symmetrize_edges(e0)."""
+    construction — bit-identical edge set to symmetrize_edges(e0).
+    AQE coalesces the cached union (the session sets
+    ``canChangeCachedPlanOutputPartitioning``): 2 partitions at sf0.01
+    instead of 2 × 32, so each superstep scan runs 2 tasks, not 64."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e0 = (

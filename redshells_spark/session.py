@@ -7,8 +7,26 @@ partition coalescing) while remaining correct on ``local[N]``:
   converts sort-merge joins to broadcast when a side turns out small,
   splits skewed partitions).
 - ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE
-  coalescing makes a high value safe on a big cluster and a low value
-  irrelevant locally.
+  coalescing makes a high value safe on a big cluster and cheap
+  locally. Spark leaves the final stage of a *cached* plan uncoalesced
+  unless ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+  is set, so every ``.cache()``/``.persist()`` memo held all 32
+  partitions of its last shuffle (the co-purchase edges: 64, one union
+  of two 32-partition aggregates) and each scan of it paid a task per
+  partition. It is set: the edges hold 2 partitions, and a traced
+  ``k_hop_reachability`` runs 2.27 → 1.60 s. The cost is that a query
+  joining a cached relation on the key it was shuffled by can no
+  longer reuse that partitioning and may shuffle it once more.
+- PySpark's DataFrame debugging is off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every DataFrame and Column call sends its Python call site to the
+  JVM, about 8 py4j round trips per Column node: a 6-node Column
+  costs 52 round trips instead of 12, and one ``CorpusIngest`` batch
+  10.6k instead of 4.2k. What it gives up is the DataFrame query
+  context: the Python file and line of the failing call in runtime
+  error messages. Results are unchanged. PySpark reads the flag once
+  per process, from the first active session, so it holds only where
+  this factory made that session.
 - Arrow enabled for pandas UDF / toPandas boundaries.
 """
 
@@ -19,11 +37,12 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _host_driver_memory() -> str:
-    """Half of the host's physical memory, at most 24g: a 24g heap on a
-    smaller host lets the driver JVM grow until the kernel kills it."""
+def _host_driver_memory(share: int = 2) -> str:
+    """1/``share`` of the host's physical memory (half by default), at
+    most 24g: a 24g heap on a smaller host lets the driver JVM grow
+    until the kernel kills it."""
     total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{min(24 * 1024, total // 2 // 2**20)}m"
+    return f"{min(24 * 1024, total // share // 2**20)}m"
 
 _DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -37,6 +56,9 @@ _DEFAULT_CONFS: dict[str, str] = {
     # reads nanos as long with this legacy flag
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
+    # both measured in the module docstring
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # local mode runs every task in the driver JVM, so the driver heap IS
     # the executor heap: 8g thrashed GC once a bench session accumulated
     # ~30 queries of cached relations (pagerank 12.4s -> 4.3s at 24g).

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -19,6 +20,29 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def round_trips(spark):
+    """→ ``count(fn)`` → (fn(), py4j commands the driver sent the JVM
+    while fn ran), counted on the gateway client every thread shares."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(fn):
+        real, calls = client.send_command, itertools.count()
+
+        def counting(*args, **kwargs):
+            next(calls)
+            return real(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            out = fn()
+        finally:
+            client.send_command = real
+        return out, next(calls)
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -1,5 +1,7 @@
-"""Session lifecycle: the default driver heap fits the host, and the
-set-similarity joins keep nothing across sessions — a second
+"""Session defaults and lifecycle: the default driver heap fits the
+host, a cached aggregate is coalesced like any other plan, building a
+Column costs no per-node call-site capture, and the set-similarity
+joins keep nothing across sessions — a second
 SparkSession started in the same process, after the first is stopped,
 runs them exactly like the first (in a subprocess, because it stops
 its sessions)."""
@@ -12,6 +14,7 @@ import sys
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from redshells_spark import session
 
@@ -66,3 +69,28 @@ def test_default_driver_heap_is_half_the_host_at_most_24g(monkeypatch, host_gib,
     pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": host_gib * 2**30 // 4096}
     monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
     assert session._host_driver_memory() == heap
+    # tools/verify_local.py's default: a quarter of the host
+    quarter = {15: "3840m", 48: "12288m", 512: "24576m"}[host_gib]
+    assert session._host_driver_memory(share=4) == quarter
+
+
+def test_cached_aggregate_is_coalesced(spark):
+    # without spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    # a cached plan keeps every shuffle partition of its last stage
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cached = spark.range(100).groupBy((F.col("id") % 5).alias("k")).count().cache()
+    try:
+        assert cached.count() == 5
+        assert cached.rdd.getNumPartitions() < shuffle
+    finally:
+        cached.unpersist()
+
+
+def test_building_a_column_captures_no_call_site(round_trips):
+    def build():
+        return (F.lit(3) * F.col("x") + F.lit(5)) % 7
+
+    build()  # the first build also resolves the functions' JVM handles
+    # 52 with PySpark's DataFrame debugging on: it sends each node's
+    # Python call site to the JVM
+    assert round_trips(build)[1] <= 12

@@ -70,15 +70,18 @@ DIRECT_BATCH = [
 
 
 @pytest.fixture(scope="module")
-def direct(spark, vocab, tmp_path_factory):
+def direct(spark, vocab, tmp_path_factory, round_trips):
     """Two direct ``process_batch`` calls into one state: BATCHES[0],
-    then DIRECT_BATCH → (ingest, base path, jobs of the second batch)."""
+    then DIRECT_BATCH → (ingest, base path, jobs of the second batch,
+    py4j round trips of the second batch)."""
     base = str(tmp_path_factory.mktemp("direct") / "state")
     ingest = CorpusIngest(base_path=base, vocab=vocab, threshold=0.3)
     ingest.process_batch(spark.createDataFrame(BATCHES[0], "doc_id long, text string"), 0)
     batch = spark.createDataFrame(DIRECT_BATCH, "doc_id long, text string")
-    _, jobs = _jobs(spark, "corpus_ingest_direct", lambda: ingest.process_batch(batch, 1))
-    return ingest, base, jobs
+    (_, trips), jobs = _jobs(
+        spark, "corpus_ingest_direct", lambda: round_trips(lambda: ingest.process_batch(batch, 1))
+    )
+    return ingest, base, jobs, trips
 
 
 def _ids(spark, path):
@@ -86,7 +89,7 @@ def _ids(spark, path):
 
 
 def test_direct_batch_drop_paths_sinks_and_stats(spark, direct):
-    ingest, base, jobs = direct
+    ingest, base, jobs, trips = direct
     # 3 exact vs corpus, 4 near vs corpus, 8 near within batch, 9 exact
     # within batch; 10 has no signature and is accepted
     assert _ids(spark, f"{base}/corpus") == [1, 2, 5, 7, 10]
@@ -98,10 +101,14 @@ def test_direct_batch_drop_paths_sinks_and_stats(spark, direct):
     assert ingest.stats[-1]["n_in"] == len(DIRECT_BATCH)
     assert ingest.stats[-1]["n_accepted"] == 3
     assert jobs <= 35
+    # the driver's fixed cost: 10.6k with PySpark's call-site
+    # capture on, 4.2k with it off and Column-tree MinHash builders,
+    # 1.77k-1.93k with the builders as SQL expressions
+    assert trips <= 2100
 
 
 def test_state_ddl_matches_what_the_processor_writes(spark, direct):
-    ingest, base, _ = direct
+    ingest, base, _, _ = direct
     for name, ddl in ingest.state_ddl().items():
         written = spark.read.parquet(f"{base}/{name}").drop("__b", "band")
         assert written.schema.simpleString() == (

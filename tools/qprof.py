@@ -40,8 +40,10 @@ def main() -> None:
     spark = get_spark_session("qprof")
     spark.sparkContext.setLogLevel("ERROR")
     queries = get_queries()
-    # same warmup as bench.py
+    # same warmup as bench.py, plus one pandas UDF: otherwise the first
+    # Python-UDF query in the list pays the Python worker start-up
     spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
+    spark.range(1).mapInPandas(lambda batches: batches, "id long").collect()
 
     for name in args.names:
         if name not in queries:

@@ -98,8 +98,14 @@ def main():
 
     from redshells_spark import get_spark_session
     from redshells_spark.queries import get_oracles, get_queries
+    from redshells_spark.session import _host_driver_memory
 
-    spark = get_spark_session("verify_local", shuffle_partitions=16)
+    # without a pinned heap, a quarter of the host (as perfbench/run.py
+    # takes): a verify and a pytest JVM side by side must both fit
+    heap = None if os.environ.get("SPARK_GRAFT_DRIVER_MEM") else {
+        "spark.driver.memory": _host_driver_memory(share=4)
+    }
+    spark = get_spark_session("verify_local", shuffle_partitions=16, extra_confs=heap)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
