@@ -18,6 +18,7 @@ The same trick sizes a pinned relation: :func:`pin_count` observes the
 row count during the ``localCheckpoint`` job itself, so an iterative
 operator learns |frontier| (and picks broadcast or shuffle) without a
 separate ``count()`` — which costs two more jobs under AQE.
+:func:`release` frees a pin once its holder is done with it.
 """
 
 from __future__ import annotations
@@ -61,3 +62,17 @@ def pin_count(df: DataFrame) -> tuple[DataFrame, int]:
     obs = Observation()
     pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     return pinned, obs.get["n"]
+
+
+def release(df: DataFrame) -> None:
+    """Free the storage a pinned frame holds, without blocking. A
+    ``localCheckpoint`` pin is a ``LogicalRDD`` whose checkpointed RDD
+    ``unpersist()`` on the frame does not reach; it is unpersisted
+    directly. Anything else (``.cache()``/``persist()``) is
+    ``unpersist()``-ed. The frame must not be used afterwards: a
+    released checkpoint raises on its next use."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()

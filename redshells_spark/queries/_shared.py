@@ -28,6 +28,7 @@ from collections.abc import Callable
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from redshells_spark.data.frame_ops import (
     convert_to_one_hot,
@@ -72,6 +73,7 @@ from redshells_spark.operators.joins import (
     keyword_match_join,
     semi_join_isin,
 )
+from redshells_spark.operators.observe import release
 from redshells_spark.operators.topk import per_group_topk, topk_threshold_similarity
 from redshells_spark.operators.setops import union_concat
 from redshells_spark.similarity.ann import brute_force_topk, lsh_topk
@@ -96,37 +98,8 @@ KEYWORDS = ("spark", "join", "window", "stream", "hash")
 # ---------------------------------------------------------------- helpers
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Testdata physical types have changed across generations
-    # (TIMESTAMP(NANOS)-as-long vs timestamp[us]-as-NTZ); both confs are
-    # harmless when the current files don't need them. UTC pins the
-    # NTZ→TIMESTAMP reinterpretation so epoch math matches DuckDB's
-    # naive-as-UTC semantics even on a driver session with another tz.
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # noqa: BLE001 — conf may be locked; reads may still work
-            pass
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 MEMO_PATHS = 4
 _MEMO: dict[tuple[str, str], dict[Callable, object]] = {}  # LRU first
-
-
-def _release(df: DataFrame) -> None:
-    """Free the storage a memoized frame pins. A ``localCheckpoint``
-    pin is a ``LogicalRDD`` whose checkpointed RDD ``unpersist()`` on
-    the frame does not reach; it is unpersisted directly. Anything else
-    (``.cache()``/``persist()``) is ``unpersist()``-ed."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.nodeName() == "LogicalRDD":
-        plan.rdd().unpersist(True)
-    else:
-        df.unpersist()
 
 
 def session_memo(build):
@@ -134,10 +107,11 @@ def session_memo(build):
 
     Returns the exact object ``build`` returned (a pinned DataFrame
     keeps its ``storageLevel``); each builder keeps its own pin choice.
-    Data under ``sf_dir`` is immutable within a session. When a
+    Data under ``sf_dir`` is immutable within a session, so the memo
+    also holds each table's schema (:func:`_schemas`). When a
     ``MEMO_PATHS + 1``-th path arrives, the least recently used path is
     dropped and the storage of its DataFrames, also those in a returned
-    tuple, is released (:func:`_release`). A caller must not hold an
+    tuple, is released (:func:`release`). A caller must not hold an
     evicted memo's frame: a released checkpoint raises on its next use.
     Paths of another applicationId belong to a stopped context and are
     dropped without calling into Spark."""
@@ -153,12 +127,48 @@ def session_memo(build):
             for v in _MEMO.pop(next(iter(_MEMO))).values():
                 for df in v if isinstance(v, tuple) else (v,):
                     if isinstance(df, DataFrame):
-                        _release(df)
+                        release(df)
         if build not in values:
             values[build] = build(spark, sf_dir)
         return values[build]
 
     return memoized
+
+
+@session_memo
+def _schemas(spark: SparkSession, sf_dir: str) -> dict[str, StructType]:
+    """Table name → its inferred schema, filled by :func:`_t`."""
+    return {}
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh read of table ``name`` under ``sf_dir``. Its schema is
+    inferred from the parquet footers once per (session, ``sf_dir``,
+    table), which is one job; later reads declare that schema and
+    launch none. Each call is a new relation, so a self-join gets
+    distinct attribute ids. Data under ``sf_dir`` is immutable within a
+    session (:func:`session_memo`): a table rewritten inside one
+    session needs a new path."""
+    # Testdata physical types have changed across generations
+    # (TIMESTAMP(NANOS)-as-long vs timestamp[us]-as-NTZ); both confs are
+    # harmless when the current files don't need them. UTC pins the
+    # NTZ→TIMESTAMP reinterpretation so epoch math matches DuckDB's
+    # naive-as-UTC semantics even on a driver session with another tz.
+    for k, v in (
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.sql.session.timeZone", "UTC"),
+    ):
+        try:
+            spark.conf.set(k, v)
+        except Exception:  # noqa: BLE001 — conf may be locked; reads may still work
+            pass
+    path = f"{sf_dir}/{name}.parquet"
+    schemas = _schemas(spark, sf_dir)
+    if name in schemas:
+        return spark.read.schema(schemas[name]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[name] = df.schema
+    return df
 
 
 @session_memo

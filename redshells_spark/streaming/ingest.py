@@ -10,7 +10,8 @@ id, and against the persisted corpus index
 (:func:`redshells_spark.dedup.minhash.minhash_dedup_against_index` —
 band-bucket equi-join, corpus text never re-read).
 
-A batch runs as two pins, one probe plan and four sinks:
+A batch runs as two pins, one probe plan and four sinks; each pin is
+released once nothing reads it any more:
 
 1. **docs pin** — the batch after both exact dedups, left-joined to
    its wide MinHash signature (null for a doc without an in-vocab
@@ -51,7 +52,6 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark import InheritableThread
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -61,9 +61,9 @@ from redshells_spark.dedup.minhash import (
     minhash_dedup_against_index,
     minhash_signatures_wide,
 )
-from redshells_spark.operators.observe import pin_count
+from redshells_spark.operators.observe import pin_count, release
 from redshells_spark.streaming.dedup import fingerprint_column
-from redshells_spark.streaming.state import _unwritten, read_state
+from redshells_spark.streaming.state import _exists, read_state
 from redshells_spark.text.tokenize import tokenize_on_space
 
 
@@ -96,18 +96,16 @@ def _compact_bucket(spark: SparkSession, path: str, bucket, schema: str) -> int:
     ``schema`` is the DDL of the columns the bucket's files hold.
     Returns the number of files merged away (0 = nothing to do)."""
     sub = f"{path.rstrip('/')}/{bucket}"
-    try:
-        cur = spark.read.schema(schema).parquet(sub)
-    except AnalysisException:
-        if _unwritten(spark, sub):  # bucket not written yet
-            return 0
-        raise
+    if not _exists(spark, sub):  # bucket not written yet
+        return 0
+    cur = spark.read.schema(schema).parquet(sub)
     files = cur.inputFiles()
     if len(files) <= 1:
         return 0
     # materialize BEFORE overwriting the directory being read
     snap = cur.coalesce(1).localCheckpoint(eager=True)
     snap.write.mode("overwrite").parquet(sub)
+    release(snap)
     return len(files) - 1
 
 
@@ -234,6 +232,7 @@ class CorpusIngest:
         accepted, n_accepted = pin_count(
             docs.join(F.broadcast(dropped), on=self.id_column, how="left_anti")
         )
+        release(docs)  # accepted holds its rows now
 
         # sinks: corpus first, then each state append and a rolling
         # compaction of one fingerprint/signature bucket or index band —
@@ -269,6 +268,7 @@ class CorpusIngest:
                 index,
             ])
         )
+        release(accepted)
         self.stats.append(
             {
                 "batch_id": batch_id,

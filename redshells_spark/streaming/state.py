@@ -40,11 +40,21 @@ from pyspark.sql.streaming import StreamingQuery
 from redshells_spark.operators.observe import pin_count
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """→ (Hadoop FileSystem, Path) of ``path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs_path(spark, path)
+    return fs.exists(p)
+
+
 def _unwritten(spark: SparkSession, path: str) -> bool:
     """True when ``path`` does not exist or holds a committed empty
     write (``_SUCCESS`` and only hidden entries)."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _fs_path(spark, path)
     if not fs.exists(p):
         return True
     names = [s.getPath().getName() for s in fs.listStatus(p)]
@@ -57,20 +67,18 @@ def read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
     frame of ``schema`` if the state was never written."""
     # split on top-level commas only: "a long, w array<bigint>, s struct<x:int,y:int>"
     cols = [c.split()[0] for c in re.split(r",(?![^<]*>)", schema)]
-    try:
-        state = spark.read.schema(schema).parquet(path)
-    except AnalysisException:
-        if not _unwritten(spark, path):
-            raise
-        state = spark.createDataFrame([], schema)
-    else:
-        # a declared schema reads a directory without data files as empty
-        # instead of failing footer inference: only the file listing the
-        # read already made tells a committed empty write from a lost one
-        if not state.inputFiles() and not _unwritten(spark, path):
-            raise AnalysisException(
-                f"state directory {path} holds no data files and no committed empty write"
-            )
+    # checked before the read: a read of a missing path fails analysis,
+    # which every registered query listener logs as an ERROR
+    if not _exists(spark, path):
+        return spark.createDataFrame([], schema).select(*cols)
+    state = spark.read.schema(schema).parquet(path)
+    # a declared schema reads a directory without data files as empty
+    # instead of failing footer inference: only the file listing the
+    # read already made tells a committed empty write from a lost one
+    if not state.inputFiles() and not _unwritten(spark, path):
+        raise AnalysisException(
+            f"state directory {path} holds no data files and no committed empty write"
+        )
     return state.select(*cols)
 
 

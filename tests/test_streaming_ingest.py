@@ -116,6 +116,20 @@ def test_state_ddl_matches_what_the_processor_writes(spark, direct):
         ), name
 
 
+def test_a_batch_releases_its_pins(spark, vocab, tmp_path):
+    # the docs pin, the accepted pin and each compaction snapshot are
+    # released when the batch ends, not when the JVM collects them
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    ingest = CorpusIngest(base_path=str(tmp_path / "state"), vocab=vocab, threshold=0.3)
+    before = persistent()
+    ingest.process_batch(spark.createDataFrame(BATCHES[0], "doc_id long, text string"), 0)
+    ingest.process_batch(spark.createDataFrame(DIRECT_BATCH, "doc_id long, text string"), 1)
+    assert ingest.stats[-1]["files_compacted"] > 0  # a snapshot was taken
+    assert persistent() - before == set()
+
+
 def _failing_batch(spark, vocab, tmp_path, error):
     """Run BATCHES[0] into fresh state where one sink fails with
     ``error`` → the state's base path."""

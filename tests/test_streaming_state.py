@@ -10,6 +10,7 @@ from pathlib import Path
 
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrameReader
 from pyspark.sql import functions as F
 
 from redshells_spark.streaming.drift import DriftIngest
@@ -88,7 +89,11 @@ def test_committed_empty_partitioned_append_reads_as_empty(spark, tmp_path):
     assert state.schema.simpleString() == "struct<k:string>"
 
 
-def test_missing_path_reads_as_empty(spark, tmp_path):
+def test_missing_path_reads_as_empty(spark, tmp_path, monkeypatch):
+    # no read is tried: a failed read's analysis error reaches Spark's
+    # query listeners, which log it with its stack trace
+    reads = []
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, *paths: reads.append(paths))
     state = read_state(
         spark, str(tmp_path / "never_written"),
         "id long, words array<bigint>, s struct<x:int,y:int>",
@@ -98,6 +103,7 @@ def test_missing_path_reads_as_empty(spark, tmp_path):
     assert state.schema.simpleString() == (
         "struct<id:bigint,words:array<bigint>,s:struct<x:int,y:int>>"
     )
+    assert reads == []
 
 
 def test_reading_bucketed_state_launches_no_job(spark, tmp_path):
